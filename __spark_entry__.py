@@ -685,10 +685,10 @@ def _q_lang_dist_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination_docs under the 50-entry cap)."""
     _views(spark, sf_dir)
     from hexscape_spark.textops import with_lang_guess
-    # r7 (guide §2.5): spread the single-row-group scan before the
-    # per-row marker scoring; counts and integer sums are partition-exact
-    return (with_lang_guess(spark.table("documents")
-                            .repartition(F.col("doc_id")))
+    # no repartition before the marker scoring: AQE coalesces a
+    # REPARTITION_BY_COL of this table back to one task at local[4], so
+    # it spreads nothing and only adds a shuffle
+    return (with_lang_guess(spark.table("documents"))
             .groupBy("source", "lang", "lang_guess")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum("n_chars").alias("sum_chars")))

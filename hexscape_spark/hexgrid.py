@@ -83,11 +83,6 @@ def kring_offsets_df(spark: SparkSession, k: int) -> DataFrame:
     return spark.createDataFrame(rows, "dq INT, dr INT")
 
 
-def with_hex_distance(df: DataFrame, q1: str, r1: str, q2: str, r2: str,
-                      out: str = "hex_dist") -> DataFrame:
-    return df.selectExpr("*", f"{sqlgen.hex_distance_expr(q1, r1, q2, r2)} AS {out}")
-
-
 def hex_vertices(q: int, r: int, hex_width: float = P.HEX_WIDTH,
                  refx: float = P.REFX, refy: float = P.REFY):
     """Driver-side 7-vertex ring of hexagon (q, r).

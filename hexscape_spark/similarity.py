@@ -351,6 +351,13 @@ def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
             .where(F.col("rank") <= k))
 
 
+# `small_corpus` collects the whole unit-vector matrix to the driver and
+# broadcasts it: 1M rows of 64 doubles is already 512 MB on the driver
+# and in every executor, the same row bound cosine_topk_bruteforce puts
+# on its collected query matrix.
+SMALL_CORPUS_MAX_ROWS = 1_000_000
+
+
 def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
                     vec: str = "embedding", k: int = 5, planes: int = 8,
                     dim: int = 64, tables: int = 4,
@@ -428,7 +435,16 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
         # is the identical arithmetic _dot_arrow runs on the joined
         # arrays, so the cosines are bit-identical.
         sc = df.sparkSession.sparkContext
-        vp = b.select(F.col(key), F.col("unit_vec")).toPandas()
+        # the LIMIT bounds the collect itself (no extra Spark job): an
+        # oversized corpus fails after at most cap + 1 rows reach the
+        # driver instead of OOMing it
+        cap = SMALL_CORPUS_MAX_ROWS
+        vp = b.select(F.col(key), F.col("unit_vec")).limit(cap + 1).toPandas()
+        if len(vp) > cap:
+            raise ValueError(
+                f"cosine_topk_lsh: small_corpus=True collects the corpus to "
+                f"the driver, but it has more than {cap} rows; run it "
+                "with small_corpus=False")
         ids = vp[key].to_numpy()
         order = np.argsort(ids, kind="stable")
         mat = np.array([np.asarray(v, dtype=np.float64)

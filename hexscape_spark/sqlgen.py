@@ -16,8 +16,17 @@ The axial hex math follows the reference bit-for-bit:
     uses, cf. R/generate_patches.R:85-86 citing redblobgames axial storage).
 
 Only constructs shared by both dialects are used: arithmetic, ``%`` on
-BIGINT, CASE WHEN, ROUND(x), ABS, CAST(... AS BIGINT), window functions.
-NOTE: bare FLOOR is avoided (BIGINT in Spark vs DOUBLE in DuckDB).
+BIGINT, CASE WHEN, ABS, SIGN, CAST(... AS BIGINT), window functions.
+NOTE: bare FLOOR is avoided (BIGINT in Spark vs DOUBLE in DuckDB); it only
+appears as ``CAST(FLOOR(x) AS DOUBLE)``.
+
+Cube rounding uses ``round_half_away_expr`` instead of ``ROUND(x)``: Spark
+compiles ROUND on DOUBLE to ``BigDecimal.valueOf(x).setScale(0, HALF_UP)``
+(a ``Double.toString`` per call), while the helper is FLOOR/ABS/SIGN
+arithmetic.  It equals ROUND(x) for every finite |x| < 2^52, because
+``|x| - floor(|x|)`` is exact in IEEE doubles there, and it returns +0.0
+where ROUND would, never -0.0.  Hex coordinates are far inside that
+domain: ``cell_id`` packing already bounds |q|, |r| below 2^21.
 """
 
 from __future__ import annotations
@@ -88,6 +97,17 @@ def geocode_layers(key: str) -> list[list[tuple[str, str]]]:
 # Point -> axial hex cell (cube rounding), centroid, packing
 # ---------------------------------------------------------------------------
 
+def round_half_away_expr(x: str) -> str:
+    """ROUND(x) on DOUBLE x (half away from zero) as FLOOR/ABS/SIGN
+    arithmetic, exact for finite |x| < 2^52 (see the module docstring).
+    The trailing ``+ 0.0E0`` turns -0.0 into +0.0, as Spark's ROUND does.
+    NULL in, NULL out."""
+    a = f"ABS({x})"
+    fl = f"CAST(FLOOR({a}) AS DOUBLE)"
+    return (f"((CASE WHEN {a} - {fl} >= 0.5E0 THEN {fl} + 1.0E0 ELSE {fl} END)"
+            f" * SIGN({x}) + 0.0E0)")
+
+
 def hex_layers(lon: str = "lon", lat: str = "lat",
                hex_width: float = P.HEX_WIDTH,
                refx: float = P.REFX, refy: float = P.REFY) -> list[list[tuple[str, str]]]:
@@ -96,7 +116,8 @@ def hex_layers(lon: str = "lon", lat: str = "lat",
         [("rf", f"(({_f(refy)}) - ({lat})) / {_f(1.5 * size)}")],
         [("qf", f"(({lon}) - ({_f(refx)})) / {_f(hex_width)} - rf / 2")],
         [("sf", "-qf - rf")],
-        [("qg", "ROUND(qf)"), ("rg", "ROUND(rf)"), ("sg", "ROUND(sf)")],
+        [("qg", round_half_away_expr("qf")), ("rg", round_half_away_expr("rf")),
+         ("sg", round_half_away_expr("sf"))],
         [("dq", "ABS(qg - qf)"), ("dr", "ABS(rg - rf)"), ("ds", "ABS(sg - sf)")],
         [("q", "CAST(CASE WHEN dq > dr AND dq > ds THEN -rg - sg ELSE qg END AS BIGINT)"),
          ("r", "CAST(CASE WHEN NOT (dq > dr AND dq > ds) AND dr > ds THEN -qg - sg ELSE rg END AS BIGINT)")],

@@ -2,11 +2,12 @@
 
 import math
 
+import duckdb
 import numpy as np
 import pytest
 
 from hexscape_spark import geo, params as P
-from hexscape_spark import hexgrid
+from hexscape_spark import hexgrid, sqlgen
 from hexscape_spark.hexgrid import hex_vertices
 
 
@@ -19,6 +20,61 @@ def test_encode_decode_roundtrip(spark):
                                 lon="x", lat="y").toPandas()
     assert (got.q == got.q0).all()
     assert (got.r == got.r0).all()
+
+
+ROUND_CASES = [0.5, -0.5, 1.5, -1.5, 2.5, -2.5, 3.5, -3.5,
+               0.49999999999999994, -0.49999999999999994, 0.5000000000000001,
+               -0.0, -0.4, 2.0 ** 52 - 0.5, 1e15 + 0.5, None]
+
+
+def _duck_table(con, name: str, ddl: str, rows) -> None:
+    con.execute(f"CREATE TABLE {name} ({ddl})")
+    con.executemany(f"INSERT INTO {name} VALUES ({', '.join('?' * len(rows[0]))})",
+                    rows)
+
+
+def test_round_half_away_matches_round(spark):
+    """The cube-rounding helper equals ROUND(x) in Spark and in DuckDB on
+    ties, near-ties, large values and NULL, and never returns -0.0."""
+    rows = list(enumerate(ROUND_CASES))
+    sql = (f"SELECT i, ROUND(x) AS rd, {sqlgen.round_half_away_expr('x')} AS h "
+           "FROM t ORDER BY i")
+    spark.createDataFrame(rows, "i INT, x DOUBLE").createOrReplaceTempView("t")
+    sp = [(r.rd, r.h) for r in spark.sql(sql).collect()]
+    con = duckdb.connect()
+    _duck_table(con, "t", "i INTEGER, x DOUBLE", rows)
+    dk = [(rd, h) for _, rd, h in con.execute(sql).fetchall()]
+    assert len(sp) == len(dk) == len(ROUND_CASES)
+    for x, (s_rd, s_h), (d_rd, d_h) in zip(ROUND_CASES, sp, dk):
+        if x is None:
+            assert s_rd is s_h is d_rd is d_h is None
+            continue
+        assert s_h == s_rd and d_h == d_rd and s_h == d_h, x
+        # +0.0, never -0.0, in both engines (DuckDB's ROUND keeps -0.0)
+        if s_h == 0.0:
+            assert math.copysign(1.0, s_h) == math.copysign(1.0, d_h) == 1.0, x
+
+
+def test_null_point_gets_null_cell(spark):
+    """NULL coordinates give a NULL cell_id in both engines: a NULL lat
+    nulls q and r, a NULL lon nulls q (r is a function of lat alone)."""
+    rows = [(0, None, 10.0), (1, 10.0, None), (2, None, None), (3, 10.0, 10.0)]
+    got = (hexgrid.with_hex_cell(
+        spark.createDataFrame(rows, "i INT, lon DOUBLE, lat DOUBLE"))
+        .orderBy("i").select("q", "r", "cell_id").collect())
+    con = duckdb.connect()
+    _duck_table(con, "pts", "i INTEGER, lon DOUBLE, lat DOUBLE", rows)
+    dk = con.execute(sqlgen.build_query(
+        "pts", sqlgen.hex_layers(), select="i, q, r, cell_id")
+        + " ORDER BY i").fetchall()
+    assert len(got) == len(dk) == len(rows)
+    for (_, lon, lat), s_row, d_row in zip(rows, got, dk):
+        assert tuple(s_row) == d_row[1:]
+        if lon is None or lat is None:
+            assert s_row.cell_id is None and s_row.q is None
+        if lat is None:
+            assert s_row.r is None
+    assert None not in dk[3]
 
 
 def test_points_assigned_to_containing_hex(spark):

@@ -364,6 +364,21 @@ def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
     assert out.count() == 0
 
 
+def test_lsh_small_corpus_row_bound(spark, monkeypatch):
+    """small_corpus collects the corpus to the driver: a corpus at the
+    row bound builds, one row over it fails with ValueError."""
+    from hexscape_spark import similarity
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.standard_normal(4).tolist()) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    kw = dict(k=1, planes=4, dim=4, tables=2, small_corpus=True)
+    monkeypatch.setattr(similarity, "SMALL_CORPUS_MAX_ROWS", 40)
+    assert similarity.cosine_topk_lsh(df, **kw).count() > 0
+    monkeypatch.setattr(similarity, "SMALL_CORPUS_MAX_ROWS", 39)
+    with pytest.raises(ValueError, match="more than 39 rows"):
+        similarity.cosine_topk_lsh(df, **kw)
+
+
 def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
     """Same cap on the MinHash banding path: thousands of identical docs
     (an exact-dup cluster) never reach the pair join."""
