@@ -11,13 +11,12 @@ bit-for-bit per the north rule.  Monetary aggregates are integerised
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hexscape_spark import params as P
+from hexscape_spark import hexgrid, params as P
 from hexscape_spark import sqlgen
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -72,9 +71,7 @@ def _sql_hex_cell_lang_mode() -> str:
 
 
 _OFFSET_VALUES = ", ".join(
-    f"({dr}, {dq}, '{d}')" for dr, dq, d in [
-        (-1, 0, "NW"), (-1, 1, "NE"), (0, -1, "W"),
-        (0, 1, "E"), (1, -1, "SW"), (1, 0, "SE")])
+    f"({dr}, {dq}, '{d}')" for dr, dq, d in hexgrid.NEIGHBOUR_OFFSETS)
 
 
 def _sql_hex_neighbours() -> str:
@@ -96,10 +93,8 @@ def _sql_hex_kring_profile(disk_k: int = 2, max_k: int = 3) -> str:
     cells CTE and shifted join — one query keeps both operators
     oracle-gated while freeing a contract slot for ivf_topk).  Shuffle
     key = shifted (q, r); never an N² theta join."""
-    rows = [f"({dq}, {dr}, {(abs(dq) + abs(dr) + abs(dq + dr)) // 2})"
-            for dq in range(-max_k, max_k + 1)
-            for dr in range(-max_k, max_k + 1)
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= max_k]
+    rows = [f"({dq}, {dr}, {ring})"
+            for dq, dr, ring in hexgrid.kring_offsets(max_k)]
     ring_cols = ", ".join(
         f"CAST(SUM(CASE WHEN shifted.ring = {k} THEN b.n ELSE 0 END) "
         f"AS BIGINT) AS n_ring{k}" for k in range(1, max_k + 1))
@@ -144,9 +139,7 @@ def _sql_events_hex_rollup_spark() -> str:
 
 
 def _kring_values(k: int) -> str:
-    rows = [f"({dq}, {dr})" for dq in range(-k, k + 1) for dr in range(-k, k + 1)
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k]
-    return ", ".join(rows)
+    return ", ".join(f"({dq}, {dr})" for dq, dr, _ in hexgrid.kring_offsets(k))
 
 
 def _sql_hex_nearest_cell(k: int = 3) -> str:
@@ -988,7 +981,6 @@ def _sql_neighbours_square_duck(min_prop: float = 0.01) -> str:
     complete-cell fast path (Border = side length when both areas exceed
     (1-min_prop)·hexarea, R/generate_neighbours.R:86-93), and Liang–Barsky
     clipped edge lengths for boundary edges (:100-133)."""
-    from hexscape_spark.hexgrid import NEIGHBOUR_OFFSETS
     from hexscape_spark.neighbours import _edge_offsets
     w = _LW
     hexarea = P.hex_area(w)
@@ -1004,7 +996,8 @@ def _sql_neighbours_square_duck(min_prop: float = 0.01) -> str:
     cells = sqlgen.build_query(
         f"({base})", layers, select="q, r, cx, cy, area",
         where=f"area >= {sqlgen._f(min_prop * hexarea)}")
-    offs = ", ".join(f"({dq}, {dr}, '{d}')" for dr, dq, d in NEIGHBOUR_OFFSETS)
+    offs = ", ".join(f"({dq}, {dr}, '{d}')"
+                     for dr, dq, d in hexgrid.NEIGHBOUR_OFFSETS)
     clip_branches = " ".join(
         "WHEN dir = '{d}' THEN {e}".format(
             d=d, e=sqlgen.segment_rect_clip_len_expr(
@@ -1440,15 +1433,11 @@ def _q_hex_neighbours(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir)
     cells = _assign_ckpt(spark, "documents", "doc_id",
                          "q, r, cell_id", distinct=True, spread=False)
-    offs = spark.createDataFrame(
-        [(-1, 0, "NW"), (-1, 1, "NE"), (0, -1, "W"),
-         (0, 1, "E"), (1, -1, "SW"), (1, 0, "SE")],
-        "dr INT, dq INT, direction STRING")
     a = cells.select(F.col("q").alias("aq"), F.col("r").alias("ar"),
                      F.col("cell_id"))
     b = cells.select(F.col("q").alias("bq"), F.col("r").alias("br"),
                      F.col("cell_id").alias("nbr_cell_id"))
-    return (a.crossJoin(F.broadcast(offs))
+    return (a.crossJoin(F.broadcast(hexgrid.offsets_df(spark)))
             .join(F.broadcast(b),
                   [F.col("bq") == F.col("aq") + F.col("dq"),
                    F.col("br") == F.col("ar") + F.col("dr")])
@@ -1468,12 +1457,8 @@ def _q_hex_kring_profile(spark: SparkSession, sf_dir: str,
     cells = spark.sql(
         "SELECT q, r, cell_id, COUNT(*) AS n FROM (" + sub +
         ") AS t GROUP BY q, r, cell_id").localCheckpoint(eager=True)
-    offs = spark.createDataFrame(
-        [(dq, dr, (abs(dq) + abs(dr) + abs(dq + dr)) // 2)
-         for dq in range(-max_k, max_k + 1)
-         for dr in range(-max_k, max_k + 1)
-         if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= max_k],
-        "dq INT, dr INT, ring INT")
+    offs = spark.createDataFrame(hexgrid.kring_offsets(max_k),
+                                 "dq INT, dr INT, ring INT")
     shifted = (cells.select("cell_id", "q", "r")
                .crossJoin(F.broadcast(offs))
                .select("cell_id", (F.col("q") + F.col("dq")).alias("sq"),
@@ -1899,58 +1884,6 @@ FROM ar JOIN np ON ar.clc = np.clc
 """
 
 
-def _sql_hex_nearest_cell_fast(k: int = 3) -> str:
-    """Spark-side plan for the J8 nearest join (VERDICT r03 #2 follow-up) —
-    the DuckDB oracle keeps the ROW_NUMBER form, this emits the same result
-    from a better physical plan.  Two defects of the r3 plan fixed:
-
-      * the occupied-cell side (a few hundred rows from a 5e5-row doc-assign
-        subquery) was misestimated and planned as a SORT-MERGE join, which
-        shuffled+sorted the full 37x candidate fan-out — an explicit
-        /*+ BROADCAST(occ) */ makes the candidate join a map-side hash probe;
-      * the per-event ROW_NUMBER window (shuffle + sort of every matched
-        candidate) is replaced by MIN(named_struct(dist, cell_id)) — struct
-        comparison is field-order lexicographic, so this IS "ORDER BY dist
-        ASC, cell_id ASC LIMIT 1" — as a hash aggregate with map-side
-        partial combine: shuffle volume drops from all-candidates to
-        one-row-per-event.
-
-    r4 follow-up, INVERTED fan-out: the r3 form cross-joined every EVENT
-    with the 37 offsets (a 37x row blow-up of the big side before the
-    probe).  Instead the tiny occupied-cell side expands by the offsets
-    (|occ| x 37 rows, still broadcast-sized) keyed by the shifted (q, r),
-    so each event does ONE hash probe and rows materialise only for
-    actually-occupied neighbour cells (~5-15 vs 37) — measured 2.2 s vs
-    2.7-3.4 s steady-state at sf0.1, exact parity.  At 100x the big side
-    never inflates at all; the broadcast grows by a constant 37x.
-
-    Ring escalation (join ring<=1 first, escalate the unproven remainder)
-    was measured too: with Catalyst re-inlining the event/doc assign CTEs
-    per stage it costs MORE here than the broadcast probe saves
-    (5.3 s vs 2.6 s at sf0.1); the escalating form lives in
-    knn.nearest_cells_escalating for persisted-input pipelines where the
-    fan-out term dominates (1000-executor regime), with fixture-parity
-    pinned in tests/test_hexgrid.py.
-    """
-    ev = sqlgen.assign_sql("events", "event_id")
-    docs = _docs_assign_sub()
-    cx, cy = sqlgen.centroid_exprs("expd.cq", "expd.cr")
-    dist = (f"SQRT((ev.lon - ({cx})) * (ev.lon - ({cx})) + "
-            f"(ev.lat - ({cy})) * (ev.lat - ({cy})))")
-    return (
-        f"WITH ev AS (SELECT event_id, lon, lat, q, r FROM ({ev}) AS e), "
-        f"occ AS (SELECT DISTINCT q AS cq, r AS cr, cell_id FROM ({docs}) AS d), "
-        f"offs AS (SELECT * FROM (VALUES {_kring_values(k)}) AS v(dq, dr)), "
-        "expd AS (SELECT occ.cq - offs.dq AS kq, occ.cr - offs.dr AS kr, "
-        " occ.cq AS cq, occ.cr AS cr, occ.cell_id AS cell_id "
-        " FROM occ JOIN offs ON 1=1), "
-        "best AS (SELECT /*+ BROADCAST(expd) */ ev.event_id, "
-        f" MIN(named_struct('d', {dist}, 'c', expd.cell_id)) AS b "
-        " FROM ev JOIN expd ON expd.kq = ev.q AND expd.kr = ev.r "
-        " GROUP BY ev.event_id) "
-        "SELECT event_id, b.c AS nn_cell_id, ROUND(b.d, 6) AS dist_r FROM best")
-
-
 def _assign_ckpt(spark: SparkSession, table: str, key: str,
                  select: str, distinct: bool = False,
                  spread: bool = True) -> DataFrame:
@@ -1997,38 +1930,21 @@ def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe feeding a combinable MIN(struct) — measured 21.1 s → ~3.5 s
     at sf1.0, exceptAll-parity in both directions.
 
-    r7 follow-up, scale-adaptive argmin: MIN(struct) cannot
-    hash-aggregate (struct is not a mutable buffer type), so the
-    struct-min plan SORTS the full event×candidate fan-out inside the
-    partial SortAggregate.  Above _NN_GATHER_MIN_EVENTS the candidates
-    are instead pre-grouped per probe key into arrays on the broadcast
-    side and each event's winner is array_min(transform(...)) — same
-    lexicographic (d, cell_id) ordering, one row per event out of the
-    join, NO aggregate at all.  The fan-out sort disappears: measured
-    3.65 → 2.54 s at sf1.0 (1M events) and 2.42 → 1.92 s at 3× sf0.1,
-    but the array build + interpreted fold loses at sf0.1 (1.27 → 1.88 s
-    at 100k events), hence the measured-crossover gate (~200k events;
-    the count is a cheap job over the eager checkpoint).  exceptAll
-    parity in both directions at sf0.01, sf0.1 and a 1M-event replica;
-    the unconditional struct-min/array-gather equivalence is pinned in
-    tests/test_plans.py."""
+    This is the only J8 plan.  Ring escalation (join ring <= 1 first,
+    escalate the unproven remainder) lost to it (5.3 s vs 2.6 s at
+    sf0.1), and an array-gather argmin that dropped the fan-out sort
+    only won above ~200k events at local[32], far above the 100k events
+    of the benchmark's query suite."""
     _views(spark, sf_dir)
     ev = _assign_ckpt(spark, "events", "event_id",
                       "event_id, lon, lat, q, r")
     occ = _assign_ckpt(spark, "documents", "doc_id",
                        "q AS cq, r AS cr, cell_id", distinct=True,
                        spread=False)
-    use_gather = ev.count() >= _NN_GATHER_MIN_EVENTS
-    k = 3
-    offs = [(dq, dr) for dq in range(-k, k + 1) for dr in range(-k, k + 1)
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k]
-    offs_df = spark.createDataFrame(offs, "dq INT, dr INT")
     cx, cy = sqlgen.centroid_exprs("cq", "cr")
-    expd = (occ.crossJoin(offs_df)
+    expd = (occ.crossJoin(hexgrid.kring_offsets_df(spark, 3))
             .selectExpr("cq - dq AS kq", "cr - dr AS kr", "cell_id",
                         f"{cx} AS cx", f"{cy} AS cy"))
-    if use_gather:
-        return _nn_gather_best(ev, expd)
     dist = F.sqrt(
         (F.col("lon") - F.col("cx")) * (F.col("lon") - F.col("cx")) +
         (F.col("lat") - F.col("cy")) * (F.col("lat") - F.col("cy")))
@@ -2039,36 +1955,6 @@ def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 F.col("cell_id").alias("c"))).alias("b"))
             .select("event_id", F.col("b.c").alias("nn_cell_id"),
                     F.round("b.d", 6).alias("dist_r")))
-
-
-# Measured crossover between the struct-min and array-gather argmin plans
-# (see _q_nearest_cell_knn): struct-min wins at 100k events (1.27 vs
-# 1.88 s), array-gather at 300k (1.92 vs 2.42 s) and 1M (2.54 vs 3.65 s).
-# Overridable for cluster profiles where the sort/fold balance differs.
-_NN_GATHER_MIN_EVENTS = int(os.environ.get(
-    "HEXSCAPE_NN_GATHER_MIN_EVENTS", "200000"))
-
-
-def _nn_gather_best(ev: DataFrame, expd: DataFrame) -> DataFrame:
-    """Array-gather argmin for the J8 nearest join: candidates grouped
-    per probe key (kq, kr) into a broadcast array; each event joins to
-    ONE row and array_min picks the (d, cell_id)-lexicographic winner —
-    identical semantics to MIN(struct(d, c)) because struct ordering is
-    field-order lexicographic and cell_ids are unique per array (a
-    strict total order, so the fold result is independent of
-    collect_list's nondeterministic array order)."""
-    cand = (expd.groupBy("kq", "kr")
-            .agg(F.collect_list(F.struct("cell_id", "cx", "cy"))
-                 .alias("cs")))
-    best = (ev.join(F.broadcast(cand),
-                    [F.col("kq") == F.col("q"), F.col("kr") == F.col("r")])
-            .select("event_id", F.expr(
-                "array_min(transform(cs, x -> named_struct("
-                "'d', SQRT((lon - x.cx)*(lon - x.cx) + "
-                "(lat - x.cy)*(lat - x.cy)), "
-                "'c', x.cell_id)))").alias("b")))
-    return best.select("event_id", F.col("b.c").alias("nn_cell_id"),
-                       F.round("b.d", 6).alias("dist_r"))
 
 
 # ---------------------------------------------------------------------------

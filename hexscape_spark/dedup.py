@@ -210,25 +210,6 @@ def minhash_lsh_pairs_portable(df: DataFrame, key: str = "doc_id",
     return _bucket_pairs(buckets, key, max_bucket)
 
 
-def with_simhash(df: DataFrame, text: str = "text", bits: int = 16,
-                 out: str = "simhash") -> DataFrame:
-    """SimHash over word tokens: sign-sum of per-bit contributions.
-
-    bit_j(doc) = 1 if sum over tokens of (+1 if hash bit set else -1) > 0.
-    Pure array expressions; returns a LONG with `bits` significant bits.
-    """
-    words = F.split(F.lower(F.col(text)), r"\s+")
-    acc = F.lit(0).cast("long")
-    for j in range(bits):
-        votes = F.aggregate(
-            words, F.lit(0),
-            lambda a, w: a + F.when(
-                F.shiftright(F.xxhash64(w), j % 63).bitwiseAND(F.lit(1)) == 1,
-                F.lit(1)).otherwise(F.lit(-1)))
-        acc = acc + F.when(votes > 0, F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long"))
-    return df.withColumn(out, acc)
-
-
 def with_simhash_portable(df: DataFrame, key: str = "doc_id",
                           text: str = "text", bits: int = 16,
                           out: str = "simhash") -> DataFrame:

@@ -53,10 +53,6 @@ def multipolygon_to_wkb(polys: list[list[np.ndarray]]) -> bytes:
     return b"".join(out)
 
 
-def point_to_wkb(x: float, y: float) -> bytes:
-    return b"\x01" + struct.pack("<I", _WKB_POINT) + struct.pack("<dd", x, y)
-
-
 def _read_ring(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
     (n,) = struct.unpack_from("<I", buf, off)
     off += 4

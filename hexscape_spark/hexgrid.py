@@ -73,14 +73,18 @@ def offsets_df(spark: SparkSession) -> DataFrame:
         "dr INT, dq INT, direction STRING")
 
 
+def kring_offsets(k: int) -> list[tuple[int, int, int]]:
+    """All (dq, dr, ring) with hex distance ring <= k, incl. (0, 0, 0) — the
+    H3 grid_disk, enumerated dq outer, dr inner (the order the shared SQL
+    VALUES lists are emitted in)."""
+    return [(dq, dr, ring)
+            for dq in range(-k, k + 1) for dr in range(-k, k + 1)
+            if (ring := (abs(dq) + abs(dr) + abs(dq + dr)) // 2) <= k]
+
+
 def kring_offsets_df(spark: SparkSession, k: int) -> DataFrame:
-    """All (dq, dr) with hex distance <= k, incl. (0,0) — the H3 grid_disk."""
-    rows = []
-    for dq in range(-k, k + 1):
-        for dr in range(-k, k + 1):
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k:
-                rows.append((dq, dr))
-    return spark.createDataFrame(rows, "dq INT, dr INT")
+    return spark.createDataFrame(
+        [(dq, dr) for dq, dr, _ in kring_offsets(k)], "dq INT, dr INT")
 
 
 def hex_vertices(q: int, r: int, hex_width: float = P.HEX_WIDTH,

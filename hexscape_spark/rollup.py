@@ -12,11 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def cell_counts(df: DataFrame, key: str = "cell_id") -> DataFrame:
-    """A3: pages per cell."""
-    return df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-
-
 def cell_stats(df: DataFrame, value: str, key: str = "cell_id") -> DataFrame:
     """A1/A4/A7: grouped sum/mean/min/max."""
     return df.groupBy(key).agg(

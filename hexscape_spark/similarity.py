@@ -173,20 +173,9 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return vals
 
 
-def with_lsh_bucket(df: DataFrame, vec: str = "embedding", planes: int = 12,
-                    dim: int = 64, out: str = "lsh_bucket",
-                    table: int = 0) -> DataFrame:
-    """Random-hyperplane sign sketch -> integer bucket id.  `table` selects
-    an independent plane set (OR-construction hash table)."""
-    return with_lsh_buckets(df, vec, planes, dim, tables=1,
-                            out_prefix=out, first_table=table,
-                            suffix=False)
-
-
 def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
-                     planes: int = 12, dim: int = 64, tables: int = 1,
-                     out_prefix: str = "__b", first_table: int = 0,
-                     suffix: bool = True) -> DataFrame:
+                     planes: int = 12, dim: int = 64,
+                     tables: int = 1) -> DataFrame:
     """All `tables` sign-sketch buckets in ONE Arrow-vectorized pass.
 
     planes x tables dot products per row are ONE numpy matmul per batch —
@@ -194,8 +183,9 @@ def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
     Add-chains stall codegen; higher-order-function lambdas evaluate
     interpreted and boxed at ~8 ms/row for a 40x64 plane matrix).  The
     sign sketch is scale-invariant, so callers may pass raw or unit
-    vectors."""
-    mat = np.array([_hyperplane(dim, (first_table + t) * 997 + p)
+    vectors.  Adds one LONG bucket column per table, `__b0`..`__b{tables-1}`
+    (table t hashes with planes seeded t*997 + p)."""
+    mat = np.array([_hyperplane(dim, t * 997 + p)
                     for t in range(tables) for p in range(planes)]).T
     pw = (2 ** np.arange(planes)).astype(np.int64)
     n_t, n_p = tables, planes
@@ -231,8 +221,7 @@ def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
 
     df = df.withColumn("__bk", buckets_udf(F.col(vec)))
     for t in range(tables):
-        name = f"{out_prefix}{t}" if suffix else out_prefix
-        df = df.withColumn(name, F.element_at("__bk", t + 1))
+        df = df.withColumn(f"__b{t}", F.element_at("__bk", t + 1))
     return df.drop("__bk")
 
 

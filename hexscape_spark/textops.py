@@ -76,13 +76,6 @@ def with_lang_guess(df: DataFrame, text: str = "text",
     return df.withColumn(out, expr)
 
 
-def with_fingerprint(df: DataFrame, text: str = "text",
-                     out: str = "fingerprint") -> DataFrame:
-    """Document fingerprint: 64-bit hash of the normalised text."""
-    norm = F.lower(F.regexp_replace(F.col(text), r"\s+", " "))
-    return df.withColumn(out, F.xxhash64(norm))
-
-
 # Winnowing constants: polynomial rolling hash base/modulus.  M = 2^31-1
 # keeps every intermediate (< 2^62) exact in uint64 vector arithmetic.
 _WIN_B = 257

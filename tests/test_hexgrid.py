@@ -89,14 +89,15 @@ def test_points_assigned_to_containing_hex(spark):
 
 
 def test_kring_offsets_count():
-    """|disk(k)| = 1 + 3k(k+1) — the H3 grid_disk cardinality."""
-    from hexscape_spark.hexgrid import kring_offsets_df
+    """|disk(k)| = 1 + 3k(k+1) — the H3 grid_disk cardinality — with unique
+    offsets, every ring <= k, and 6k cells on the ring-k shell."""
     for k in (0, 1, 2, 3):
-        import hexscape_spark.session  # noqa: F401
-        n = 1 + 3 * k * (k + 1)
-        rows = [(dq, dr) for dq in range(-k, k + 1) for dr in range(-k, k + 1)
-                if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k]
-        assert len(rows) == n
+        offs = hexgrid.kring_offsets(k)
+        assert len(offs) == 1 + 3 * k * (k + 1)
+        assert len({(dq, dr) for dq, dr, _ in offs}) == len(offs)
+        assert all(ring <= k for _, _, ring in offs)
+        if k >= 1:
+            assert sum(ring == k for _, _, ring in offs) == 6 * k
 
 
 def test_neighbour_offsets_are_ring1():

@@ -186,37 +186,20 @@ def test_nearest_cell_plan_broadcast_minstruct(spark):
     assert "partial_min" in plan, plan
 
 
-def test_nearest_cell_gather_form_identical(spark):
-    """r7 scale-adaptive argmin: above _NN_GATHER_MIN_EVENTS the J8
-    nearest join switches from MIN(struct) (partial SortAggregate over
-    the full candidate fan-out) to a per-probe-key candidate array +
-    array_min gather.  The two forms must be row-identical — the gather
-    plan must also contain NO aggregate over the fan-out and NO window."""
-    from pyspark.sql import functions as F
-    from hexscape_spark import sqlgen
-
-    m._views(spark, SF)
-    ev = m._assign_ckpt(spark, "events", "event_id",
-                        "event_id, lon, lat, q, r")
-    occ = m._assign_ckpt(spark, "documents", "doc_id",
-                         "q AS cq, r AS cr, cell_id", distinct=True,
-                         spread=False)
-    k = 3
-    offs = [(dq, dr) for dq in range(-k, k + 1) for dr in range(-k, k + 1)
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k]
-    offs_df = spark.createDataFrame(offs, "dq INT, dr INT")
-    cx, cy = sqlgen.centroid_exprs("cq", "cr")
-    expd = (occ.crossJoin(offs_df)
-            .selectExpr("cq - dq AS kq", "cr - dr AS kr", "cell_id",
-                        f"{cx} AS cx", f"{cy} AS cy"))
-    gather = m._nn_gather_best(ev, expd)
-    base = m.queries()["hex_nearest_cell"](spark, SF)  # struct-min at sf0.01
-    assert gather.exceptAll(base).count() == 0
-    assert base.exceptAll(gather).count() == 0
-    plan = _plan(gather)
-    assert "SortAggregate" not in plan, plan
-    assert "Window" not in plan, plan
-    assert plan.count("BroadcastHashJoin") == 1, plan
+def test_nearest_cell_job_budget(spark):
+    """A warm J8 build + count runs in at most 9 Spark jobs; a sizing
+    row count of the events in front of the plan costs 2 more."""
+    q = m.queries()["hex_nearest_cell"]
+    q(spark, SF).count()
+    sc = spark.sparkContext
+    group = "test_nearest_cell_job_budget"
+    sc.setJobGroup(group, "hex_nearest_cell build + count")
+    try:
+        q(spark, SF).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 9, jobs
 
 
 def test_line_dedup_plan_no_cartesian_no_python(spark):

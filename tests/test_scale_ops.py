@@ -86,41 +86,6 @@ def test_knn_library_matches_shared_sql(spark):
     assert (lib.dist_r.values == sql_res.dist_r.values).all()
 
 
-def test_knn_escalating_matches_flat(spark):
-    """nearest_cells_escalating (the 100x-scale bounded-fan-out path) ==
-    the flat-disk shared-SQL result, including tie-breaks — the
-    acceptance bound is proven, this pins the implementation.  Also
-    asserts the escalation actually short-circuits most points at
-    stage 1 (the design's premise for a dense corpus)."""
-    import __spark_entry__ as m
-    from hexscape_spark.knn import nearest_cells_escalating
-    sf = "/root/testdata/sf0.01"
-    m._views(spark, sf)
-    sql_res = spark.sql(m._sql_hex_nearest_cell()).toPandas() \
-        .sort_values("event_id").reset_index(drop=True)
-    ev = spark.sql(sqlgen.assign_sql("events", "event_id")) \
-        .withColumnRenamed("event_id", "point_id").persist()
-    docs = spark.sql(sqlgen.assign_sql("documents", "doc_id"))
-    try:
-        esc = nearest_cells_escalating(ev, docs.select("q", "r", "cell_id"),
-                                       k_ring=3, first_ring=1)
-        lib = esc.withColumn("dist_r", F.round("dist", 6)).toPandas() \
-            .sort_values("point_id").reset_index(drop=True)
-        assert len(lib) == len(sql_res)
-        assert (lib.point_id.values == sql_res.event_id.values).all()
-        assert (lib.nn_cell_id.values == sql_res.nn_cell_id.values).all()
-        assert (lib.dist_r.values == sql_res.dist_r.values).all()
-        # the premise: stage 1 (ring<=1, 7 offsets) settles the majority
-        import math as _math
-        from hexscape_spark import params as _P
-        bound = 2 * (_math.sqrt(3.0) / 2.0) * _P.HEX_WIDTH - 1e-6
-        n_total = len(lib)
-        n_esc = (lib.dist_r.values >= bound - _P.hex_height() / 2.0).sum()
-        assert n_esc < 0.5 * n_total
-    finally:
-        ev.unpersist()
-
-
 def test_streaming_equals_batch(spark):
     """The streaming rollup over availableNow == the batch plan on the
     same files (one code path for the hex math)."""
