@@ -1025,21 +1025,21 @@ FROM bord WHERE border > {sqlgen._f(min_prop * hexlth)}
 
 
 def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, oracle-gated: the portable md5-folded
-    hash evaluates identically in DuckDB, so the oracle recomputes the
-    exact pair set (the xxhash64 production path is the same algorithm,
-    pytest-verified with planted duplicates)."""
+    """MinHash+LSH near-dup pairs, oracle-gated: the md5-folded hash
+    evaluates identically in DuckDB, so the oracle recomputes the exact
+    pair set.  The CLI dedup job runs the same function."""
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import minhash_lsh_pairs_portable
-    return minhash_lsh_pairs_portable(spark.table("documents"),
-                                      num_hashes=16, bands=4)
+    from hexscape_spark.dedup import minhash_lsh_pairs
+    return minhash_lsh_pairs(spark.table("documents"), num_hashes=16,
+                             bands=4)
 
 
-def _sql_minhash_pairs_duck(num_hashes: int = 16, bands: int = 4,
-                            k: int = 3) -> str:
-    """DuckDB mirror of minhash_lsh_pairs_portable (same md5-folded base,
+def _sql_minhash_bands_duck(num_hashes: int, bands: int, k: int) -> str:
+    """The `w -> sh -> ex -> hs -> sig -> bnd` CTE chain shared by the
+    minhash_pairs and ngram_jaccard oracles: the DuckDB mirror of
+    dedup.minhash_lsh_pairs up to its band keys (same md5-folded base,
     same exact-int64 permutation mixing, same shingling and banding; list
-    slices are 1-based inclusive)."""
+    slices are 1-based inclusive).  Ends after `bnd` with no separator."""
     base = sqlgen.md5_int_expr("s")
     mix = sqlgen.mix_params(num_hashes)
     perm_rows = ", ".join(f"({i}, {a}, {b}, {c})"
@@ -1057,7 +1057,13 @@ hs AS (SELECT doc_id, p, MIN({h}) AS m
        GROUP BY doc_id, p),
 sig AS (SELECT doc_id, list(m ORDER BY p) AS sig FROM hs GROUP BY doc_id),
 bnd AS (SELECT doc_id, bb, array_to_string(sig[bb*{rows}+1 : bb*{rows}+{rows}], ',') AS bk
-        FROM sig CROSS JOIN (SELECT unnest(range({bands})) AS bb) AS bs)
+        FROM sig CROSS JOIN (SELECT unnest(range({bands})) AS bb) AS bs)"""
+
+
+def _sql_minhash_pairs_duck(num_hashes: int = 16, bands: int = 4,
+                            k: int = 3) -> str:
+    """DuckDB mirror of dedup.minhash_lsh_pairs."""
+    return _sql_minhash_bands_duck(num_hashes, bands, k) + """
 SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
 FROM bnd x JOIN bnd y ON x.bb = y.bb AND x.bk = y.bk AND x.doc_id < y.doc_id
 """
@@ -1173,34 +1179,16 @@ WHERE rank <= 5
 
 
 def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dups over portable-LSH candidates —
+    """Exact n-gram Jaccard near-dups over MinHash-LSH candidates —
     oracle-gated end to end (banding + verify both reproduced in SQL)."""
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import ngram_jaccard_pairs_portable
-    return ngram_jaccard_pairs_portable(spark.table("documents"),
-                                        threshold=0.5)
+    from hexscape_spark.dedup import ngram_jaccard_pairs
+    return ngram_jaccard_pairs(spark.table("documents"), threshold=0.5)
 
 
 def _sql_ngram_jaccard_duck(threshold: float = 0.5, num_hashes: int = 16,
                             bands: int = 4, k: int = 3) -> str:
-    base = sqlgen.md5_int_expr("s")
-    mix = sqlgen.mix_params(num_hashes)
-    perm_rows = ", ".join(f"({i}, {a}, {b}, {c})"
-                          for i, (a, b, c) in enumerate(mix))
-    h = sqlgen.mix_expr("base", "pa", "pb", "pc", intdiv="//")
-    rows = num_hashes // bands
-    return f"""
-WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM documents),
-sh AS (SELECT doc_id, CASE WHEN len(w) >= {k}
-        THEN [array_to_string(w[i:i+{k - 1}], ' ') FOR i IN range(1, len(w) - {k - 2})]
-        ELSE [array_to_string(w, ' ')] END AS shingles FROM w),
-ex AS (SELECT doc_id, {base} AS base FROM (SELECT doc_id, unnest(shingles) AS s FROM sh) u),
-hs AS (SELECT doc_id, p, MIN({h}) AS m
-       FROM ex CROSS JOIN (SELECT * FROM (VALUES {perm_rows}) AS v(p, pa, pb, pc)) AS ps
-       GROUP BY doc_id, p),
-sig AS (SELECT doc_id, list(m ORDER BY p) AS sig FROM hs GROUP BY doc_id),
-bnd AS (SELECT doc_id, bb, array_to_string(sig[bb*{rows}+1 : bb*{rows}+{rows}], ',') AS bk
-        FROM sig CROSS JOIN (SELECT unnest(range({bands})) AS bb) AS bs),
+    return _sql_minhash_bands_duck(num_hashes, bands, k) + f""",
 pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
           FROM bnd x JOIN bnd y ON x.bb = y.bb AND x.bk = y.bk AND x.doc_id < y.doc_id),
 sets AS (SELECT doc_id, list_distinct(shingles) AS ss FROM sh)
@@ -1514,8 +1502,8 @@ _SQL_SALTED = (
 
 def _q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import with_simhash_portable
-    return with_simhash_portable(spark.table("documents"), bits=16)
+    from hexscape_spark.dedup import with_simhash
+    return with_simhash(spark.table("documents"), bits=16)
 
 
 def _sql_simhash_duck(bits: int = 16) -> str:

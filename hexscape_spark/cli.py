@@ -100,11 +100,12 @@ def job_neighbours(spark, args) -> None:
 
 def job_dedup(spark, args) -> None:
     """Near-duplicate candidate pairs over a documents/pages parquet
-    (MinHash+LSH banding with the bucket cap).  The cap defaults ON here
-    (--max-bucket 10000, 0 disables): this is the production driver, and
-    one degenerate boilerplate bucket of m members emits m²/2 pairs —
-    r5 caught this job emitting 10M pairs from a 20k-doc corpus whose
-    docstring claimed the cap it never passed."""
+    (MinHash+LSH banding with the bucket cap; the same md5-folded
+    minhash_lsh_pairs the oracle-checked minhash_pairs query runs).  The
+    cap defaults ON here (--max-bucket 10000, 0 disables): this is the
+    production job, and one degenerate boilerplate bucket of m members
+    emits m²/2 pairs — r5 caught this job emitting 10M pairs from a
+    20k-doc corpus whose docstring claimed the cap it never passed."""
     from .dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(args.pages)

@@ -1,9 +1,11 @@
 """Deduplication operators for the documents corpus.
 
 Exact (hash groupBy), MinHash+LSH banding, SimHash, and n-gram Jaccard —
-the large-scale training-data-pipeline surface.  Everything is built-in
-Spark SQL expressions (xxhash64 / md5 / array functions); the only shuffles
-are the groupBys on hash/bucket keys, which is the theoretical minimum.
+the large-scale training-data-pipeline surface.  The near-dup operators
+share one hash family, the md5-folded integer (sqlgen.md5_int_expr), so
+the DuckDB oracle reproduces them value-exact.  The MinHash signature is
+one Arrow-batched pandas UDF; the rest is built-in Spark SQL expressions,
+and the shuffles are the groupBys/joins on hash/bucket keys.
 """
 
 from __future__ import annotations
@@ -47,34 +49,10 @@ def _shingles(text_col, k: int = 3):
     )).otherwise(F.array(F.concat_ws(" ", words)))
 
 
-def with_minhash(df: DataFrame, text: str = "text", num_hashes: int = 32,
-                 shingle_k: int = 3, out: str = "minhash") -> DataFrame:
-    """MinHash signature: array<long> of per-permutation minima.
-
-    Permutation i is xxhash64(shingle, seed=i); min over shingles.  All
-    array expressions — no UDF, no shuffle.  The shingle array and the base
-    shingle hashes are materialised ONCE in intermediate projections
-    (Catalyst does not CSE big expression trees across N copies — inlining
-    the shingle expression per hash function costs N x its work).
-    """
-    shingled = df.withColumn("__sh", _shingles(F.col(text), shingle_k))
-    # one base hash per shingle, then cheap per-permutation mixing:
-    # h_i(s) = base(s) * A_i + B_i  (odd multipliers keep it a bijection
-    # on Z/2^64, preserving min-hash uniformity per permutation)
-    based = shingled.withColumn(
-        "__bh", F.transform(F.col("__sh"), lambda s: F.xxhash64(s)))
-    # re-hash the 64-bit base with the permutation id (overflow-safe under
-    # ANSI, unlike multiplicative mixing)
-    sig = F.array(*[
-        F.array_min(F.transform(
-            F.col("__bh"), lambda h, i=i: F.xxhash64(h, F.lit(i))))
-        for i in range(num_hashes)])
-    return based.withColumn(out, sig).drop("__sh", "__bh")
-
-
 def _bucket_pairs(buckets: DataFrame, key: str,
                   max_bucket: int | None) -> DataFrame:
     """Self-join (band, h) buckets into distinct (a, b) pairs with a < b.
+    A band is a MinHash signature slice or one hyperplane-LSH table.
 
     `max_bucket` caps the per-bucket membership BEFORE the self-join: a
     bucket of m members emits m^2/2 pairs, so one degenerate bucket (e.g.
@@ -98,54 +76,19 @@ def _bucket_pairs(buckets: DataFrame, key: str,
 
 
 def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
-                      num_hashes: int = 32, bands: int = 8,
+                      num_hashes: int = 16, bands: int = 4,
                       shingle_k: int = 3,
                       max_bucket: int | None = None) -> DataFrame:
-    """Candidate near-duplicate pairs via LSH banding.
+    """Candidate near-duplicate pairs via MinHash + LSH banding.
 
-    signature -> `bands` band-hashes -> explode -> self-join per bucket.
-    Shuffle key is (band, band_hash): sparse buckets keep the join skew-safe
-    and AQE splits hot buckets.  `max_bucket` is an OPT-IN cap on per-bucket
-    membership (default None = complete results, matching the portable
-    variant; ADVICE r02 — a silent default cap quietly changed existing
-    callers' results).  At web scale PASS a cap: one degenerate bucket of
-    10^6 boilerplate pages emits 10^12 pairs otherwise (see _bucket_pairs);
-    exact-dup clusters dropped by the cap are what exact_duplicates already
-    catches more cheaply.  Returns distinct (a, b), a < b.
-    """
-    rows = num_hashes // bands
-    # r7: repartition BEFORE the signature expressions (single-row-group
-    # inputs otherwise compute every signature on one task), and
-    # materialise the signatures with a localCheckpoint — it both stops
-    # CollapseProject inlining the whole signature expression into every
-    # band-column element_at (the job of the old repartition barrier,
-    # measured 10x wall-clock) AND stops the bucket self-join re-running
-    # the signature subtree once per branch (guide §2.4/§2.5).
-    sig = with_minhash(df.select(key, text).repartition(F.col(key)),
-                       text, num_hashes, shingle_k)
-    sig = sig.drop(text).localCheckpoint(eager=True)
-    band_cols = [
-        F.xxhash64(F.concat_ws(",", *[F.element_at(F.col("minhash"), i * rows + j + 1).cast("string")
-                                      for j in range(rows)]), F.lit(1000 + i)).alias(f"b{i}")
-        for i in range(bands)]
-    banded = sig.select(F.col(key), *band_cols)
-    buckets = banded.select(
-        key, F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"), F.col(f"b{i}").alias("h"))
-            for i in range(bands)])).alias("bh"))
-    buckets = buckets.select(key, "bh.band", "bh.h")
-    return _bucket_pairs(buckets, key, max_bucket)
-
-
-def minhash_lsh_pairs_portable(df: DataFrame, key: str = "doc_id",
-                               text: str = "text", num_hashes: int = 16,
-                               bands: int = 4, shingle_k: int = 3,
-                               max_bucket: int | None = None) -> DataFrame:
-    """Engine-portable MinHash LSH: identical algorithm to
-    minhash_lsh_pairs but with the md5-folded hash (sqlgen.md5_int_expr),
-    which evaluates bit-for-bit the same in DuckDB — so the driver's SQL
-    oracle can recompute the exact pair set.  Band key is the concatenated
-    signature slice itself (banding needs only equality, not another hash).
+    The signature uses the md5-folded hash (sqlgen.md5_int_expr), which
+    evaluates bit-for-bit the same in DuckDB — so the SQL oracle
+    recomputes the exact pair set.  Band key is the concatenated signature
+    slice itself (banding needs only equality, not another hash).
+    `max_bucket` is an OPT-IN cap on per-bucket membership (default None =
+    complete results); at web scale PASS one — a degenerate bucket of 10^6
+    boilerplate pages emits 10^12 pairs otherwise (see _bucket_pairs).
+    Returns distinct (a, b), a < b.
     """
     import hashlib
     import re
@@ -210,10 +153,9 @@ def minhash_lsh_pairs_portable(df: DataFrame, key: str = "doc_id",
     return _bucket_pairs(buckets, key, max_bucket)
 
 
-def with_simhash_portable(df: DataFrame, key: str = "doc_id",
-                          text: str = "text", bits: int = 16,
-                          out: str = "simhash") -> DataFrame:
-    """Engine-portable SimHash: one md5-folded hash per token (explode +
+def with_simhash(df: DataFrame, key: str = "doc_id", text: str = "text",
+                 bits: int = 16, out: str = "simhash") -> DataFrame:
+    """SimHash: one md5-folded hash per token (explode +
     groupBy — the hash is computed ONCE per token, not once per bit), then
     per-bit ±1 vote sums.  Exactly reproducible in DuckDB SQL, so the
     driver oracle can verify it.  Grouped shape is also the scale shape:
@@ -233,21 +175,22 @@ def with_simhash_portable(df: DataFrame, key: str = "doc_id",
     return g.selectExpr(key, f"CAST({sim} AS BIGINT) AS {out}")
 
 
-def ngram_jaccard_pairs_portable(df: DataFrame, key: str = "doc_id",
-                                 text: str = "text", shingle_k: int = 3,
-                                 threshold: float = 0.5,
-                                 num_hashes: int = 16,
-                                 bands: int = 4) -> DataFrame:
-    """Exact n-gram Jaccard over LSH-prefiltered candidates, built from the
-    PORTABLE minhash path so the whole pipeline (banding + exact verify)
-    is reproducible in the DuckDB oracle.  Returns (a, b, jaccard) with
-    jaccard rounded to 6 dp and >= threshold."""
+def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
+                        shingle_k: int = 3, threshold: float = 0.5,
+                        num_hashes: int = 16, bands: int = 4) -> DataFrame:
+    """Exact n-gram Jaccard over LSH-prefiltered candidates: candidate
+    generation is minhash_lsh_pairs (cheap); the exact Jaccard is verified
+    with array_intersect/array_union on distinct shingle sets, computed
+    only for candidates (R3: cheap prefilter before the expensive op).
+    The whole pipeline (banding + exact verify) is reproducible in the
+    DuckDB oracle.  Returns (a, b, jaccard) with jaccard rounded to 6 dp
+    and >= threshold."""
     # the candidate subtree (md5-folded minhash + banding) feeds THREE
     # consumers (the id semi-join and both verify joins) — materialise
     # once (r5: it was being recomputed three times, the dominant cost
     # of the contract query)
-    cands = minhash_lsh_pairs_portable(df, key, text, num_hashes, bands,
-                                       shingle_k).localCheckpoint(eager=True)
+    cands = minhash_lsh_pairs(df, key, text, num_hashes, bands,
+                              shingle_k).localCheckpoint(eager=True)
     # R3: the expensive exact shingle sets are built ONLY for docs that
     # appear in a candidate pair (semi-join prefilter), not the corpus
     ids = (cands.select(F.col("a").alias(key))
@@ -316,19 +259,10 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, key: str = "vec_id",
          .localCheckpoint(eager=True)
     buckets = b.select(
         key, F.explode(F.array(*[
-            F.struct(F.lit(t).alias("tbl"), F.col(f"__b{t}").alias("h"))
+            F.struct(F.lit(t).alias("band"), F.col(f"__b{t}").alias("h"))
             for t in range(tables)])).alias("s")) \
-        .select(key, "s.tbl", "s.h")
-    if max_bucket is not None:
-        ok = (buckets.groupBy("tbl", "h")
-              .agg(F.count(F.lit(1)).alias("__m"))
-              .where(F.col("__m") <= max_bucket).select("tbl", "h"))
-        buckets = buckets.join(ok, on=["tbl", "h"])
-    lhs = buckets.select(F.col(key).alias("a"), "tbl", "h")
-    rhs = buckets.select(F.col(key).alias("b"), "tbl", "h")
-    cands = (lhs.join(rhs, on=["tbl", "h"])
-             .where(F.col("a") < F.col("b"))
-             .select("a", "b").distinct())
+        .select(key, "s.band", "s.h")
+    cands = _bucket_pairs(buckets, key, max_bucket)
     vecs = b.select(F.col(key), F.col("unit_vec"))
     pairs = (cands
              .join(vecs.selectExpr(f"{key} AS a", "unit_vec AS ua"), on="a")
@@ -339,48 +273,16 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, key: str = "vec_id",
             .select("a", "b", "cosine"))
 
 
-def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
-                        shingle_k: int = 3, threshold: float = 0.8,
-                        num_hashes: int = 32, bands: int = 8) -> DataFrame:
-    """Near-dup pairs with exact n-gram Jaccard >= threshold, LSH-prefiltered.
-
-    Candidate generation is minhash_lsh_pairs (cheap); the exact Jaccard is
-    verified with array_intersect/array_union on distinct shingle sets —
-    computed only for candidates (R3: cheap prefilter before expensive op).
-    An explicit semi-join prunes the shingle build to candidate members
-    (r5 — the join alone would not stop Catalyst from materialising the
-    shingle arrays for every document, twice).
-    """
-    cands = minhash_lsh_pairs(df, key, text, num_hashes, bands, shingle_k) \
-        .localCheckpoint(eager=True)   # feeds the semi-join AND the verify
-    cand_ids = (cands.select(F.col("a").alias(key))
-                .unionByName(cands.select(F.col("b").alias(key))).distinct())
-    # r7: spread + materialise the shingle sets once — see
-    # ngram_jaccard_pairs_portable
-    sh = (df.join(cand_ids, on=key, how="left_semi")
-          .repartition(F.col(key))
-          .select(F.col(key),
-                  F.array_distinct(_shingles(F.col(text),
-                                             shingle_k)).alias("sh"))
-          .localCheckpoint(eager=True))
-    j = (cands.join(sh.withColumnRenamed("sh", "sh_a"), cands.a == sh[key]).drop(key)
-         .join(sh.withColumnRenamed("sh", "sh_b"), cands.b == sh[key]).drop(key))
-    jac = (F.size(F.array_intersect("sh_a", "sh_b")) /
-           F.size(F.array_union("sh_a", "sh_b")))
-    return (j.withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select("a", "b", "jaccard"))
-
-
 def dedup_families(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
                    a: str = "id_a", b: str = "id_b",
                    quality: str | None = None,
                    cc_local_cap: int | None = None) -> DataFrame:
     """Duplicate-FAMILY clustering: the pipeline stage after pair
     generation (minhash_lsh_pairs / ngram_jaccard_pairs /
-    embedding_near_dup_pairs all emit (id_a, id_b)) in a C4/RefinedWeb-
-    style corpus dedup — near-duplication is transitive in effect (A~B,
-    B~C => one family), so pairs must be clustered before dropping.
+    embedding_near_dup_pairs all emit (a, b); pass a="a", b="b" or rename
+    to the default id_a/id_b) in a C4/RefinedWeb-style corpus dedup —
+    near-duplication is transitive in effect (A~B, B~C => one family), so
+    pairs must be clustered before dropping.
 
     Connected components over the pair graph (graph.connected_components:
     O(log n) equi-join rounds) give every document a `family_id` (its own

@@ -186,20 +186,27 @@ def test_nearest_cell_plan_broadcast_minstruct(spark):
     assert "partial_min" in plan, plan
 
 
-def test_nearest_cell_job_budget(spark):
-    """A warm J8 build + count runs in at most 9 Spark jobs; a sizing
-    row count of the events in front of the plan costs 2 more."""
-    q = m.queries()["hex_nearest_cell"]
+# warm build + count jobs, equal at sf0.01 and sf0.1 (local[8]); for
+# hex_nearest_cell a sizing count of the events would cost 2 more
+_JOB_BUDGET = {"hex_nearest_cell": 9, "minhash_pairs": 6, "ngram_jaccard": 12}
+
+
+@pytest.mark.parametrize("name", _JOB_BUDGET)
+def test_query_job_budget(spark, name):
+    """A warm build + count of the query runs in at most its budgeted
+    Spark jobs, so an extra eager checkpoint or sizing action cannot
+    creep in."""
+    q = m.queries()[name]
     q(spark, SF).count()
     sc = spark.sparkContext
-    group = "test_nearest_cell_job_budget"
-    sc.setJobGroup(group, "hex_nearest_cell build + count")
+    group = f"test_query_job_budget_{name}"
+    sc.setJobGroup(group, f"{name} build + count")
     try:
         q(spark, SF).count()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 9, jobs
+    assert len(jobs) <= _JOB_BUDGET[name], jobs
 
 
 def test_line_dedup_plan_no_cartesian_no_python(spark):

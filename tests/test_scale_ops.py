@@ -409,6 +409,39 @@ def test_dedup_variants_find_planted_near_dups(spark):
     assert all(a != 102 and b != 102 for a, b in got)
 
 
+def test_cli_dedup_job_finds_planted_pair_and_caps_cluster(spark, tmp_path):
+    """The CLI dedup job (called directly: main() would stop the shared
+    session) writes the planted near-dup pair, and its --max-bucket cap
+    keeps an exact-dup cluster out of the pair join."""
+    import argparse
+
+    from hexscape_spark import cli
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "while the spark engine shuffles rows across many partitions")
+    rows = [(i, f"document number {i} " + base[: 40 + i] +
+             f" unique tail {i * 7919}") for i in range(50)]
+    rows += [(100, base), (101, base + " tiny"),
+             (102, "completely different content about hexagons and maps")]
+    rows += [(i, "same boilerplate text repeated verbatim")
+             for i in range(10_000, 12_000)]
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(rows, "doc_id LONG, text STRING") \
+        .write.parquet(pages)
+
+    def run(max_bucket):
+        out = str(tmp_path / f"pairs_{max_bucket}")
+        cli.job_dedup(spark, argparse.Namespace(
+            pages=pages, out=out, num_hashes=32, bands=8,
+            max_bucket=max_bucket))
+        return spark.read.parquet(out)
+
+    in_cluster = F.col("a") >= 10_000            # then b > a is too
+    uncapped = run(10_000)
+    assert uncapped.where((F.col("a") == 100) & (F.col("b") == 101)).count() == 1
+    assert uncapped.where(in_cluster).count() == 2000 * 1999 // 2
+    assert run(500).where(in_cluster).count() == 0
+
+
 def test_embedding_near_dup_lsh_recall_and_plan(spark):
     """Scale path for embedding near-dups (VERDICT r02 #3): LSH candidates
     -> exact cosine predicate.  On planted near-duplicates it recovers
