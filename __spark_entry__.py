@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from hexscape_spark import hexgrid, params as P
 from hexscape_spark import sqlgen
+from hexscape_spark.checkpoint import materialise
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -1437,14 +1438,15 @@ def _q_hex_kring_profile(spark: SparkSession, sf_dir: str,
     """Spark-side plan for the kRing disk/ring profile (r7): same
     two-sided subtree re-execution + IsNotNull re-inlining fix as
     _q_hex_neighbours — the per-cell count relation is computed once,
-    checkpointed, and joined against its offset-shifted self.  All
+    materialised, and joined against its offset-shifted self.  All
     aggregates are integer sums, so the rows are bit-identical to the
     shared SQL text the oracle keeps (_sql_hex_kring_profile)."""
     _views(spark, sf_dir)
     sub = sqlgen.assign_sql("documents", "doc_id")
-    cells = spark.sql(
+    # shared subtree + plan barrier: both join sides read the counts
+    cells = materialise(spark.sql(
         "SELECT q, r, cell_id, COUNT(*) AS n FROM (" + sub +
-        ") AS t GROUP BY q, r, cell_id").localCheckpoint(eager=True)
+        ") AS t GROUP BY q, r, cell_id"))
     offs = spark.createDataFrame(hexgrid.kring_offsets(max_k),
                                  "dq INT, dr INT, ring INT")
     shifted = (cells.select("cell_id", "q", "r")
@@ -1472,19 +1474,14 @@ def _q_salted_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain SQL is its oracle (salting must be invisible in results)."""
     _views(spark, sf_dir)
     from hexscape_spark.skew import salted_agg
-    # r7: salted_agg reads its input twice (heavy-key detection pass +
-    # the salted aggregation) — materialise the assigned events ONCE via
-    # a spread localCheckpoint instead of two single-task scan+assign
-    # executions (guide §2.4/§2.5).  sample_fraction=1.0 makes the heavy
-    # set exact counts, and the final per-cell count/int-cents sums are
-    # partition-exact, so the result cannot change.
+    # salted_agg reads its input twice (heavy-key pass + salted agg); the
+    # assign is cheap JVM arithmetic, so both passes recompute it rather
+    # than pay a materialise job.  The REPARTITION hint spreads the scan;
+    # sample_fraction=1.0 makes the heavy set exact counts.
     sub = sqlgen.assign_sql(
         "(SELECT /*+ REPARTITION(event_id) */ * FROM events)", "event_id",
         keep=["value"])
-    # project to the three columns the rollup touches BEFORE materialising
-    # (guide §2.3 — lon/lat/q/r would only inflate the checkpoint)
-    ev = spark.sql(f"SELECT event_id, cell_id, value FROM ({sub}) AS t") \
-        .localCheckpoint(eager=True)
+    ev = spark.sql(f"SELECT event_id, cell_id, value FROM ({sub}) AS t")
     ev = ev.withColumn("value_cents",
                        F.expr("CAST(ROUND(value * 100) AS BIGINT)"))
     out = salted_agg(ev, key="cell_id", sums=["value_cents"],
@@ -1542,8 +1539,8 @@ def _q_streaming_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = streaming_events_hour_cell(stream_events(spark, src),
                                      watermark="2 hours")
     run_available_now(res, ckpt, out)
-    final = spark.read.parquet(out).persist()
-    final.count()
+    # plan barrier: the rows must outlive the rmtree of their files
+    final = materialise(spark.read.parquet(out))
     shutil.rmtree(base, ignore_errors=True)
     return final.select("hour_key", "cell_id", "n", "sum_cents")
 
@@ -1885,7 +1882,7 @@ def _assign_ckpt(spark: SparkSession, table: str, key: str,
         `spread=False` skips the hint for small inputs where the A/B
         showed the extra shuffle costs more than the parallelism buys
         (documents at 50k rows: 0.23 s unhinted vs 0.30 s hinted);
-      * the eager localCheckpoint materialises (key, lon, lat, q, r) so
+      * materialise (a plan barrier) stores (key, lon, lat, q, r) so
         downstream equi-joins see a plain relation.  Without it, the
         join-key IsNotNull inference re-substitutes the WHOLE layered
         geocode+cube-rounding alias chain into a scan-level Filter (and
@@ -1899,8 +1896,8 @@ def _assign_ckpt(spark: SparkSession, table: str, key: str,
         else table
     sub = sqlgen.assign_sql(src, key)
     d = "DISTINCT " if distinct else ""
-    return spark.sql(f"SELECT {d}{select} FROM ({sub}) AS t") \
-        .localCheckpoint(eager=True)
+    # plan barrier: joins must not re-inline the assign expression tree
+    return materialise(spark.sql(f"SELECT {d}{select} FROM ({sub}) AS t"))
 
 
 def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,11 +1,12 @@
-"""Checkpointing with per-partition lineage + metrics (north-rule R8).
+"""Materialisation: durable parquet checkpoints and in-run helpers.
 
-Every pipeline stage can be materialised as a Parquet checkpoint table
-keyed by (name, params, engine_version).  A manifest JSON records the
-parameter fingerprint, row/byte metrics and per-partition row counts, so a
-re-run resumes from the last valid checkpoint instead of recomputing — the
+`checkpoint` writes a pipeline stage as a Parquet table keyed by (name,
+params, engine_version).  A manifest JSON records the parameter
+fingerprint, row/byte metrics and per-partition row counts, so a re-run
+resumes from the last valid checkpoint instead of recomputing — the
 Spark-native equivalent of the reference's qs cache with version check
-(R/load_corine.R:171-199, R/read_corine.R:39-42).
+(R/load_corine.R:171-199, R/read_corine.R:39-42).  In-run
+materialisation goes only through `materialise` and `cached` below.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import hashlib
 import json
 import os
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,6 +87,33 @@ def checkpoint(df: DataFrame, root: str, name: str, params: dict | None = None,
         json.dump(manifest, f, indent=1)
     os.replace(tmp, manifest_path)
     return out
+
+
+def materialise(df: DataFrame) -> DataFrame:
+    """Compute `df` now (eager localCheckpoint); the returned plan reads
+    the stored blocks and its lineage is cut.  Every call costs a job, so
+    a call site names one reason in a comment: a shared subtree (Catalyst
+    re-runs a subtree per consumer), a plan barrier (downstream must not
+    re-inline the upstream plan, or the rows must outlive their source),
+    a loop boundary (round k must not replay rounds 1..k-1), or a Python
+    stage that must not run twice.
+
+    Durability: the blocks live on the executors that computed them and
+    are freed when the DataFrame is garbage-collected.  A lost executor
+    loses its blocks for good and jobs reading them fail; what must
+    survive that, or a restart, goes through `checkpoint` (parquet).
+    """
+    return df.localCheckpoint(eager=True)
+
+
+@contextmanager
+def cached(df: DataFrame):
+    """Persist `df` for a `with` block; unpersist on exit, also on error."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def read_manifest(root: str, name: str) -> dict | None:

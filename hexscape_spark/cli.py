@@ -127,6 +127,7 @@ def job_webtext(spark, args) -> None:
     the WARC glob; output is the clean corpus."""
     from pyspark.sql import functions as F
 
+    from .checkpoint import cached, materialise
     from .dedup import dedup_keep_first, dedup_lines
     from .textops import (with_html_text, with_lang_guess,
                           with_quality_filter, with_token_count)
@@ -141,57 +142,58 @@ def job_webtext(spark, args) -> None:
         return p.map(lambda b: http_body(bytes(b)))
 
     docs = read_warc(spark, args.pages) \
-        .withColumn("html", _body(F.col("payload"))) \
-        .persist()                     # one WARC parse for count + write
-    txt = with_html_text(docs, "html").select("url", "warc_date", "text")
-    # boilerplate lines (nav menus, cookie banners, footers) survive only
-    # at their first corpus occurrence before quality stats are computed.
-    # dedup_lines needs a UNIQUE key and real crawls repeat URLs (re-crawls,
-    # records with no WARC-Target-URI): drop byte-identical re-fetches of a
-    # URL first, then key on url#xxhash64(text)#row_number-within-
-    # (url, hash).  The row_number disambiguates genuine 64-bit hash
-    # collisions, so the key is collision-FREE (the r5 url#hash key
-    # silently merged colliding documents — ADVICE r05), and the window
-    # partitions on (url, HASH) so its per-partition text sort touches
-    # only actual collisions (~1 row): partitioning on url alone would
-    # funnel every NULL-url record — real crawls have many — into ONE
-    # task sorting full document text (r6 review).
-    from pyspark.sql import Window as W
-    txt = (txt.groupBy("url", "text")
-           .agg(F.min("warc_date").alias("warc_date"))  # deterministic
-           .withColumn("__h", F.xxhash64("text"))
-           .withColumn("__doc_key", F.concat_ws(
-               "#", F.col("url"), F.col("__h").cast("string"),
-               F.row_number().over(
-                   W.partitionBy("url", "__h").orderBy("text"))
-               .cast("string")))
-           .drop("__h"))
-    # hash_shuffle=True is the corpus-scale default here (VERDICT r05 #7):
-    # the winner aggregation + its join side move 8-byte xxhash64 line
-    # keys instead of full line text.  Trade: two distinct LINES that
-    # collide (~2^-64 per pair) merge their dedup classes — one line is
-    # dropped where it should survive; documents are never merged (the
-    # reassembly key above stays exact).  The exact mode remains the
-    # library default for oracle-grade semantics.
-    txt = dedup_lines(txt, key="__doc_key", hash_shuffle=True) \
-        .drop("text", "__doc_key") \
-        .withColumnRenamed("text_line_deduped", "text")
-    enriched = with_lang_guess(with_token_count(txt))
-    filtered = with_quality_filter(enriched)
-    clean = dedup_keep_first(filtered.withColumnRenamed("url", "doc_id"),
-                             key="doc_id")
-    if args.substr_dedup:
-        # opt-in suffix-array-style stage (r6): excise >=N-token spans
-        # repeated anywhere in the corpus, keeping first occurrences.
-        # Runs AFTER exact dedup (whole-doc copies are cheaper there)
-        # and last overall so excision sees the final document set.
-        from .dedup import dedup_substrings
-        clean = dedup_substrings(clean, key="doc_id",
-                                 min_tokens=args.substr_dedup) \
-            .drop("text").withColumnRenamed("text_substr_deduped", "text")
-    clean.write.mode("overwrite").parquet(args.out)
-    n_in = docs.count()
-    docs.unpersist()
+        .withColumn("html", _body(F.col("payload")))
+    with cached(docs) as docs:   # one WARC parse for count + write
+        txt = with_html_text(docs, "html").select("url", "warc_date", "text")
+        # boilerplate lines (nav menus, cookie banners, footers) survive
+        # only at their first corpus occurrence before quality stats are
+        # computed.  dedup_lines needs a UNIQUE key and real crawls repeat
+        # URLs (re-crawls, records with no WARC-Target-URI): drop byte-
+        # identical re-fetches of a URL first, then key on
+        # url#xxhash64(text)#row_number-within-
+        # (url, hash).  The row_number disambiguates genuine 64-bit hash
+        # collisions, so the key is collision-FREE (the r5 url#hash key
+        # silently merged colliding documents — ADVICE r05), and the window
+        # partitions on (url, HASH) so its per-partition text sort touches
+        # only actual collisions (~1 row): partitioning on url alone would
+        # funnel every NULL-url record — real crawls have many — into ONE
+        # task sorting full document text (r6 review).
+        from pyspark.sql import Window as W
+        txt = (txt.groupBy("url", "text")
+               .agg(F.min("warc_date").alias("warc_date"))  # deterministic
+               .withColumn("__h", F.xxhash64("text"))
+               .withColumn("__doc_key", F.concat_ws(
+                   "#", F.col("url"), F.col("__h").cast("string"),
+                   F.row_number().over(
+                       W.partitionBy("url", "__h").orderBy("text"))
+                   .cast("string")))
+               .drop("__h"))
+        # hash_shuffle=True is the corpus-scale default here (VERDICT r05 #7):
+        # the winner aggregation + its join side move 8-byte xxhash64 line
+        # keys instead of full line text.  Trade: two distinct LINES that
+        # collide (~2^-64 per pair) merge their dedup classes — one line is
+        # dropped where it should survive; documents are never merged (the
+        # reassembly key above stays exact).  The exact mode remains the
+        # library default for oracle-grade semantics.
+        txt = dedup_lines(txt, key="__doc_key", hash_shuffle=True) \
+            .drop("text", "__doc_key") \
+            .withColumnRenamed("text_line_deduped", "text")
+        enriched = with_lang_guess(with_token_count(txt))
+        filtered = with_quality_filter(enriched)
+        clean = dedup_keep_first(filtered.withColumnRenamed("url", "doc_id"),
+                                 key="doc_id")
+        if args.substr_dedup:
+            # opt-in suffix-array-style stage (r6): excise >=N-token spans
+            # repeated anywhere in the corpus, keeping first occurrences.
+            # Runs AFTER exact dedup (whole-doc copies are cheaper there)
+            # and last overall so excision sees the final document set.
+            from .dedup import dedup_substrings
+            # Python stage: the enrichment UDFs feed both substring passes
+            clean = dedup_substrings(materialise(clean), key="doc_id",
+                                     min_tokens=args.substr_dedup) \
+                .drop("text").withColumnRenamed("text_substr_deduped", "text")
+        clean.write.mode("overwrite").parquet(args.out)
+        n_in = docs.count()
     n_out = spark.read.parquet(args.out).count()
     print(json.dumps({"job": "webtext", "records_in": n_in,
                       "docs_out": n_out}))

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .checkpoint import materialise
+
 
 def exact_duplicates(df: DataFrame, key: str = "doc_id",
                      text: str = "text") -> DataFrame:
@@ -144,12 +146,8 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
             F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("h"))
             for b in range(bands)])).alias("bh"))
     buckets = buckets.select(key, "bh.band", "bh.h")
-    # materialise ONCE: the bucket self-join (and the optional size-cap
-    # aggregate) would otherwise re-execute the whole signature subtree
-    # per consumer — Catalyst has no cross-branch subtree reuse (r7,
-    # guide §2.4; replaces the old repartition barrier, which only
-    # stopped per-band re-inlining, not per-branch re-execution)
-    buckets = buckets.localCheckpoint(eager=True)
+    # Python stage: the self-join and the size cap both read the signatures
+    buckets = materialise(buckets)
     return _bucket_pairs(buckets, key, max_bucket)
 
 
@@ -185,27 +183,21 @@ def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
     The whole pipeline (banding + exact verify) is reproducible in the
     DuckDB oracle.  Returns (a, b, jaccard) with jaccard rounded to 6 dp
     and >= threshold."""
-    # the candidate subtree (md5-folded minhash + banding) feeds THREE
-    # consumers (the id semi-join and both verify joins) — materialise
-    # once (r5: it was being recomputed three times, the dominant cost
-    # of the contract query)
-    cands = minhash_lsh_pairs(df, key, text, num_hashes, bands,
-                              shingle_k).localCheckpoint(eager=True)
+    # shared subtree: the id semi-join and both verify joins read cands
+    cands = materialise(minhash_lsh_pairs(df, key, text, num_hashes, bands,
+                                          shingle_k))
     # R3: the expensive exact shingle sets are built ONLY for docs that
     # appear in a candidate pair (semi-join prefilter), not the corpus
     ids = (cands.select(F.col("a").alias(key))
            .unionByName(cands.select(F.col("b").alias(key))).distinct())
     # r7: repartition after the semi-join (single-row-group input -> the
-    # JVM shingle transform ran on one task) and materialise the shingle
-    # sets ONCE — both verify joins consume them, and without the
-    # checkpoint each join side re-built every candidate's shingle array
-    # (guide §2.4/§2.5)
-    sh = (df.join(ids, on=key, how="left_semi")
-          .repartition(F.col(key))
-          .select(F.col(key),
-                  F.array_distinct(_shingles(F.col(text), shingle_k))
-                  .alias("ss"))
-          .localCheckpoint(eager=True))
+    # JVM shingle transform ran on one task)
+    sh = materialise(   # shared subtree: both verify joins read the sets
+        df.join(ids, on=key, how="left_semi")
+        .repartition(F.col(key))
+        .select(F.col(key),
+                F.array_distinct(_shingles(F.col(text), shingle_k))
+                .alias("ss")))
     j = (cands.join(sh.selectExpr(f"{key} AS a", "ss AS sa"), on="a")
          .join(sh.selectExpr(f"{key} AS b", "ss AS sb"), on="b"))
     jac = F.round(F.size(F.array_intersect("sa", "sb"))
@@ -249,14 +241,14 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, key: str = "vec_id",
     dropped before the self-join (degenerate identical-vector clusters).
     Returns (a, b, cosine) with a < b and cosine >= threshold (6 dp)."""
     from .similarity import _dot, with_lsh_buckets, with_unit_norm
-    # r7: one spread Arrow pass for norm+sketches, materialised once —
-    # see cosine_topk_lsh (same four-branch re-execution fix)
+    # r7: one spread Arrow pass for norm+sketches (see cosine_topk_lsh)
     base = df.where(F.col(vec).isNotNull()) \
         .select(key, vec).repartition(F.col(key))
     u = with_unit_norm(base, vec)
     b = with_lsh_buckets(u, "unit_vec", planes, dim, tables)
-    b = b.select(key, "unit_vec", *[f"__b{t}" for t in range(tables)]) \
-         .localCheckpoint(eager=True)
+    # Python stage: the bucket self-join and both vector joins read b
+    b = materialise(b.select(key, "unit_vec",
+                             *[f"__b{t}" for t in range(tables)]))
     buckets = b.select(
         key, F.explode(F.array(*[
             F.struct(F.lit(t).alias("band"), F.col(f"__b{t}").alias("h"))
@@ -369,10 +361,10 @@ def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
     itself (exact — no hash-collision false merges) picking the global
     first occurrence as a combinable MIN(struct(key, idx)) with map-side
     partial aggregation -> equi-join back -> per-document reassembly via
-    sort_array(collect_list(struct(idx, line))).  The input is persisted
-    for the duration of the plan (three branches read it: winner agg,
-    keep join, reassembly join — an upstream extraction UDF would
-    otherwise run three times).  `key` values must be UNIQUE (the
+    sort_array(collect_list(struct(idx, line))).  Three branches read
+    the input (winner agg, keep join, reassembly join): a caller whose
+    input ends in an expensive stage (an extraction UDF) materialises or
+    caches it first.  `key` values must be UNIQUE (the
     reassembly join identity — duplicate keys would merge documents);
     NULL-key rows pass through with their text untouched and never
     participate.  `sep` is a LITERAL separator (escaped before the
@@ -389,14 +381,9 @@ def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
     distinct lines collide in xxhash64 (~2^-64 per pair), which would
     merge their dedup classes — the exact default keeps the oracle-grade
     semantics.
-
-    The input persist lives for the application unless the CALLER
-    unpersists `df` after materialising the output (ADVICE r06) — the
-    operator cannot release it itself because the returned plan is lazy.
     """
     import re as _re
 
-    df = df.persist()
     # NULL keys have no reassembly identity (and a NULL key would win
     # every line: MIN(struct) sorts a NULL field first — the r4 struct-
     # MIN lesson): such rows pass through with their text unchanged and
@@ -458,8 +445,8 @@ def contamination_flags(df: DataFrame, benchmark: DataFrame,
     one count-distinct per document — never an all-pairs comparison.
     Documents shorter than `n` words shingle to their whole text (the
     _shingles short-doc rule), so an exact short-text match still flags.
+    The input is read twice (gram explode + final join-back).
     """
-    df = df.persist()        # read twice: gram explode + final join-back
     # NULL keys have no join-back identity — they come back with NULL
     # flags ("unknown"), never a silent clean verdict
     nulls = (df.where(F.col(key).isNull())
@@ -571,11 +558,9 @@ def dedup_substrings(df: DataFrame, key: str = "doc_id",
     dedup_lines' reassembly join).  The gram pass runs TWICE (the
     winner aggregate and the duplicate join both read it): recomputing
     a map-only O(n) rolling-hash stage is deliberately cheaper at
-    corpus scale than materialising a token-count-row relation, and the
-    persisted input keeps upstream lineage from re-running.  The
-    persist lives for the application unless the CALLER unpersists
-    after materialising the output (`df` is the persisted handle) —
-    same contract as dedup_lines/contamination_flags (ADVICE r06).
+    corpus scale than materialising a token-count-row relation; the
+    input itself is read twice too, so a caller whose input ends in an
+    expensive stage materialises it first (as for dedup_lines).
 
     Caveats, documented deliberately: tokens are `str.split()`
     whitespace tokens and the output rejoins survivors with single
@@ -584,7 +569,6 @@ def dedup_substrings(df: DataFrame, key: str = "doc_id",
     for participating rows — NULL-key or NULL-text rows pass through
     untouched like dedup_lines."""
     key_t = dict(df.dtypes)[key]
-    df = df.persist()
     nulls = df.where(F.col(key).isNull() | F.col(text).isNull()) \
         .withColumn(out, F.col(text))
     live = df.where(F.col(key).isNotNull() & F.col(text).isNotNull())

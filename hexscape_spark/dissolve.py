@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geo
+from .checkpoint import cached, materialise
 
 # total level-1 boundary WKB per key above which the final merge routes
 # through the component-parallel stages (~2 MB ≈ the documented
@@ -166,8 +167,7 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
         })
 
     base = df.select(key, geom)
-    cached = None
-    salt_col = None
+    salt = F.pmod(F.xxhash64(F.col(geom)), F.lit(num_salts))
     if spatial_salt:
         @F.pandas_udf("array<double>")
         def _bbox_centre(wkbs: pd.Series) -> pd.Series:
@@ -177,89 +177,76 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
                 out.append([0.5 * (b[0] + b[2]), 0.5 * (b[1] + b[3])])
             return pd.Series(out)
 
-        with_c = base.withColumn("__ctr", _bbox_centre(F.col(geom))) \
+        base = base.withColumn("__ctr", _bbox_centre(F.col(geom))) \
             .withColumn("__cx", F.element_at("__ctr", 1)) \
             .withColumn("__cy", F.element_at("__ctr", 2)).drop("__ctr")
-        # ADVICE r03 #5: the consumers below (sub-salt counts, level 1)
-        # would each re-execute the full upstream lineage of `df`
-        # INCLUDING the per-row WKB-parse UDF; persist once, release after
-        # level 1 is materialised.
-        with_c = with_c.persist()
-        cached = with_c
-        if bounds is not None:
-            # caller knows the extent (catalog metadata / CRS window) —
-            # no measurement job.  The grid only needs to COVER the
-            # centres for load balancing; F.least clamps the top edge and
-            # a below-range centre still salts into a valid distinct group.
-            x0, y0, x1, y1 = (float(v) for v in bounds)
-            row = {"x0": x0, "x1": x1, "y0": y0, "y1": y1}
-        else:
-            ext = with_c.agg(F.min("__cx").alias("x0"),
-                             F.max("__cx").alias("x1"),
-                             F.min("__cy").alias("y0"),
-                             F.max("__cy").alias("y1")).collect()
-            row = ext[0] if ext else None
-        if row is not None and row["x0"] is not None and \
-                (row["x1"] > row["x0"] or row["y1"] > row["y0"]):
-            import math
-            nb = max(1, int(math.ceil(math.sqrt(num_salts))))
-            bx = max((row["x1"] - row["x0"]) / nb, 1e-300)
-            by = max((row["y1"] - row["y0"]) / nb, 1e-300)
-            gx = F.least(F.floor((F.col("__cx") - F.lit(row["x0"])) / bx),
-                         F.lit(nb - 1))
-            gy = F.least(F.floor((F.col("__cy") - F.lit(row["y0"])) / by),
-                         F.lit(nb - 1))
-            base = with_c.withColumn("__salt",
-                                     (gx * nb + gy).cast("long")) \
-                .drop("__cx", "__cy")
-            salt_col = "__salt"
-    if salt_col is None:
-        base = base.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(geom)), F.lit(num_salts)))
-        if cached is not None:
-            # degenerate zero-extent spatial salt: the with_c cache is
-            # never read again — release it and cache the hash-salted
-            # base instead, or the planning counts below would re-run
-            # df's upstream lineage (r4 review)
-            cached.unpersist()
-        base = base.persist()                # same planning-rescan fix
-        cached = base
-    # adaptive sub-salting (the skew.salted_agg pattern): a HEAVY slice —
-    # e.g. a dense cluster concentrated in one spatial tile — splits into
-    # `sub_salts` hash sub-slices so no level-1 task carries it alone; the
-    # level-2 merge then reconciles a handful of overlapping partials for
-    # that tile instead of the whole cluster serially.  The decision is
-    # LAZY (VERDICT r04 #1): the count/threshold/heavy-slice derivation is
-    # a broadcast subtree of the level-1 job itself — a scalar-agg
-    # threshold crossJoined onto the per-slice counts — instead of two
-    # driver collects.  The heavy set is bounded by construction (every
-    # member has > 1024 rows, so at most n/1024 slices broadcast).
-    sub_salts = 4
-    counts = (base.groupBy(key, "__salt")
-              .agg(F.count(F.lit(1)).alias("__n")))
-    thresh = counts.agg(
-        F.greatest(F.lit(1024.0),
-                   4.0 * F.coalesce(F.avg("__n"), F.lit(0.0))).alias("__thr"))
-    heavy = (counts.crossJoin(F.broadcast(thresh))
-             .where(F.col("__n") > F.col("__thr"))
-             .select(key, "__salt").withColumn("__heavy", F.lit(True)))
-    salted = (base.join(F.broadcast(heavy), on=[key, "__salt"], how="left")
-              .withColumn(
-                  "__salt",
-                  F.when(F.col("__heavy").isNotNull(),
-                         F.col("__salt") * sub_salts +
-                         F.pmod(F.xxhash64(F.col(geom)), F.lit(sub_salts)))
-                  .otherwise(F.col("__salt") * sub_salts))
-              .drop("__heavy"))
-    partial = salted.groupBy(key, "__salt").applyInPandas(
-        pre_union, schema=l1_schema)
-    # eager checkpoint: level 1 (the expensive grouped union over the raw
-    # features) runs exactly once, after which the planning cache is freed
-    # (ADVICE r03 #5 — the upstream UDF lineage no longer re-executes per
-    # downstream job)
-    partial = partial.localCheckpoint(eager=True)
-    if cached is not None:
-        cached.unpersist()
+    # ADVICE r03 #5: the extent job, the sub-salt counts and level 1 would
+    # each re-run df's upstream lineage (and the centre UDF) — cache `base`
+    # until level 1 is materialised
+    with cached(base) as base:
+        if spatial_salt:
+            if bounds is not None:
+                # caller knows the extent (catalog metadata / CRS window)
+                # — no measurement job.  The grid only needs to COVER the
+                # centres for load balancing; F.least clamps the top edge
+                # and a below-range centre still salts into a valid
+                # distinct group.
+                x0, y0, x1, y1 = (float(v) for v in bounds)
+                row = {"x0": x0, "x1": x1, "y0": y0, "y1": y1}
+            else:
+                ext = base.agg(F.min("__cx").alias("x0"),
+                               F.max("__cx").alias("x1"),
+                               F.min("__cy").alias("y0"),
+                               F.max("__cy").alias("y1")).collect()
+                row = ext[0] if ext else None
+            # a degenerate zero-extent input keeps the hash salt
+            if row is not None and row["x0"] is not None and \
+                    (row["x1"] > row["x0"] or row["y1"] > row["y0"]):
+                import math
+                nb = max(1, int(math.ceil(math.sqrt(num_salts))))
+                bx = max((row["x1"] - row["x0"]) / nb, 1e-300)
+                by = max((row["y1"] - row["y0"]) / nb, 1e-300)
+                gx = F.least(
+                    F.floor((F.col("__cx") - F.lit(row["x0"])) / bx),
+                    F.lit(nb - 1))
+                gy = F.least(
+                    F.floor((F.col("__cy") - F.lit(row["y0"])) / by),
+                    F.lit(nb - 1))
+                salt = (gx * nb + gy).cast("long")
+        salted = base.withColumn("__salt", salt).drop("__cx", "__cy")
+        # adaptive sub-salting (the skew.salted_agg pattern): a HEAVY
+        # slice — e.g. a dense cluster concentrated in one spatial tile —
+        # splits into `sub_salts` hash sub-slices so no level-1 task
+        # carries it alone; the level-2 merge then reconciles a handful
+        # of overlapping partials for that tile instead of the whole
+        # cluster serially.  The decision is LAZY (VERDICT r04 #1): the
+        # count/threshold/heavy-slice derivation is a broadcast subtree
+        # of the level-1 job itself — a scalar-agg threshold crossJoined
+        # onto the per-slice counts — instead of two driver collects.
+        # The heavy set is bounded by construction (every member has >
+        # 1024 rows, so at most n/1024 slices broadcast).
+        sub_salts = 4
+        counts = (salted.groupBy(key, "__salt")
+                  .agg(F.count(F.lit(1)).alias("__n")))
+        thresh = counts.agg(
+            F.greatest(F.lit(1024.0), 4.0 * F.coalesce(
+                F.avg("__n"), F.lit(0.0))).alias("__thr"))
+        heavy = (counts.crossJoin(F.broadcast(thresh))
+                 .where(F.col("__n") > F.col("__thr"))
+                 .select(key, "__salt").withColumn("__heavy", F.lit(True)))
+        salted = (salted.join(F.broadcast(heavy), on=[key, "__salt"],
+                              how="left")
+                  .withColumn(
+                      "__salt",
+                      F.when(F.col("__heavy").isNotNull(),
+                             F.col("__salt") * sub_salts +
+                             F.pmod(F.xxhash64(F.col(geom)),
+                                    F.lit(sub_salts)))
+                      .otherwise(F.col("__salt") * sub_salts))
+                  .drop("__heavy"))
+        # Python stage: the level-1 union runs once, then the cache goes
+        partial = materialise(salted.groupBy(key, "__salt").applyInPandas(
+            pre_union, schema=l1_schema))
 
     # COMPONENT-PARALLEL final merge (VERDICT r03 #4, mechanism revised on
     # measurement): the ~10 s serial bound of the one-task-per-key final

@@ -10,10 +10,13 @@ hex distance as the unobstructed fast path
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import sqlgen
+from .checkpoint import cached, materialise
 from .hexgrid import kring_offsets_df
 
 
@@ -65,7 +68,7 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int = 32,
     of scheduler overhead for microseconds of actual BFS; now ~2 s).
     Larger graphs run the iterative distributed loop: each round one
     shuffle on the frontier only (frontiers shrink — AQE coalesces),
-    localCheckpointed so round k never re-executes rounds 1..k-1.  Both
+    materialised so round k never re-executes rounds 1..k-1.  Both
     regimes produce identical (node, hops) rows — hop distances are
     unique whatever the algorithm; the distributed path is pinned by
     test_bfs_distributed_path_matches_local."""
@@ -78,62 +81,57 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int = 32,
     e = (edges.select(F.col(src_col).alias("node"),
                       F.col(dst_col).alias("next"))
          .where(F.col("node").isNotNull() & F.col("next").isNotNull())
-         .distinct().persist())
-    n_edges = e.count()  # materialise once: rounds must not replay lineage
-    if n_edges <= local_edge_cap:
+         .distinct())
+    with cached(e) as e:   # rounds must not replay the edge lineage
+        if e.count() > local_edge_cap:
+            visited = materialise(   # loop boundary: the round-0 frontier
+                sources.select(F.col(src_col).alias("node"),
+                               F.lit(0).alias("hops")).distinct())
+            frontier = visited
+            for hop in range(1, max_hops + 1):
+                nxt = materialise(   # loop boundary: no replay of 1..k-1
+                    frontier.join(e, on="node")
+                    .select(F.col("next").alias("node"))
+                    .distinct()
+                    .join(visited.select("node"), on="node", how="left_anti")
+                    .withColumn("hops", F.lit(hop)))
+                if nxt.isEmpty():
+                    break
+                # loop boundary: the visited set of round k
+                visited = materialise(visited.unionByName(nxt))
+                frontier = nxt
+            return visited
         from collections import defaultdict, deque
-
         adj = defaultdict(list)
         for r in e.collect():   # e is NULL-endpoint-free (filtered above)
             adj[r["node"]].append(r["next"])
-        node_type = e.schema["node"].dataType
-        e.unpersist()
-        hops = {}
-        dq = deque()
-        # NULL sources stay: the distributed path carries them in the
-        # initial `visited` at hop 0 (they just never expand — the
-        # equi-join drops NULL), and adj has no None key so the fast
-        # path reproduces exactly that
-        for r in sources.select(F.col(src_col).alias("node")).distinct() \
-                .collect():
-            if r["node"] not in hops:
-                hops[r["node"]] = 0
-                dq.append(r["node"])
-        while dq:
-            n = dq.popleft()
-            if hops[n] >= max_hops:
-                continue
-            for m in adj.get(n, ()):
-                if m not in hops:
-                    hops[m] = hops[n] + 1
-                    dq.append(m)
-        from pyspark.sql.types import IntegerType, StructField, StructType
-        schema = StructType([StructField("node", node_type),
-                             StructField("hops", IntegerType())])
-        # no sort: row order is irrelevant to a DataFrame, and NULL node
-        # ids (tolerated by the distributed joins) would break a mixed-
-        # type Python sort
-        return edges.sparkSession.createDataFrame(
-            list(hops.items()), schema)
-    visited = sources.select(F.col(src_col).alias("node"),
-                             F.lit(0).alias("hops")).distinct() \
-        .localCheckpoint()
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        # localCheckpoint truncates lineage so round k never re-executes
-        # rounds 1..k-1 (iterative-join correctness at scale, SURVEY §2.7)
-        nxt = (frontier.join(e, on="node")
-               .select(F.col("next").alias("node"))
-               .distinct()
-               .join(visited.select("node"), on="node", how="left_anti")
-               .withColumn("hops", F.lit(hop))
-               .localCheckpoint())
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    e.unpersist()
-    return visited
+    node_type = e.schema["node"].dataType
+    hops = {}
+    dq = deque()
+    # NULL sources stay: the distributed path carries them in the
+    # initial `visited` at hop 0 (they just never expand — the
+    # equi-join drops NULL), and adj has no None key so the fast
+    # path reproduces exactly that
+    for r in sources.select(F.col(src_col).alias("node")).distinct() \
+            .collect():
+        if r["node"] not in hops:
+            hops[r["node"]] = 0
+            dq.append(r["node"])
+    while dq:
+        n = dq.popleft()
+        if hops[n] >= max_hops:
+            continue
+        for m in adj.get(n, ()):
+            if m not in hops:
+                hops[m] = hops[n] + 1
+                dq.append(m)
+    from pyspark.sql.types import IntegerType, StructField, StructType
+    schema = StructType([StructField("node", node_type),
+                         StructField("hops", IntegerType())])
+    # no sort: row order is irrelevant to a DataFrame, and NULL node
+    # ids (tolerated by the distributed joins) would break a mixed-
+    # type Python sort
+    return edges.sparkSession.createDataFrame(list(hops.items()), schema)
 
 
 def _union_find_min_labels(parent: dict, pairs) -> dict:
@@ -189,7 +187,7 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
     jumping: each round every node takes the min of its own and its
     neighbours' labels, then labels short-circuit through one
     label-of-label join — O(log diameter) rounds of pure equi-joins,
-    each localCheckpointed so round k never replays rounds 1..k-1.
+    each materialised so round k never replays rounds 1..k-1.
     Both regimes produce the identical min-node-id labelling (pinned by
     test_connected_components_regimes_agree).  This is the generic form
     of habitat.grid_components (which now delegates here) and the
@@ -202,7 +200,8 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
     if nodes is None:
         nodes = (edges.select(F.col(a).alias("node"))
                  .unionByName(edges.select(F.col(b).alias("node"))))
-    nodes = nodes.select("node").distinct().localCheckpoint(eager=True)
+    # shared subtree: the gate count, the collect and the label seed
+    nodes = materialise(nodes.select("node").distinct())
     # gate on the RAW pair count (no extra distinct shuffle just to
     # decide the regime — duplicates are harmless to a union-find, and a
     # raw count under the cap bounds the deduped count too); the edge
@@ -210,33 +209,34 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
     # symmetrised checkpoint of the distributed loop (r5 review — the
     # first cut checkpointed a deduped copy unconditionally)
     e = edges.select(F.col(a).alias("na"), F.col(b).alias("nb"))
-    if local_cap > 0:
-        e = e.persist()
-        if e.count() <= local_cap and nodes.count() <= local_cap:
-            parent: dict = {r["node"]: r["node"] for r in nodes.collect()}
-            pairs = [(r["na"], r["nb"]) for r in e.collect()]
-            e.unpersist()
-            # NULL endpoints and endpoints outside an explicit `nodes`
-            # subset mirror the distributed loop's join semantics: NULL
-            # never equi-joins and unlabelled endpoints drop, so such an
-            # edge connects nothing
-            labels = _union_find_min_labels(
-                parent, (p for p in pairs
-                         if p[0] is not None and p[1] is not None
-                         and p[0] in parent and p[1] in parent))
-            node_type = nodes.schema["node"].dataType
-            from pyspark.sql.types import StructField, StructType
-            return edges.sparkSession.createDataFrame(
-                list(labels.items()),
-                StructType([StructField("node", node_type),
-                            StructField("comp", node_type)]))
-    sym = e.select(F.col("na").alias("node"), F.col("nb").alias("nbr"))
-    sym = sym.unionByName(
-        sym.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))) \
-        .distinct().localCheckpoint(eager=True)
-    e.unpersist()
-    lab = nodes.select("node", F.col("node").alias("lab")) \
-        .localCheckpoint(eager=True)
+    with ExitStack() as scope:
+        if local_cap > 0:
+            e = scope.enter_context(cached(e))
+            if e.count() <= local_cap and nodes.count() <= local_cap:
+                parent: dict = {r["node"]: r["node"]
+                                for r in nodes.collect()}
+                pairs = [(r["na"], r["nb"]) for r in e.collect()]
+                # NULL endpoints and endpoints outside an explicit
+                # `nodes` subset mirror the distributed loop's join
+                # semantics: NULL never equi-joins and unlabelled
+                # endpoints drop, so such an edge connects nothing
+                labels = _union_find_min_labels(
+                    parent, (p for p in pairs
+                             if p[0] is not None and p[1] is not None
+                             and p[0] in parent and p[1] in parent))
+                node_type = nodes.schema["node"].dataType
+                from pyspark.sql.types import StructField, StructType
+                return edges.sparkSession.createDataFrame(
+                    list(labels.items()),
+                    StructType([StructField("node", node_type),
+                                StructField("comp", node_type)]))
+        sym = e.select(F.col("na").alias("node"), F.col("nb").alias("nbr"))
+        # shared subtree: every round joins the symmetrised edges
+        sym = materialise(sym.unionByName(
+            sym.select(F.col("nbr").alias("node"),
+                       F.col("node").alias("nbr"))).distinct())
+    # loop boundary: the round-0 labels
+    lab = materialise(nodes.select("node", F.col("node").alias("lab")))
     changed = -1                       # "never measured" (max_rounds < 1)
     for _ in range(max_rounds):
         nbr_min = (sym.join(lab.withColumnRenamed("node", "nbr"), on="nbr")
@@ -247,10 +247,11 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
         # pointer jump: lab <- lab(lab)
         jump = lab.select(F.col("node").alias("lab"),
                           F.col("lab").alias("lab2"))
-        new = (new.join(jump, on="lab", how="left")
-               .select("node", F.least("lab", F.coalesce("lab2", "lab"))
-                       .alias("lab"))
-               .localCheckpoint(eager=True))
+        # loop boundary: round k never replays rounds 1..k-1
+        new = materialise(
+            new.join(jump, on="lab", how="left")
+            .select("node", F.least("lab", F.coalesce("lab2", "lab"))
+                    .alias("lab")))
         changed = (new.withColumnRenamed("lab", "new_lab")
                    .join(lab, on="node")
                    .where(F.col("new_lab") != F.col("lab")).count())

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import params as P
-from .checkpoint import checkpoint
+from .checkpoint import checkpoint, materialise
 from .cover import polygon_cell_cover
 from .dissolve import dissolve
 
@@ -151,9 +151,8 @@ def extract_landcover(spark: SparkSession, landcover: DataFrame,
                                    "regroup": regroup_fp},
                            mode=mode)
     else:
-        # the gap computation reads the cover twice (per-cell sums + union);
-        # keep the clip UDF single-execution
-        cover = cover.persist()
+        # Python stage: the per-cell sums and the gap union read the cover
+        cover = materialise(cover)
 
     # 4. per-(cell, clc) areas
     per_cell = (cover.groupBy("cell_id", "clc")

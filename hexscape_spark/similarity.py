@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .checkpoint import materialise
+
 
 from pyspark.sql.types import ArrayType, DoubleType  # noqa: E402
 
@@ -307,15 +309,13 @@ def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
     # them from both sides (r6 review — they previously crashed the
     # quantizer and could pad a sparse query's top-k with NULL cosines)
     df = df.where(F.col(vec).isNotNull())
-    # r7 (guide §2.4): normalise the corpus ONCE — materialised so the
-    # trainer's sample collect, the corpus routing, and the default
-    # query side all read the same checkpoint instead of re-running the
-    # Arrow norm per consumer.  Deliberately NOT repartitioned first:
-    # the trainer's limit(sample) must see the ORIGINAL scan order or
-    # the k-means seed sample (and hence the centroids) would change.
-    # Training on the stored unit vectors (pre_normalized) collects the
-    # identical sample values the old in-train normalisation produced.
-    u = with_unit_norm(df.select(key, vec), vec).localCheckpoint(eager=True)
+    # Deliberately NOT repartitioned first: the trainer's limit(sample)
+    # must see the ORIGINAL scan order or the k-means seed sample (and
+    # hence the centroids) would change.  Training on the stored unit
+    # vectors (pre_normalized) collects the identical sample values the
+    # old in-train normalisation produced.
+    # Python stage: the trainer, the corpus routing and the queries read u
+    u = materialise(with_unit_norm(df.select(key, vec), vec))
     cents = ivf_train_centroids(u, "unit_vec", n_lists, dim, seed,
                                 pre_normalized=True)
     corpus = with_ivf_list(u, cents, nprobe=1).select(
@@ -375,21 +375,16 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
     # every table's sketch (adjacent pandas UDFs share one
     # ArrowEvalPython node), spread across cores by a repartition first
     # (single-row-group inputs otherwise hash the whole corpus in one
-    # Python worker), then the (key, unit_vec, buckets) relation is
-    # materialised ONCE with a localCheckpoint.  Before, the candidate
-    # self-join and the two vector-attach joins were four independent
-    # branches, each re-running scan + norm/sketch UDFs (4 parquet
-    # scans, 2x buckets_udf, 2x _unit_arrow in the physical plan).  The
-    # old repartition barrier only stopped expression re-inlining, not
-    # per-branch re-execution.
+    # Python worker).
     base = df.select(key, vec).repartition(F.col(key))
     # sketch the RAW vector, not the unit-normed one (r4 ADVICE): the sign
     # bits are scale-invariant, and hashing the same bytes the SQL oracle
     # hashes removes the one cross-engine flake source — a normalised
     # component differing in the last ulp flipping a near-zero plane dot
     b = with_lsh_buckets(with_unit_norm(base, vec), vec, planes, dim, tables)
-    b = b.select(key, "unit_vec", *[f"__b{t}" for t in range(tables)]) \
-         .localCheckpoint(eager=True)
+    # Python stage: the bucket self-join and both vector joins read b
+    b = materialise(b.select(key, "unit_vec",
+                             *[f"__b{t}" for t in range(tables)]))
     buckets = b.select(
         key, F.explode(F.array(*[
             F.struct(F.lit(t).alias("tbl"), F.col(f"__b{t}").alias("h"))

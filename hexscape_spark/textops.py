@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoint import materialise
+
 # Tiny per-language stopword markers for the n-gram/stopword heuristic.
 LANG_MARKERS = {
     "en": ["the", "and", "of"],
@@ -301,12 +303,9 @@ def _pack_bins(df: DataFrame, W: int, tokens: str, key: str,
     """
     from .indexing import global_cumsum
 
-    # persist: the input lineage is read three times (group-count,
-    # grouped BFD, final join-back) — the dissolve/dense_index ADVICE
-    # r03 #5 pattern.  The cache stays referenced by the returned plan;
-    # callers holding the result across many actions may unpersist the
-    # input themselves once materialised.
-    df = df.persist()
+    # the input is read three times (group-count, grouped BFD, final
+    # join-back): a caller whose input ends in an expensive stage
+    # materialises it first
     stats = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col(key).isNull(), 1)).alias("nn")).collect()[0]
@@ -362,8 +361,9 @@ def _pack_bins(df: DataFrame, W: int, tokens: str, key: str,
              "pack_offset": [r[2] for r in rows],
              "pack_spans": [r[3] for r in rows]})
 
-    local = d.groupBy("__grp").applyInPandas(bfd, schema=pg_schema)
-    local = local.localCheckpoint(eager=True)   # feeds two consumers
+    # Python stage: the pack counts and the placement join read the BFD
+    local = materialise(d.groupBy("__grp").applyInPandas(bfd,
+                                                         schema=pg_schema))
     # dense global pack ids: exclusive prefix of per-group pack counts
     # (a distributed cumsum over ~n/docs_per_group rows — never a
     # driver-side list)

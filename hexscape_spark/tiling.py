@@ -34,6 +34,7 @@ asserted in tests, is that land_use categories are mutually DISJOINT
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from typing import Iterator
 
 import numpy as np
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 from . import geo
 from . import params as P
 from . import hexgrid
+from .checkpoint import cached
 from .indexing import dense_index
 
 
@@ -265,11 +267,6 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
             yield res[(res["area"] >= min_area) | (res["__imp"] > 0.0)]
 
     clipped_all = lat.mapInPandas(clip_cells, schema=out_fields)
-    if add_removed and impassable:
-        clipped_all = clipped_all.persist()
-        removed = clipped_all.agg(
-            F.sum("__imp").alias("area")).collect()[0]["area"] or 0.0
-    patches = clipped_all.where(F.col("area") >= min_area)
 
     # dense Index over (q, r): exact reference ordering (is.na first is moot
     # here — removed/impassable rows are not emitted).  Split parts within a
@@ -288,9 +285,15 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
                   - _math.floor((minx + (miny - refy)
                                  * _math.tan(_math.pi / 6.0)
                                  - refx) / hex_width) + 1))
-    patches = dense_index(patches, ["q", "r", "__part"], out="Index",
-                          small=n_cells < (1 << 18)) \
-        .drop("__part")
+    with ExitStack() as scope:
+        if add_removed and impassable:
+            # the removed-area collect and dense_index both read the clip
+            clipped_all = scope.enter_context(cached(clipped_all))
+            removed = clipped_all.agg(
+                F.sum("__imp").alias("area")).collect()[0]["area"] or 0.0
+        patches = dense_index(clipped_all.where(F.col("area") >= min_area),
+                              ["q", "r", "__part"], out="Index",
+                              small=n_cells < (1 << 18)).drop("__part")
 
     # ---- land-use proportions + wide LU_* columns --------------------------
     if cat_names:

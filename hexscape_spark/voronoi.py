@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import geo
+from .checkpoint import materialise
 
 
 # ---------------------------------------------------------------------------
@@ -155,7 +156,7 @@ def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
     seeds = points.select(idx, x, y).withColumn(
         "bx", F.floor(F.col(x) / bs).cast("long")).withColumn(
         "by", F.floor(F.col(y) / bs).cast("long"))
-    seeds = seeds.localCheckpoint(eager=True)
+    seeds = materialise(seeds)   # shared subtree: every round joins seeds
 
     out_schema = (f"{idx} LONG, {x} DOUBLE, {y} DOUBLE, Area DOUBLE, "
                   "centroid_x DOUBLE, centroid_y DOUBLE, geom_wkb BINARY, "
@@ -226,23 +227,24 @@ def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
         cand = cand.join(own.select(idx, "hbx", "hby", "__self"),
                          on=[idx, "hbx", "hby"], how="left") \
             .withColumn("__self", F.coalesce("__self", F.lit(False)))
-        res = cand.groupBy("hbx", "hby").applyInPandas(
-            solver(k), schema=out_schema).localCheckpoint(eager=True)
+        # Python stage: the solver feeds both the good and failed rows
+        res = materialise(cand.groupBy("hbx", "hby").applyInPandas(
+            solver(k), schema=out_schema))
         good = res.where("__ok").drop("__ok")
         done = good if done is None else done.unionByName(good)
         failed = res.where("NOT __ok").select(idx)
         if failed.isEmpty():
             todo = None
             break
-        todo = seeds.join(failed, on=idx, how="left_semi") \
-            .localCheckpoint(eager=True)
+        # loop boundary: the next round's seeds
+        todo = materialise(seeds.join(failed, on=idx, how="left_semi"))
         # at k*bs >= env_diag the bound accepts unconditionally, so k never
         # needs to exceed the envelope (offsets stay (2k+1)^2-bounded)
         k = min(k * 2, int(np.ceil(env_diag / bs)) + 1)
     if todo is not None and not todo.isEmpty():
         raise RuntimeError("discretise_voronoi_blocked: unresolved seeds "
                            f"after k={k // 2} doublings")
-    done = done.localCheckpoint(eager=True)
+    done = materialise(done)   # plan barrier: cut the per-round unions
     return done if keep_geometry else done.drop("geom_wkb")
 
 

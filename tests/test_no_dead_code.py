@@ -45,3 +45,37 @@ def test_no_zero_caller_definitions():
             if words[name] == own:
                 dead.append(f"{path.relative_to(ROOT)}:{first} {name}")
     assert not dead, "definitions with no user:\n" + "\n".join(dead)
+
+
+_MATERIALISING = re.compile(r"\.(localCheckpoint|persist|cache)\(")
+_MATERIALISE_REASONS = ("shared subtree", "plan barrier", "loop boundary",
+                        "Python stage")
+
+
+def test_materialisation_only_through_checkpoint_module():
+    """In-run materialisation has one owner: outside checkpoint.py the
+    engine calls checkpoint.materialise / checkpoint.cached, never a bare
+    localCheckpoint, persist or cache (unpersist is not scanned: broadcast
+    variables use it too)."""
+    bare = [f"{path.relative_to(ROOT)}:{i} {line.strip()}"
+            for path in DEFINING if path.name != "checkpoint.py"
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if _MATERIALISING.search(line)]
+    assert not bare, "bare materialisation calls:\n" + "\n".join(bare)
+
+
+def test_materialise_calls_name_a_reason():
+    """Every materialise call carries a comment, on its line or the line
+    above, naming one of the reasons checkpoint.materialise documents."""
+    silent = []
+    for path in DEFINING:
+        lines = path.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "materialise(" not in line or "def materialise" in line \
+                    or line.lstrip().startswith("#"):
+                continue
+            near = line + (lines[i - 1] if i else "")
+            if not any(r in near for r in _MATERIALISE_REASONS):
+                silent.append(f"{path.relative_to(ROOT)}:{i + 1}")
+    assert not silent, "materialise calls with no reason:\n" + \
+        "\n".join(silent)

@@ -186,9 +186,25 @@ def test_nearest_cell_plan_broadcast_minstruct(spark):
     assert "partial_min" in plan, plan
 
 
-# warm build + count jobs, equal at sf0.01 and sf0.1 (local[8]); for
-# hex_nearest_cell a sizing count of the events would cost 2 more
-_JOB_BUDGET = {"hex_nearest_cell": 9, "minhash_pairs": 6, "ngram_jaccard": 12}
+# every bench.BENCH_QUERIES entry: warm build + count jobs at sf0.01 on
+# local[8], identical on two repeats (122 in all).  A change may lower a
+# budget, never raise it.  For hex_nearest_cell a sizing count of the
+# events would cost 2 more.
+_JOB_BUDGET = {
+    "hex_assign_docs": 2, "hex_cell_counts": 3, "hex_cell_lang_mode": 4,
+    "hex_neighbours": 6, "hex_kring_profile": 7, "hex_nearest_cell": 9,
+    "events_hex_rollup": 4, "salted_cell_counts": 4, "tpch_q1": 3,
+    "revenue_by_nation": 7, "top_order_per_cust": 3, "dedup_exact": 3,
+    "token_stats": 2, "lang_dist_by_source": 3, "knn_cosine": 5,
+    "minhash_pairs": 6, "ngram_jaccard": 12, "lsh_topk": 8,
+    "patches_landuse": 4, "neighbours_square": 6, "cover_landuse": 6,
+    "dissolve_layers": 15,
+}
+
+
+def test_job_budget_covers_bench_queries():
+    import bench
+    assert sorted(_JOB_BUDGET) == sorted(bench.BENCH_QUERIES)
 
 
 @pytest.mark.parametrize("name", _JOB_BUDGET)

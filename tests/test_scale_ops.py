@@ -354,11 +354,36 @@ def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
                              max_bucket=500).count() == 0
 
 
-def test_generate_patches_leaves_no_pinned_rdds(spark):
-    """dense_index must release its working caches (VERDICT r01 #6): no
-    persisted RDDs remain after the patches materialise."""
+def _leak_case(name, spark):
+    """Build (not run) one operator whose working caches must not outlive
+    it: generate_patches with and without the removed-area collect,
+    dedup_lines on a fresh frame, and the streaming rollup query."""
+    from hexscape_spark.dedup import dedup_lines
+    from hexscape_spark.synth import land_use_square
     from hexscape_spark.tiling import generate_patches
+    if name == "generate_patches":
+        return generate_patches(spark, geo.rect_wkb(0.0, 0.0, 20.0, 20.0),
+                                hex_width=5.0, reference_point=(0.0, 20.0))
+    if name == "generate_patches_add_removed":
+        return generate_patches(spark, geo.rect_wkb(0, 0, 50, 50),
+                                hex_width=2.0, reference_point=(0, 0),
+                                land_use=land_use_square(1.0),
+                                add_removed=True)
+    if name == "dedup_lines":
+        return dedup_lines(spark.createDataFrame(
+            [(i, f"doc {i}\nshared footer line") for i in range(50)],
+            "doc_id LONG, text STRING"))
+    import __spark_entry__ as m
+    from tests.conftest import SF_DIR
+    return m.queries()["streaming_cell_rollup"](spark, SF_DIR)
 
+
+@pytest.mark.parametrize("name", ["generate_patches",
+                                  "generate_patches_add_removed",
+                                  "dedup_lines", "streaming_cell_rollup"])
+def test_operator_leaves_no_pinned_rdds(spark, name):
+    """Operators release their working caches (VERDICT r01 #6): no
+    persisted RDDs remain after the output materialises."""
     def pinned():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         # localCheckpoint RDDs are GC-managed, not user persists; only
@@ -367,10 +392,7 @@ def test_generate_patches_leaves_no_pinned_rdds(spark):
                 if "localcheckpoint" not in jmap[k].toString().lower()}
 
     before = pinned()
-    land = geo.rect_wkb(0.0, 0.0, 20.0, 20.0)
-    p = generate_patches(spark, land, hex_width=5.0,
-                         reference_point=(0.0, 20.0))
-    p.count()
+    assert _leak_case(name, spark).count() > 0
     leaked = pinned() - before
     assert not leaked, leaked
 
