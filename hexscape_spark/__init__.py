@@ -2,12 +2,12 @@
 aggregation engine with the query capabilities of ku-awdc/hexscape,
 re-expressed Spark-first over web-scale tables.
 
-Subpackages:
+Core modules (README.md lists them all):
   hexgrid      pure-column axial hex math (encode/decode/kRing) — no UDFs
   geo          NumPy/Arrow geometry kernel (WKB, clipping, areas) — no GEOS dep
   tiling       generate_patches equivalent (lattice -> clip -> LU rollup)
   neighbours   adjacency graph with border lengths + compass directions
-  rollup       per-cell sum/mean/mode/area-weighted aggregations
+  rollup       seeded weighted sampling per group
   textops      language-ID, quality scoring, token counting, fingerprints
   dedup        exact / MinHash-LSH / SimHash / n-gram-Jaccard dedup
   similarity   brute-force + LSH-bucketed cosine ANN over embeddings

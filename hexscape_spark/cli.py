@@ -16,7 +16,8 @@ Jobs:
                     -> quality filter -> exact dedup (clean corpus)
     landcover       extract_landcover over a (poly_id, clc, geom_wkb)
                     parquet, optional --regroup level
-    scaling         the two-parallelism scaling job (see BENCH/scaling.py)
+
+The two-parallelism scaling run is not a job: run `python BENCH/scaling.py`.
 
 Every stage checkpoints through hexscape_spark.checkpoint (per-partition
 lineage + row/byte metrics in _lineage.json); re-running with --resume and
@@ -176,7 +177,7 @@ def job_webtext(spark, args) -> None:
         # reassembly key above stays exact).  The exact mode remains the
         # library default for oracle-grade semantics.
         txt = dedup_lines(txt, key="__doc_key", hash_shuffle=True) \
-            .drop("text", "__doc_key") \
+            .drop("text") \
             .withColumnRenamed("text_line_deduped", "text")
         enriched = with_lang_guess(with_token_count(txt))
         filtered = with_quality_filter(enriched)
@@ -187,12 +188,14 @@ def job_webtext(spark, args) -> None:
             # repeated anywhere in the corpus, keeping first occurrences.
             # Runs AFTER exact dedup (whole-doc copies are cheaper there)
             # and last overall so excision sees the final document set.
+            # Keyed on the unique __doc_key: doc_id (the url) repeats when
+            # one url was fetched with different texts.
             from .dedup import dedup_substrings
             # Python stage: the enrichment UDFs feed both substring passes
-            clean = dedup_substrings(materialise(clean), key="doc_id",
+            clean = dedup_substrings(materialise(clean), key="__doc_key",
                                      min_tokens=args.substr_dedup) \
                 .drop("text").withColumnRenamed("text_substr_deduped", "text")
-        clean.write.mode("overwrite").parquet(args.out)
+        clean.drop("__doc_key").write.mode("overwrite").parquet(args.out)
         n_in = docs.count()
     n_out = spark.read.parquet(args.out).count()
     print(json.dumps({"job": "webtext", "records_in": n_in,

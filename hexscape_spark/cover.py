@@ -1,4 +1,5 @@
-"""Polygon -> hex-cell cover and the cover equi-join (J6 at scale).
+"""Polygon -> hex-cell cover and the point-in-polygon join over it (J6/J7
+at scale).
 
 The broadcast clip path in tiling.py matches the reference's regime (small
 polygon layers).  At continent scale the layer itself is huge, so the join
@@ -181,16 +182,6 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
             yield res[[poly_id, "q", "r", "cell_id", "full", "cover_area"]]
 
     return polys.select(poly_id, geom).mapInPandas(run, schema=schema)
-
-
-def cover_join(points_with_cells: DataFrame, cover: DataFrame,
-               how: str = "inner") -> DataFrame:
-    """Points (already hex-assigned) x polygon cover: an equi-join on
-    cell_id that Catalyst shuffles, broadcasts, or AQE-skew-splits like any
-    relational join.  Exactness: a point is in the polygon iff it is in the
-    polygon's clipped piece within its own cell — for FULL cells this is
-    free; partial cells can be refined with a PIP check downstream."""
-    return points_with_cells.join(cover, on="cell_id", how=how)
 
 
 def pip_join(points_with_cells: DataFrame, cover: DataFrame,

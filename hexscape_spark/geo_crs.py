@@ -1,15 +1,11 @@
 """CRS reprojection kernel — st_transform without pyproj.
 
-The container ships no pyproj, so the reference's st_transform usage
-(R/extract_corine.R:140 — geographic <-> projected planar metres, EPSG:3035
-/ 25832 style) is covered by a from-scratch, vectorized implementation of
-the ellipsoidal Transverse Mercator projection (Karney 2011 series to n^6 —
-the same algorithm proj's tmerc uses; accuracy well below 1 mm within
-a UTM-width zone), parameterised like EPSG's TM definitions
-(lon_0, k_0, false easting/northing).  UTM zones (EPSG:25832 = zone 32 on
-GRS80) are the special case `utm(zone)`.
-
-Exposed both as NumPy functions (used in UDFs) and as a DataFrame helper.
+The container ships no pyproj, so the reference's st_transform to its
+primary CRS, EPSG:3035 (ETRS89-LAEA, R/extract_corine.R:140,
+R/download_maps.R:53), is a from-scratch, vectorized ellipsoidal Lambert
+azimuthal equal-area projection.  It is exposed as a NumPy function
+(used inside the Arrow-batched DataFrame helper `with_laea`).  Nothing in
+the engine projects to another CRS.
 """
 
 from __future__ import annotations
@@ -23,97 +19,8 @@ from pyspark.sql import DataFrame
 
 # GRS80/WGS84 (identical to double precision for our purposes)
 _A = 6378137.0
-_F = 1.0 / 298.257222101        # GRS80 (EPSG:25832/3035 datum ETRS89)
-
-_n = _F / (2.0 - _F)
-_n2, _n3, _n4, _n5, _n6 = _n**2, _n**3, _n**4, _n**5, _n**6
-_AA = _A / (1 + _n) * (1 + _n2 / 4 + _n4 / 64 + _n6 / 256)
+_F = 1.0 / 298.257222101        # GRS80 (EPSG:3035 datum ETRS89)
 _E = math.sqrt(_F * (2 - _F))   # eccentricity
-
-_ALPHA = [
-    _n / 2 - 2 * _n2 / 3 + 5 * _n3 / 16 + 41 * _n4 / 180 - 127 * _n5 / 288 + 7891 * _n6 / 37800,
-    13 * _n2 / 48 - 3 * _n3 / 5 + 557 * _n4 / 1440 + 281 * _n5 / 630 - 1983433 * _n6 / 1935360,
-    61 * _n3 / 240 - 103 * _n4 / 140 + 15061 * _n5 / 26880 + 167603 * _n6 / 181440,
-    49561 * _n4 / 161280 - 179 * _n5 / 168 + 6601661 * _n6 / 7257600,
-    34729 * _n5 / 80640 - 3418889 * _n6 / 1995840,
-    212378941 * _n6 / 319334400,
-]
-_BETA = [
-    _n / 2 - 2 * _n2 / 3 + 37 * _n3 / 96 - _n4 / 360 - 81 * _n5 / 512 + 96199 * _n6 / 604800,
-    _n2 / 48 + _n3 / 15 - 437 * _n4 / 1440 + 46 * _n5 / 105 - 1118711 * _n6 / 3870720,
-    17 * _n3 / 480 - 37 * _n4 / 840 - 209 * _n5 / 4480 + 5569 * _n6 / 90720,
-    4397 * _n4 / 161280 - 11 * _n5 / 504 - 830251 * _n6 / 7257600,
-    4583 * _n5 / 161280 - 108847 * _n6 / 3991680,
-    20648693 * _n6 / 638668800,
-]
-
-
-def tmerc_forward(lat_deg: np.ndarray, lon_deg: np.ndarray, lon0_deg: float,
-                  k0: float = 0.9996, fe: float = 500000.0,
-                  fn: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
-    """Geographic (degrees) -> transverse-Mercator easting/northing (m)."""
-    phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    lam = np.radians(np.asarray(lon_deg, dtype=np.float64) - lon0_deg)
-    sphi = np.sin(phi)
-    with np.errstate(divide="ignore"):   # exact poles: arctanh(±1) = ±inf, sinh carries it through correctly
-        t = np.sinh(np.arctanh(sphi) - _E * np.arctanh(_E * sphi))
-    xi_p = np.arctan2(t, np.cos(lam))
-    eta_p = np.arcsinh(np.sin(lam) / np.sqrt(t * t + np.cos(lam) ** 2))
-    xi = xi_p.copy()
-    eta = eta_p.copy()
-    for j, a in enumerate(_ALPHA, start=1):
-        xi += a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
-        eta += a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    return fe + k0 * _AA * eta, fn + k0 * _AA * xi
-
-
-def tmerc_inverse(e: np.ndarray, n: np.ndarray, lon0_deg: float,
-                  k0: float = 0.9996, fe: float = 500000.0,
-                  fn: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
-    """Transverse-Mercator easting/northing (m) -> geographic (degrees)."""
-    xi = (np.asarray(n, dtype=np.float64) - fn) / (k0 * _AA)
-    eta = (np.asarray(e, dtype=np.float64) - fe) / (k0 * _AA)
-    xi_p = xi.copy()
-    eta_p = eta.copy()
-    for j, b in enumerate(_BETA, start=1):
-        xi_p -= b * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
-        eta_p -= b * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
-    tau_p = np.sin(xi_p) / np.sqrt(np.sinh(eta_p) ** 2 + np.cos(xi_p) ** 2)
-    # Newton-invert tau' = tau*sqrt(1+sigma^2) - sigma*sqrt(1+tau^2)
-    tau = tau_p.copy()
-    for _ in range(5):
-        sigma = np.sinh(_E * np.arctanh(_E * tau / np.sqrt(1 + tau * tau)))
-        f_val = tau * np.sqrt(1 + sigma * sigma) - sigma * np.sqrt(1 + tau * tau) - tau_p
-        dtau = (np.sqrt((1 + sigma * sigma) * (1 + tau * tau)) - sigma * tau) \
-            * (1 - _E * _E) * np.sqrt(1 + tau * tau) / (1 + (1 - _E * _E) * tau * tau)
-        tau = tau - f_val / dtau
-    lat = np.degrees(np.arctan(tau))
-    lon = lon0_deg + np.degrees(np.arctan2(np.sinh(eta_p), np.cos(xi_p)))
-    return lat, lon
-
-
-def utm_zone_lon0(zone: int) -> float:
-    return -183.0 + 6.0 * zone
-
-
-def with_tmerc(df: DataFrame, lat: str = "lat_deg", lon: str = "lon_deg",
-               lon0: float = 9.0, k0: float = 0.9996, fe: float = 500000.0,
-               fn: float = 0.0, out_e: str = "easting",
-               out_n: str = "northing") -> DataFrame:
-    """st_transform analogue: geographic -> projected, Arrow-batched."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema += f", {out_e} DOUBLE, {out_n} DOUBLE"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            e, n = tmerc_forward(pdf[lat].to_numpy(), pdf[lon].to_numpy(),
-                                 lon0, k0, fe, fn)
-            pdf[out_e] = e
-            pdf[out_n] = n
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)
 
 
 # --- Lambert azimuthal equal-area (ellipsoidal) -------------------------------
@@ -123,7 +30,7 @@ def with_tmerc(df: DataFrame, lat: str = "lat_deg", lon: str = "lon_deg",
 # "Map Projections: A Working Manual" (USGS PP 1395), pp. 187-190, oblique
 # aspect: authalic-latitude mapping beta = arcsin(q/q_p), then the spherical
 # LAEA on the authalic sphere with the D stretch.  Exactly equal-area by
-# construction; the inverse iterates Snyder eq. 3-16 to double precision.
+# construction.
 
 _E2 = _F * (2 - _F)
 
@@ -161,40 +68,6 @@ def laea_forward(lat_deg: np.ndarray, lon_deg: np.ndarray,
     n = fn + (b / d) * (math.cos(beta1) * sinb
                         - math.sin(beta1) * cosb * np.cos(lam))
     return e, n
-
-
-def laea_inverse(e: np.ndarray, n: np.ndarray,
-                 lat0_deg: float = 52.0, lon0_deg: float = 10.0,
-                 fe: float = 4321000.0, fn: float = 3210000.0
-                 ) -> tuple[np.ndarray, np.ndarray]:
-    """LAEA easting/northing (m) -> geographic (degrees)."""
-    x = np.asarray(e, dtype=np.float64) - fe
-    y = np.asarray(n, dtype=np.float64) - fn
-    phi1 = math.radians(lat0_deg)
-    q1 = float(_q_authalic(np.array([math.sin(phi1)]))[0])
-    beta1 = math.asin(min(1.0, max(-1.0, q1 / _QP)))
-    m1 = math.cos(phi1) / math.sqrt(1 - _E2 * math.sin(phi1) ** 2)
-    d = _A * m1 / (_RQ * math.cos(beta1))
-    rho = np.hypot(x / d, d * y)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        ce = 2.0 * np.arcsin(np.clip(rho / (2.0 * _RQ), -1.0, 1.0))
-        q = _QP * (np.cos(ce) * math.sin(beta1)
-                   + d * y * np.sin(ce) * math.cos(beta1) / rho)
-    q = np.where(rho == 0.0, _QP * math.sin(beta1), q)
-    lam = np.arctan2(x * np.sin(ce),
-                     d * rho * math.cos(beta1) * np.cos(ce)
-                     - d * d * y * math.sin(beta1) * np.sin(ce))
-    # Snyder eq. 3-16 iteration for phi from q
-    phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-    for _ in range(8):
-        sphi = np.sin(phi)
-        esphi = _E * sphi
-        denom = 1 - _E2 * sphi * sphi
-        corr = (denom * denom / (2.0 * np.cos(phi))) * (
-            q / (1 - _E2) - sphi / denom
-            + np.log((1 - esphi) / (1 + esphi)) / (2 * _E))
-        phi = phi + np.where(np.isfinite(corr), corr, 0.0)
-    return np.degrees(phi), lon0_deg + np.degrees(lam)
 
 
 def with_laea(df: DataFrame, lat: str = "lat_deg", lon: str = "lon_deg",

@@ -1,11 +1,11 @@
 """Graph queries over the patches adjacency (derived operators, SURVEY §2.7).
 
 The neighbours DataFrame IS the graph (vertices = patches, edges = shared
-borders — notebooks/denmark_estonia.R:86-94).  kRing/ego sets are pure cell
-arithmetic (no joins at all); shortest hop distances are iterative
-equi-joins bounded by the landscape diameter, with the closed-form axial
-hex distance as the unobstructed fast path
-(notebooks/network_distance.R:57,93-133).
+borders — notebooks/denmark_estonia.R:86-94).  Shortest hop distances are
+iterative equi-joins bounded by the landscape diameter
+(notebooks/network_distance.R:57,93-133); connected components use the
+same iterative join shape.  kRing sets are pure cell arithmetic over
+hexgrid.kring_offsets (the hex_kring_profile query), not graph joins.
 """
 
 from __future__ import annotations
@@ -15,36 +15,7 @@ from contextlib import ExitStack
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import sqlgen
 from .checkpoint import cached, materialise
-from .hexgrid import kring_offsets_df
-
-
-def kring_cells(cells: DataFrame, k: int, q: str = "q", r: str = "r") -> DataFrame:
-    """Expand each cell to its full k-disk (H3 grid_disk): pure arithmetic
-    crossJoin with the (2k+1)-bounded offset table — no shuffle of `cells`."""
-    offs = F.broadcast(kring_offsets_df(cells.sparkSession, k))
-    return (cells.crossJoin(offs)
-            .withColumn("nbr_q", F.col(q) + F.col("dq"))
-            .withColumn("nbr_r", F.col(r) + F.col("dr"))
-            .withColumn("ring", F.expr(
-                sqlgen.hex_distance_expr("nbr_q", "nbr_r", q, r)))
-            .drop("dq", "dr"))
-
-
-def ego_difference(cells: DataFrame, k: int, q: str = "q",
-                   r: str = "r") -> DataFrame:
-    """Exact ring k as SET DIFFERENCE: disk(k) exceptAll disk(k-1) — the
-    reference's ego-set differencing (notebooks/network_distance.R:124-130)
-    expressed with the relational anti-multiset operator (O5).  Equivalent
-    to kring_cells(k).where(ring == k); kept as the set-algebra form the
-    reference notebook uses."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    cols = [q, r, "nbr_q", "nbr_r"]
-    disk_k = kring_cells(cells.select(q, r), k, q, r).select(cols)
-    disk_k1 = kring_cells(cells.select(q, r), k - 1, q, r).select(cols)
-    return disk_k.exceptAll(disk_k1)
 
 
 # edge-count bound for the in-memory BFS fast path: ~2M (node, next)

@@ -8,14 +8,13 @@ map-only stage with no shuffle.
 Reference parity:
   * hex constants            -> R/generate_patches.R:45-50
   * axial lattice & centroid -> R/generate_patches.R:89-115
-  * kRing / ego rings        -> notebooks/network_distance.R:93-133
+  * kRing offsets            -> notebooks/network_distance.R:93-133
   * 6 axial neighbour offsets-> R/generate_neighbours.R:57-62
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import params as P
 from . import sqlgen
@@ -41,14 +40,6 @@ def with_hex_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
     if drop_tmp:
         out = out.drop("rf", "qf", "sf", "qg", "rg", "sg", "dq", "dr", "ds")
     return out
-
-
-def with_centroid(df: DataFrame, q: str = "q", r: str = "r",
-                  hex_width: float = P.HEX_WIDTH,
-                  refx: float = P.REFX, refy: float = P.REFY,
-                  cx: str = "hex_cx", cy: str = "hex_cy") -> DataFrame:
-    ex, ey = sqlgen.centroid_exprs(q, r, hex_width, refx, refy)
-    return df.selectExpr("*", f"{ex} AS {cx}", f"{ey} AS {cy}")
 
 
 # The six axial neighbour offsets, in the reference's enumeration order
@@ -85,24 +76,6 @@ def kring_offsets(k: int) -> list[tuple[int, int, int]]:
 def kring_offsets_df(spark: SparkSession, k: int) -> DataFrame:
     return spark.createDataFrame(
         [(dq, dr) for dq, dr, _ in kring_offsets(k)], "dq INT, dr INT")
-
-
-def hex_vertices(q: int, r: int, hex_width: float = P.HEX_WIDTH,
-                 refx: float = P.REFX, refy: float = P.REFY):
-    """Driver-side 7-vertex ring of hexagon (q, r).
-
-    Exactly genpoly (reference: R/generate_patches.R:53-64): vertices at
-    (0,+h/2),(+w/2,+s/2),(+w/2,-s/2),(0,-h/2),(-w/2,-s/2),(-w/2,+s/2),(0,+h/2)
-    translated to the cell centroid.
-    """
-    h = P.hex_height(hex_width)
-    s = P.hex_side(hex_width)
-    cx = refx + r * hex_width / 2.0 + q * hex_width
-    cy = refy - r * (s + h) / 2.0
-    pts = [(0.0, h / 2), (hex_width / 2, s / 2), (hex_width / 2, -s / 2),
-           (0.0, -h / 2), (-hex_width / 2, -s / 2), (-hex_width / 2, s / 2),
-           (0.0, h / 2)]
-    return [(cx + x, cy + y) for x, y in pts]
 
 
 def lattice(spark: SparkSession, minx: float, miny: float, maxx: float,

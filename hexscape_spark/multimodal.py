@@ -4,8 +4,9 @@ Image/audio/video travel as opaque BinaryType columns with typed metadata.
 The container ships no PIL/ffmpeg, so the engine implements the codecs it
 can do exactly in pure NumPy:
 
-  * PPM (P6) and BMP (24-bit uncompressed BITMAPINFOHEADER) image
-    encode/decode — real, byte-exact, roundtrip-tested;
+  * PPM (P6) image encode/decode and BMP (24-bit uncompressed
+    BITMAPINFOHEADER) decode — real, byte-exact, roundtrip-tested (the
+    BMP encoder is a test fixture writer, tests/helpers.py);
   * WAV (RIFF PCM16) audio encode/decode — real, roundtrip-tested;
   * AVI (RIFF, uncompressed BI_RGB 'DIB ' frames) video encode/decode —
     real, roundtrip-tested (r4: the module's last stub closed).
@@ -102,25 +103,6 @@ def decode_ppm(payload: bytes) -> np.ndarray:
         raise ValueError("only 8-bit PPM supported")
     raw = np.frombuffer(payload, dtype=np.uint8, count=3 * w * h, offset=i)
     return raw.reshape(h, w, 3).copy()
-
-
-def encode_bmp(rgb: np.ndarray) -> bytes:
-    """24-bit uncompressed BMP (BITMAPINFOHEADER, bottom-up, BGR,
-    4-byte-padded rows) from an (h, w, 3) uint8 array."""
-    h, w, c = rgb.shape
-    assert c == 3
-    row = w * 3
-    pad = (-row) % 4
-    body = bytearray()
-    bgr = rgb[:, :, ::-1].astype(np.uint8)
-    for y in range(h - 1, -1, -1):               # bottom-up
-        body += bgr[y].tobytes() + b"\x00" * pad
-    data_off = 14 + 40
-    size = data_off + len(body)
-    hdr = struct.pack("<2sIHHI", b"BM", size, 0, 0, data_off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                       2835, 2835, 0, 0)
-    return hdr + info + bytes(body)
 
 
 @_malformed_raises_valueerror

@@ -140,13 +140,6 @@ def centroid_exprs(q: str = "q", r: str = "r",
     return cx, cy
 
 
-def hex_distance_expr(q1: str, r1: str, q2: str, r2: str) -> str:
-    """Axial hex (kRing) distance: (|dq|+|dr|+|dq+dr|)/2, BIGINT."""
-    dq = f"(({q1}) - ({q2}))"
-    dr = f"(({r1}) - ({r2}))"
-    return f"CAST((ABS({dq}) + ABS({dr}) + ABS({dq} + {dr})) / 2 AS BIGINT)"
-
-
 def dist_point_to_rect_expr(x: str, y: str, minx: float, miny: float,
                             maxx: float, maxy: float) -> str:
     """Euclidean distance from a point to an axis-aligned rectangle (0 inside).

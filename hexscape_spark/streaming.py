@@ -1,14 +1,14 @@
-"""Structured Streaming surface: streaming hex-cell rollups.
+"""Structured Streaming surface: the streaming hourly per-cell rollup.
 
 The reference is entirely batch (SURVEY §2.8 — verified across all 24 R
-files), but the graft input carries warc_ts, so the engine exposes the
-natural streaming form of its flagship rollup: a file/rate stream of pages
--> deterministic geocode -> hex assign (the same pure-column expressions as
-batch — one code path) -> watermarked windowed per-cell aggregation.
+files), and streaming is in scope only as far as a query runs it: the
+``streaming_cell_rollup`` query drains a file stream of events ->
+deterministic geocode -> hex assign (the same pure-column expressions as
+batch — one code path) -> watermarked hourly per-cell aggregation.
 
 Late data is handled by the watermark; state is bounded by
-(cells x windows); exactly-once sinks come from checkpointing.  Tested with
-the availableNow trigger over a parquet directory, which exercises the real
+(cells x windows); exactly-once sinks come from checkpointing.  The
+availableNow trigger over a parquet directory exercises the real
 micro-batch engine deterministically.
 """
 
@@ -18,33 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import hexgrid
-
-
-def stream_pages(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    schema = schema or ("page_id LONG, url STRING, warc_ts TIMESTAMP, "
-                        "html BINARY, text STRING, lang STRING")
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def streaming_cell_rollup(pages: DataFrame, window: str = "10 minutes",
-                          watermark: str = "30 minutes",
-                          key: str = "page_id",
-                          ts: str = "warc_ts") -> DataFrame:
-    """Per-(window, cell) page counts + char sums with late-data watermark.
-
-    The geocode/assign expressions are identical to the batch path
-    (hexgrid.with_geocode / with_hex_cell) — Structured Streaming reuses
-    the same Catalyst plans incrementally.
-    """
-    g = hexgrid.with_hex_cell(hexgrid.with_geocode(pages, key))
-    return (g.withWatermark(ts, watermark)
-            .groupBy(F.window(F.col(ts), window).alias("w"),
-                     F.col("cell_id"), F.col("q"), F.col("r"))
-            .agg(F.count(F.lit(1)).alias("n_pages"),
-                 F.sum(F.length("text")).alias("sum_chars"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "cell_id", "q", "r", "n_pages", "sum_chars"))
 
 
 def stream_events(spark: SparkSession, path: str) -> DataFrame:
@@ -75,72 +48,6 @@ def streaming_events_hour_cell(events: DataFrame,
                     F.col("sum_cents").cast("long").alias("sum_cents")))
 
 
-def sessionize_stream(events: DataFrame, gap_minutes: float = 30.0,
-                      key: str = "user_id", ts: str = "ts") -> DataFrame:
-    """Custom stateful operator: gap-based sessionisation with
-    applyInPandasWithState (per-key state = open-session aggregate).
-
-    Emits one row per CLOSED session (a new event later than `gap` after
-    the previous one closes the open session); state times out with the
-    event-time watermark, closing trailing sessions.
-    Output: user_id, session_start, session_end, n_events.
-    """
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-    import datetime
-    import pandas as pd_
-
-    gap_us = int(gap_minutes * 60 * 1e6)
-    out_schema = (f"{key} LONG, session_start TIMESTAMP, "
-                  "session_end TIMESTAMP, n_events LONG")
-    state_schema = "start LONG, end LONG, n LONG"
-
-    def fn(key_tuple, batches, state: GroupState):
-        sessions = []
-        if state.hasTimedOut:
-            if state.exists:
-                s0, s1, n = state.get
-                sessions.append((key_tuple[0], s0, s1, n))
-                state.remove()
-        else:
-            rows = []
-            for pdf in batches:
-                rows.append(pdf[[ts]])
-            if rows:
-                all_ts = pd_.concat(rows)[ts].sort_values()
-                us = all_ts.values.astype("datetime64[us]").astype("int64")
-                if state.exists:
-                    s0, s1, n = state.get
-                else:
-                    s0, s1, n = us[0], us[0], 0
-                for t in us:
-                    if t - s1 > gap_us and n > 0:
-                        sessions.append((key_tuple[0], s0, s1, n))
-                        s0, n = t, 0
-                    s1 = max(s1, t)
-                    n += 1
-                state.update((int(s0), int(s1), int(n)))
-                state.setTimeoutTimestamp(int(s1 // 1000) + int(gap_us // 1000))
-        cols = [key, "session_start", "session_end", "n_events"]
-        if sessions:
-            df = pd_.DataFrame(sessions, columns=cols)
-            for c in ("session_start", "session_end"):
-                df[c] = pd_.to_datetime(df[c], unit="us")
-            yield df
-        else:
-            yield pd_.DataFrame({key: pd_.Series([], dtype="int64"),
-                                 "session_start": pd_.Series([], dtype="datetime64[us]"),
-                                 "session_end": pd_.Series([], dtype="datetime64[us]"),
-                                 "n_events": pd_.Series([], dtype="int64")})
-
-    return (events.withWatermark(ts, f"{int(gap_minutes * 2)} minutes")
-            .groupBy(key)
-            .applyInPandasWithState(fn, outputStructType=out_schema,
-                                    stateStructType=state_schema,
-                                    outputMode="append",
-                                    timeoutConf=GroupStateTimeout.EventTimeTimeout))
-
-
 def run_available_now(result: DataFrame, checkpoint_dir: str,
                       out_dir: str) -> None:
     """Drain everything currently available and stop (deterministic test/
@@ -152,25 +59,3 @@ def run_available_now(result: DataFrame, checkpoint_dir: str,
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-
-
-def dedup_stream(df: DataFrame, keys: list[str] | None = None,
-                 ts: str = "warc_ts", watermark: str = "1 hour",
-                 within_watermark: bool = True) -> DataFrame:
-    """Streaming exact deduplication — the training-pipeline dedup in its
-    incremental form: keep the first row per key across micro-batches.
-
-    `within_watermark=True` uses dropDuplicatesWithinWatermark, which
-    BOUNDS the dedup state (keys expire once older than the watermark —
-    the only shape that survives an unbounded stream); False uses plain
-    dropDuplicates, whose state grows with distinct keys (exact forever,
-    backfill-only).  Keys default to a content hash of `text`, matching
-    dedup.exact_duplicates' criterion.
-    """
-    if keys is None:
-        df = df.withColumn("__h", F.md5(F.encode(F.col("text"), "UTF-8")))
-        keys = ["__h"]
-    wm = df.withWatermark(ts, watermark)
-    out = (wm.dropDuplicatesWithinWatermark(keys) if within_watermark
-           else wm.dropDuplicates(keys))
-    return out.drop("__h") if keys == ["__h"] else out

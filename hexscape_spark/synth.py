@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import geo
-from . import hexgrid
 
 
 _WORDS = ("the data spark shuffle join hex cell page crawl web text token "
@@ -48,14 +47,6 @@ def pages(spark: SparkSession, n: int, num_partitions: int | None = None) -> Dat
               (F.pmod(F.col("id"), F.lit(5)) + 1).cast("int")))
           .withColumnRenamed("id", "page_id"))
     return df.select("page_id", "url", "warc_ts", "html", "text", "lang")
-
-
-def geocoded_pages(spark: SparkSession, n: int,
-                   num_partitions: int | None = None) -> DataFrame:
-    """pages + deterministic (lon, lat) + hex cell assignment."""
-    df = pages(spark, n, num_partitions)
-    df = hexgrid.with_geocode(df, "page_id")
-    return hexgrid.with_hex_cell(df)
 
 
 def land_use_square(scale: float = 1.0) -> list[tuple[str, str, bytes]]:

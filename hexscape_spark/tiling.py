@@ -14,7 +14,8 @@ The Spark-first reimplementation of the reference's central query,
 
 Scale notes: the lattice + clip is a single map-only stage (no shuffle);
 polygon layers are broadcast when small (the reference's regime) — the
-cell-cover equi-join path for continent-scale layers lives in cover_join().
+cell-cover equi-join path for continent-scale layers is
+cover.polygon_cell_cover + cover.pip_join.
 All geometry math is geo.py NumPy over WKB; nothing is per-row Python.
 
 Split patches (one (q,r) cell cut into disconnected pieces by the

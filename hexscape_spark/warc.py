@@ -182,27 +182,6 @@ def stream_warc(spark: SparkSession, path: str,
         schema=WARC_SCHEMA)
 
 
-def write_warc_gz(records: list[dict], path: str) -> None:
-    """Serialise records (url, warc_date, content_type, payload) as a
-    member-per-record `.warc.gz` — the synthesis half that makes the
-    reader deterministically testable without external data."""
-    import gzip
-
-    out = bytearray()
-    for rec in records:
-        payload = rec["payload"]
-        hdr = (f"WARC/1.0\r\n"
-               f"WARC-Type: {rec.get('record_type', 'response')}\r\n"
-               f"WARC-Target-URI: {rec['url']}\r\n"
-               f"WARC-Date: {rec['warc_date']}\r\n"
-               f"Content-Type: {rec['content_type']}\r\n"
-               f"Content-Length: {len(payload)}\r\n\r\n").encode()
-        member = hdr + payload + b"\r\n\r\n"
-        out += gzip.compress(member)
-    with open(path, "wb") as f:
-        f.write(bytes(out))
-
-
 def http_body(payload: bytes) -> bytes:
     """The body of an HTTP response payload: real CommonCrawl `response`
     records carry the FULL HTTP message (status line + headers + body),

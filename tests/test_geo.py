@@ -6,7 +6,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hexscape_spark import geo, params as P
-from hexscape_spark.hexgrid import hex_vertices
+from tests.helpers import hex_vertices
 
 
 def test_hex_constants():

@@ -1,58 +1,8 @@
-"""Transverse-Mercator reprojection kernel (st_transform analogue)."""
+"""LAEA reprojection kernel (st_transform to EPSG:3035)."""
 
-import numpy as np
 import pytest
 
-from hexscape_spark.geo_crs import (tmerc_forward, tmerc_inverse,
-                                    utm_zone_lon0, with_tmerc)
-
-
-def test_central_meridian_anchor():
-    e, n = tmerc_forward(np.array([0.0]), np.array([9.0]), 9.0)
-    assert e[0] == pytest.approx(500000.0, abs=1e-6)
-    assert n[0] == pytest.approx(0.0, abs=1e-6)
-
-
-def test_meridian_quarter_arc():
-    """Northing at the pole = k0 x quarter meridian arc (GRS80:
-    10001965.7293 m) — validates the series coefficients end to end."""
-    _, n = tmerc_forward(np.array([90.0]), np.array([9.0]), 9.0)
-    assert n[0] == pytest.approx(10001965.7293 * 0.9996, abs=1e-3)
-
-
-def test_roundtrip_sub_millimetre():
-    rng = np.random.RandomState(0)
-    lat = rng.uniform(-80, 84, 5000)
-    lon = 9.0 + rng.uniform(-3.5, 3.5, 5000)
-    e, n = tmerc_forward(lat, lon, 9.0)
-    lat2, lon2 = tmerc_inverse(e, n, 9.0)
-    assert np.abs(lat2 - lat).max() * 111320 < 1e-6
-    assert (np.abs(lon2 - lon) * 111320 * np.cos(np.radians(lat))).max() < 1e-6
-
-
-def test_scale_factor_at_central_meridian():
-    """Point scale on the CM equals k0 (differential check)."""
-    lat = np.array([45.0, 45.0])
-    lon = np.array([9.0, 9.0])
-    dlat = 1e-6
-    e, n = tmerc_forward(lat + np.array([0, dlat]), lon, 9.0)
-    # metres per degree of latitude on GRS80 at 45N ~ 111131.745
-    got_scale = (n[1] - n[0]) / (dlat * 111131.745)
-    assert got_scale == pytest.approx(0.9996, rel=1e-4)
-
-
-def test_utm_zone_lon0():
-    assert utm_zone_lon0(32) == 9.0
-    assert utm_zone_lon0(18) == -75.0
-
-
-def test_with_tmerc_dataframe(spark):
-    df = spark.createDataFrame([(1, 48.0, 11.5), (2, 55.0, 10.0)],
-                               "id LONG, lat_deg DOUBLE, lon_deg DOUBLE")
-    out = with_tmerc(df, lon0=9.0).toPandas().sort_values("id")
-    e, n = tmerc_forward(np.array([48.0, 55.0]), np.array([11.5, 10.0]), 9.0)
-    assert np.allclose(out.easting.values, e)
-    assert np.allclose(out.northing.values, n)
+from tests.helpers import laea_inverse
 
 
 def test_laea_epsg3035_worked_example():
@@ -78,7 +28,7 @@ def test_laea_roundtrip_and_equal_area():
     lat = rng.uniform(30, 72, 1000)
     lon = rng.uniform(-12, 35, 1000)
     e, n = gc.laea_forward(lat, lon)
-    la, lo = gc.laea_inverse(e, n)
+    la, lo = laea_inverse(e, n)
     assert np.abs(la - lat).max() < 1e-11
     assert np.abs(lo - lon).max() < 1e-11
     a, f = 6378137.0, 1 / 298.257222101

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 
 from hexscape_spark import geo
-from hexscape_spark.habitat import bandwidth_nrd, discretise_habitat
+from hexscape_spark.habitat import discretise_habitat
 
 
 @pytest.fixture(scope="module")
@@ -21,13 +21,6 @@ def habitat_df(spark):
     return spark.createDataFrame(
         [(h, d, bytearray(w)) for h, d, w in rows],
         "Habitat STRING, Density DOUBLE, geom_wkb BINARY")
-
-
-def test_bandwidth_nrd_matches_r_formula():
-    x = np.arange(100, dtype=float)
-    q25, q75 = np.quantile(x, [0.25, 0.75])
-    want = 4 * 1.06 * min(np.std(x, ddof=1), (q75 - q25) / 1.34) * 100 ** -0.2
-    assert bandwidth_nrd(x) == pytest.approx(want)
 
 
 def test_total_capacity_approximately_conserved(spark, habitat_df):

@@ -8,14 +8,15 @@ import pytest
 
 from hexscape_spark import geo, params as P
 from hexscape_spark import hexgrid, sqlgen
-from hexscape_spark.hexgrid import hex_vertices
+from tests.helpers import geocoded_pages, hex_vertices
 
 
 def test_encode_decode_roundtrip(spark):
     """cell -> centroid -> cell is the identity (centroid is interior)."""
     df = spark.createDataFrame(
         [(q, r) for q in range(-5, 6) for r in range(-5, 6)], "q LONG, r LONG")
-    df = hexgrid.with_centroid(df, cx="x", cy="y")
+    cx, cy = sqlgen.centroid_exprs("q", "r")
+    df = df.selectExpr("*", f"{cx} AS x", f"{cy} AS y")
     got = hexgrid.with_hex_cell(df.selectExpr("q AS q0", "r AS r0", "x", "y"),
                                 lon="x", lat="y").toPandas()
     assert (got.q == got.q0).all()
@@ -79,7 +80,6 @@ def test_null_point_gets_null_cell(spark):
 
 def test_points_assigned_to_containing_hex(spark):
     """Every geocoded point lies inside its assigned hexagon's ring."""
-    from hexscape_spark.synth import geocoded_pages
     pdf = geocoded_pages(spark, 2000).select("lon", "lat", "q", "r").toPandas()
     for _, row in pdf.sample(200, random_state=1).iterrows():
         ring = np.array(hex_vertices(int(row.q), int(row.r))[:-1])
@@ -117,7 +117,6 @@ def test_lattice_covers_bbox(spark):
 
 
 def test_geocode_hotspot_share(spark):
-    from hexscape_spark.synth import geocoded_pages
     pdf = geocoded_pages(spark, 5000).toPandas()
     in_hot = 0
     for hx, hy in P.HOTSPOTS:
@@ -129,7 +128,7 @@ def test_geocode_hotspot_share(spark):
 def test_text_byte_identity(spark):
     """north-rule invariant: text survives the pipeline byte-identical."""
     from pyspark.sql import functions as F
-    from hexscape_spark.synth import geocoded_pages, pages
+    from hexscape_spark.synth import pages
     a = pages(spark, 500).select("url", F.md5(F.encode("text", "UTF-8")).alias("h"))
     b = geocoded_pages(spark, 500).select(
         "url", F.md5(F.encode("text", "UTF-8")).alias("h2"))

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from hexscape_spark import multimodal as mm
+from tests.helpers import encode_bmp
 
 
 def _rand_img(seed, w, h):
@@ -23,13 +24,13 @@ def test_ppm_roundtrip_exact(w, h):
 def test_bmp_roundtrip_exact(w, h):
     """Includes widths whose rows need 4-byte padding (w=3, 5)."""
     img = _rand_img(w * 100 + h, w, h)
-    assert (mm.decode_bmp(mm.encode_bmp(img)) == img).all()
+    assert (mm.decode_bmp(encode_bmp(img)) == img).all()
 
 
 def test_decode_image_sniffs_format():
     img = _rand_img(7, 8, 6)
     assert (mm.decode_image(mm.encode_ppm(img)) == img).all()
-    assert (mm.decode_image(mm.encode_bmp(img)) == img).all()
+    assert (mm.decode_image(encode_bmp(img)) == img).all()
     with pytest.raises(ValueError):
         mm.decode_image(b"GIF89a....")
 
@@ -198,7 +199,7 @@ def test_decoders_malformed_raise_valueerror_only():
     rng = np.random.RandomState(9)
     samples = {
         "decode_ppm": mm.encode_ppm(np.zeros((6, 5, 3), dtype=np.uint8)),
-        "decode_bmp": mm.encode_bmp(np.zeros((6, 5, 3), dtype=np.uint8)),
+        "decode_bmp": encode_bmp(np.zeros((6, 5, 3), dtype=np.uint8)),
         "decode_wav": mm.encode_wav(np.zeros(64, dtype=np.int16), 8000),
         "decode_avi": mm.encode_avi(np.zeros((2, 4, 6, 3), dtype=np.uint8),
                                     fps=5),

@@ -269,3 +269,14 @@ def test_dissolve_per_key_routing_keeps_small_and_empty_keys(spark):
         assert bytes(flat.loc[k, "geom_wkb"]) == bytes(d.loc[k, "geom_wkb"]), k
         assert flat.loc[k, "area"] == d.loc[k, "area"], k
         assert flat.loc[k, "n_parts"] == d.loc[k, "n_parts"], k
+
+
+def test_regroup_colours_average(spark):
+    from hexscape_spark.pipeline import regroup_colours
+    legend = spark.createDataFrame(
+        [("211", "#FF0000"), ("212", "#000000"), ("311", "#0000FF")],
+        "clc STRING, colour STRING")
+    out = {r.clc: r.colour for r in regroup_colours(legend, 2).collect()}
+    # mean(FF, 00) = 0x80 after rounding (127.5 -> 128)
+    assert out["21"] == "#800000"
+    assert out["31"] == "#0000FF"

@@ -125,7 +125,7 @@ def test_pip_join_refine_ships_geometry_via_join(spark):
     layer) and evaluates the PIP in an Arrow-batched UDF — no collect."""
     from hexscape_spark import geo
     from hexscape_spark.cover import pip_join, polygon_cell_cover
-    from hexscape_spark.synth import geocoded_pages
+    from tests.helpers import geocoded_pages
     pts = geocoded_pages(spark, 100).select("page_id", "lon", "lat",
                                             "q", "r", "cell_id")
     polys = spark.createDataFrame(

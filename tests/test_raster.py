@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from hexscape_spark import params as P
 from hexscape_spark.raster import hex_to_raster, raster_to_hex
+from tests.helpers import hex_vertices
 
 
 @pytest.fixture(scope="module")
@@ -34,8 +35,7 @@ def test_raster_to_hex_assigns_nearest_centre(spark, raster):
                            "0.0E0 + (iy + 0.5E0) * 500.0E0 AS lat")
     assigned = hexgrid.with_hex_cell(px, hex_width=1000.0).toPandas()
     for _, row in assigned.sample(50, random_state=0).iterrows():
-        ring = np.array(hexgrid.hex_vertices(int(row.q), int(row.r),
-                                             1000.0)[:-1])
+        ring = np.array(hex_vertices(int(row.q), int(row.r), 1000.0)[:-1])
         d = geo.dist_points_to_polygons(np.array([row.lon]),
                                         np.array([row.lat]), [[ring]])
         assert d[0] == 0.0

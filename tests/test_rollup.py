@@ -1,57 +1,4 @@
-"""rollup.py helper coverage (A1/A4/A6/A9, W2/W3)."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from hexscape_spark.rollup import (area_weighted_mean, cell_stats,
-                                   grouped_share, mode_rollup,
-                                   pivot_wide, top_k_per_group)
-
-
-@pytest.fixture(scope="module")
-def df(spark):
-    rows = [("a", "x", 1.0, 10.0), ("a", "x", 3.0, 30.0),
-            ("a", "y", 5.0, 10.0), ("b", "y", 2.0, 20.0),
-            ("b", "y", 4.0, 20.0)]
-    return spark.createDataFrame(rows, "k STRING, c STRING, v DOUBLE, w DOUBLE")
-
-
-def test_cell_stats(df):
-    out = {r["k"]: r for r in cell_stats(df, "v", key="k").collect()}
-    assert out["a"]["n"] == 3 and out["a"]["sum_v"] == 9.0
-    assert out["b"]["avg_v"] == 3.0
-    assert out["a"]["min_v"] == 1.0 and out["a"]["max_v"] == 5.0
-
-
-def test_area_weighted_mean(df):
-    out = {r["k"]: r["wmean_v"] for r in
-           area_weighted_mean(df, "k", "v", "w").collect()}
-    assert out["a"] == pytest.approx((1 * 10 + 3 * 30 + 5 * 10) / 50)
-    assert out["b"] == pytest.approx(3.0)
-
-
-def test_grouped_share(df):
-    out = grouped_share(df, "k", "v").toPandas()
-    assert out.groupby("k").share.sum().round(9).eq(1.0).all()
-
-
-def test_mode_rollup(df):
-    out = {r["k"]: (r["mode_value"], r["mode_count"]) for r in
-           mode_rollup(df, "k", "c").collect()}
-    assert out["a"] == ("x", 2)
-    assert out["b"] == ("y", 2)
-
-
-def test_top_k_per_group(df):
-    out = top_k_per_group(df, "k", "v", k=1, tiebreak="c").toPandas()
-    assert set(zip(out.k, out.v)) == {("a", 5.0), ("b", 4.0)}
-
-
-def test_pivot_wide(df):
-    out = pivot_wide(df, "k", "c", "v", agg="sum",
-                     categories=["x", "y"]).toPandas().set_index("k")
-    assert out.loc["a", "x"] == 4.0 and out.loc["a", "y"] == 5.0
-    assert out.loc["b", "x"] == 0.0 and out.loc["b", "y"] == 6.0
+"""Range-partitioned cumulative sum (W4)."""
 
 
 def test_global_cumsum_matches_window(spark):

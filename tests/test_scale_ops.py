@@ -1,13 +1,12 @@
 """Scale-path operators must agree with their simple-path equivalents."""
 
 import os
-import tempfile
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hexscape_spark import geo, hexgrid, params as P, sqlgen
+from hexscape_spark import geo, params as P, sqlgen
 
 
 def test_cover_join_matches_broadcast_clip(spark):
@@ -86,113 +85,38 @@ def test_knn_library_matches_shared_sql(spark):
     assert (lib.dist_r.values == sql_res.dist_r.values).all()
 
 
-def test_streaming_equals_batch(spark):
-    """The streaming rollup over availableNow == the batch plan on the
-    same files (one code path for the hex math)."""
-    import shutil
-    from hexscape_spark.streaming import (run_available_now, stream_pages,
-                                          streaming_cell_rollup)
-    from hexscape_spark.synth import pages
-    base = tempfile.mkdtemp(prefix="hexstream_test_")
-    src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ckpt"))
-    pages(spark, 3000, num_partitions=4).write.parquet(src)
-    res = streaming_cell_rollup(stream_pages(spark, src), window="1 hour",
-                                watermark="2 hours")
-    run_available_now(res, ckpt, out)
-    got = spark.read.parquet(out).toPandas() \
-        .sort_values(["window_start", "cell_id"]).reset_index(drop=True)
-
-    batch_pages = spark.read.parquet(src)
-    g = hexgrid.with_hex_cell(hexgrid.with_geocode(batch_pages, "page_id"))
-    # append mode only emits windows the watermark has CLOSED:
-    # window_end <= max(event_time) - watermark delay
-    max_ts = batch_pages.agg(F.max("warc_ts")).collect()[0][0]
-    want = (g.groupBy(F.window("warc_ts", "1 hour").alias("w"), "cell_id")
-            .agg(F.count(F.lit(1)).alias("n_pages"),
-                 F.sum(F.length("text")).alias("sum_chars"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"), "cell_id",
-                    "n_pages", "sum_chars")
-            .where(F.col("window_end") <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-            .toPandas().sort_values(["window_start", "cell_id"])
-            .reset_index(drop=True))
-    assert len(got) == len(want)
-    assert (got.cell_id.values == want.cell_id.values).all()
-    assert (got.n_pages.values == want.n_pages.values).all()
-    assert (got.sum_chars.values == want.sum_chars.values).all()
-    shutil.rmtree(base, ignore_errors=True)
-
-
 def test_streaming_drops_late_data(spark, tmp_path):
     """A second micro-batch with events older than the advanced watermark
-    must not resurrect closed windows (late-data semantics)."""
+    must not resurrect closed (hour_key, cell_id) windows of the streaming
+    hourly per-cell rollup (late-data semantics)."""
     import pyspark.sql.functions as F2
-    from hexscape_spark.streaming import (run_available_now, stream_pages,
-                                          streaming_cell_rollup)
-    from hexscape_spark.synth import pages
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    # batch 1: page_ids 0..2999 span ~5.8h of warc_ts
-    pages(spark, 3000, num_partitions=2).write.mode("append").parquet(src)
-    res = streaming_cell_rollup(stream_pages(spark, src), window="1 hour",
-                                watermark="1 hour")
-    run_available_now(res, ckpt, out)
-    n1 = spark.read.parquet(out).count()
-    # batch 2: re-append the OLDEST rows (hours behind the watermark)
-    pages(spark, 50, num_partitions=1).write.mode("append").parquet(src)
-    res2 = streaming_cell_rollup(stream_pages(spark, src), window="1 hour",
-                                 watermark="1 hour")
-    run_available_now(res2, ckpt, out)
+    from hexscape_spark.streaming import (run_available_now, stream_events,
+                                          streaming_events_hour_cell)
+    from tests.conftest import SF_DIR
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
+    # batch 1: the whole table (~30 days of ts); every hour window but the
+    # last two closes under the 1-hour watermark and is emitted
+    events.write.parquet(src)
+    run_available_now(streaming_events_hour_cell(stream_events(spark, src),
+                                                 watermark="1 hour"),
+                      ckpt, out)
+    first = spark.read.parquet(out)
+    n1 = first.count()
+    # batch 2: re-append the OLDEST rows, weeks behind the watermark
+    oldest = events.orderBy("ts", "event_id").limit(50)
+    oldest.write.mode("append").parquet(src)
+    late = streaming_events_hour_cell(oldest).select("hour_key", "cell_id")
+    # not vacuous: every late row falls in a window batch 1 already emitted
+    assert late.join(first, ["hour_key", "cell_id"], "left_anti").count() == 0
+    run_available_now(streaming_events_hour_cell(stream_events(spark, src),
+                                                 watermark="1 hour"),
+                      ckpt, out)
     after = spark.read.parquet(out)
-    # no closed (already-emitted) window may appear twice
-    dupes = (after.groupBy("window_start", "cell_id")
+    dupes = (after.groupBy("hour_key", "cell_id")
              .agg(F2.count(F2.lit(1)).alias("c")).where("c > 1").count())
     assert dupes == 0
-    assert after.count() >= n1
-
-
-def test_sessionize_stream_matches_batch_oracle(spark, tmp_path):
-    """applyInPandasWithState sessionizer == batch lag/cumsum sessionization
-    for all sessions the stream has CLOSED (gap semantics)."""
-    import pyspark.sql.functions as F2
-    from pyspark.sql.window import Window
-    from hexscape_spark.streaming import run_available_now, sessionize_stream
-    src, out, ckpt = (str(tmp_path / d) for d in ("s", "o", "c"))
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .select("user_id", "ts")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema("user_id LONG, ts TIMESTAMP").parquet(src)
-    run_available_now(sessionize_stream(stream, gap_minutes=120.0), ckpt, out)
-    got = spark.read.parquet(out).toPandas() \
-        .sort_values(["user_id", "session_start"]).reset_index(drop=True)
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    prev = F2.lag("ts").over(w)
-    gap_new = F2.when(
-        F2.expr("timestampdiff(SECOND, prev, ts)") > 120 * 60, 1).otherwise(0)
-    ev = ev.withColumn("prev", prev)
-    batch = (ev.withColumn("new_s", F2.when(F2.col("prev").isNull(),
-                                            F2.lit(1)).otherwise(gap_new))
-             .withColumn("sid", F2.sum("new_s").over(
-                 w.rowsBetween(Window.unboundedPreceding, 0)))
-             .groupBy("user_id", "sid")
-             .agg(F2.min("ts").alias("session_start"),
-                  F2.max("ts").alias("session_end"),
-                  F2.count(F2.lit(1)).alias("n_events"))
-             .toPandas())
-    want = batch.sort_values(["user_id", "session_start"]).reset_index(drop=True)
-    # the stream only emits sessions CLOSED by a later event or timeout at
-    # stream end; with availableNow every session except possibly each
-    # user's last open one is closed — compare the common prefix per user
-    gw = got.groupby("user_id")
-    for uid, grp in want.groupby("user_id"):
-        g = gw.get_group(uid) if uid in gw.groups else grp.iloc[0:0]
-        n = len(g)
-        assert n >= len(grp) - 1, (uid, n, len(grp))
-        cmp = grp.iloc[:n]
-        assert (g.session_start.values == cmp.session_start.values).all()
-        assert (g.n_events.values == cmp.n_events.values).all()
+    assert after.count() == n1
 
 
 def test_checkpoint_reuse_and_invalidation(spark, tmp_path):
@@ -233,7 +157,8 @@ def test_checkpoint_recovers_from_half_deleted_data(spark, tmp_path):
 def test_pip_join_matches_bruteforce(spark):
     """Exact PIP join (cover prefilter + refine) == brute-force PIP."""
     from hexscape_spark.cover import pip_join, polygon_cell_cover
-    from hexscape_spark.synth import geocoded_pages, land_use_square
+    from hexscape_spark.synth import land_use_square
+    from tests.helpers import geocoded_pages
 
     pts = geocoded_pages(spark, 3000).select("page_id", "lon", "lat",
                                              "q", "r", "cell_id")
@@ -464,6 +389,43 @@ def test_cli_dedup_job_finds_planted_pair_and_caps_cluster(spark, tmp_path):
     assert run(500).where(in_cluster).count() == 0
 
 
+def test_cli_webtext_substr_dedup_with_repeated_url(spark, tmp_path,
+                                                    monkeypatch):
+    """`run --job webtext --substr-dedup N` through cli.main on a WARC in
+    which one url was fetched twice with different texts: both fetches
+    survive, the span they share keeps exactly one full copy, and the
+    output schema carries no internal key.  main() builds and stops its
+    own session, so both are pointed at the shared test session."""
+    from hexscape_spark import cli, session
+    from tests.helpers import write_warc_gz
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    shared = ("alpha bravo charlie delta echo foxtrot golf hotel india "
+              "juliet kilo lima")
+    # the span sits at different token positions in the two fetches
+    texts = [("https://ex.org/a", f"{shared} under a bright moon"),
+             ("https://ex.org/a", "seven green owls watched while the quick "
+              "red fox ran past an old mill near some quiet water and then "
+              f"{shared}"),
+             ("https://ex.org/b", "an unrelated page about hexagons maps "
+              "and many other quiet things")]
+    write_warc_gz([{"record_type": "response", "url": url,
+                    "warc_date": "2026-02-01T00:00:00Z",
+                    "content_type": "text/html",
+                    "payload": f"<html><body><p>{t}</p></body></html>".encode()}
+                   for url, t in texts], str(tmp_path / "s0.warc.gz"))
+    out = str(tmp_path / "out")
+    cli.main(["run", "--job", "webtext", "--substr-dedup", "5",
+              "--pages", str(tmp_path / "*.warc.gz"), "--out", out])
+    got = spark.read.parquet(out)
+    assert "__doc_key" not in got.columns
+    rows = got.select("doc_id", "text").collect()
+    assert sorted(r.doc_id for r in rows) == \
+        ["https://ex.org/a", "https://ex.org/a", "https://ex.org/b"]
+    assert sum(shared in r.text for r in rows) == 1
+    assert all("hotel" not in r.text for r in rows if shared not in r.text)
+
+
 def test_embedding_near_dup_lsh_recall_and_plan(spark):
     """Scale path for embedding near-dups (VERDICT r02 #3): LSH candidates
     -> exact cosine predicate.  On planted near-duplicates it recovers
@@ -562,29 +524,6 @@ def test_winnowing_guarantee_and_operator(spark):
     # rolling hash really rolls: shifting a doc by a prefix keeps the
     # common suffix k-gram hashes identical
     assert set(winnow_text("xxxx" + a, k, w)) & fa
-
-
-def test_dedup_stream_matches_batch(spark, tmp_path):
-    """Streaming dedup over availableNow keeps exactly one row per content
-    hash — the incremental form of dedup.exact_duplicates (planted dupes
-    across the stream are dropped)."""
-    import pandas as pd
-    from pyspark.sql import functions as F2
-    from hexscape_spark.streaming import (dedup_stream, run_available_now,
-                                          stream_pages)
-    from hexscape_spark.synth import pages
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    # synth pages repeat texts across ids (12-word LCG texts collide), so
-    # the stream carries genuine duplicates
-    pages(spark, 2000, num_partitions=4).write.parquet(src)
-    res = dedup_stream(stream_pages(spark, src), watermark="24 hours")
-    run_available_now(res, ckpt, out)
-    got = spark.read.parquet(out).toPandas()
-    batch = pages(spark, 2000).withColumn(
-        "__h", F2.md5(F2.encode(F2.col("text"), "UTF-8"))).toPandas()
-    n_distinct = batch["__h"].nunique()
-    assert len(got) == n_distinct
-    assert got.text.map(hash).nunique() == n_distinct
 
 
 def test_connected_components_matches_unionfind(spark):
@@ -890,8 +829,8 @@ def test_warc_ingest_roundtrip(spark, tmp_path):
     segments parse back byte-exactly through the binaryFile + mapInPandas
     reader, record-type prefilter applied; malformed streams raise
     ValueError."""
-    from hexscape_spark.warc import (parse_warc_records, read_warc,
-                                     write_warc_gz)
+    from hexscape_spark.warc import parse_warc_records, read_warc
+    from tests.helpers import write_warc_gz
     segs = []
     for s in range(3):
         recs = []
@@ -943,7 +882,7 @@ def test_web_pipeline_warc_to_text_end_to_end(spark, tmp_path):
     from hexscape_spark.dedup import dedup_keep_first
     from hexscape_spark.textops import (with_html_text, with_lang_guess,
                                         with_token_count)
-    from hexscape_spark.warc import write_warc_gz
+    from tests.helpers import write_warc_gz
 
     def page(i):
         # ids 0/10 and 5/15 are exact duplicate CONTENT on different urls
@@ -1205,7 +1144,8 @@ def test_bfs_distributed_path_matches_local(spark):
 def test_warc_oversized_segment_guard(spark, tmp_path):
     """read_warc fails fast with a clear error on a segment beyond the
     per-task byte bound (r4 VERDICT #8) instead of OOMing mid-parse."""
-    from hexscape_spark.warc import read_warc, write_warc_gz
+    from hexscape_spark.warc import read_warc
+    from tests.helpers import write_warc_gz
     p = str(tmp_path / "big.warc.gz")
     write_warc_gz([{"record_type": "response", "url": "https://x.org/1",
                     "warc_date": "2026-01-01T00:00:00Z",
@@ -1338,7 +1278,8 @@ def test_stream_warc_equals_batch(spark, tmp_path):
     walker, so schema, prefilter, byte bound and payload bytes agree."""
     import os
 
-    from hexscape_spark.warc import read_warc, stream_warc, write_warc_gz
+    from hexscape_spark.warc import read_warc, stream_warc
+    from tests.helpers import write_warc_gz
     seg_dir = tmp_path / "segs"
     os.makedirs(seg_dir)
     for s in range(3):
