@@ -1716,8 +1716,8 @@ def _sql_habitat_identities_duck() -> str:
 
 
 def _q_voronoi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """discretise_voronoi_blocked on seeded points — the distributed
-    scale path (block k-ring candidates, no driver seed funnel).
+    """discretise_voronoi on seeded points (block k-ring candidates, no
+    driver seed funnel).
     HYBRID ORACLE GATE (r6, the habitat_patches pattern, per-cell
     granular): the half-plane construction is not SQL-expressible, but
     each cell's identities are decidable from the output — the query
@@ -1728,19 +1728,19 @@ def _q_voronoi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     rectangle (areas sum to the land area within 1e-6).  The DuckDB
     oracle enumerates the expected 101 TRUE rows, so a lost seed, a
     duplicated Index, or any identity violation is a driver-visible
-    rows/hash mismatch.  Cell values (areas, adjacency) stay covered by
-    test_voronoi.py parity + invariant tests."""
+    rows/hash mismatch.  Cell values (areas, centroids) stay covered by
+    test_voronoi.py's all-seeds reference and invariant tests."""
     import numpy as np
     from hexscape_spark import geo
-    from hexscape_spark.voronoi import discretise_voronoi_blocked
+    from hexscape_spark.voronoi import discretise_voronoi
     rng = np.random.RandomState(42)
     pts = rng.uniform(0, 10, size=(100, 2))
     points = spark.createDataFrame(
         [(i + 1, float(x), float(y)) for i, (x, y) in enumerate(pts)],
         "Index LONG, x DOUBLE, y DOUBLE")
     land = geo.rect_wkb(0, 0, 10, 10)
-    out = discretise_voronoi_blocked(spark, land, points, block_size=2.0,
-                                     keep_geometry=True) \
+    out = discretise_voronoi(spark, land, points, block_size=2.0,
+                             keep_geometry=True) \
         .select("Index", "Area", "centroid_x", "centroid_y", "geom_wkb")
     chk = out.toPandas()                          # bounded: seed count
     seed_xy = {i + 1: (float(x), float(y)) for i, (x, y) in enumerate(pts)}
@@ -1901,18 +1901,16 @@ def _assign_ckpt(spark: SparkSession, table: str, key: str,
 
 
 def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast + min-struct path of the J8 nearest-feature join
-    (knn.nearest_cells semantics); bit-parity with the ROW_NUMBER shared-SQL
-    oracle is asserted in pytest as well.
+    """The J8 nearest-feature join: knn.nearest_cells (broadcast kRing
+    expansion of the occupied cells + per-event MIN(struct)) over the
+    assigned events, checked value-exact against the ROW_NUMBER
+    shared-SQL oracle.
 
     r7 (guide §1/§2.4): both assign sides are materialised via
     _assign_ckpt (see there — the inner-join IsNotNull inference was
     re-inlining the full assign expression tree into scan Filters on
     BOTH sides, 21.1 s at sf1.0 for a query whose assign costs 1.4 s).
-    The tiny occupied side expands by the 37 kRing offsets WITH its
-    centroid precomputed per expanded row (once per occ×37, not once
-    per event×candidate), broadcasts, and each event makes one hash
-    probe feeding a combinable MIN(struct) — measured 21.1 s → ~3.5 s
+    With the broadcast + MIN(struct) plan this measured 21.1 s → ~3.5 s
     at sf1.0, exceptAll-parity in both directions.
 
     This is the only J8 plan.  Ring escalation (join ring <= 1 first,
@@ -1920,26 +1918,14 @@ def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1), and an array-gather argmin that dropped the fan-out sort
     only won above ~200k events at local[32], far above the 100k events
     of the benchmark's query suite."""
+    from hexscape_spark.knn import nearest_cells
     _views(spark, sf_dir)
     ev = _assign_ckpt(spark, "events", "event_id",
                       "event_id, lon, lat, q, r")
-    occ = _assign_ckpt(spark, "documents", "doc_id",
-                       "q AS cq, r AS cr, cell_id", distinct=True,
-                       spread=False)
-    cx, cy = sqlgen.centroid_exprs("cq", "cr")
-    expd = (occ.crossJoin(hexgrid.kring_offsets_df(spark, 3))
-            .selectExpr("cq - dq AS kq", "cr - dr AS kr", "cell_id",
-                        f"{cx} AS cx", f"{cy} AS cy"))
-    dist = F.sqrt(
-        (F.col("lon") - F.col("cx")) * (F.col("lon") - F.col("cx")) +
-        (F.col("lat") - F.col("cy")) * (F.col("lat") - F.col("cy")))
-    return (ev.join(F.broadcast(expd),
-                    [F.col("kq") == F.col("q"), F.col("kr") == F.col("r")])
-            .groupBy("event_id")
-            .agg(F.min(F.struct(dist.alias("d"),
-                                F.col("cell_id").alias("c"))).alias("b"))
-            .select("event_id", F.col("b.c").alias("nn_cell_id"),
-                    F.round("b.d", 6).alias("dist_r")))
+    occ = _assign_ckpt(spark, "documents", "doc_id", "q, r, cell_id",
+                       distinct=True, spread=False)
+    return nearest_cells(ev, occ, k_ring=3, point_id="event_id") \
+        .select("event_id", "nn_cell_id", F.round("dist", 6).alias("dist_r"))
 
 
 # ---------------------------------------------------------------------------

@@ -53,22 +53,11 @@ def _shingles(text_col, k: int = 3):
 
 def _bucket_pairs(buckets: DataFrame, key: str,
                   max_bucket: int | None) -> DataFrame:
-    """Self-join (band, h) buckets into distinct (a, b) pairs with a < b.
-    A band is a MinHash signature slice or one hyperplane-LSH table.
-
-    `max_bucket` caps the per-bucket membership BEFORE the self-join: a
-    bucket of m members emits m^2/2 pairs, so one degenerate bucket (e.g.
-    10^6 identical boilerplate pages) would be quadratic no matter how AQE
-    splits the shuffle.  Buckets above the cap are dropped entirely — for
-    dedup that is the right semantics (members of an over-full bucket are
-    near-certain duplicates of an exact-dup cluster that exact_duplicates
-    already catches more cheaply).
-    """
-    if max_bucket is not None:
-        sizes = (buckets.groupBy("band", "h")
-                 .agg(F.count(F.lit(1)).alias("__m"))
-                 .where(F.col("__m") <= max_bucket))
-        buckets = buckets.join(sizes.select("band", "h"), on=["band", "h"])
+    """Self-join (band, h) buckets into distinct (a, b) pairs with a < b,
+    after dropping buckets above `max_bucket` (similarity._cap_buckets).
+    A band is a MinHash signature slice or one hyperplane-LSH table."""
+    from .similarity import _cap_buckets
+    buckets = _cap_buckets(buckets, max_bucket)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (a.join(b, on=["band", "h"])
@@ -240,22 +229,9 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, key: str = "vec_id",
     1 - (1 - p^planes)^tables; per-table buckets above `max_bucket` are
     dropped before the self-join (degenerate identical-vector clusters).
     Returns (a, b, cosine) with a < b and cosine >= threshold (6 dp)."""
-    from .similarity import _dot, with_lsh_buckets, with_unit_norm
-    # r7: one spread Arrow pass for norm+sketches (see cosine_topk_lsh)
-    base = df.where(F.col(vec).isNotNull()) \
-        .select(key, vec).repartition(F.col(key))
-    u = with_unit_norm(base, vec)
-    b = with_lsh_buckets(u, "unit_vec", planes, dim, tables)
-    # Python stage: the bucket self-join and both vector joins read b
-    b = materialise(b.select(key, "unit_vec",
-                             *[f"__b{t}" for t in range(tables)]))
-    buckets = b.select(
-        key, F.explode(F.array(*[
-            F.struct(F.lit(t).alias("band"), F.col(f"__b{t}").alias("h"))
-            for t in range(tables)])).alias("s")) \
-        .select(key, "s.band", "s.h")
+    from .similarity import _dot, _lsh_sketch
+    vecs, buckets = _lsh_sketch(df, key, vec, planes, dim, tables)
     cands = _bucket_pairs(buckets, key, max_bucket)
-    vecs = b.select(F.col(key), F.col("unit_vec"))
     pairs = (cands
              .join(vecs.selectExpr(f"{key} AS a", "unit_vec AS ua"), on="a")
              .join(vecs.selectExpr(f"{key} AS b", "unit_vec AS ub"), on="b"))

@@ -188,7 +188,9 @@ def discretise_habitat(spark: SparkSession, habitat: DataFrame,
     """habitat: DataFrame(Habitat STRING, Density DOUBLE, geom_wkb BINARY).
     Returns DataFrame(PatchID STRING, main_patch INT, sub_patch INT,
     area DOUBLE [m²], Capacity DOUBLE)."""
-    assert max_size_km2 >= 2 * min_size_km2          # :46
+    if max_size_km2 < 2 * min_size_km2:              # :46
+        raise ValueError(f"discretise_habitat: max_size_km2={max_size_km2} "
+                         f"must be at least 2 * min_size_km2={min_size_km2}")
 
     # habitat dimension table: the one driver materialisation, with an
     # EXPLICIT bound (VERDICT r03 #7 — was an open-ended toPandas).  The

@@ -24,12 +24,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.window import Window
 
 from .checkpoint import materialise
-
-
-from pyspark.sql.types import ArrayType, DoubleType  # noqa: E402
 
 
 def _stack(s: pd.Series) -> np.ndarray:
@@ -227,6 +225,51 @@ def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
     return df.drop("__bk")
 
 
+def _lsh_sketch(df: DataFrame, key: str, vec: str, planes: int, dim: int,
+                tables: int) -> tuple[DataFrame, DataFrame]:
+    """The sketch stage both LSH operators share.  Returns (vecs, buckets):
+    vecs is (key, unit_vec); buckets is (key, band, h), one row per table.
+
+    NULL vectors can neither hash nor score and are dropped.  r7 (guide
+    §2.4/§2.5/§4): ONE Arrow pass computes unit vectors AND every table's
+    sketch (adjacent pandas UDFs share one ArrowEvalPython node), spread
+    across cores by a repartition first (single-row-group inputs
+    otherwise hash the whole corpus in one Python worker)."""
+    base = df.where(F.col(vec).isNotNull()) \
+        .select(key, vec).repartition(F.col(key))
+    # sketch the RAW vector, not the unit-normed one (r4 ADVICE): the sign
+    # bits are scale-invariant, and hashing the same bytes the SQL oracle
+    # hashes removes the one cross-engine flake source — a normalised
+    # component differing in the last ulp flipping a near-zero plane dot
+    b = with_lsh_buckets(with_unit_norm(base, vec), vec, planes, dim, tables)
+    # Python stage: the bucket self-join and both vector joins read b
+    b = materialise(b.select(key, "unit_vec",
+                             *[f"__b{t}" for t in range(tables)]))
+    buckets = b.select(
+        key, F.explode(F.array(*[
+            F.struct(F.lit(t).alias("band"), F.col(f"__b{t}").alias("h"))
+            for t in range(tables)])).alias("s")) \
+        .select(key, "s.band", "s.h")
+    return b.select(key, "unit_vec"), buckets
+
+
+def _cap_buckets(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Drop every (band, h) bucket with more than `max_bucket` members
+    (None: keep all) before a bucket self-join.
+
+    A bucket of m members emits m^2/2 pairs, so one degenerate bucket
+    (e.g. 10^6 identical boilerplate pages or vectors) would be quadratic
+    no matter how AQE splits the shuffle.  Over-full buckets go entirely:
+    for dedup their members are near-certain copies of an exact-dup
+    cluster, which exact_duplicates catches more cheaply."""
+    if max_bucket is None:
+        return buckets
+    ok = (buckets.groupBy("band", "h")
+          .agg(F.count(F.lit(1)).alias("__m"))
+          .where(F.col("__m") <= max_bucket).select("band", "h"))
+    return buckets.join(ok, on=["band", "h"])
+
+
 def ivf_train_centroids(df: DataFrame, vec: str = "embedding",
                         n_lists: int = 16, dim: int = 64, seed: int = 42,
                         sample: int = 4096,
@@ -370,33 +413,10 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
     rounding before ranking keeps last-ulp summation differences from
     flipping near-ties.
     """
-    df = df.where(F.col(vec).isNotNull())   # NULL vectors can't hash/score
-    # r7 (guide §2.4/§2.5/§4): ONE Arrow pass computes unit vectors AND
-    # every table's sketch (adjacent pandas UDFs share one
-    # ArrowEvalPython node), spread across cores by a repartition first
-    # (single-row-group inputs otherwise hash the whole corpus in one
-    # Python worker).
-    base = df.select(key, vec).repartition(F.col(key))
-    # sketch the RAW vector, not the unit-normed one (r4 ADVICE): the sign
-    # bits are scale-invariant, and hashing the same bytes the SQL oracle
-    # hashes removes the one cross-engine flake source — a normalised
-    # component differing in the last ulp flipping a near-zero plane dot
-    b = with_lsh_buckets(with_unit_norm(base, vec), vec, planes, dim, tables)
-    # Python stage: the bucket self-join and both vector joins read b
-    b = materialise(b.select(key, "unit_vec",
-                             *[f"__b{t}" for t in range(tables)]))
-    buckets = b.select(
-        key, F.explode(F.array(*[
-            F.struct(F.lit(t).alias("tbl"), F.col(f"__b{t}").alias("h"))
-            for t in range(tables)])).alias("s")) \
-        .select(key, "s.tbl", "s.h")
-    if max_bucket is not None:
-        ok = (buckets.groupBy("tbl", "h")
-              .agg(F.count(F.lit(1)).alias("__m"))
-              .where(F.col("__m") <= max_bucket).select("tbl", "h"))
-        buckets = buckets.join(ok, on=["tbl", "h"])
-    lhs = buckets.select(F.col(key).alias("query_id"), "tbl", "h")
-    rhs = buckets.select(F.col(key).alias("nn_id"), "tbl", "h")
+    vecs, buckets = _lsh_sketch(df, key, vec, planes, dim, tables)
+    buckets = _cap_buckets(buckets, max_bucket)
+    lhs = buckets.select(F.col(key).alias("query_id"), "band", "h")
+    rhs = buckets.select(F.col(key).alias("nn_id"), "band", "h")
     # `small_corpus=True` (r7): the checkpointed relations are RDD-backed
     # with no size statistics, so join-strategy selection is left to
     # runtime estimates and wobbles run to run; a caller that KNOWS the
@@ -406,7 +426,7 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
     # leaves the planner free: these relations are O(corpus) and MUST
     # NOT be force-broadcast in the production path.
     _b = F.broadcast if small_corpus else (lambda d: d)
-    cands = (lhs.join(_b(rhs), on=["tbl", "h"])
+    cands = (lhs.join(_b(rhs), on=["band", "h"])
              .where(F.col("query_id") != F.col("nn_id"))
              .select("query_id", "nn_id").distinct())
     if small_corpus:
@@ -423,7 +443,7 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
         # oversized corpus fails after at most cap + 1 rows reach the
         # driver instead of OOMing it
         cap = SMALL_CORPUS_MAX_ROWS
-        vp = b.select(F.col(key), F.col("unit_vec")).limit(cap + 1).toPandas()
+        vp = vecs.limit(cap + 1).toPandas()
         if len(vp) > cap:
             raise ValueError(
                 f"cosine_topk_lsh: small_corpus=True collects the corpus to "
@@ -451,7 +471,6 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
 
         scored = cands.mapInPandas(score, schema=schema)
     else:
-        vecs = b.select(F.col(key), F.col("unit_vec"))
         scored = (cands
                   .join(vecs.select(F.col(key).alias("query_id"),
                                     F.col("unit_vec").alias("qv")),

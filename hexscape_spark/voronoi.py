@@ -3,13 +3,13 @@
 Spark-first reimplementations of the reference's Voronoi family:
 
   * discretise_voronoi (R/discretise_voronoi.R:12-49): each seed's Voronoi
-    cell is the intersection of half-planes against every other seed —
-    CONVEX, so it composes with the engine's convex clipper.  Cells are
-    computed independently per seed in an Arrow-batched pandas UDF with the
-    (small, broadcast) seed set; no global tessellation structure is needed,
-    which sidesteps the partition-locality problem flagged in SURVEY §7.3.
-    A kd-free pruning bound (2 * dist to nearest seed + envelope diagonal
-    guard) keeps the half-plane loop short for clustered seeds.
+    cell is the intersection of half-planes against nearby seeds —
+    CONVEX, so it composes with the engine's convex clipper.  Seeds never
+    funnel through the driver: they hash into square blocks, each seed's
+    candidates are the seeds in its block k-ring (an equi-join), and a
+    provable bound accepts the cell or retries the seed with doubled k.
+    No global tessellation structure is needed, which sidesteps the
+    partition-locality problem flagged in SURVEY §7.3.
   * sample_points (R/sample_points.R:12-74): seeded per-polygon rejection
     sampling in the polygon bbox; exactly `size` points per polygon,
     deterministic under retries (rng seeded by hash(seed, Index)).
@@ -57,83 +57,37 @@ def _halfplane_clip(ring: np.ndarray, p: np.ndarray, q: np.ndarray) -> np.ndarra
     return np.array(pts) if pts else np.empty((0, 2))
 
 
-def voronoi_cell(i: int, pts: np.ndarray, envelope: np.ndarray) -> np.ndarray:
-    """Convex Voronoi cell of pts[i] within a convex envelope ring."""
+def voronoi_cell(p: np.ndarray, cands: np.ndarray,
+                 envelope: np.ndarray) -> np.ndarray:
+    """Convex Voronoi cell of point p against the seeds `cands` within a
+    convex envelope ring.  Seeds at p itself (d2 == 0: p's own row) never
+    cut the cell and are skipped."""
     cell = envelope
-    p = pts[i]
-    d2 = (pts[:, 0] - p[0]) ** 2 + (pts[:, 1] - p[1]) ** 2
-    order = np.argsort(d2)
-    for j in order:
-        if j == i or len(cell) < 3:
+    d2 = (cands[:, 0] - p[0]) ** 2 + (cands[:, 1] - p[1]) ** 2
+    for j in np.argsort(d2):
+        if d2[j] == 0.0 or len(cell) < 3:
             continue
-        # prune: if the bisector of p,pts[j] cannot cut the current cell
+        # prune: if the bisector of p,cands[j] cannot cut the current cell
         # (all cell vertices strictly closer to p), skip the clip
         far = np.max((cell[:, 0] - p[0]) ** 2 + (cell[:, 1] - p[1]) ** 2)
         if d2[j] > 4.0 * far:
             break                 # sorted by distance: no later seed can cut
-        cell = _halfplane_clip(cell, p, pts[j])
+        cell = _halfplane_clip(cell, p, cands[j])
     return cell
 
 
 def discretise_voronoi(spark: SparkSession, map_wkb: bytes,
-                       points: DataFrame,
+                       points: DataFrame, block_size: float,
                        idx: str = "Index", x: str = "x", y: str = "y",
-                       keep_geometry: bool = True) -> DataFrame:
-    """Voronoi cells of `points` clipped to the map (R/discretise_voronoi.R).
+                       keep_geometry: bool = True,
+                       max_doublings: int = 16) -> DataFrame:
+    """Voronoi cells of `points` clipped to the map (R/discretise_voronoi.R;
+    SURVEY §7.3.3: seeds never funnel through the driver).
 
     Output: Index, x, y, Area (map units²), centroid_x, centroid_y
     [, geom_wkb].  Every input point is inside its own cell by construction
-    (the reference asserts this via st_intersects, :28-31).
-    """
-    pts_pd = points.select(idx, x, y).toPandas()
-    seed_xy = pts_pd[[x, y]].to_numpy(dtype=np.float64)
-    map_polys = geo.wkb_to_polygons(map_wkb)
-    minx, miny, maxx, maxy = geo.polygons_bounds(map_polys)
-    envelope = geo.rect_ring(minx, miny, maxx, maxy)
-    map_bytes = map_wkb
-
-    schema = (f"{idx} LONG, {x} DOUBLE, {y} DOUBLE, Area DOUBLE, "
-              "centroid_x DOUBLE, centroid_y DOUBLE, geom_wkb BINARY")
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        polys = geo.wkb_to_polygons(map_bytes)
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                i = int(row["__i"])
-                cell = voronoi_cell(i, seed_xy, envelope)
-                # clip the map to the convex cell (cell is the clip window)
-                clipped = [geo.clip_polygon_to_convex(poly, geo.ensure_ccw(cell))
-                           for poly in polys]
-                clipped = [c for c in clipped if c]
-                area = geo.polygons_area(clipped)
-                if clipped:
-                    cx, cy = geo.polygons_centroid(clipped)
-                    wkb = geo.multipolygon_to_wkb(clipped)
-                else:
-                    cx, cy, wkb = float("nan"), float("nan"), None
-                rows.append((int(row[idx]), float(row[x]), float(row[y]),
-                             area, cx, cy, wkb))
-            yield pd.DataFrame(rows, columns=[idx, x, y, "Area",
-                                              "centroid_x", "centroid_y",
-                                              "geom_wkb"])
-
-    src = spark.createDataFrame(
-        pts_pd.assign(__i=np.arange(len(pts_pd))),
-        schema=f"{idx} LONG, {x} DOUBLE, {y} DOUBLE, __i LONG")
-    out = src.repartition(max(2, spark.sparkContext.defaultParallelism)) \
-        .mapInPandas(build, schema=schema)
-    return out if keep_geometry else out.drop("geom_wkb")
-
-
-def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
-                               points: DataFrame, block_size: float,
-                               idx: str = "Index", x: str = "x",
-                               y: str = "y",
-                               keep_geometry: bool = True,
-                               max_doublings: int = 16) -> DataFrame:
-    """Scale path for discretise_voronoi (SURVEY §7.3.3): seeds never
-    funnel through the driver.
+    (the reference asserts this via st_intersects, :28-31).  Seeds must be
+    distinct points: two seeds at one point raise ValueError naming both.
 
     Seeds hash into square blocks of `block_size`; each seed's candidate
     set is every seed within Chebyshev block distance k (a broadcast
@@ -143,15 +97,14 @@ def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
     vertices): any non-candidate seed is at distance >= k*block_size, so
     its bisector cannot cut the cell.  Seeds failing the bound (sparse
     regions) retry with doubled k — a shrinking frontier, like bfs_hops.
-
-    Exactness parity with the broadcast path is pytest-verified.
+    A block_size of at least the envelope diagonal accepts every seed in
+    the first round, with every seed as a candidate.
     """
     map_polys = geo.wkb_to_polygons(map_wkb)
     minx, miny, maxx, maxy = geo.polygons_bounds(map_polys)
     envelope = geo.rect_ring(minx, miny, maxx, maxy)
     env_diag = float(np.hypot(maxx - minx, maxy - miny))
     bs = float(block_size)
-    map_bytes = map_wkb
 
     seeds = points.select(idx, x, y).withColumn(
         "bx", F.floor(F.col(x) / bs).cast("long")).withColumn(
@@ -164,25 +117,20 @@ def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
 
     def solver(k: int):
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            polys = geo.wkb_to_polygons(map_bytes)
-            grp = pdf[pdf["__self"]]
+            polys = geo.wkb_to_polygons(map_wkb)
             cands = pdf[[x, y]].to_numpy(dtype=np.float64)
             rows = []
-            for _, row in grp.iterrows():
+            for _, row in pdf[pdf["__self"]].iterrows():
                 p = np.array([row[x], row[y]])
-                # candidate-local Voronoi cell within the envelope
-                d2 = ((cands[:, 0] - p[0]) ** 2 +
-                      (cands[:, 1] - p[1]) ** 2)
-                order = np.argsort(d2)
-                cell = envelope
-                for j in order:
-                    if d2[j] == 0.0 or len(cell) < 3:
-                        continue
-                    far = np.max((cell[:, 0] - p[0]) ** 2 +
-                                 (cell[:, 1] - p[1]) ** 2)
-                    if d2[j] > 4.0 * far:
-                        break
-                    cell = _halfplane_clip(cell, p, cands[j])
+                # duplicates share a block, so they are candidates here
+                same = pdf.loc[(cands[:, 0] == p[0]) & (cands[:, 1] == p[1]),
+                               idx]
+                if len(same) > 1:
+                    raise ValueError(
+                        f"discretise_voronoi: seeds {sorted(map(int, same))} "
+                        f"share the point ({p[0]}, {p[1]}); Voronoi seeds "
+                        "must be distinct")
+                cell = voronoi_cell(p, cands, envelope)
                 r_max = float(np.sqrt(np.max(
                     (cell[:, 0] - p[0]) ** 2 + (cell[:, 1] - p[1]) ** 2))) \
                     if len(cell) >= 3 else 0.0
@@ -211,6 +159,7 @@ def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
     todo = seeds
     k = 1
     for _ in range(max_doublings):
+        tried = k
         offs = spark.createDataFrame(
             [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)],
             "dx LONG, dy LONG")
@@ -241,9 +190,9 @@ def discretise_voronoi_blocked(spark: SparkSession, map_wkb: bytes,
         # at k*bs >= env_diag the bound accepts unconditionally, so k never
         # needs to exceed the envelope (offsets stay (2k+1)^2-bounded)
         k = min(k * 2, int(np.ceil(env_diag / bs)) + 1)
-    if todo is not None and not todo.isEmpty():
-        raise RuntimeError("discretise_voronoi_blocked: unresolved seeds "
-                           f"after k={k // 2} doublings")
+    if todo is not None:
+        raise RuntimeError(f"discretise_voronoi: unresolved seeds after "
+                           f"{max_doublings} rounds (last k={tried})")
     done = materialise(done)   # plan barrier: cut the per-round unions
     return done if keep_geometry else done.drop("geom_wkb")
 
@@ -315,16 +264,21 @@ def randomise_voronoi(spark: SparkSession, map_wkb: bytes, points: DataFrame,
     (n_points x sample_size rows), seeded — the same concession the
     reference's own loop makes (:199-227, SURVEY §7.3 item 4).
     """
-    assert from_type in ("point", "centroid", "voronoi")
-    assert to_type in ("point", "centroid", "voronoi")
+    for name, kind in (("from_type", from_type), ("to_type", to_type)):
+        if kind not in ("point", "centroid", "voronoi"):
+            raise ValueError(f"randomise_voronoi: {name}={kind!r} is not one "
+                             "of 'point', 'centroid', 'voronoi'")
     sample_size = len(sample_probs)
     # mask_landscape=False ranks distances on bbox-envelope cells
     # (:100-102); the sample pools always use map-masked cells (:180-185)
     bbox = geo.polygons_bounds(geo.wkb_to_polygons(map_wkb))
     env_wkb = geo.rect_wkb(*bbox)
-    vor = discretise_voronoi(spark, map_wkb, points, idx=idx, x=x, y=y)
+    # one block as wide as the envelope diagonal: every seed is every
+    # seed's candidate and the first round accepts all cells
+    bs = float(np.hypot(bbox[2] - bbox[0], bbox[3] - bbox[1]))
+    vor = discretise_voronoi(spark, map_wkb, points, bs, idx=idx, x=x, y=y)
     dist_vor = vor if mask_landscape else \
-        discretise_voronoi(spark, env_wkb, points, idx=idx, x=x, y=y)
+        discretise_voronoi(spark, env_wkb, points, bs, idx=idx, x=x, y=y)
     vor_pd = dist_vor.toPandas().sort_values(idx).reset_index(drop=True)
     n = len(vor_pd)
 

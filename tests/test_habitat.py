@@ -47,6 +47,13 @@ def test_subpatch_sizes_and_ids(spark, habitat_df):
     assert (out.area / 1e6 >= 0.5 / 2).all()
 
 
+def test_size_bounds_validated(habitat_df, spark):
+    """R/discretise_habitat.R:46: max_size_km2 must be >= 2 * min_size_km2."""
+    with pytest.raises(ValueError, match="max_size_km2=0.8"):
+        discretise_habitat(spark, habitat_df, max_size_km2=0.8,
+                           min_size_km2=0.5)
+
+
 def test_deterministic(spark, habitat_df):
     a = discretise_habitat(spark, habitat_df, seed=7).toPandas() \
         .sort_values("PatchID").reset_index(drop=True)

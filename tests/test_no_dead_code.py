@@ -35,7 +35,8 @@ SCANNED = sorted({*DEFINING,
 CONTRACT = ("queries", "oracle_sql", "entry")
 # Each entry implements a SURVEY §2 operator, a BASELINE north-star
 # operation or a STATUS brief-requirement row; it must be named in
-# STATUS.md and called from tests/ before it gets a line here.
+# STATUS.md and called from tests/ before it gets a line here, and it
+# leaves once a query, job or bench reaches it.
 LIBRARY = (
     "pip_join",                                               # cover
     "buffer_polygons", "buffer_area", "points_in_buffer",     # geo
@@ -44,7 +45,7 @@ LIBRARY = (
     "connectedness_wide",                                     # connectedness
     "dedup_families", "dedup_canonical",                      # dedup
     "embedding_near_dup_pairs_lsh",
-    "nearest_cells", "nearest_features",                      # knn
+    "nearest_features",                                       # knn
     "sample_frames",                                          # multimodal
     "regroup_colours", "with_clc_labels",                     # pipeline
     "raster_to_hex", "hex_to_raster",                         # raster
@@ -54,7 +55,7 @@ LIBRARY = (
     "with_winnowing", "stratified_sample_deterministic",      # textops
     "with_pii_scrubbed", "with_url_features", "train_char_ngram_lm",
     "with_lm_score", "with_pack_index",
-    "discretise_voronoi", "randomise_voronoi", "sample_points",  # voronoi
+    "randomise_voronoi", "sample_points",                     # voronoi
     "stream_warc",                                            # warc
 )
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -104,7 +105,8 @@ def unreached(sources: dict[str, str], library=()) -> list[str]:
 
 def library_gaps(sources: dict[str, str], status: str, library) -> list[str]:
     """LIBRARY entries that are not defined in the engine, not named in
-    STATUS.md, or not called from tests/."""
+    STATUS.md, not called from tests/, or stale: reached without LIBRARY."""
+    idle = {entry.rsplit(" ", 1)[1] for entry in unreached(sources)}
     defined, tested = set(), set()
     for rel, text in sources.items():
         tree = ast.parse(text, filename=rel)
@@ -116,7 +118,9 @@ def library_gaps(sources: dict[str, str], status: str, library) -> list[str]:
             for why, ok in (("not defined", name in defined),
                             ("not in STATUS.md",
                              re.search(rf"\b{name}\b", status)),
-                            ("no test calls it", name in tested))
+                            ("no test calls it", name in tested),
+                            ("reached without LIBRARY",
+                             name in idle or name not in defined))
             if not ok]
 
 
@@ -174,17 +178,21 @@ def test_guard_flags_bad_library_entries():
     sources = {
         "hexscape_spark/m.py": ("def ok():\n    pass\n"
                                 "def unlisted():\n    pass\n"
-                                "def untested():\n    pass\n"),
+                                "def untested():\n    pass\n"
+                                "def queried():\n    pass\n"),
+        "__spark_entry__.py": ("def queries():\n"
+                               "    return {'q': queried}\n"),
         "tests/test_m.py": ("from hexscape_spark import m\n"
-                            "m.ok(); m.unlisted(); m.ghost()\n"
+                            "m.ok(); m.unlisted(); m.ghost(); m.queried()\n"
                             "def test_untested():\n"
                             "    assert 'untested()'\n"),
     }
-    status = "| ok | untested | ghost | unlisted_twin |"
+    status = "| ok | untested | ghost | unlisted_twin | queried |"
     assert library_gaps(sources, status,
-                        ("ok", "ghost", "unlisted", "untested")) == [
+                        ("ok", "ghost", "unlisted", "untested",
+                         "queried")) == [
         "ghost: not defined", "unlisted: not in STATUS.md",
-        "untested: no test calls it"]
+        "untested: no test calls it", "queried: reached without LIBRARY"]
 
 
 _MATERIALISING = re.compile(r"\.(localCheckpoint|persist|cache)\(")

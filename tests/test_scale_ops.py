@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hexscape_spark import geo, params as P, sqlgen
+from hexscape_spark import geo, params as P
 
 
 def test_cover_join_matches_broadcast_clip(spark):
@@ -63,26 +63,6 @@ def test_salted_agg_equals_plain_groupby(spark):
         .toPandas().sort_values("k").reset_index(drop=True)
     assert (got.n.values == want.n.values).all()
     assert (got.sum_v.values == want.sum_v.values).all()
-
-
-def test_knn_library_matches_shared_sql(spark):
-    """knn.nearest_cells (DataFrame path) == the shared-SQL J8 oracle."""
-    import __spark_entry__ as m
-    from hexscape_spark.knn import nearest_cells
-    sf = "/root/testdata/sf0.01"
-    m._views(spark, sf)
-    sql_res = spark.sql(m._sql_hex_nearest_cell()).toPandas() \
-        .sort_values("event_id").reset_index(drop=True)
-    ev = spark.sql(sqlgen.assign_sql("events", "event_id")) \
-        .withColumnRenamed("event_id", "point_id")
-    docs = spark.sql(sqlgen.assign_sql("documents", "doc_id"))
-    lib = nearest_cells(ev, docs.select("q", "r", "cell_id"), k_ring=3) \
-        .withColumn("dist_r", F.round("dist", 6)).toPandas() \
-        .sort_values("point_id").reset_index(drop=True)
-    assert len(lib) == len(sql_res)
-    assert (lib.point_id.values == sql_res.event_id.values).all()
-    assert (lib.nn_cell_id.values == sql_res.nn_cell_id.values).all()
-    assert (lib.dist_r.values == sql_res.dist_r.values).all()
 
 
 def test_streaming_drops_late_data(spark, tmp_path):
