@@ -78,14 +78,11 @@ def generate_connectedness(patches: DataFrame,
                            max_distance: float,
                            grid_resolution: int = 50,
                            idx: str = "Index",
-                           geom: str = "geom_wkb",
-                           centroid_distance: bool = False) -> DataFrame:
+                           geom: str = "geom_wkb") -> DataFrame:
     """Sparse long-form connectedness table (Source, Target, Connectedness).
 
     Self-pairs (zero distance) are excluded, as in the reference grid kernel
-    (Col==0 & Row==0 -> NA, :93).  centroid_distance=True adds the
-    centroid-to-centroid distance column the reference's signature offers
-    (:12, its TODO at :277) — requires centroid_x/centroid_y on patches.
+    (Col==0 & Row==0 -> NA, :93).
     """
     grid_by = max_distance / grid_resolution
     pts = patch_grid_points(patches, grid_by, idx=idx, geom=geom)
@@ -128,38 +125,21 @@ def generate_connectedness(patches: DataFrame,
     contrib = pairs.mapInPandas(kernel, schema=pair_schema)
     agg = contrib.groupBy("Source", "Target").agg(F.sum("s").alias("ssum"))
     nsrc = counts.select(F.col(idx).alias("Source"), F.col("n_pts").alias("n_src"))
-    out = (agg.join(F.broadcast(nsrc), "Source")
-           .select("Source", "Target",
-                   (F.col("ssum") / F.col("n_src")
-                    * F.lit(grid_by * grid_by)).alias("Connectedness")))
-    if centroid_distance:
-        cent = patches.select(F.col(idx), F.col("centroid_x"),
-                              F.col("centroid_y"))
-        s = cent.select(F.col(idx).alias("Source"),
-                        F.col("centroid_x").alias("sx"),
-                        F.col("centroid_y").alias("sy"))
-        t = cent.select(F.col(idx).alias("Target"),
-                        F.col("centroid_x").alias("tx"),
-                        F.col("centroid_y").alias("ty"))
-        out = (out.join(F.broadcast(s), "Source").join(F.broadcast(t), "Target")
-               .withColumn("centroid_dist", F.sqrt(
-                   (F.col("sx") - F.col("tx")) ** 2 +
-                   (F.col("sy") - F.col("ty")) ** 2))
-               .drop("sx", "sy", "tx", "ty"))
-    return out
+    return (agg.join(F.broadcast(nsrc), "Source")
+            .select("Source", "Target",
+                    (F.col("ssum") / F.col("n_src")
+                     * F.lit(grid_by * grid_by)).alias("Connectedness")))
 
 
-def connectedness_wide(conn: DataFrame,
-                       targets: list[int] | None = None) -> DataFrame:
+def connectedness_wide(conn: DataFrame) -> DataFrame:
     """Dense-matrix output option (R/generate_connectedness.R:249-260):
-    one row per Source, one zero-filled column per Target.  Pass the
-    target id list when known to skip the extra distinct pass Spark's
-    pivot otherwise runs; zero fill matches the reference's dense matrix
-    (absent pair == kernel contribution 0 beyond max_distance)."""
-    if targets is None:
-        targets = [r["Target"] for r in
-                   conn.select("Target").distinct().orderBy("Target").collect()]
+    one row per Source, one zero-filled column per Target.  The target
+    ids come from one distinct pass and are handed to the pivot sorted;
+    zero fill matches the reference's dense matrix (absent pair == kernel
+    contribution 0 beyond max_distance)."""
+    targets = [r["Target"] for r in
+               conn.select("Target").distinct().orderBy("Target").collect()]
     wide = (conn.groupBy("Source")
-            .pivot("Target", values=sorted(targets))
+            .pivot("Target", values=targets)
             .agg(F.first("Connectedness")))
     return wide.na.fill(0.0)

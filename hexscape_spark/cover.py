@@ -29,13 +29,12 @@ from .tiling import _hex_ring
 
 def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
                        refx: float = P.REFX, refy: float = P.REFY,
-                       poly_id: str = "poly_id", geom: str = "geom_wkb",
-                       exact_area: bool = True,
-                       simplify_keep: float | None = None) -> DataFrame:
+                       poly_id: str = "poly_id", geom: str = "geom_wkb"
+                       ) -> DataFrame:
     """Explode polygons into overlapped hex cells.
 
-    Output: poly_id, q, r, cell_id, full (bool), cover_area (double; exact
-    hex∩polygon area when exact_area, else hexarea for full cells only).
+    Output: poly_id, q, r, cell_id, full (bool), cover_area (double; the
+    exact hex∩polygon area).  A NULL or empty geometry covers no cell.
     Map-only: each polygon is processed independently; a 10^9-polygon layer
     shards across executors with no shuffle.
     """
@@ -119,17 +118,14 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
                     out_q.append(int(qg[j]))
                     out_r.append(int(rg[j]))
                     out_full.append(bool(full))
-                    out_area.append(hexarea if full else
-                                    (a if exact_area else 0.0))
+                    out_area.append(hexarea if full else a)
 
             for _, row in pdf.iterrows():
-                polys_np = geo.wkb_to_polygons(bytes(row[geom]))
-                if simplify_keep is not None:
-                    # executor-side layer prep: ms_simplify(keep=) before
-                    # covering (R/extract_corine.R:273) — per polygon, so
-                    # a huge layer never funnels through the driver
-                    polys_np = geo.simplify_polygons_keep(polys_np,
-                                                          simplify_keep)
+                wkb = row[geom]
+                polys_np = [] if wkb is None else \
+                    geo.wkb_to_polygons(bytes(wkb))
+                if not polys_np:
+                    continue
                 x0, y0, x1, y1 = geo.polygons_bounds(polys_np)
                 all_rings = [r_ for poly in polys_np for r_ in poly]
                 seg_parts = [geo.ring_segments(r_) for r_ in all_rings]

@@ -243,8 +243,7 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, key: str = "vec_id",
 
 def dedup_families(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
                    a: str = "id_a", b: str = "id_b",
-                   quality: str | None = None,
-                   cc_local_cap: int | None = None) -> DataFrame:
+                   quality: str | None = None) -> DataFrame:
     """Duplicate-FAMILY clustering: the pipeline stage after pair
     generation (minhash_lsh_pairs / ngram_jaccard_pairs /
     embedding_near_dup_pairs all emit (a, b); pass a="a", b="b" or rename
@@ -265,9 +264,7 @@ def dedup_families(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
     which would funnel a degenerate all-connected corpus (every boiler-
     plate page in one family) into a single task.  The CORPUS never
     touches the driver; the pair graph does when it fits
-    connected_components' bounded fast path (graph.CC_LOCAL_CAP —
-    set `cc_local_cap=0` to force the fully distributed loop on a
-    memory-constrained driver).
+    connected_components' bounded fast path (graph.CC_LOCAL_CAP).
     """
     from .graph import connected_components
 
@@ -277,9 +274,7 @@ def dedup_families(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
     # canonical equality would crown all of them (r4 ADVICE — the earlier
     # fix only survived with a single NULL-key row).
     nulls = df.where(F.col(key).isNull())
-    cc_kwargs = {} if cc_local_cap is None else \
-        {"local_cap": cc_local_cap}
-    comp = connected_components(pairs, a=a, b=b, **cc_kwargs) \
+    comp = connected_components(pairs, a=a, b=b) \
         .withColumnRenamed("node", key)
     fam = (df.where(F.col(key).isNotNull())
            .join(comp, on=key, how="left")
@@ -405,8 +400,7 @@ def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
 
 def contamination_flags(df: DataFrame, benchmark: DataFrame,
                         key: str = "doc_id", text: str = "text",
-                        bench_text: str = "text", n: int = 13,
-                        broadcast_benchmark: bool = True) -> DataFrame:
+                        bench_text: str = "text", n: int = 13) -> DataFrame:
     """Benchmark DECONTAMINATION (the GPT-3 appendix-C / Llama
     n-gram-overlap rule, public knowledge): flag training documents that
     share any word `n`-gram (default 13) with a held-out benchmark
@@ -415,10 +409,9 @@ def contamination_flags(df: DataFrame, benchmark: DataFrame,
     `is_contaminated`.
 
     Scale shape: the benchmark's distinct n-gram set broadcasts (eval
-    suites are tiny next to a training corpus; set
-    broadcast_benchmark=False for a huge blocklist and the join falls
-    back to a hash shuffle), the corpus side is explode -> equi-join ->
-    one count-distinct per document — never an all-pairs comparison.
+    suites are tiny next to a training corpus), the corpus side is
+    explode -> equi-join -> one count-distinct per document — never an
+    all-pairs comparison.
     Documents shorter than `n` words shingle to their whole text (the
     _shingles short-doc rule), so an exact short-text match still flags.
     The input is read twice (gram explode + final join-back).
@@ -430,10 +423,8 @@ def contamination_flags(df: DataFrame, benchmark: DataFrame,
                          F.lit(None).cast("long"))
              .withColumn("is_contaminated", F.lit(None).cast("boolean")))
     df_nn = df.where(F.col(key).isNotNull())
-    gb = benchmark.select(F.explode(F.array_distinct(
-        _shingles(F.col(bench_text), n))).alias("__g")).distinct()
-    if broadcast_benchmark:
-        gb = F.broadcast(gb)
+    gb = F.broadcast(benchmark.select(F.explode(F.array_distinct(
+        _shingles(F.col(bench_text), n))).alias("__g")).distinct())
     gd = df_nn.select(F.col(key), F.explode(F.array_distinct(
         _shingles(F.col(text), n))).alias("__g"))
     hits = (gd.join(gb, on="__g")

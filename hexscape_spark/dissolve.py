@@ -1,28 +1,27 @@
-"""A2: geometric union aggregate (dissolve) per group — two-level.
+"""A2: geometric union aggregate (dissolve) per group.
 
 summarise(geometry = st_union(geometry)) (R/extract_corine.R:156,
-R/load_corine.R:254,278) with the distributed shape SURVEY §2.4 A2
-prescribes: partition-local pre-union -> final merge, so one CLC class
-with 10^7 features never lands in a single task with the raw inputs —
-level 1 collapses each (key, salt) slice to its exact union boundary
-(typically a tiny fraction of the input vertices), and level 2 unions the
-partial boundaries.
+R/load_corine.R:254,278) in the distributed shape SURVEY §2.4 A2
+prescribes: a partition-local pre-union, then a final merge, so one CLC
+class with 10^7 features never lands in a single task with the raw
+inputs.
 
-The emitted `geom_wkb` is now the TRUE dissolved boundary
-(geo.union_polygons: exact trapezoid-sweep boundary trace — every vertex
+The emitted `geom_wkb` is the true dissolved boundary
+(geo.union_component: exact trapezoid-sweep boundary trace — every vertex
 an input vertex, a segment crossing, or an exact evaluation at an event
-x), closing the r2 gap where consumers clipping/plotting the dissolved
-geometry inherited source-ring overlaps.  `area` is the exact union area
-(overlap counted once) and `n_parts` the number of touch/overlap-connected
-components (the st_union merge criterion, crossing-aware per ADVICE r02).
+x).  `area` is the exact union area (overlap counted once) and `n_parts`
+the number of touch/overlap-connected components (the st_union merge
+criterion, crossing-aware).
 
-If boundary tracing ever fails on degenerate input (UnionTraceError — the
-trace self-validates against the trapezoid-sum area), the group falls back
-to the r2 representation: source rings as geometry with area/n_parts still
-exact via the independent strip-sweep kernels.
+If boundary tracing fails on degenerate input (UnionTraceError — the
+trace self-validates against the trapezoid-sum area), that component
+keeps its source rings as geometry; its area stays exact via the
+independent strip-sweep kernel (geo.union_area).
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -32,11 +31,15 @@ from pyspark.sql import functions as F
 from . import geo
 from .checkpoint import cached, materialise
 
-# total level-1 boundary WKB per key above which the final merge routes
-# through the component-parallel stages (~2 MB ≈ the documented
-# adversarial 6k-cluster's jagged partials; toy fixtures and seam-only
-# coverage partials stay far under and keep the flat single-task merge)
-_TREE_BYTES = 2 << 20
+# level-1 slices per key: a ~sqrt(_NUM_SALTS)² grid of bbox-centre tiles
+_NUM_SALTS = 32
+# hash sub-slices a heavy level-1 slice splits into
+_SUB_SALTS = 4
+
+
+def _polygons(wkb) -> list[list[np.ndarray]]:
+    """Polygons of one geometry value; NULL reads as the empty geometry."""
+    return [] if wkb is None else geo.wkb_to_polygons(bytes(wkb))
 
 
 def _canonical_order(polys: list[list[np.ndarray]]
@@ -56,176 +59,118 @@ def _canonical_order(polys: list[list[np.ndarray]]
     return sorted(polys, key=key)
 
 
-def _union_or_fallback(polys: list[list[np.ndarray]], tol: float | None = None
-                       ) -> tuple[list[list[np.ndarray]], int, float, bool]:
-    """(union pieces, n_components, exact area, traced?) for one group.
-
-    `tol` is forwarded to geo.overlap_components: RAW source polygons are
-    grouped with tol=0.0 (the exact st_union distance==0 criterion —
-    ADVICE r03: the default snap would merge genuinely disjoint features
-    ~mm apart at continental extents), while TRACED partial boundaries use
-    the default 1e-9-of-extent snap (their shared seams sit ~1 ulp apart
-    by construction)."""
-    polys = _canonical_order(polys)
-    comps = geo.overlap_components(polys, tol=tol)
-    pieces: list[list[np.ndarray]] = []
-    area = 0.0
-    traced = True
-    for comp in comps:
-        sub = [polys[i] for i in comp]
-        try:
-            # with_area returns the trapezoid-sweep area — EXACT even
-            # when the traced boundary carries a tolerated near-tangency
-            # sliver (geo.union_component's r5 precision contract); the
-            # reported numbers never inherit the boundary's 1e-7 bound
-            merged, marea = geo.union_component(sub, with_area=True)
-            pieces.extend(merged)
-            area += marea
-        except geo.UnionTraceError:
-            pieces.extend(sub)                      # fallback: source rings
-            area += geo.union_area(sub)             # area stays exact
-            traced = False
-    return pieces, len(comps), area, traced
+def _union_or_rings(sub: list[list[np.ndarray]]
+                    ) -> tuple[list[list[np.ndarray]], float]:
+    """(union pieces, exact area) of one connected component: its traced
+    boundary, or its source rings when the trace fails.  The area is the
+    trapezoid-sweep one either way — exact even when the traced boundary
+    carries a tolerated near-tangency sliver (geo.union_component's
+    precision contract)."""
+    if not sub:
+        return [], 0.0
+    try:
+        return geo.union_component(sub, with_area=True)
+    except geo.UnionTraceError:
+        return sub, geo.union_area(sub)
 
 
 def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
-             num_salts: int = 32,
-             simplify_keep: float | None = None,
-             spatial_salt: bool = True,
-             tree_bytes: int = _TREE_BYTES,
              bounds: tuple[float, float, float, float] | None = None
              ) -> DataFrame:
     """groupBy(key) -> true-union multipolygon + exact union area and
-    connected-part count, computed in two levels:
+    connected-part count.  A NULL geometry reads as empty; a key with no
+    polygons emits (key, empty, 0.0, 0).
 
-      level 1: groupBy(key, salt) pre-union per slice;
-      level 2: groupBy(key) union of the partial boundaries.
+    Level 1 pre-unions each (key, salt) slice.  The salt is a tile of a
+    ~sqrt(_NUM_SALTS)² grid over the bbox centres, so features that touch
+    land in one slice and level 2 merges little more than the tile seams.
+    A heavy tile (a dense cluster) splits by hash into _SUB_SALTS
+    sub-slices so no level-1 task carries it alone.  The extent comes
+    from `bounds` when the caller knows it (catalog metadata, a fixed CRS
+    window), else from one aggregation; a zero-extent input keeps the
+    hash salt.
 
-    `spatial_salt=True` (default) salts by a ~sqrt(num_salts)² bbox-centre
-    grid computed from one cheap bounds aggregation, and HEAVY tiles
-    sub-split by hash (the skew.salted_agg pattern) so no level-1 task
-    carries a dense cluster alone.  Measured tradeoffs on this box:
+    Level 2 is component-parallel, in three grouped-map stages: split
+    each key's partial boundaries into touch/overlap-connected
+    components, trace them spread round-robin over one group per shuffle
+    partition, concatenate per key in component order.  Trace cost
+    decomposes exactly over components, so a task's work is bounded by
+    its share of a key's components (at worst the largest connected
+    piece) rather than by the whole key.  (A log-round salt tree was
+    measured first and was slower: partials that meet only at seams
+    re-trace the same growing boundary every round.)
 
-      * coverage/adjacency inputs (the CLC case — features touching, not
-        overlapping): spatial tiles make level 2 seam-only (10k touching
-        squares: L2 0.0 s vs 2.3 s serial under a hash salt, a gap that
-        grows linearly with coverage);
-      * an adversarial single-key 6k-feature cluster: level 1 spreads via
-        sub-salting, and the former ~10 s serial per-key final merge is
-        now COMPONENT-PARALLEL (VERDICT r03 #4, mechanism revised on
-        measurement — see the planning comment below): each connected
-        component of the union traces in its own task, bounding task time
-        by the largest single component instead of the per-key total,
-        with output bytes identical to the flat path.
+    Component criterion: raw features group at exact distance 0 (tol=0 in
+    level 1); traced partial boundaries group under the default 1e-9-of-
+    extent snap, because their shared seams carry interpolated vertices
+    ~1 ulp apart.  Every union pass orders its inputs canonically
+    (_canonical_order), so the output bytes and float sums do not depend
+    on parallelism or input order.
 
-    A geometry-free fallback to the hash salt handles the degenerate
-    zero-extent case; spatial_salt=False forces the pure hash shape.
-
-    Both levels run geo.union_polygons; n_parts at level 2 counts the
-    global components (partials from different slices merge when they
-    touch/overlap across slice boundaries).  Component criterion (ADVICE
-    r03): RAW features group at exact distance==0 (tol=0 in level 1);
-    TRACED partial boundaries reconcile under a 1e-9-of-extent snap
-    tolerance — their shared seams carry interpolated vertices ~1 ulp
-    apart — so n_parts is "components under an ~1e-9-relative seam snap",
-    not a raw-feature mm-scale merge.  Output is DETERMINISTIC
-    regardless of parallelism: every union pass canonically orders its
-    inputs (_canonical_order) and the component split is a deterministic
-    function of the canonically-ordered partials, so areas and geometry
-    bytes are identical at local[4] and local[16] — and identical between
-    the flat and component-parallel merge paths.
-
-    `simplify_keep` optionally DP-simplifies the final dissolved boundary
-    to that kept-vertex ratio (the reference's ms_simplify-after-st_union
-    flow, R/extract_corine.R:156,273); `area`/`n_parts` stay the EXACT
-    pre-simplification values (the numbers downstream rollups need), and
-    only `geom_wkb` is reduced.
-
-    Fixed-latency budget (VERDICT r04 #1 — the r4 form ran ~6 planning
-    jobs per call, pure scheduler overhead on small inputs): the sub-salt
-    decision is now a LAZY in-DAG broadcast join (scalar-agg threshold via
-    crossJoin — no stats collect), heavy-vs-flat routing happens INSIDE
-    the merge UDF from the bytes it already holds (no per-key agg, no
-    isEmpty), and `bounds` lets callers that know the dataset extent
-    (catalog metadata, a fixed CRS window) skip the extent job.  dissolve()
-    therefore runs exactly ONE eager job (the level-1 checkpoint; two if
-    the extent must be measured) before returning the lazy 3-stage merge
-    plan — whose stages are pass-through for keys under `tree_bytes`.
+    dissolve() runs one eager job (the level-1 checkpoint; two when the
+    extent is measured) and returns the lazy 3-stage merge plan.
     """
     l1_schema = f"{key} STRING, __salt LONG, geom_wkb BINARY"
 
     def pre_union(pdf: pd.DataFrame) -> pd.DataFrame:
-        polys: list[list[np.ndarray]] = []
-        for w in pdf[geom]:
-            polys.extend(geo.wkb_to_polygons(bytes(w)))
+        polys = _canonical_order([p for w in pdf[geom] for p in _polygons(w)])
+        pieces: list[list[np.ndarray]] = []
         # raw source polygons: exact distance==0 merge criterion (tol=0)
-        pieces, _, _, _ = _union_or_fallback(polys, tol=0.0)
+        for comp in geo.overlap_components(polys, tol=0.0):
+            pieces.extend(_union_or_rings([polys[i] for i in comp])[0])
         return pd.DataFrame({
             key: [pdf[key].iloc[0]],
-            "__salt": [int(pdf["__salt"].iloc[0])],
+            "__salt": pdf["__salt"].iloc[:1].to_list(),   # may be NULL
             "geom_wkb": [geo.multipolygon_to_wkb(pieces)],
         })
 
-    base = df.select(key, geom)
-    salt = F.pmod(F.xxhash64(F.col(geom)), F.lit(num_salts))
-    if spatial_salt:
-        @F.pandas_udf("array<double>")
-        def _bbox_centre(wkbs: pd.Series) -> pd.Series:
-            out = []
-            for w in wkbs:
-                b = geo.polygons_bounds(geo.wkb_to_polygons(bytes(w)))
-                out.append([0.5 * (b[0] + b[2]), 0.5 * (b[1] + b[3])])
-            return pd.Series(out)
+    @F.pandas_udf("array<double>")
+    def _bbox_centre(wkbs: pd.Series) -> pd.Series:
+        out = []
+        for w in wkbs:
+            polys = _polygons(w)
+            if not polys:
+                out.append(None)           # no centre: stays out of the
+                continue                   # extent, salts as NULL
+            b = geo.polygons_bounds(polys)
+            out.append([0.5 * (b[0] + b[2]), 0.5 * (b[1] + b[3])])
+        return pd.Series(out)
 
-        base = base.withColumn("__ctr", _bbox_centre(F.col(geom))) \
-            .withColumn("__cx", F.element_at("__ctr", 1)) \
-            .withColumn("__cy", F.element_at("__ctr", 2)).drop("__ctr")
-    # ADVICE r03 #5: the extent job, the sub-salt counts and level 1 would
-    # each re-run df's upstream lineage (and the centre UDF) — cache `base`
-    # until level 1 is materialised
+    base = (df.select(key, geom)
+            .withColumn("__ctr", _bbox_centre(F.col(geom)))
+            .withColumn("__cx", F.element_at("__ctr", 1))
+            .withColumn("__cy", F.element_at("__ctr", 2)).drop("__ctr"))
+    salt = F.pmod(F.xxhash64(F.col(geom)), F.lit(_NUM_SALTS))
+    # the extent job, the heavy-slice counts and level 1 would each re-run
+    # df's upstream lineage (and the centre UDF): cache `base` until level
+    # 1 is materialised
     with cached(base) as base:
-        if spatial_salt:
-            if bounds is not None:
-                # caller knows the extent (catalog metadata / CRS window)
-                # — no measurement job.  The grid only needs to COVER the
-                # centres for load balancing; F.least clamps the top edge
-                # and a below-range centre still salts into a valid
-                # distinct group.
-                x0, y0, x1, y1 = (float(v) for v in bounds)
-                row = {"x0": x0, "x1": x1, "y0": y0, "y1": y1}
-            else:
-                ext = base.agg(F.min("__cx").alias("x0"),
-                               F.max("__cx").alias("x1"),
-                               F.min("__cy").alias("y0"),
-                               F.max("__cy").alias("y1")).collect()
-                row = ext[0] if ext else None
-            # a degenerate zero-extent input keeps the hash salt
-            if row is not None and row["x0"] is not None and \
-                    (row["x1"] > row["x0"] or row["y1"] > row["y0"]):
-                import math
-                nb = max(1, int(math.ceil(math.sqrt(num_salts))))
-                bx = max((row["x1"] - row["x0"]) / nb, 1e-300)
-                by = max((row["y1"] - row["y0"]) / nb, 1e-300)
-                gx = F.least(
-                    F.floor((F.col("__cx") - F.lit(row["x0"])) / bx),
-                    F.lit(nb - 1))
-                gy = F.least(
-                    F.floor((F.col("__cy") - F.lit(row["y0"])) / by),
-                    F.lit(nb - 1))
-                salt = (gx * nb + gy).cast("long")
+        if bounds is not None:
+            # the grid only needs to COVER the centres for load balancing:
+            # F.least clamps the top edge and a below-range centre still
+            # salts into a valid distinct group
+            x0, y0, x1, y1 = (float(v) for v in bounds)
+            row = {"x0": x0, "x1": x1, "y0": y0, "y1": y1}
+        else:
+            row = base.agg(F.min("__cx").alias("x0"),
+                           F.max("__cx").alias("x1"),
+                           F.min("__cy").alias("y0"),
+                           F.max("__cy").alias("y1")).collect()[0]
+        if row["x0"] is not None and \
+                (row["x1"] > row["x0"] or row["y1"] > row["y0"]):
+            nb = max(1, int(math.ceil(math.sqrt(_NUM_SALTS))))
+            bx = max((row["x1"] - row["x0"]) / nb, 1e-300)
+            by = max((row["y1"] - row["y0"]) / nb, 1e-300)
+            gx = F.least(F.floor((F.col("__cx") - F.lit(row["x0"])) / bx),
+                         F.lit(nb - 1))
+            gy = F.least(F.floor((F.col("__cy") - F.lit(row["y0"])) / by),
+                         F.lit(nb - 1))
+            salt = (gx * nb + gy).cast("long")
         salted = base.withColumn("__salt", salt).drop("__cx", "__cy")
-        # adaptive sub-salting (the skew.salted_agg pattern): a HEAVY
-        # slice — e.g. a dense cluster concentrated in one spatial tile —
-        # splits into `sub_salts` hash sub-slices so no level-1 task
-        # carries it alone; the level-2 merge then reconciles a handful
-        # of overlapping partials for that tile instead of the whole
-        # cluster serially.  The decision is LAZY (VERDICT r04 #1): the
-        # count/threshold/heavy-slice derivation is a broadcast subtree
-        # of the level-1 job itself — a scalar-agg threshold crossJoined
-        # onto the per-slice counts — instead of two driver collects.
-        # The heavy set is bounded by construction (every member has >
-        # 1024 rows, so at most n/1024 slices broadcast).
-        sub_salts = 4
+        # heavy slices (the skew.salted_agg pattern), decided lazily: a
+        # scalar-agg threshold crossJoined onto the per-slice counts is a
+        # broadcast subtree of the level-1 job, not a driver collect.
+        # Every heavy slice has > 1024 rows, so at most n/1024 broadcast.
         counts = (salted.groupBy(key, "__salt")
                   .agg(F.count(F.lit(1)).alias("__n")))
         thresh = counts.agg(
@@ -239,68 +184,25 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
                   .withColumn(
                       "__salt",
                       F.when(F.col("__heavy").isNotNull(),
-                             F.col("__salt") * sub_salts +
+                             F.col("__salt") * _SUB_SALTS +
                              F.pmod(F.xxhash64(F.col(geom)),
-                                    F.lit(sub_salts)))
-                      .otherwise(F.col("__salt") * sub_salts))
+                                    F.lit(_SUB_SALTS)))
+                      .otherwise(F.col("__salt") * _SUB_SALTS))
                   .drop("__heavy"))
         # Python stage: the level-1 union runs once, then the cache goes
         partial = materialise(salted.groupBy(key, "__salt").applyInPandas(
             pre_union, schema=l1_schema))
 
-    # COMPONENT-PARALLEL final merge (VERDICT r03 #4, mechanism revised on
-    # measurement): the ~10 s serial bound of the one-task-per-key final
-    # merge is trace cost, which decomposes EXACTLY over the union's
-    # touch/overlap-connected components — independent regions that never
-    # share boundary.  A log-round salt tree (the prescribed mechanism)
-    # was built and measured first: it made the 6k jagged-cluster case
-    # SLOWER (33 s vs 25 s end-to-end), because partials there overlap
-    # only at seams, so every round re-traces the same growing boundary.
-    # Instead: split each key's partials into components (cheap bbox-grid
-    # + pairwise-distance pass), trace EACH COMPONENT IN ITS OWN TASK,
-    # then concatenate per key.  The per-task bound drops from
-    # sum-over-components to the largest single component, and the output
-    # bytes are IDENTICAL to the flat path (same canonical order, same
-    # per-component unions, same concat order).
-    #
-    # Routing is decided INSIDE stage 1 (VERDICT r04 #1): the grouped-map
-    # already holds each key's partial boundaries, so "is this key over
-    # tree_bytes?" is a len() over bytes it was handed — no per-key agg
-    # job, no isEmpty, no plan branch.  A key under `tree_bytes` does the
-    # FULL final union in stage 1 and rides stages 2-3 as a pass-through
-    # row (__comp = -1); a heavy key emits one row per component.  The
-    # pass-through shuffle volume is bounded: a small key's finished
-    # boundary is <= tree_bytes by definition, heavy keys shuffle their
-    # components in either design.
     stage_schema = (f"{key} STRING, __comp LONG, geom_wkb BINARY, "
                     "area DOUBLE, n_parts INT")
     out_schema = f"{key} STRING, geom_wkb BINARY, area DOUBLE, n_parts INT"
 
-    def merge_or_split(pdf: pd.DataFrame) -> pd.DataFrame:
-        wkbs = [bytes(w) for w in pdf["geom_wkb"]]
-        polys: list[list[np.ndarray]] = []
-        for w in wkbs:
-            polys.extend(geo.wkb_to_polygons(w))
-        if sum(len(w) for w in wkbs) <= tree_bytes or len(wkbs) <= 1:
-            # flat path: finish the key here, tag as done (__comp = -1)
-            pieces, n_comps, area, _ = _union_or_fallback(polys)
-            if simplify_keep is not None:
-                pieces = geo.simplify_polygons_keep(pieces, simplify_keep)
-            return pd.DataFrame({
-                key: [pdf[key].iloc[0]], "__comp": [-1],
-                "geom_wkb": [geo.multipolygon_to_wkb(pieces)],
-                "area": [area], "n_parts": [n_comps],
-            })
-        polys = _canonical_order(polys)
-        comps = geo.overlap_components(polys)      # traced partials: snap
-        if not comps:
-            # all-empty geometry: emit the finished (key, empty, 0.0, 0)
-            # row the flat path would produce (r4 review)
-            return pd.DataFrame({
-                key: [pdf[key].iloc[0]], "__comp": [-1],
-                "geom_wkb": [geo.multipolygon_to_wkb([])],
-                "area": [0.0], "n_parts": [0],
-            })
+    def split(pdf: pd.DataFrame) -> pd.DataFrame:
+        polys = _canonical_order([p for w in pdf["geom_wkb"]
+                                  for p in geo.wkb_to_polygons(bytes(w))])
+        # traced partials: default snap; a key with no polygons keeps one
+        # empty component so it still emits its row
+        comps = geo.overlap_components(polys) or [[]]
         return pd.DataFrame({
             key: [pdf[key].iloc[0]] * len(comps),
             "__comp": list(range(len(comps))),
@@ -310,52 +212,36 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
             "n_parts": [None] * len(comps),
         })
 
-    def union_one_component(pdf: pd.DataFrame) -> pd.DataFrame:
-        if int(pdf["__comp"].iloc[0]) < 0:
-            return pdf                             # finished key: pass
-        # exactly the per-component body of _union_or_fallback
-        sub = geo.wkb_to_polygons(bytes(pdf["geom_wkb"].iloc[0]))
-        if not sub:
-            merged, area = [], 0.0
-        else:
-            try:
-                merged, area = geo.union_component(sub, with_area=True)
-            except geo.UnionTraceError:
-                merged = sub
-                area = geo.union_area(sub)
+    def union_each(pdf: pd.DataFrame) -> pd.DataFrame:
+        subs = [geo.wkb_to_polygons(bytes(w)) for w in pdf["geom_wkb"]]
+        done = [_union_or_rings(sub) for sub in subs]
         return pd.DataFrame({
-            key: [pdf[key].iloc[0]],
-            "__comp": [int(pdf["__comp"].iloc[0])],
-            "geom_wkb": [geo.multipolygon_to_wkb(merged)],
-            "area": [area],
-            "n_parts": [None],
+            key: pdf[key].to_list(),
+            "__comp": pdf["__comp"].to_list(),
+            "geom_wkb": [geo.multipolygon_to_wkb(pieces) for pieces, _ in done],
+            "area": [area for _, area in done],
+            "n_parts": [1 if sub else 0 for sub in subs],
         })
 
-    def concat_components(pdf: pd.DataFrame) -> pd.DataFrame:
-        if int(pdf["__comp"].iloc[0]) < 0:         # finished key (1 row)
-            return pdf.drop(columns="__comp")
-        pdf = pdf.sort_values("__comp")            # flat-path piece order
+    def concat(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("__comp")
         pieces: list[list[np.ndarray]] = []
         area = 0.0
-        n_parts = 0
         for w, a in zip(pdf["geom_wkb"], pdf["area"]):
-            ps = geo.wkb_to_polygons(bytes(w))
-            if ps:                                 # flat n_parts counts
-                n_parts += 1                       # non-empty components
-            pieces.extend(ps)
-            area += float(a)                       # flat-path sum order
-        if simplify_keep is not None:
-            pieces = geo.simplify_polygons_keep(pieces, simplify_keep)
+            pieces.extend(geo.wkb_to_polygons(bytes(w)))
+            area += float(a)                       # component-order sum
         return pd.DataFrame({
             key: [pdf[key].iloc[0]],
             "geom_wkb": [geo.multipolygon_to_wkb(pieces)],
             "area": [area],
-            "n_parts": [n_parts],
+            "n_parts": [int(pdf["n_parts"].sum())],
         })
 
-    staged = partial.groupBy(key).applyInPandas(merge_or_split,
-                                               schema=stage_schema)
-    unioned = staged.groupBy(key, "__comp").applyInPandas(
-        union_one_component, schema=stage_schema)
-    return unioned.groupBy(key).applyInPandas(concat_components,
-                                              schema=out_schema)
+    staged = partial.groupBy(key).applyInPandas(split, schema=stage_schema)
+    # one group per shuffle partition, not per component: each group is
+    # one grouped-map call, and on a coverage of ~1,400 small components
+    # a call per component doubled the merge's time
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    unioned = staged.groupBy(key, F.col("__comp") % width) \
+        .applyInPandas(union_each, schema=stage_schema)
+    return unioned.groupBy(key).applyInPandas(concat, schema=out_schema)

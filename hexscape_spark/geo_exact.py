@@ -95,15 +95,14 @@ def _candidate_pairs(segs_a, segs_b=None, chunk: int = 512):
     return out
 
 
-def _crossing_xs(segs, pairs, segs_b=None):
+def _crossing_xs(segs, pairs):
     """Exact crossing abscissae of candidate pairs.  Parallel pairs
     contribute nothing (collinear overlap is resolved by the endpoint
     breakpoints alone — coverage is piecewise linear between them)."""
     xs = set()
-    other = segs if segs_b is None else segs_b
     for i, j in pairs:
         ax, ay, bx, by, _ = segs[i]
-        cx, cy, dx_, dy_, _ = other[j]
+        cx, cy, dx_, dy_, _ = segs[j]
         r_x, r_y = bx - ax, by - ay
         s_x, s_y = dx_ - cx, dy_ - cy
         den = r_x * s_y - r_y * s_x

@@ -33,13 +33,10 @@ def with_geocode(df: DataFrame, key: str) -> DataFrame:
 
 def with_hex_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
                   hex_width: float = P.HEX_WIDTH,
-                  refx: float = P.REFX, refy: float = P.REFY,
-                  drop_tmp: bool = True) -> DataFrame:
+                  refx: float = P.REFX, refy: float = P.REFY) -> DataFrame:
     """Assign each point to its containing hexagon: adds q, r, cell_id."""
     out = _apply_layers(df, sqlgen.hex_layers(lon, lat, hex_width, refx, refy))
-    if drop_tmp:
-        out = out.drop("rf", "qf", "sf", "qg", "rg", "sg", "dq", "dr", "ds")
-    return out
+    return out.drop("rf", "qf", "sf", "qg", "rg", "sg", "dq", "dr", "ds")
 
 
 # The six axial neighbour offsets, in the reference's enumeration order

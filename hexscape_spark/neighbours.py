@@ -50,8 +50,7 @@ def _edge_offsets(w: float) -> dict[str, tuple[tuple[float, float], tuple[float,
 
 def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
                         hex_width: float = P.HEX_WIDTH,
-                        min_prop: float = 0.01,
-                        calculate_border: bool = True) -> DataFrame:
+                        min_prop: float = 0.01) -> DataFrame:
     """patches: needs Index, q, r, area, hex_cx, hex_cy."""
     spark = patches.sparkSession
     hexarea = P.hex_area(hex_width)
@@ -77,11 +76,6 @@ def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
              .where(F.col("Index") != F.col("Neighbour"))
              .withColumn("Direction", flip_expr[F.col("_rev_dir")])
              .drop("_rev_dir"))
-
-    if not calculate_border:
-        return edges.select("Index", "Neighbour",
-                            F.lit(None).cast("double").alias("Border"),
-                            "Direction", "nb_area")
 
     # r7 (guide §2.4): the fast/slow split used to evaluate the `edges`
     # join subtree TWICE (one branch per filter) and union the results;

@@ -200,7 +200,7 @@ def extract_landcover(spark: SparkSession, landcover: DataFrame,
             gap_area = geo.polygons_area(gap)
             n_parts = len(geo.overlap_components(gap))
         except geo.UnionTraceError:
-            # degrade like dissolve's _union_or_fallback (ADVICE r03 #1):
+            # degrade like dissolve's _union_or_rings (ADVICE r03 #1):
             # the AREA stays exact via boolean arithmetic — gap =
             # mask − mask∩covered — only the traced gap GEOMETRY is
             # omitted (empty multipolygon, n_parts NULL) instead of

@@ -54,17 +54,13 @@ def _f(x: float) -> str:
 # ---------------------------------------------------------------------------
 
 def build_query(base: str, layers: list[list[tuple[str, str]]],
-                select: str = "*", where: str | None = None,
-                final: str | None = None) -> str:
+                select: str = "*", where: str | None = None) -> str:
     q = base if " " not in base.strip() else f"({base})"
     for layer in layers:
         cols = ", ".join(f"{expr} AS {alias}" for alias, expr in layer)
         q = f"(SELECT *, {cols} FROM {q} AS _t)"
     w = f" WHERE {where}" if where else ""
-    sql = f"SELECT {select} FROM {q} AS _q{w}"
-    if final:
-        sql = f"SELECT {final} FROM ({sql}) AS _fin"
-    return sql
+    return f"SELECT {select} FROM {q} AS _q{w}"
 
 
 # ---------------------------------------------------------------------------

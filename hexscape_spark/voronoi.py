@@ -201,9 +201,12 @@ def discretise_voronoi(spark: SparkSession, map_wkb: bytes,
 # Seeded in-polygon sampling
 # ---------------------------------------------------------------------------
 
+# rejection rounds per polygon before sample_points gives up on it
+_SAMPLE_TRIES = 10000
+
+
 def sample_points(patches: DataFrame, size: int = 1, seed: int = 42,
-                  idx: str = "Index", geom: str = "geom_wkb",
-                  max_tries: int = 10000) -> DataFrame:
+                  idx: str = "Index", geom: str = "geom_wkb") -> DataFrame:
     """Exactly `size` uniform points per polygon (R/sample_points.R:12-74).
 
     Rejection sampling in each polygon's bbox with a deterministic RNG per
@@ -220,7 +223,7 @@ def sample_points(patches: DataFrame, size: int = 1, seed: int = 42,
                 rng = np.random.RandomState((seed * 1000003 + int(row[idx])) % (2**31))
                 got = 0
                 tries = 0
-                while got < size and tries < max_tries:
+                while got < size and tries < _SAMPLE_TRIES:
                     m = max(64, 4 * (size - got))
                     xs = rng.uniform(bx0, bx1, m)
                     ys = rng.uniform(by0, by1, m)

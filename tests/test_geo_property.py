@@ -197,9 +197,9 @@ def test_union_polygons_with_holes_in_input():
 
 
 def test_dissolve_fallback_stays_exact(monkeypatch):
-    """If boundary tracing ever fails (UnionTraceError), the group falls
-    back to source rings while area and n_parts stay exact via the
-    independent strip-sweep kernels."""
+    """If boundary tracing ever fails (UnionTraceError), a component
+    falls back to its source rings while its area stays exact via the
+    independent strip-sweep kernel."""
     from hexscape_spark import dissolve as dmod
 
     def boom(polys, _depth=0, with_area=False):
@@ -208,11 +208,11 @@ def test_dissolve_fallback_stays_exact(monkeypatch):
     monkeypatch.setattr(dmod.geo, "union_component", boom)
     polys = [[geo.rect_ring(0, 0, 2, 2)], [geo.rect_ring(1, 1, 3, 3)],
              [geo.rect_ring(5, 5, 6, 6)]]
-    pieces, n_comps, area, traced = dmod._union_or_fallback(polys)
-    assert not traced
-    assert n_comps == 2
-    assert area == pytest.approx(7.0 + 1.0)
-    assert len(pieces) == 3          # source rings pass through
+    comps = geo.overlap_components(polys, tol=0.0)
+    assert len(comps) == 2
+    out = [dmod._union_or_rings([polys[i] for i in c]) for c in comps]
+    assert sum(area for _, area in out) == pytest.approx(7.0 + 1.0)
+    assert sum(len(pieces) for pieces, _ in out) == 3   # source rings
 
 
 def test_buffer_polygons_geometry():

@@ -18,6 +18,13 @@ A reached name makes every engine definition of that name live: names
 are matched without resolving modules, so the guard can miss dead code
 that shares a name with live code.  Code reached only through a string
 (``getattr``) is flagged: call it by name.
+
+Options: a defaulted parameter of a module-level engine function that an
+``if``/``while``/conditional-expression test in its body names steers a
+branch, and some caller outside ``tests/`` must set it (by keyword, by
+position or through ``**kwargs``).  Test callers count only for
+``LIBRARY`` functions and ``OPTIONS`` entries.  Callers are matched by
+the called name, like the reachability scan.
 """
 
 import ast
@@ -57,6 +64,18 @@ LIBRARY = (
     "with_lm_score", "with_pack_index",
     "randomise_voronoi", "sample_points",                     # voronoi
     "stream_warc",                                            # warc
+)
+# Branch-steering parameters that only tests set, each mirroring a
+# reference argument or forcing a size gate so both sides are tested.
+OPTIONS = (
+    "bfs_hops.local_edge_cap",           # gate: BFS_LOCAL_EDGE_CAP
+    "connected_components.local_cap",    # gate: CC_LOCAL_CAP
+    "discretise_habitat.min_size_km2",   # R/discretise_habitat.R:46
+    "extract_landcover.clc_filter",      # R/extract_corine.R:112-135
+    "extract_landcover.clc_labels",      # R/load_corine.R:291-294
+    "generate_patches.add_removed",      # R/generate_patches.R:169-177
+    "generate_patches.name_index",       # R/generate_patches.R:381-385
+    "generate_patches.simplify_keep",    # R/generate_patches.R:153,193,241
 )
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
@@ -227,3 +246,124 @@ def test_materialise_calls_name_a_reason():
                 silent.append(f"{path.relative_to(ROOT)}:{i + 1}")
     assert not silent, "materialise calls with no reason:\n" + \
         "\n".join(silent)
+
+
+_BRANCHES = (ast.If, ast.IfExp, ast.While)
+
+
+def _steering(fn) -> list[tuple[str, int | None]]:
+    """(name, position) of each defaulted parameter of `fn` named in an
+    if/while/conditional-expression test inside its body; position is
+    None for keyword-only parameters."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaulted = [(p.arg, i) for i, p in enumerate(pos)
+                 if i >= len(pos) - len(a.defaults)]
+    defaulted += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None]
+    tested = set().union(*(_identifiers(n.test) for n in ast.walk(fn)
+                           if isinstance(n, _BRANCHES)))
+    return [(name, i) for name, i in defaulted if name in tested]
+
+
+def _passes(call: ast.Call, name: str, position: int | None) -> bool:
+    """Whether `call` may set the parameter: by keyword, through
+    ``**kwargs``, or by position (a ``*args`` counts as any position)."""
+    if any(k.arg in (name, None) for k in call.keywords):
+        return True
+    return position is not None and (
+        len(call.args) > position
+        or any(isinstance(a, ast.Starred) for a in call.args))
+
+
+def unset_options(sources: dict[str, str], library=(), options=()
+                  ) -> list[str]:
+    """Defaulted parameters of module-level engine functions that steer a
+    branch but that no caller outside ``tests/`` sets, as ``path:line
+    function.parameter``.  A test caller is enough for a function in
+    `library` or a ``function.parameter`` in `options`; an `options`
+    entry that no test sets, that a non-test caller sets, or that steers
+    no branch is flagged too.  Calls match by the called name alone."""
+    steering, setters = [], {}
+    for rel, text in sources.items():
+        tree = ast.parse(text, filename=rel)
+        if _role(rel) == "engine":
+            steering += [(rel, node, name, i) for node in tree.body
+                         if isinstance(node, ast.FunctionDef)
+                         for name, i in _steering(node)]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and \
+                    isinstance(node.func, (ast.Name, ast.Attribute)):
+                callee = getattr(node.func, "id", None) or node.func.attr
+                setters.setdefault(callee, []).append((_role(rel), node))
+    flagged, found = [], set()
+    for rel, fn, name, i in steering:
+        option = f"{fn.name}.{name}"
+        found.add(option)
+        roles = {role for role, call in setters.get(fn.name, ())
+                 if _passes(call, name, i)}
+        if option in options:
+            for why, ok in (("no test sets it", "test" in roles),
+                            ("set outside tests/", roles <= {"test"})):
+                if not ok:
+                    flagged.append(f"{option}: {why}")
+        elif not roles - {"test"} and not (
+                fn.name in library and "test" in roles):
+            flagged.append(f"{rel}:{fn.lineno} {option}")
+    flagged += [f"{option}: steers no branch"
+                for option in options if option not in found]
+    return flagged
+
+
+def test_engine_options_have_callers():
+    """Every defaulted parameter that steers a branch of a module-level
+    engine function is set by a caller outside tests/, or is a test-set
+    LIBRARY or OPTIONS entry whose comment names its reference argument
+    (R file:line) or the size gate it forces."""
+    flagged = unset_options(_repo_sources(), LIBRARY, OPTIONS)
+    assert not flagged, "options no caller sets:\n" + "\n".join(flagged)
+    text = Path(__file__).read_text()
+    bare = [o for o in OPTIONS
+            if not re.search(rf'"{re.escape(o)}",\s*# (R/\S+:\d|gate: )',
+                             text)]
+    assert not bare, "OPTIONS entries without a reference or gate:\n" + \
+        "\n".join(bare)
+
+
+_KNOBS = (
+    "def knob(df, fast=True, limit=10, *, mode=None):\n"
+    "    if fast and mode:\n        return df\n"
+    "    return df if limit else None\n"
+    "def plain(df, n=3):\n    return df * n\n")
+
+
+def test_options_guard_flags_never_set_knob():
+    sources = {"hexscape_spark/m.py": _KNOBS,
+               "tests/test_m.py": "knob(1, fast=False)\n"}
+    assert unset_options(sources) == ["hexscape_spark/m.py:1 knob.fast",
+                                      "hexscape_spark/m.py:1 knob.limit",
+                                      "hexscape_spark/m.py:1 knob.mode"]
+
+
+def test_options_guard_passes_knob_set_by_engine_caller():
+    sources = {"hexscape_spark/m.py": _KNOBS,
+               "__spark_entry__.py": ("from hexscape_spark import m\n"
+                                      "def entry(spark):\n"
+                                      "    m.knob(spark, False, mode='x')\n"
+                                      "    m.knob(spark, **{'limit': 2})\n")}
+    assert unset_options(sources) == []
+
+
+def test_options_guard_flags_options_entry_without_test_caller():
+    sources = {"hexscape_spark/m.py": _KNOBS,
+               "perfbench/w.py": "m.knob(0, fast=False, limit=1)\n",
+               "tests/test_m.py": "m.knob(1, mode='x')\n"}
+    assert unset_options(sources, options=("knob.mode",)) == []
+    assert unset_options(sources, options=("knob.fast", "knob.mode",
+                                           "plain.n")) == [
+        "knob.fast: no test sets it", "knob.fast: set outside tests/",
+        "plain.n: steers no branch"]
+    assert unset_options({"hexscape_spark/m.py": _KNOBS,
+                          "tests/test_m.py": "m.knob(1, limit=0)\n"},
+                         options=("knob.fast", "knob.limit", "knob.mode")) \
+        == ["knob.fast: no test sets it", "knob.mode: no test sets it"]

@@ -154,7 +154,7 @@ def test_dissolve_two_level_hot_key(spark):
             for i in range(40) for j in range(40)]
     rows.append(("G", bytearray(geo.rect_wkb(10.0, 10.0, 15.0, 15.0))))
     df = spark.createDataFrame(rows, "clc STRING, geom_wkb BINARY")
-    d = dissolve(df, num_salts=16).toPandas().set_index("clc")
+    d = dissolve(df).toPandas().set_index("clc")
     assert d.loc["G"].area == pytest.approx(1600.0)
     assert int(d.loc["G"].n_parts) == 1
     tp = geo.wkb_to_polygons(bytes(d.loc["G"].geom_wkb))
@@ -182,93 +182,79 @@ def test_dissolve_adjacent_hex_patches(spark):
                                                      rel=1e-9)
 
 
-def test_dissolve_component_parallel_merge_exact_and_deterministic(spark):
-    """VERDICT r03 #4: a key routed through the COMPONENT-PARALLEL final
-    merge (each union component traced in its own task) stays EXACT, its
-    output bytes are independent of input row order / partitioning (the
-    shuffle-arrival-order hazard the canonical ordering guards), and the
-    bytes are IDENTICAL to the flat single-task merge path."""
+def _reference_dissolve(wkbs: list) -> tuple[bytes, float, int]:
+    """One key's dissolve computed in the driver: the canonically ordered
+    input polygons split into exact-touch components, each unioned by the
+    engine's per-component helper, concatenated in component order."""
+    from hexscape_spark import dissolve as dmod
+    polys = dmod._canonical_order([p for w in wkbs for p in dmod._polygons(w)])
+    comps = geo.overlap_components(polys, tol=0.0)
+    pieces, area = [], 0.0
+    for comp in comps:
+        merged, a = dmod._union_or_rings([polys[i] for i in comp])
+        pieces.extend(merged)
+        area += a
+    return geo.multipolygon_to_wkb(pieces), area, len(comps)
+
+
+def test_dissolve_matches_driver_reference(spark):
+    """dissolve's two-level, component-parallel merge equals the per-key
+    union computed in the driver — geom_wkb bytes, area and n_parts — for
+    an empty key, a single-feature key, a sliding strip and a key mixing
+    200 disjoint squares with a 1,100-square cluster (one spatial tile
+    over the heavy-slice threshold, so it splits into hash sub-slices).
+    The bytes do not depend on input order or partitioning."""
     from pyspark.sql import functions as F
 
     from hexscape_spark.dissolve import dissolve
 
-    rows = []
-    # dispersed field: 200 disjoint unit squares, 3 apart (fills tiles)
-    for i in range(200):
-        x0 = float(3 * (i % 20))
-        y0 = float(3 * (i // 20) + 40.0)
-        rows.append(("T", bytearray(geo.rect_wkb(x0, y0, x0 + 1, y0 + 1))))
-    # dense cluster: 1100 unit squares sliding 0.001 apart -> one spatial
-    # tile holds >1024 features -> sub-split + tree rounds
-    for i in range(1100):
-        x0 = 10.0 + 0.001 * i
-        rows.append(("T", bytearray(geo.rect_wkb(x0, 10.0, x0 + 1, 11.0))))
-    exp_area = 200.0 + (1.0 + 1099 * 0.001)     # disjoint + sliding union
-    df = spark.createDataFrame(rows, "clc STRING, geom_wkb BINARY")
-    # tree_bytes=1 forces the log-round path regardless of partial size
-    d = dissolve(df, tree_bytes=1).toPandas().set_index("clc").loc["T"]
-    assert d.area == pytest.approx(exp_area, rel=1e-12)
-    assert int(d.n_parts) == 201
-    polys = geo.wkb_to_polygons(bytes(d.geom_wkb))
-    assert geo.polygons_area(polys) == pytest.approx(exp_area, rel=1e-12)
+    rect = lambda *b: geo.rect_wkb(*map(float, b))       # noqa: E731
+    inputs = {"E": [geo.multipolygon_to_wkb([])],
+              "S": [rect(100, 100, 101, 101)],
+              "H": [rect(0.01 * i, 0, 0.01 * i + 1, 1) for i in range(120)]}
+    # dispersed field: 200 disjoint unit squares, 3 apart (fills tiles);
+    # dense cluster: 1100 unit squares sliding 0.001 apart
+    inputs["T"] = [rect(3 * (i % 20), 3 * (i // 20) + 40,
+                        3 * (i % 20) + 1, 3 * (i // 20) + 41)
+                   for i in range(200)] + \
+        [rect(10 + 0.001 * i, 10, 11 + 0.001 * i, 11) for i in range(1100)]
+    df = spark.createDataFrame(
+        [(k, bytearray(w)) for k, ws in inputs.items() for w in ws],
+        "clc STRING, geom_wkb BINARY")
+    got = dissolve(df).toPandas().set_index("clc").sort_index()
+    assert list(got.index) == ["E", "H", "S", "T"]
+    for k, ws in inputs.items():
+        wkb, area, n_parts = _reference_dissolve(ws)
+        assert bytes(got.loc[k, "geom_wkb"]) == wkb, k
+        assert got.loc[k, "area"] == area, k
+        assert got.loc[k, "n_parts"] == n_parts, k
+    assert got.loc["E", "area"] == 0.0 and got.loc["E", "n_parts"] == 0
+    assert got.loc["T", "area"] == pytest.approx(200.0 + 1.0 + 1099 * 0.001,
+                                                 rel=1e-12)
+    assert got.loc["T", "n_parts"] == 201
     # byte determinism under a different input order and partitioning
     df2 = df.orderBy(F.xxhash64("geom_wkb")).repartition(3)
-    d2 = dissolve(df2, tree_bytes=1).toPandas().set_index("clc").loc["T"]
-    assert bytes(d2.geom_wkb) == bytes(d.geom_wkb)
-    assert d2.area == d.area and d2.n_parts == d.n_parts
-    # the flat path produces byte-identical output (same canonical order,
-    # same per-component unions, same concat order)
-    flat = dissolve(df).toPandas().set_index("clc").loc["T"]
-    assert bytes(flat.geom_wkb) == bytes(d.geom_wkb)
-    assert flat.area == d.area and int(flat.n_parts) == int(d.n_parts)
+    got2 = dissolve(df2).toPandas().set_index("clc").sort_index()
+    for k in inputs:
+        assert bytes(got2.loc[k, "geom_wkb"]) == bytes(got.loc[k, "geom_wkb"])
+        assert got2.loc[k, "area"] == got.loc[k, "area"]
+        assert got2.loc[k, "n_parts"] == got.loc[k, "n_parts"]
 
 
-def test_dissolve_simplify_keep_reduces_boundary_only(spark):
-    """simplify_keep thins the dissolved boundary's vertex count while
-    area/n_parts keep their exact pre-simplification values (the
-    reference's ms_simplify-after-st_union flow)."""
-    import numpy as np
+def test_dissolve_null_geometry_reads_as_empty(spark):
+    """A NULL geometry is the empty geometry: a key whose rows are all
+    NULL emits (key, empty, 0.0, 0), and NULL rows of another key leave
+    its union unchanged."""
     from hexscape_spark.dissolve import dissolve
-    rng = np.random.RandomState(4)
-    rows = []
-    for i in range(60):
-        x0, y0 = rng.uniform(0, 30, 2)
-        w, h = rng.uniform(2, 8, 2)
-        rows.append(("S", bytearray(geo.rect_wkb(x0, y0, x0 + w, y0 + h))))
-    df = spark.createDataFrame(rows, "clc STRING, geom_wkb BINARY")
-    full = dissolve(df).toPandas().set_index("clc").loc["S"]
-    simp = dissolve(df, simplify_keep=0.5).toPandas().set_index("clc").loc["S"]
-    assert simp.area == full.area and simp.n_parts == full.n_parts
-    nv = lambda w: sum(len(r) for p in geo.wkb_to_polygons(bytes(w))
-                       for r in p)
-    assert nv(simp.geom_wkb) < nv(full.geom_wkb)
-
-
-def test_dissolve_per_key_routing_keeps_small_and_empty_keys(spark):
-    """r4 review: the component-parallel merge routes PER KEY — one heavy
-    key must not drag small keys through the 3-stage path, and keys whose
-    geometry is entirely empty still emit their (key, empty, 0.0, 0) row;
-    output is byte-identical to the all-flat run for every key."""
-    from hexscape_spark.dissolve import dissolve
-
-    rows = [("S", bytearray(geo.rect_wkb(100.0, 100.0, 101.0, 101.0))),
-            ("E", bytearray(geo.multipolygon_to_wkb([])))]
-    for i in range(120):
-        x0 = 0.01 * i
-        rows.append(("H", bytearray(geo.rect_wkb(x0, 0.0, x0 + 1.0, 1.0))))
-    df = spark.createDataFrame(rows, "clc STRING, geom_wkb BINARY")
-    d = dissolve(df, tree_bytes=1, spatial_salt=False).toPandas() \
-        .set_index("clc").sort_index()
-    assert list(d.index) == ["E", "H", "S"]
-    assert d.loc["E", "area"] == 0.0 and d.loc["E", "n_parts"] == 0
-    assert d.loc["S", "area"] == pytest.approx(1.0, rel=1e-12)
-    assert d.loc["H", "area"] == pytest.approx(1.0 + 119 * 0.01, rel=1e-12)
-    flat = dissolve(df, tree_bytes=1 << 40, spatial_salt=False).toPandas() \
-        .set_index("clc").sort_index()
-    for k in ("E", "H", "S"):
-        assert bytes(flat.loc[k, "geom_wkb"]) == bytes(d.loc[k, "geom_wkb"]), k
-        assert flat.loc[k, "area"] == d.loc[k, "area"], k
-        assert flat.loc[k, "n_parts"] == d.loc[k, "n_parts"], k
+    square = lambda x: bytearray(geo.rect_wkb(x, x, x + 1.0, x + 1.0))  # noqa: E731
+    df = spark.createDataFrame(
+        [("A", None), ("A", None), ("B", square(0.0)), ("B", None),
+         ("B", square(2.0))], "clc STRING, geom_wkb BINARY")
+    d = dissolve(df).toPandas().set_index("clc")
+    assert geo.wkb_to_polygons(bytes(d.loc["A", "geom_wkb"])) == []
+    assert d.loc["A", "area"] == 0.0 and d.loc["A", "n_parts"] == 0
+    assert d.loc["B", "area"] == pytest.approx(2.0)
+    assert d.loc["B", "n_parts"] == 2
 
 
 def test_regroup_colours_average(spark):

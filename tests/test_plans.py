@@ -153,9 +153,9 @@ def test_dissolve_plan_is_two_level(spark):
     """The dissolve plan stays two-level: the per-(key, salt) pre-union
     runs EAGERLY behind a localCheckpoint (so downstream actions never
     re-execute the raw-feature lineage — ADVICE r03 #5), and the returned
-    plan is the 3-stage merge (split-or-finish, per-component union,
-    concat) over that checkpoint — in-UDF routed, so there is no plan
-    branch, no per-key routing agg, and no isEmpty job (VERDICT r04 #1).
+    plan is the 3-stage merge (split, per-component union, concat) over
+    that checkpoint, with no plan branch, no per-key agg and no isEmpty
+    job (VERDICT r04 #1).
     A hot key's raw features therefore never land in a single task: the
     merge grouped-maps read pre-unioned (key, salt) partials only."""
     from hexscape_spark import geo

@@ -50,6 +50,24 @@ def test_full_cells_dominate_cover(spark):
     assert np.allclose(full.cover_area, P.hex_area(2.0))
 
 
+def test_cover_null_and_empty_geometry_yield_no_cells(spark):
+    """A NULL or empty polygon covers no cell and leaves the other rows'
+    cover unchanged."""
+    from hexscape_spark.cover import polygon_cell_cover
+    schema = "poly_id LONG, geom_wkb BINARY"
+    square = (1, bytearray(geo.rect_wkb(0, 0, 5, 5)))
+    polys = spark.createDataFrame(
+        [square, (2, None), (3, bytearray(geo.multipolygon_to_wkb([])))],
+        schema)
+    cov = polygon_cell_cover(polys, hex_width=2.0).toPandas()
+    alone = polygon_cell_cover(spark.createDataFrame([square], schema),
+                               hex_width=2.0).toPandas()
+    assert set(cov.poly_id) == {1}
+    key = ["q", "r"]
+    assert cov.sort_values(key).reset_index(drop=True).equals(
+        alone.sort_values(key).reset_index(drop=True))
+
+
 def test_salted_agg_equals_plain_groupby(spark):
     from hexscape_spark.skew import salted_agg
     df = spark.range(20000).select(
