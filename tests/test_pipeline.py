@@ -197,41 +197,28 @@ def _reference_dissolve(wkbs: list) -> tuple[bytes, float, int]:
     return geo.multipolygon_to_wkb(pieces), area, len(comps)
 
 
-def test_dissolve_matches_driver_reference(spark):
-    """dissolve's two-level, component-parallel merge equals the per-key
-    union computed in the driver — geom_wkb bytes, area and n_parts — for
-    an empty key, a single-feature key, a sliding strip and a key mixing
-    200 disjoint squares with a 1,100-square cluster (one spatial tile
-    over the heavy-slice threshold, so it splits into hash sub-slices).
-    The bytes do not depend on input order or partitioning."""
+def _rect(*b):
+    return geo.rect_wkb(*map(float, b))
+
+
+def _assert_dissolve_matches_reference(spark, inputs: dict):
+    """Run dissolve over ``inputs`` (key -> list of WKB) and check every
+    key's geom_wkb bytes, area and n_parts against the driver reference;
+    the same holds after reordering and repartitioning the input."""
     from pyspark.sql import functions as F
 
     from hexscape_spark.dissolve import dissolve
 
-    rect = lambda *b: geo.rect_wkb(*map(float, b))       # noqa: E731
-    inputs = {"E": [geo.multipolygon_to_wkb([])],
-              "S": [rect(100, 100, 101, 101)],
-              "H": [rect(0.01 * i, 0, 0.01 * i + 1, 1) for i in range(120)]}
-    # dispersed field: 200 disjoint unit squares, 3 apart (fills tiles);
-    # dense cluster: 1100 unit squares sliding 0.001 apart
-    inputs["T"] = [rect(3 * (i % 20), 3 * (i // 20) + 40,
-                        3 * (i % 20) + 1, 3 * (i // 20) + 41)
-                   for i in range(200)] + \
-        [rect(10 + 0.001 * i, 10, 11 + 0.001 * i, 11) for i in range(1100)]
     df = spark.createDataFrame(
         [(k, bytearray(w)) for k, ws in inputs.items() for w in ws],
         "clc STRING, geom_wkb BINARY")
     got = dissolve(df).toPandas().set_index("clc").sort_index()
-    assert list(got.index) == ["E", "H", "S", "T"]
+    assert list(got.index) == sorted(inputs)
     for k, ws in inputs.items():
         wkb, area, n_parts = _reference_dissolve(ws)
         assert bytes(got.loc[k, "geom_wkb"]) == wkb, k
         assert got.loc[k, "area"] == area, k
         assert got.loc[k, "n_parts"] == n_parts, k
-    assert got.loc["E", "area"] == 0.0 and got.loc["E", "n_parts"] == 0
-    assert got.loc["T", "area"] == pytest.approx(200.0 + 1.0 + 1099 * 0.001,
-                                                 rel=1e-12)
-    assert got.loc["T", "n_parts"] == 201
     # byte determinism under a different input order and partitioning
     df2 = df.orderBy(F.xxhash64("geom_wkb")).repartition(3)
     got2 = dissolve(df2).toPandas().set_index("clc").sort_index()
@@ -239,6 +226,43 @@ def test_dissolve_matches_driver_reference(spark):
         assert bytes(got2.loc[k, "geom_wkb"]) == bytes(got.loc[k, "geom_wkb"])
         assert got2.loc[k, "area"] == got.loc[k, "area"]
         assert got2.loc[k, "n_parts"] == got.loc[k, "n_parts"]
+    return got
+
+
+def test_dissolve_component_parallel_merge_exact_and_deterministic(spark):
+    """A key mixing 200 disjoint squares with a 1,100-square sliding
+    cluster (one spatial tile over the heavy-slice threshold, so it splits
+    into hash sub-slices) goes through the component-parallel final merge
+    exactly: geom_wkb bytes, area and n_parts equal the driver reference,
+    and the bytes do not depend on input order or partitioning."""
+    # dispersed field: 200 disjoint unit squares, 3 apart (fills tiles);
+    # dense cluster: 1100 unit squares sliding 0.001 apart
+    inputs = {"T": [_rect(3 * (i % 20), 3 * (i // 20) + 40,
+                          3 * (i % 20) + 1, 3 * (i // 20) + 41)
+                    for i in range(200)]
+              + [_rect(10 + 0.001 * i, 10, 11 + 0.001 * i, 11)
+                 for i in range(1100)]}
+    got = _assert_dissolve_matches_reference(spark, inputs)
+    assert got.loc["T", "area"] == pytest.approx(200.0 + 1.0 + 1099 * 0.001,
+                                                 rel=1e-12)
+    assert got.loc["T", "n_parts"] == 201
+    polys = geo.wkb_to_polygons(bytes(got.loc["T", "geom_wkb"]))
+    assert geo.polygons_area(polys) == pytest.approx(got.loc["T", "area"],
+                                                     rel=1e-12)
+
+
+def test_dissolve_per_key_routing_keeps_small_and_empty_keys(spark):
+    """Keys are merged independently: a single-feature key and a key whose
+    geometry is entirely empty keep their (key, geom, area, n_parts) rows
+    next to a 120-strip key, each equal to the driver reference."""
+    inputs = {"E": [geo.multipolygon_to_wkb([])],
+              "S": [_rect(100, 100, 101, 101)],
+              "H": [_rect(0.01 * i, 0, 0.01 * i + 1, 1) for i in range(120)]}
+    got = _assert_dissolve_matches_reference(spark, inputs)
+    assert list(got.index) == ["E", "H", "S"]
+    assert got.loc["E", "area"] == 0.0 and got.loc["E", "n_parts"] == 0
+    assert got.loc["S", "area"] == pytest.approx(1.0, rel=1e-12)
+    assert got.loc["H", "area"] == pytest.approx(1.0 + 119 * 0.01, rel=1e-12)
 
 
 def test_dissolve_null_geometry_reads_as_empty(spark):
