@@ -10,7 +10,6 @@ bit-for-bit per the north rule.  Monetary aggregates are integerised
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -272,13 +271,8 @@ def _sql_supplier_nation_rollup() -> str:
 # --- lattice constants for the F2 50x50 fixture (computed once, inlined) ----
 _LW = 2.0
 _LH = P.hex_height(_LW)
-_LS = P.hex_side(_LW)
-_LSTEP = (_LS + _LH) / 2.0
-_R_LO = math.floor((P.REFY - 50.0) / _LSTEP)
-_R_HI = math.ceil((P.REFY - 0.0) / _LSTEP)
-_TAN30 = math.tan(math.pi / 6.0)
-_Q_LO = math.floor((0.0 + (0.0 - P.REFY) * _TAN30 - P.REFX) / _LW)
-_Q_HI = math.ceil((50.0 + (50.0 - P.REFY) * _TAN30 - P.REFX) / _LW)
+_Q_LO, _Q_HI, _R_LO, _R_HI = hexgrid.axial_range(0.0, 0.0, 50.0, 50.0, _LW,
+                                                 P.REFX, P.REFY)
 _NQ = _Q_HI - _Q_LO + 1
 _NR = _R_HI - _R_LO + 1
 _THRESH = _LH / 1.9
@@ -909,14 +903,8 @@ def _sql_split_patches_hole_duck() -> str:
     bx0, by0, bx1, by1 = _SPH_B
     w = _SPH_W
     refx, refy = _SPH_REF
-    h = P.hex_height(w)
-    s = P.hex_side(w)
-    step = (s + h) / 2.0
-    r_lo = math.floor((refy - ay1) / step)
-    r_hi = math.ceil((refy - ay0) / step)
-    tan30 = math.tan(math.pi / 6.0)
-    q_lo = math.floor((ax0 + (ay0 - refy) * tan30 - refx) / w)
-    q_hi = math.ceil((ax1 + (ay1 - refy) * tan30 - refx) / w)
+    q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(ax0, ay0, ax1, ay1, w,
+                                                 refx, refy)
     nq = q_hi - q_lo + 1
     nr = r_hi - r_lo + 1
     min_area = 0.01 * P.hex_area(w)
@@ -1593,14 +1581,9 @@ def _sql_connectedness_duck() -> str:
         grid) are exact doubles for hypot and SQRT alike."""
     w = 5.0
     h = P.hex_height(w)
-    s = P.hex_side(w)
-    step = (s + h) / 2.0
     minx, miny, maxx, maxy = 0.0, 0.0, 20.0, 20.0
-    r_lo = math.floor((0.0 - maxy) / step)
-    r_hi = math.ceil((0.0 - miny) / step)
-    tan30 = math.tan(math.pi / 6.0)
-    q_lo = math.floor((minx + (miny - 0.0) * tan30 - 0.0) / w)
-    q_hi = math.ceil((maxx + (maxy - 0.0) * tan30 - 0.0) / w)
+    q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(minx, miny, maxx, maxy, w,
+                                                 0.0, 0.0)
     nq = q_hi - q_lo + 1
     nr = r_hi - r_lo + 1
     thresh = h / 1.9

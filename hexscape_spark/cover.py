@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geo
+from . import hexgrid
 from . import params as P
-from .tiling import _hex_ring
 
 
 def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
@@ -40,8 +40,7 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
     """
     w = hex_width
     h = P.hex_height(w)
-    s = P.hex_side(w)
-    step = (s + h) / 2.0
+    step = hexgrid.row_step(w)
     hexarea = P.hex_area(w)
     schema = (f"{poly_id} LONG, q LONG, r LONG, cell_id LONG, "
               "full BOOLEAN, cover_area DOUBLE")
@@ -109,7 +108,8 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
                 else:
                     pieces = polys_np
                 for j in boundary:
-                    hexring = _hex_ring(float(ccx[j]), float(ccy[j]), w)
+                    hexring = hexgrid.hex_ring(float(ccx[j]), float(ccy[j]),
+                                               w)
                     a = geo.area_polygons_in_convex(pieces, hexring)
                     if a <= 0.0:
                         continue
@@ -133,14 +133,10 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
                              for i in range(4))
                 ring_segs = [[geo.ring_segments(r_) for r_ in poly]
                              for poly in polys_np]
-                # candidate axial range from the sheared bbox
-                # (same derivation as hexgrid.lattice, reference
-                #  R/generate_patches.R:89-101), padded by one ring
-                r_lo = int(np.floor((refy - y1) / step)) - 1
-                r_hi = int(np.ceil((refy - y0) / step)) + 1
-                tan30 = np.tan(np.pi / 6.0)
-                q_lo = int(np.floor((x0 + (y0 - refy) * tan30 - refx) / w)) - 1
-                q_hi = int(np.ceil((x1 + (y1 - refy) * tan30 - refx) / w)) + 1
+                # candidate axial range of the bbox, padded by one ring
+                q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(
+                    x0, y0, x1, y1, w, refx, refy)
+                q_lo, q_hi, r_lo, r_hi = q_lo - 1, q_hi + 1, r_lo - 1, r_hi + 1
                 n_edges = sum(len(r_) for r_ in all_rings)
                 # complex polygons block into SQUARE tiles so the per-tile
                 # window (and hence the pre-clipped local coastline and the

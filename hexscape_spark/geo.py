@@ -121,10 +121,12 @@ def wkb_to_polygons(wkb: bytes) -> list[list[np.ndarray]]:
         # now, so a surviving assert is a genuine invariant failure that
         # must surface as a bug, not be masked as bad input.
         raise ValueError(f"malformed WKB ({e})") from None
+    # a polygon with no rings (POLYGON EMPTY, alone or as a member) is
+    # dropped: an empty geometry is the empty list
     if kind == "polygon":
-        return [payload]
+        return [payload] if payload else []
     if kind == "multipolygon":
-        return payload
+        return [poly for poly in payload if poly]
     raise ValueError(f"expected areal geometry, got {kind}")
 
 
@@ -193,6 +195,25 @@ def ensure_ccw(ring: np.ndarray) -> np.ndarray:
     return ring if ring_area_signed(ring) >= 0 else ring[::-1]
 
 
+def clip_ring_to_side(ring: np.ndarray, side: np.ndarray) -> np.ndarray:
+    """One Sutherland–Hodgman step: the part of `ring` where the linear
+    function whose values at the vertices are `side` is >= 0."""
+    nxt = np.roll(side, -1)
+    pts = []
+    m = len(ring)
+    for j in range(m):
+        cur_in = side[j] >= 0.0
+        nxt_in = nxt[j] >= 0.0
+        p = ring[j]
+        if cur_in:
+            pts.append(p)
+        if cur_in != nxt_in:
+            denom = side[j] - nxt[j]
+            t = side[j] / denom if denom != 0.0 else 0.0
+            pts.append(p + t * (ring[(j + 1) % m] - p))
+    return np.array(pts, dtype=np.float64) if pts else np.empty((0, 2))
+
+
 def clip_ring_convex(subject: np.ndarray, clip_ccw: np.ndarray) -> np.ndarray:
     """Clip an arbitrary ring against a CONVEX CCW ring (Sutherland–Hodgman).
 
@@ -212,21 +233,7 @@ def clip_ring_convex(subject: np.ndarray, clip_ccw: np.ndarray) -> np.ndarray:
         dx = out[:, 0] - a[0]
         dy = out[:, 1] - a[1]
         side = ex * dy - ey * dx          # >=0 -> inside (left of edge)
-        nxt = np.roll(side, -1)
-        pts = []
-        m = len(out)
-        for j in range(m):
-            cur_in = side[j] >= 0.0
-            nxt_in = nxt[j] >= 0.0
-            p = out[j]
-            q = out[(j + 1) % m]
-            if cur_in:
-                pts.append(p)
-            if cur_in != nxt_in:
-                denom = side[j] - nxt[j]
-                t = side[j] / denom if denom != 0.0 else 0.0
-                pts.append(p + t * (q - p))
-        out = np.array(pts, dtype=np.float64) if pts else np.empty((0, 2))
+        out = clip_ring_to_side(out, side)
     return out
 
 
@@ -418,6 +425,16 @@ def ring_segments(ring: np.ndarray) -> tuple[np.ndarray, np.ndarray,
     return x1, y1, np.roll(x1, -1), np.roll(y1, -1)
 
 
+def _poly_set_segments(polys: list[list[np.ndarray]]):
+    """All ring segments of a polygon set + owning-polygon ids."""
+    parts = [(*ring_segments(ring), np.full(len(ring), p_i, dtype=np.int64))
+             for p_i, poly in enumerate(polys) for ring in poly]
+    if not parts:
+        z = np.empty(0)
+        return z, z, z, z, np.empty(0, dtype=np.int64)
+    return tuple(np.concatenate([p[i] for p in parts]) for i in range(5))
+
+
 def points_in_ring_segments(px: np.ndarray, py: np.ndarray,
                             x1: np.ndarray, y1: np.ndarray,
                             x2: np.ndarray, y2: np.ndarray) -> np.ndarray:
@@ -454,24 +471,6 @@ def points_in_polygons(px: np.ndarray, py: np.ndarray,
 
 # --- distances -------------------------------------------------------------------
 
-def dist_points_to_segments(px: np.ndarray, py: np.ndarray,
-                            ring: np.ndarray) -> np.ndarray:
-    """Min distance from each point to the ring's boundary segments."""
-    n = len(ring)
-    a = ring
-    b = np.roll(ring, -1, axis=0)
-    abx = (b[:, 0] - a[:, 0])[None, :]
-    aby = (b[:, 1] - a[:, 1])[None, :]
-    apx = px[:, None] - a[:, 0][None, :]
-    apy = py[:, None] - a[:, 1][None, :]
-    denom = abx * abx + aby * aby
-    denom = np.where(denom == 0.0, 1.0, denom)
-    t = np.clip((apx * abx + apy * aby) / denom, 0.0, 1.0)
-    dx = apx - t * abx
-    dy = apy - t * aby
-    return np.sqrt((dx * dx + dy * dy).min(axis=1))
-
-
 def dist_points_to_segment_arrays(px: np.ndarray, py: np.ndarray,
                                   ax: np.ndarray, ay: np.ndarray,
                                   bx: np.ndarray, by: np.ndarray,
@@ -500,11 +499,8 @@ def boundary_distance(px: np.ndarray, py: np.ndarray,
     """Distance to the nearest boundary ring (no inside-zeroing) — used for
     the full-cell fast path: a hex whose centroid is further from every
     boundary than its circumradius is entirely inside or entirely outside."""
-    d = np.full(len(px), np.inf)
-    for poly in polys:
-        for ring in poly:
-            d = np.minimum(d, dist_points_to_segments(px, py, ring))
-    return d
+    x1, y1, x2, y2, _ = _poly_set_segments(polys)
+    return dist_points_to_segment_arrays(px, py, x1, y1, x2, y2)
 
 
 def dist_points_to_polygons(px: np.ndarray, py: np.ndarray,
@@ -514,41 +510,9 @@ def dist_points_to_polygons(px: np.ndarray, py: np.ndarray,
     Reference usage: centroid prefilter dist < hexhgt/1.9
     (R/generate_patches.R:117-122).
     """
-    d = np.full(len(px), np.inf)
-    for poly in polys:
-        for ring in poly:
-            d = np.minimum(d, dist_points_to_segments(px, py, ring))
+    d = boundary_distance(px, py, polys)
     d[points_in_polygons(px, py, polys)] = 0.0
     return d
-
-
-def segments_properly_cross(a: list[list[np.ndarray]],
-                            b: list[list[np.ndarray]]) -> bool:
-    """True if any boundary segment of `a` crosses one of `b` transversally
-    (intersection strictly interior to both segments).  Completes the
-    overlap test for crossing polygons with no mutual vertex containment
-    (e.g. plus-sign rectangles — ADVICE r02)."""
-    ax1, ay1, ax2, ay2 = _all_ring_segments(a)
-    bx1, by1, bx2, by2 = _all_ring_segments(b)
-    if len(ax1) == 0 or len(bx1) == 0:
-        return False
-    sx = bx2 - bx1
-    sy = by2 - by1
-    chunk = 256
-    for i0 in range(0, len(ax1), chunk):
-        rx = (ax2[i0:i0 + chunk] - ax1[i0:i0 + chunk])[:, None]
-        ry = (ay2[i0:i0 + chunk] - ay1[i0:i0 + chunk])[:, None]
-        qpx = bx1[None, :] - ax1[i0:i0 + chunk][:, None]
-        qpy = by1[None, :] - ay1[i0:i0 + chunk][:, None]
-        denom = rx * sy[None, :] - ry * sx[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = (qpx * sy[None, :] - qpy * sx[None, :]) / denom
-            u = (qpx * ry - qpy * rx) / denom
-        ok = (np.isfinite(t) & np.isfinite(u) &
-              (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0))
-        if ok.any():
-            return True
-    return False
 
 
 def polygons_distance(a: list[list[np.ndarray]],
@@ -571,16 +535,13 @@ def polygons_distance(a: list[list[np.ndarray]],
         return 0.0
     if points_in_polygons(bv[:, 0], bv[:, 1], a).any():
         return 0.0
-    if segments_properly_cross(a, b):
-        return 0.0
-    d = np.inf
-    for poly in b:
-        for ring in poly:
-            d = min(d, float(dist_points_to_segments(av[:, 0], av[:, 1], ring).min()))
-    for poly in a:
-        for ring in poly:
-            d = min(d, float(dist_points_to_segments(bv[:, 0], bv[:, 1], ring).min()))
-    return d
+    x1, y1, x2, y2, pid = _poly_set_segments(a + b)
+    on_a = pid < len(a)
+    for _ in _crossing_xs_block(x1, y1, x2, y2, np.nonzero(on_a)[0],
+                                np.nonzero(~on_a)[0]):
+        return 0.0              # a transversal crossing: stop at the first
+    return min(float(boundary_distance(av[:, 0], av[:, 1], b).min()),
+               float(boundary_distance(bv[:, 0], bv[:, 1], a).min()))
 
 
 # --- segment ∩ polygon 1-D measure (border lengths) -------------------------------
@@ -831,18 +792,10 @@ def interior_point(poly: list[np.ndarray]) -> tuple[float, float]:
 # per-group driver/UDF geometry (dissolve, impassable accounting), where E
 # is bounded, not for the per-row hot path.
 
-def _all_ring_segments(polys: list[list[np.ndarray]]):
-    parts = [ring_segments(r) for poly in polys for r in poly]
-    if not parts:
-        z = np.empty(0)
-        return z, z, z, z
-    return tuple(np.concatenate([p[i] for p in parts]) for i in range(4))
-
-
-def _crossing_xs_block(x1, y1, x2, y2, ia, ib,
-                       chunk: int = 512) -> np.ndarray:
-    """Crossing xs between segment index sets ia x ib (vectorized)."""
-    out = []
+def _crossing_xs_block(x1, y1, x2, y2, ia, ib, chunk: int = 512):
+    """Proper interior crossings between segment index sets ia x ib
+    (vectorized): yields their xs per chunk of ia that has any, so a
+    caller that only asks whether any pair crosses stops at the first."""
     sx = (x2[ib] - x1[ib])[None, :]
     sy = (y2[ib] - y1[ib])[None, :]
     bx1 = x1[ib][None, :]
@@ -863,8 +816,7 @@ def _crossing_xs_block(x1, y1, x2, y2, ia, ib,
               (t > 0.0) & (t < 1.0) & (u > 0.0) & (u < 1.0))
         if ok.any():
             with np.errstate(invalid="ignore"):
-                out.append((ax + t * rx)[ok])
-    return np.concatenate(out) if out else np.empty(0)
+                yield (ax + t * rx)[ok]
 
 
 def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
@@ -881,7 +833,8 @@ def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
         return np.empty(0)
     if m <= 1024:
         idx = np.arange(m)
-        return _crossing_xs_block(x1, y1, x2, y2, idx, idx, chunk)
+        return np.concatenate([np.empty(0), *_crossing_xs_block(
+            x1, y1, x2, y2, idx, idx, chunk)])
     lo = np.minimum(x1, x2)
     hi = np.maximum(x1, x2)
     ext_lo, ext_hi = float(lo.min()), float(hi.max())
@@ -896,7 +849,8 @@ def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
     out = []
     for b, members in buckets.items():
         ia = np.array(members, dtype=np.int64)
-        xs = _crossing_xs_block(x1, y1, x2, y2, ia, ia, chunk)
+        xs = np.concatenate([np.empty(0), *_crossing_xs_block(
+            x1, y1, x2, y2, ia, ia, chunk)])
         if len(xs):
             blo = ext_lo + b * width
             keep = (xs >= blo) & (xs < blo + width)
@@ -905,54 +859,12 @@ def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
     return np.concatenate(out) if out else np.empty(0)
 
 
-def _intervals_at(polys: list[list[np.ndarray]], x: float) -> list[list[float]]:
-    """Union-merged inside y-intervals of a polygon SET at vertical line x
-    (even-odd parity per polygon across all its rings — holes subtract)."""
-    ivs = []
-    for poly in polys:
-        ys = []
-        for ring in poly:
-            x1, y1, x2, y2 = ring_segments(ring)
-            c = (x1 <= x) != (x2 <= x)
-            if c.any():
-                t = (x - x1[c]) / (x2[c] - x1[c])
-                ys.append(y1[c] + t * (y2[c] - y1[c]))
-        if not ys:
-            continue
-        yy = np.sort(np.concatenate(ys))
-        for j in range(0, len(yy) // 2 * 2, 2):
-            if yy[j + 1] > yy[j]:
-                ivs.append([float(yy[j]), float(yy[j + 1])])
-    ivs.sort()
-    merged: list[list[float]] = []
-    for lo, hi in ivs:
-        if merged and lo <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], hi)
-        else:
-            merged.append([lo, hi])
-    return merged
-
-
-def _intersect_length(a: list[list[float]], b: list[list[float]]) -> float:
-    i = j = 0
-    total = 0.0
-    while i < len(a) and j < len(b):
-        lo = max(a[i][0], b[j][0])
-        hi = min(a[i][1], b[j][1])
-        if hi > lo:
-            total += hi - lo
-        if a[i][1] < b[j][1]:
-            i += 1
-        else:
-            j += 1
-    return total
-
-
 def _boolean_area(a: list[list[np.ndarray]],
                   b: list[list[np.ndarray]] | None) -> float:
-    ex1, ey1, ex2, ey2 = _all_ring_segments(a + (b or []))
+    ex1, ey1, ex2, ey2, pid = _poly_set_segments(a + (b or []))
     if len(ex1) == 0:
         return 0.0
+    on_a = pid < len(a)
     xs = np.unique(np.concatenate(
         [ex1, ex2, _pairwise_crossing_xs(ex1, ey1, ex2, ey2)]))
     area = 0.0
@@ -962,12 +874,13 @@ def _boolean_area(a: list[list[np.ndarray]],
         if w <= 0.0:
             continue
         for xm in (x0 + 0.25 * w, x0 + 0.75 * w):
-            ia = _intervals_at(a, xm)
+            ia = _merged_intervals_at(ex1, ey1, ex2, ey2, pid, xm, sel=on_a)
             if b is None:
-                length = sum(hi - lo for lo, hi in ia)
+                length = sum(hi - lo for lo, hi, _, _ in ia)
             else:
-                length = _intersect_length(ia, _intervals_at(b, xm))
-            area += 0.5 * length * w
+                length = intervals_intersect_length(ia, _merged_intervals_at(
+                    ex1, ey1, ex2, ey2, pid, xm, sel=~on_a))
+            area += 0.5 * float(length) * w
     return area
 
 
@@ -1069,21 +982,6 @@ def overlap_components(polys: list[list[np.ndarray]],
     for i in range(n):
         comps.setdefault(find(i), []).append(i)
     return [sorted(v) for v in sorted(comps.values())]
-
-
-def _poly_set_segments(polys: list[list[np.ndarray]]):
-    """All ring segments of a polygon set + owning-polygon ids."""
-    xs1, ys1, xs2, ys2, pid = [], [], [], [], []
-    for p_i, poly in enumerate(polys):
-        for ring in poly:
-            x1, y1, x2, y2 = ring_segments(ring)
-            xs1.append(x1)
-            ys1.append(y1)
-            xs2.append(x2)
-            ys2.append(y2)
-            pid.append(np.full(len(x1), p_i, dtype=np.int64))
-    return (np.concatenate(xs1), np.concatenate(ys1),
-            np.concatenate(xs2), np.concatenate(ys2), np.concatenate(pid))
 
 
 def _merged_intervals_at(x1, y1, x2, y2, pid, xm: float,
@@ -1491,15 +1389,8 @@ def _boolean_polygons(a: list[list[np.ndarray]], b: list[list[np.ndarray]],
         return []
     if not b:
         return list(a) if op == "difference" else []
-    x1a, y1a, x2a, y2a, pa = _poly_set_segments(a)
-    x1b, y1b, x2b, y2b, pb = _poly_set_segments(b)
-    x1 = np.concatenate([x1a, x1b])
-    y1 = np.concatenate([y1a, y1b])
-    x2 = np.concatenate([x2a, x2b])
-    y2 = np.concatenate([y2a, y2b])
-    pid = np.concatenate([pa, pb + (pa.max() + 1 if len(pa) else 0)])
-    is_a = np.zeros(len(x1), dtype=bool)
-    is_a[:len(x1a)] = True
+    x1, y1, x2, y2, pid = _poly_set_segments(list(a) + list(b))
+    is_a = pid < len(a)
     xs = np.unique(np.concatenate(
         [x1, x2, _pairwise_crossing_xs(x1, y1, x2, y2)]))
     bx0, by0, bx1, by1 = polygons_bounds(list(a) + list(b))

@@ -34,6 +34,8 @@ from fractions import Fraction
 
 import numpy as np
 
+from . import geo
+
 __all__ = ["exact_union_trace", "exact_boolean_trace"]
 
 
@@ -159,47 +161,6 @@ def _intervals_at(segs, idxs, xm: Fraction):
         else:
             merged.append((lo, hi, ls, hs))
     return merged
-
-
-def _combine(ia, ib, op: str):
-    """Exact pointwise combine of two merged-interval lists —
-    'intersection' or 'difference' (A minus B), the exact analogue of
-    geo._combine_interval_lists."""
-    if op == "intersection":
-        out = []
-        i = j = 0
-        while i < len(ia) and j < len(ib):
-            alo, ahi, als, ahs = ia[i]
-            blo, bhi, bls, bhs = ib[j]
-            lo, lo_s = (alo, als) if alo >= blo else (blo, bls)
-            hi, hi_s = (ahi, ahs) if ahi <= bhi else (bhi, bhs)
-            if hi > lo:
-                out.append((lo, hi, lo_s, hi_s))
-            if ahi < bhi:
-                i += 1
-            else:
-                j += 1
-        return out
-    if op == "difference":
-        out = []
-        for alo, ahi, als, ahs in ia:
-            cur_lo, cur_ls = alo, als
-            done = False
-            for blo, bhi, bls, bhs in ib:
-                if bhi <= cur_lo:
-                    continue
-                if blo >= ahi:
-                    break
-                if blo > cur_lo:
-                    out.append((cur_lo, blo, cur_ls, bls))
-                cur_lo, cur_ls = bhi, bhs
-                if cur_lo >= ahi:
-                    done = True
-                    break
-            if not done and cur_lo < ahi:
-                out.append((cur_lo, ahi, cur_ls, ahs))
-        return out
-    raise ValueError(op)
 
 
 # --- seams, stitch, assembly ------------------------------------------------
@@ -442,7 +403,7 @@ def exact_boolean_trace(a: list[list[np.ndarray]],
     def interval_fn(idxs, xm):
         ia = _intervals_at(segs, [i for i in idxs if i < na], xm)
         ib = _intervals_at(segs, [i for i in idxs if i >= na], xm)
-        return _combine(ia, ib, op)
+        return geo._combine_interval_lists(ia, ib, op)
 
     rings, want = _exact_trace(segs, xs_extra, interval_fn)
     return _assemble_polygons(rings), float(want)

@@ -5,8 +5,12 @@ source of truth with the DuckDB oracle).  Everything here stays inside
 whole-stage codegen; the point->cell encode of a 10^12-row table is a
 map-only stage with no shuffle.
 
+Also the one Python source of hex-cell geometry: the bbox -> axial range,
+the row step, the vertex ring.  Every module and the oracle read it here.
+
 Reference parity:
   * hex constants            -> R/generate_patches.R:45-50
+  * hex vertices             -> R/generate_patches.R:53-64
   * axial lattice & centroid -> R/generate_patches.R:89-115
   * kRing offsets            -> notebooks/network_distance.R:93-133
   * 6 axial neighbour offsets-> R/generate_neighbours.R:57-62
@@ -14,10 +18,52 @@ Reference parity:
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from . import params as P
 from . import sqlgen
+
+
+# Shear of the axial q axis against x, and the pitch between lattice rows
+# (side + height) / 2 (reference: R/generate_patches.R:45-50,89-101).
+TAN30 = math.tan(math.pi / 6.0)
+
+
+def row_step(hex_width: float) -> float:
+    return (P.hex_side(hex_width) + P.hex_height(hex_width)) / 2.0
+
+
+def axial_range(minx: float, miny: float, maxx: float, maxy: float,
+                hex_width: float, refx: float, refy: float
+                ) -> tuple[int, int, int, int]:
+    """(q_lo, q_hi, r_lo, r_hi) of the lattice covering a bbox, exactly
+    R/generate_patches.R:89-101:
+      r in [floor((refy-ymax)/step) .. ceil((refy-ymin)/step)]
+      q from the 30-degree-sheared x-range over hex_width."""
+    step = row_step(hex_width)
+    return (math.floor((minx + (miny - refy) * TAN30 - refx) / hex_width),
+            math.ceil((maxx + (maxy - refy) * TAN30 - refx) / hex_width),
+            math.floor((refy - maxy) / step),
+            math.ceil((refy - miny) / step))
+
+
+def hex_vertex_offsets(hex_width: float) -> list[tuple[float, float]]:
+    """CCW pointy-top hex vertex offsets from the centroid (genpoly's
+    vertices reversed; R/generate_patches.R:53-64 lists them clockwise)."""
+    h = P.hex_height(hex_width)
+    s = P.hex_side(hex_width)
+    w = hex_width
+    return [(0.0, h / 2), (-w / 2, s / 2), (-w / 2, -s / 2),
+            (0.0, -h / 2), (w / 2, -s / 2), (w / 2, s / 2)]
+
+
+def hex_ring(cx: float, cy: float, hex_width: float) -> np.ndarray:
+    """CCW hex ring around (cx, cy), the clip window of the geometry
+    kernels."""
+    return np.array(hex_vertex_offsets(hex_width)) + np.array([cx, cy])
 
 
 def _apply_layers(df: DataFrame, layers) -> DataFrame:
@@ -81,23 +127,12 @@ def lattice(spark: SparkSession, minx: float, miny: float, maxx: float,
             num_partitions: int | None = None) -> DataFrame:
     """Distributed hex lattice covering a bbox: DataFrame(q, r, hex_cx, hex_cy).
 
-    Range derivation mirrors R/generate_patches.R:89-101 exactly:
-      r in [floor((refy-ymax)/step) .. ceil((refy-ymin)/step)], step=(s+h)/2
-      q from the 30-degree-sheared x-range over hex_width.
-    Generated with spark.range -> divmod, so a country- or planet-scale
-    lattice never materialises on the driver.
+    The (q, r) range is axial_range's.  Generated with spark.range ->
+    divmod, so a country- or planet-scale lattice never materialises on
+    the driver.
     """
-    import math
-    h = P.hex_height(hex_width)
-    s = P.hex_side(hex_width)
-    step = (s + h) / 2.0
-    r_lo = math.floor((refy - maxy) / step)
-    r_hi = math.ceil((refy - miny) / step)
-    tan30 = math.tan(math.pi / 6.0)
-    x_lo = (minx + (miny - refy) * tan30 - refx) / hex_width
-    x_hi = (maxx + (maxy - refy) * tan30 - refx) / hex_width
-    q_lo = math.floor(x_lo)
-    q_hi = math.ceil(x_hi)
+    q_lo, q_hi, r_lo, r_hi = axial_range(minx, miny, maxx, maxy, hex_width,
+                                         refx, refy)
     nr = r_hi - r_lo + 1
     nq = q_hi - q_lo + 1
     if num_partitions is None:

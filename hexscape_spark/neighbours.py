@@ -31,21 +31,15 @@ from pyspark.sql import functions as F
 
 from . import geo
 from . import params as P
-from .hexgrid import NEIGHBOUR_OFFSETS, offsets_df
+from .hexgrid import hex_vertex_offsets, offsets_df
 
 # Shared-edge vertex offsets (relative to the centroid of the *source* hex)
-# for each direction, pointy-top orientation, y-down r axis.
+# for each direction, as index pairs into hexgrid.hex_vertex_offsets.
 def _edge_offsets(w: float) -> dict[str, tuple[tuple[float, float], tuple[float, float]]]:
-    h = 2.0 * w / np.sqrt(3.0)
-    s = h / 2.0
-    return {
-        "E":  ((w / 2, s / 2), (w / 2, -s / 2)),
-        "W":  ((-w / 2, s / 2), (-w / 2, -s / 2)),
-        "NE": ((0.0, h / 2), (w / 2, s / 2)),
-        "NW": ((-w / 2, s / 2), (0.0, h / 2)),
-        "SE": ((w / 2, -s / 2), (0.0, -h / 2)),
-        "SW": ((0.0, -h / 2), (-w / 2, -s / 2)),
-    }
+    v = hex_vertex_offsets(w)
+    return {d: (v[a], v[b]) for d, a, b in (
+        ("E", 5, 4), ("W", 1, 2), ("NE", 0, 5),
+        ("NW", 1, 0), ("SE", 4, 3), ("SW", 3, 2))}
 
 
 def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,

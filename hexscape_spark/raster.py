@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import hexgrid
 from . import params as P
 from . import sqlgen
 from .hexgrid import _apply_layers
@@ -88,19 +89,16 @@ def raster_to_hex_area_weighted(raster: DataFrame, origin_x: float,
     import pandas as pd
 
     from . import geo
-    from .tiling import _hex_ring
 
     w = hex_width
-    h = P.hex_height(w)
-    s = P.hex_side(w)
-    step = (s + h) / 2.0
+    step = hexgrid.row_step(w)
+    tan30 = hexgrid.TAN30
     # pixel corners
     x0 = f"({sqlgen._f(origin_x)} + ix * {sqlgen._f(pixel)})"
     y0 = f"({sqlgen._f(origin_y)} + iy * {sqlgen._f(pixel)})"
     x1 = f"({x0} + {sqlgen._f(pixel)})"
     y1 = f"({y0} + {sqlgen._f(pixel)})"
-    # candidate axial ranges (hexgrid.lattice derivation, +-1 pad)
-    tan30 = float(np.tan(np.pi / 6.0))
+    # candidate axial ranges (hexgrid.axial_range per row, +-1 pad)
     r_lo = (f"CAST(FLOOR(({sqlgen._f(refy)} - {y1}) / {sqlgen._f(step)}) "
             "AS BIGINT) - 1")
     r_hi = (f"CAST(CEIL(({sqlgen._f(refy)} - {y0}) / {sqlgen._f(step)}) "
@@ -131,7 +129,7 @@ def raster_to_hex_area_weighted(raster: DataFrame, origin_x: float,
             hx = pdf["__cx"].to_numpy()
             hy = pdf["__cy"].to_numpy()
             for i in range(len(pdf)):
-                ring = _hex_ring(hx[i], hy[i], w)
+                ring = hexgrid.hex_ring(hx[i], hy[i], w)
                 areas[i] = geo.area_polygons_in_convex(
                     [[geo.rect_ring(xs[i], ys[i],
                                     xs[i] + pix, ys[i] + pix)]], ring)

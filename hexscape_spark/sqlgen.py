@@ -31,6 +31,7 @@ domain: ``cell_id`` packing already bounds |q|, |r| below 2^21.
 
 from __future__ import annotations
 
+from . import hexgrid
 from . import params as P
 
 
@@ -129,10 +130,8 @@ def centroid_exprs(q: str = "q", r: str = "r",
                    hex_width: float = P.HEX_WIDTH,
                    refx: float = P.REFX, refy: float = P.REFY) -> tuple[str, str]:
     """(q,r) -> hex centroid, exactly R/generate_patches.R:114-115."""
-    h = P.hex_height(hex_width)
-    s = P.hex_side(hex_width)
     cx = f"{_f(refx)} + ({r}) * {_f(hex_width / 2.0)} + ({q}) * {_f(hex_width)}"
-    cy = f"{_f(refy)} - ({r}) * {_f((s + h) / 2.0)}"
+    cy = f"{_f(refy)} - ({r}) * {_f(hexgrid.row_step(hex_width))}"
     return cx, cy
 
 
@@ -231,24 +230,13 @@ def mix_expr(b: str, a: int, bb: int, c: int, intdiv: str = "DIV") -> str:
 # ---------------------------------------------------------------------------
 
 
-def hex_vertex_offsets(hex_width: float = P.HEX_WIDTH
-                       ) -> list[tuple[float, float]]:
-    """CCW pointy-top hex vertex offsets from the centroid (same ring as
-    tiling._hex_ring)."""
-    h = P.hex_height(hex_width)
-    s = P.hex_side(hex_width)
-    w = hex_width
-    return [(0.0, h / 2), (-w / 2, s / 2), (-w / 2, -s / 2),
-            (0.0, -h / 2), (w / 2, -s / 2), (w / 2, s / 2)]
-
-
 def hex_rect_area_layers(cx: str, cy: str, hex_width: float,
                          minx: float, miny: float, maxx: float, maxy: float,
                          out: str = "hr_area",
                          prefix: str = "__ha") -> list[list[tuple[str, str]]]:
     """Layers adding `out` = exact area(hex(cx, cy) ∩ rect).  `cx`/`cy`
     must be aliases available in the enclosing layered query."""
-    verts = hex_vertex_offsets(hex_width)
+    verts = hexgrid.hex_vertex_offsets(hex_width)
     layer_u: list[tuple[str, str]] = []
     layer_m: list[tuple[str, str]] = []
     layer_g: list[tuple[str, str]] = []

@@ -50,18 +50,6 @@ from .checkpoint import cached
 from .indexing import dense_index
 
 
-def _hex_ring(cx: float, cy: float, w: float) -> np.ndarray:
-    """CCW hex ring for Sutherland–Hodgman (genpoly vertices reversed;
-    reference: R/generate_patches.R:53-64 lists them clockwise)."""
-    h = 2.0 * w / np.sqrt(3.0)
-    s = h / 2.0
-    pts = np.array([
-        [0.0, h / 2], [-w / 2, s / 2], [-w / 2, -s / 2],
-        [0.0, -h / 2], [w / 2, -s / 2], [w / 2, s / 2],
-    ])
-    return pts + np.array([cx, cy])
-
-
 def generate_patches(spark: SparkSession, landscape_wkb: bytes,
                      hex_width: float = P.HEX_WIDTH,
                      reference_point: tuple[float, float] = (P.REFX, P.REFY),
@@ -165,7 +153,7 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
             # boundary by more than the circumradius (hexhgt/2) is entirely
             # inside (or outside) each layer — zero geometry work.  At
             # continent scale this is the overwhelming majority of cells.
-            circ = 0.5 * (2.0 * w_ / np.sqrt(3.0))
+            circ = P.hex_height(w_) / 2
             ls_clear = geo.boundary_distance(cx, cy, ls) > circ
             ls_inside = geo.points_in_polygons(cx, cy, ls)
             imp_flat = [p for ip in imps for p in ip]
@@ -187,12 +175,13 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
                         rows.append((
                             qv[i], rv[i], cv[i], 0, cx[i], cy[i], net,
                             cx[i], cy[i],
-                            geo.polygon_to_wkb([_hex_ring(cx[i], cy[i], w_)]),
+                            geo.polygon_to_wkb(
+                                [hexgrid.hex_ring(cx[i], cy[i], w_)]),
                             imp_a,
                             *[(hexarea_ if cat_inside[k][i] else 0.0)
                               for k in range(len(cats))]))
                     continue
-                hexring = _hex_ring(cx[i], cy[i], w_)
+                hexring = hexgrid.hex_ring(cx[i], cy[i], w_)
                 # exact connected components of hex ∩ landscape — split
                 # patches get their own rows (st_cast POLYGON semantics,
                 # R/generate_patches.R:160,182)
@@ -275,17 +264,9 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
     # r7: the lattice dimensions are known driver-side, so a bounded
     # lattice (< 2^18 cells) takes dense_index's one-job single-window
     # path — identical numbering, two fewer planning jobs per call.
-    h_ = P.hex_height(hex_width)
-    s_ = P.hex_side(hex_width)
-    step_ = (s_ + h_) / 2.0
-    import math as _math
-    n_cells = ((_math.ceil((refy - miny) / step_)
-                - _math.floor((refy - maxy) / step_) + 1)
-               * (_math.ceil((maxx + (maxy - refy) * _math.tan(_math.pi / 6.0)
-                              - refx) / hex_width)
-                  - _math.floor((minx + (miny - refy)
-                                 * _math.tan(_math.pi / 6.0)
-                                 - refx) / hex_width) + 1))
+    q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(minx, miny, maxx, maxy,
+                                                 hex_width, refx, refy)
+    n_cells = (q_hi - q_lo + 1) * (r_hi - r_lo + 1)
     with ExitStack() as scope:
         if add_removed and impassable:
             # the removed-area collect and dense_index both read the clip

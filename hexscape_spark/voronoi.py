@@ -37,26 +37,6 @@ from .checkpoint import materialise
 # Voronoi cells via half-plane clipping (exact, convex)
 # ---------------------------------------------------------------------------
 
-def _halfplane_clip(ring: np.ndarray, p: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Clip convex ring to the half-plane of points closer to p than to q."""
-    mid = 0.5 * (p + q)
-    d = q - p                      # keep x with dot(x - mid, d) <= 0
-    s = (ring[:, 0] - mid[0]) * d[0] + (ring[:, 1] - mid[1]) * d[1]
-    nxt = np.roll(s, -1)
-    pts = []
-    m = len(ring)
-    for j in range(m):
-        cur_in = s[j] <= 0.0
-        nxt_in = nxt[j] <= 0.0
-        if cur_in:
-            pts.append(ring[j])
-        if cur_in != nxt_in:
-            denom = s[j] - nxt[j]
-            t = s[j] / denom if denom != 0.0 else 0.0
-            pts.append(ring[j] + t * (ring[(j + 1) % m] - ring[j]))
-    return np.array(pts) if pts else np.empty((0, 2))
-
-
 def voronoi_cell(p: np.ndarray, cands: np.ndarray,
                  envelope: np.ndarray) -> np.ndarray:
     """Convex Voronoi cell of point p against the seeds `cands` within a
@@ -72,7 +52,11 @@ def voronoi_cell(p: np.ndarray, cands: np.ndarray,
         far = np.max((cell[:, 0] - p[0]) ** 2 + (cell[:, 1] - p[1]) ** 2)
         if d2[j] > 4.0 * far:
             break                 # sorted by distance: no later seed can cut
-        cell = _halfplane_clip(cell, p, cands[j])
+        # keep the half-plane closer to p: dot(x - mid, cands[j] - p) <= 0
+        mid = 0.5 * (p + cands[j])
+        d = cands[j] - p
+        s = (cell[:, 0] - mid[0]) * d[0] + (cell[:, 1] - mid[1]) * d[1]
+        cell = geo.clip_ring_to_side(cell, -s)
     return cell
 
 

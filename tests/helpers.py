@@ -3,7 +3,7 @@
 Fixture writers build inputs the engine reads (BMP images, ``.warc.gz``
 segments, geocoded pages).  The references are second implementations
 that tests compare the engine against: the reference's genpoly hexagon
-ring (the engine's ring is ``tiling._hex_ring``) and the LAEA inverse
+ring (the engine's ring is ``hexgrid.hex_ring``) and the LAEA inverse
 (the engine only projects forward, ``geo_crs.with_laea``).  None of this
 is engine code: nothing outside ``tests/`` imports it.
 """

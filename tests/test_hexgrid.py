@@ -116,6 +116,35 @@ def test_lattice_covers_bbox(spark):
     assert len(lat) == lat[["q", "r"]].drop_duplicates().shape[0]
 
 
+def test_axial_range_holds_assigned_points_and_sizes_lattice(spark):
+    """hexgrid.axial_range on random bboxes, widths and reference points:
+    every bbox point (corners and interior) lands, under the shared
+    hex-assign SQL, in a cell inside the range, and the lattice over the
+    bbox has one row per cell of the range."""
+    rng = np.random.default_rng(10)
+    con = duckdb.connect()
+    for case in range(40):
+        w = float(rng.uniform(0.5, 50.0))
+        refx, refy = (float(v) for v in rng.uniform(-100.0, 100.0, 2))
+        x0, y0 = (float(v) for v in rng.uniform(-500.0, 500.0, 2))
+        x1, y1 = (float(v) for v in (x0, y0) + rng.uniform(0.0, 8 * w, 2))
+        q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(x0, y0, x1, y1, w,
+                                                     refx, refy)
+        pts = [(x0, y0), (x0, y1), (x1, y0), (x1, y1)] + [
+            (float(x), float(y)) for x, y in
+            zip(rng.uniform(x0, x1, 200), rng.uniform(y0, y1, 200))]
+        _duck_table(con, f"pts{case}", "x DOUBLE, y DOUBLE", pts)
+        cells = con.execute(sqlgen.build_query(
+            f"pts{case}", sqlgen.hex_layers("x", "y", w, refx, refy),
+            select="q, r")).fetchall()
+        assert len(cells) == len(pts)
+        assert all(q_lo <= q <= q_hi and r_lo <= r <= r_hi
+                   for q, r in cells), case
+        if case < 4:
+            lat = hexgrid.lattice(spark, x0, y0, x1, y1, w, refx, refy)
+            assert lat.count() == (q_hi - q_lo + 1) * (r_hi - r_lo + 1)
+
+
 def test_geocode_hotspot_share(spark):
     pdf = geocoded_pages(spark, 5000).toPandas()
     in_hot = 0

@@ -25,9 +25,15 @@ branch, and some caller outside ``tests/`` must set it (by keyword, by
 position or through ``**kwargs``).  Test callers count only for
 ``LIBRARY`` functions and ``OPTIONS`` entries.  Callers are matched by
 the called name, like the reachability scan.
+
+Twins: no two engine function bodies (nested ones included) of at least
+3 statements and 60 AST nodes may be identical once the docstring is
+dropped and identifiers are renamed in order of first appearance.  One
+of the two is a copy: fold it into the other.
 """
 
 import ast
+import copy
 import re
 from pathlib import Path
 
@@ -367,3 +373,72 @@ def test_options_guard_flags_options_entry_without_test_caller():
                           "tests/test_m.py": "m.knob(1, limit=0)\n"},
                          options=("knob.fast", "knob.limit", "knob.mode")) \
         == ["knob.fast: no test sets it", "knob.mode: no test sets it"]
+
+
+def _body_shape(fn) -> tuple[int, int, str]:
+    """(statements, AST nodes, dump) of `fn`'s body without its docstring,
+    each identifier renamed by its order of first appearance."""
+    body = copy.deepcopy(fn.body[1:] if ast.get_docstring(fn) is not None
+                         else fn.body)
+    names: dict[str, str] = {}
+    nodes = 0
+    for node in (n for stmt in body for n in ast.walk(stmt)):
+        nodes += 1
+        for field in ("id", "attr", "arg", "name"):
+            value = getattr(node, field, None)
+            if isinstance(value, str):
+                setattr(node, field, names.setdefault(value, f"v{len(names)}"))
+    return len(body), nodes, "\n".join(ast.dump(stmt) for stmt in body)
+
+
+def twin_bodies(sources: dict[str, str], min_statements: int = 3,
+                min_nodes: int = 60) -> list[str]:
+    """Groups of engine functions whose bodies are identical up to
+    identifier names, as ``path:line name = path:line name``."""
+    groups: dict[str, list[str]] = {}
+    for rel, text in sources.items():
+        if _role(rel) != "engine":
+            continue
+        for fn in ast.walk(ast.parse(text, filename=rel)):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                statements, nodes, shape = _body_shape(fn)
+                if statements >= min_statements and nodes >= min_nodes:
+                    groups.setdefault(shape, []).append(
+                        f"{rel}:{fn.lineno} {fn.name}")
+    return sorted(" = ".join(sorted(g)) for g in groups.values() if len(g) > 1)
+
+
+def test_engine_has_no_twin_bodies():
+    twins = twin_bodies(_repo_sources())
+    assert not twins, "engine functions with one body under two names:\n" \
+        + "\n".join(twins)
+
+
+_SCALED = (
+    "def scaled(xs, lo, k):\n"
+    "    \"\"\"Docstrings never count.\"\"\"\n"
+    "    total = 0.0\n"
+    "    for x in xs:\n"
+    "        if x > lo:\n"
+    "            total += k * (x - lo) ** 2\n"
+    "        else:\n"
+    "            total -= k * (lo - x) / 2.0\n"
+    "    return max(total, 0.0), len(xs)\n")
+
+
+def test_twin_guard_flags_renamed_copy_only():
+    renamed = (_SCALED.replace("scaled", "weighted").replace("total", "acc")
+               .replace("Docstrings never count.", "A copy."))
+    changed = _SCALED.replace("scaled", "halved").replace("2.0", "3.0")
+    small = "def a(x):\n    y = x + 1\n    return y\n"
+    sources = {"hexscape_spark/m.py": _SCALED + small,
+               "hexscape_spark/n.py": renamed + changed,
+               "__spark_entry__.py": small.replace("def a", "def b"),
+               "tests/test_m.py": _SCALED}
+    assert _body_shape(ast.parse(_SCALED).body[0])[:2] == (3, 64)
+    assert twin_bodies(sources) == [
+        "hexscape_spark/m.py:1 scaled = hexscape_spark/n.py:1 weighted"]
+    assert twin_bodies(sources, min_nodes=65) == []
+    assert twin_bodies(sources, min_statements=2, min_nodes=1) == [
+        "__spark_entry__.py:1 b = hexscape_spark/m.py:10 a",
+        "hexscape_spark/m.py:1 scaled = hexscape_spark/n.py:1 weighted"]

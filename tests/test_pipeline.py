@@ -266,14 +266,18 @@ def test_dissolve_per_key_routing_keeps_small_and_empty_keys(spark):
 
 
 def test_dissolve_null_geometry_reads_as_empty(spark):
-    """A NULL geometry is the empty geometry: a key whose rows are all
-    NULL emits (key, empty, 0.0, 0), and NULL rows of another key leave
-    its union unchanged."""
+    """A NULL geometry, POLYGON EMPTY and a MULTIPOLYGON of POLYGON EMPTY
+    are the empty geometry: a key whose rows are all empty emits (key,
+    empty, 0.0, 0), and empty rows of another key leave its union
+    unchanged."""
     from hexscape_spark.dissolve import dissolve
     square = lambda x: bytearray(geo.rect_wkb(x, x, x + 1.0, x + 1.0))  # noqa: E731
+    empty = bytearray(geo.polygon_to_wkb([]))
+    empty_member = bytearray(geo.multipolygon_to_wkb([[]]))
     df = spark.createDataFrame(
-        [("A", None), ("A", None), ("B", square(0.0)), ("B", None),
-         ("B", square(2.0))], "clc STRING, geom_wkb BINARY")
+        [("A", None), ("A", empty), ("A", empty_member), ("B", square(0.0)),
+         ("B", None), ("B", empty), ("B", square(2.0))],
+        "clc STRING, geom_wkb BINARY")
     d = dissolve(df).toPandas().set_index("clc")
     assert geo.wkb_to_polygons(bytes(d.loc["A", "geom_wkb"])) == []
     assert d.loc["A", "area"] == 0.0 and d.loc["A", "n_parts"] == 0

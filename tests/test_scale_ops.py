@@ -51,14 +51,16 @@ def test_full_cells_dominate_cover(spark):
 
 
 def test_cover_null_and_empty_geometry_yield_no_cells(spark):
-    """A NULL or empty polygon covers no cell and leaves the other rows'
-    cover unchanged."""
+    """A NULL or empty polygon (MULTIPOLYGON EMPTY, POLYGON EMPTY, or a
+    MULTIPOLYGON of POLYGON EMPTY) covers no cell and leaves the other
+    rows' cover unchanged."""
     from hexscape_spark.cover import polygon_cell_cover
     schema = "poly_id LONG, geom_wkb BINARY"
     square = (1, bytearray(geo.rect_wkb(0, 0, 5, 5)))
     polys = spark.createDataFrame(
-        [square, (2, None), (3, bytearray(geo.multipolygon_to_wkb([])))],
-        schema)
+        [square, (2, None), (3, bytearray(geo.multipolygon_to_wkb([]))),
+         (4, bytearray(geo.polygon_to_wkb([]))),
+         (5, bytearray(geo.multipolygon_to_wkb([[]])))], schema)
     cov = polygon_cell_cover(polys, hex_width=2.0).toPandas()
     alone = polygon_cell_cover(spark.createDataFrame([square], schema),
                                hex_width=2.0).toPandas()

@@ -149,12 +149,10 @@ def test_split_oracle_matches_kernel_for_every_cell():
     the NumPy kernel's min_prop-filtered component areas against the
     oracle rows for EVERY lattice cell — no Spark, no driver — so any
     fixture-constant edit that breaks the classifier fails here."""
-    import math
-
     import duckdb
 
     import __spark_entry__ as m
-    from hexscape_spark.tiling import _hex_ring
+    from hexscape_spark import hexgrid
 
     ax0, ay0, ax1, ay1 = m._SPH_A
     bx0, by0, bx1, by1 = m._SPH_B
@@ -162,21 +160,15 @@ def test_split_oracle_matches_kernel_for_every_cell():
     refx, refy = m._SPH_REF
     outer = np.array([[ax0, ay0], [ax1, ay0], [ax1, ay1], [ax0, ay1]], float)
     hole = np.array([[bx0, by0], [bx0, by1], [bx1, by1], [bx1, by0]], float)
-    h = P.hex_height(w)
-    s = P.hex_side(w)
-    step = (s + h) / 2.0
-    r_lo = math.floor((refy - ay1) / step)
-    r_hi = math.ceil((refy - ay0) / step)
-    tan30 = math.tan(math.pi / 6.0)
-    q_lo = math.floor((ax0 + (ay0 - refy) * tan30 - refx) / w)
-    q_hi = math.ceil((ax1 + (ay1 - refy) * tan30 - refx) / w)
+    q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(ax0, ay0, ax1, ay1, w,
+                                                 refx, refy)
     min_area = 0.01 * P.hex_area(w)
     kernel = {}
     for q in range(q_lo, q_hi + 1):
         for r in range(r_lo, r_hi + 1):
             cx = refx + r * (w / 2.0) + q * w
-            cy = refy - r * step
-            hexring = _hex_ring(cx, cy, w)
+            cy = refy - r * hexgrid.row_step(w)
+            hexring = hexgrid.hex_ring(cx, cy, w)
             comps = geo.clip_polygon_components([outer, hole], hexring)
             areas = sorted(round(a, 9) for a in
                            (geo.polygon_area(c) for c in comps)
