@@ -8,9 +8,9 @@ Core modules (README.md lists them all):
   tiling       generate_patches equivalent (lattice -> clip -> LU rollup)
   neighbours   adjacency graph with border lengths + compass directions
   rollup       seeded weighted sampling per group
-  textops      language-ID, quality scoring, token counting, fingerprints
+  textops      language-ID, quality scoring, token counting, repetition
   dedup        exact / MinHash-LSH / SimHash / n-gram-Jaccard dedup
-  similarity   brute-force + LSH-bucketed cosine ANN over embeddings
+  similarity   LSH- and IVF-bucketed cosine ANN over embeddings
   sqlgen       shared SQL fragments (single source of truth w/ DuckDB oracle)
 """
 

@@ -200,10 +200,8 @@ def embedding_near_dup_pairs(df: DataFrame, key: str = "vec_id",
                              vec: str = "embedding",
                              threshold: float = 0.45) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, EXACT: all pairs with
-    cosine >= threshold (rounded to 6 dp).  This is the verify/oracle
-    kernel (all-pairs theta join — test corpora only); the corpus-scale
-    composition is embedding_near_dup_pairs_lsh, whose recall against this
-    kernel is pytest-pinned on planted duplicates."""
+    cosine >= threshold (rounded to 6 dp): an all-pairs theta join,
+    sized for test corpora only."""
     from .similarity import _dot, with_unit_norm
     u = with_unit_norm(df, vec).select(F.col(key), F.col("unit_vec"))
     a = u.selectExpr(f"{key} AS a", "unit_vec AS ua")
@@ -213,106 +211,6 @@ def embedding_near_dup_pairs(df: DataFrame, key: str = "vec_id",
     return (pairs.withColumn("cosine", cos)
             .where(F.col("cosine") >= threshold)
             .select("a", "b", "cosine"))
-
-
-def embedding_near_dup_pairs_lsh(df: DataFrame, key: str = "vec_id",
-                                 vec: str = "embedding",
-                                 threshold: float = 0.45, planes: int = 8,
-                                 dim: int = 64, tables: int = 4,
-                                 max_bucket: int | None = 10_000) -> DataFrame:
-    """Embedding-cosine near-duplicates at corpus scale (VERDICT r02 #3):
-    multi-table hyperplane-LSH candidate generation -> the EXACT cosine
-    predicate, applied only to candidates.  Every join is an equi-join on
-    (table, bucket) or on `key` — never the all-pairs theta join of the
-    exact kernel (embedding_near_dup_pairs, which remains the oracle on
-    test corpora).  Recall is the OR-construction collision probability
-    1 - (1 - p^planes)^tables; per-table buckets above `max_bucket` are
-    dropped before the self-join (degenerate identical-vector clusters).
-    Returns (a, b, cosine) with a < b and cosine >= threshold (6 dp)."""
-    from .similarity import _dot, _lsh_sketch
-    vecs, buckets = _lsh_sketch(df, key, vec, planes, dim, tables)
-    cands = _bucket_pairs(buckets, key, max_bucket)
-    pairs = (cands
-             .join(vecs.selectExpr(f"{key} AS a", "unit_vec AS ua"), on="a")
-             .join(vecs.selectExpr(f"{key} AS b", "unit_vec AS ub"), on="b"))
-    cos = F.round(_dot(F.col("ua"), F.col("ub")), 6)
-    return (pairs.withColumn("cosine", cos)
-            .where(F.col("cosine") >= threshold)
-            .select("a", "b", "cosine"))
-
-
-def dedup_families(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
-                   a: str = "id_a", b: str = "id_b",
-                   quality: str | None = None) -> DataFrame:
-    """Duplicate-FAMILY clustering: the pipeline stage after pair
-    generation (minhash_lsh_pairs / ngram_jaccard_pairs /
-    embedding_near_dup_pairs all emit (a, b); pass a="a", b="b" or rename
-    to the default id_a/id_b) in a C4/RefinedWeb-style corpus dedup —
-    near-duplication is transitive in effect (A~B, B~C => one family), so
-    pairs must be clustered before dropping.
-
-    Connected components over the pair graph (graph.connected_components:
-    O(log n) equi-join rounds) give every document a `family_id` (its own
-    id when unpaired) and `family_size`; exactly one row per family is
-    flagged `is_canonical` — the max-`quality` member (ties and the
-    default: min key), the keep-one rule production pipelines apply.
-
-    Scale shape: one left equi-join of the corpus against the component
-    map (pairs are sparse — the map is far smaller than the corpus), then
-    ONE hash aggregate per family (MIN(struct) with map-side partial
-    combine) joined back — deliberately NOT a window over family_id,
-    which would funnel a degenerate all-connected corpus (every boiler-
-    plate page in one family) into a single task.  The CORPUS never
-    touches the driver; the pair graph does when it fits
-    connected_components' bounded fast path (graph.CC_LOCAL_CAP).
-    """
-    from .graph import connected_components
-
-    # NULL-key rows bypass the family machinery entirely: each is its own
-    # singleton family (family_id NULL, canonical).  Grouping them would
-    # collapse EVERY NULL-key row into one NULL family and the null-safe
-    # canonical equality would crown all of them (r4 ADVICE — the earlier
-    # fix only survived with a single NULL-key row).
-    nulls = df.where(F.col(key).isNull())
-    comp = connected_components(pairs, a=a, b=b) \
-        .withColumnRenamed("node", key)
-    fam = (df.where(F.col(key).isNotNull())
-           .join(comp, on=key, how="left")
-           .withColumn("family_id", F.coalesce("comp", F.col(key)))
-           .drop("comp"))
-    # canonical = max quality, ties -> min key: MIN over
-    # struct(-quality, key) is exactly that ordering, as a combinable
-    # agg.  NULL quality sorts LAST (coalesce to +inf), matching the
-    # window form's desc-NULLS-LAST this replaced — struct MIN would
-    # otherwise put a NULL field first and crown the null-quality doc
-    # (r4 review).
-    pick = F.struct(F.col(key).alias("k")) if quality is None \
-        else F.struct(F.coalesce(-F.col(quality).cast("double"),
-                                 F.lit(float("inf"))).alias("negq"),
-                      F.col(key).alias("k"))
-    reps = (fam.groupBy("family_id")
-            .agg(F.min(pick).alias("__r"),
-                 F.count(F.lit(1)).alias("family_size"))
-            .select(F.col("family_id").alias("__fid"),
-                    F.col("__r.k").alias("__canon"), "family_size"))
-    keyed = (fam.join(reps, F.col("family_id") == F.col("__fid"))
-             .withColumn("is_canonical", F.col(key) == F.col("__canon"))
-             .drop("__fid", "__canon"))
-    null_fams = (nulls
-                 .withColumn("family_id", F.col(key))      # NULL marker
-                 .withColumn("family_size", F.lit(1).cast("long"))
-                 .withColumn("is_canonical", F.lit(True)))
-    return keyed.unionByName(null_fams)
-
-
-def dedup_canonical(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
-                    a: str = "id_a", b: str = "id_b",
-                    quality: str | None = None) -> DataFrame:
-    """The deduplicated corpus: one canonical document per duplicate
-    family (see dedup_families), original columns preserved."""
-    return (dedup_families(df, pairs, key=key, a=a, b=b, quality=quality)
-            .where(F.col("is_canonical"))
-            .drop("is_canonical", "family_id", "family_size"))
 
 
 def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",

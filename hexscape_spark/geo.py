@@ -31,7 +31,6 @@ import numpy as np
 # --- WKB codecs --------------------------------------------------------------
 
 _WKB_POINT = 1
-_WKB_LINESTRING = 2
 _WKB_POLYGON = 3
 _WKB_MULTIPOLYGON = 6
 
@@ -41,16 +40,19 @@ def ring_to_wkb_coords(ring: np.ndarray) -> bytes:
     return struct.pack("<I", len(closed)) + closed.astype("<f8").tobytes()
 
 
+def _wkb_counted(wkb_type: int, parts: list[bytes]) -> bytes:
+    """Little-endian WKB header (byte order, type, part count) + parts."""
+    return b"".join([b"\x01", struct.pack("<II", wkb_type, len(parts)),
+                     *parts])
+
+
 def polygon_to_wkb(polygon: list[np.ndarray]) -> bytes:
-    out = [b"\x01", struct.pack("<I", _WKB_POLYGON), struct.pack("<I", len(polygon))]
-    out += [ring_to_wkb_coords(r) for r in polygon]
-    return b"".join(out)
+    return _wkb_counted(_WKB_POLYGON,
+                        [ring_to_wkb_coords(r) for r in polygon])
 
 
 def multipolygon_to_wkb(polys: list[list[np.ndarray]]) -> bytes:
-    out = [b"\x01", struct.pack("<I", _WKB_MULTIPOLYGON), struct.pack("<I", len(polys))]
-    out += [polygon_to_wkb(p) for p in polys]
-    return b"".join(out)
+    return _wkb_counted(_WKB_MULTIPOLYGON, [polygon_to_wkb(p) for p in polys])
 
 
 def _read_ring(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
@@ -658,70 +660,6 @@ def douglas_peucker(ring: np.ndarray, tolerance: float) -> np.ndarray:
     return out if len(out) >= 3 else ring
 
 
-def buffer_parts(polys: list[list[np.ndarray]], dist: float,
-                 quad_segs: int = 8) -> list[list[np.ndarray]]:
-    """Positive-distance st_buffer (round joins) as OVERLAPPING parts whose
-    union is the Minkowski sum P ⊕ disk(dist): the polygons themselves +
-    one rectangle per boundary edge (both rings: outer edges grow, hole
-    edges shrink the hole) + one (4*quad_segs)-gon disk per vertex.
-
-    Pair with union_area for the buffered area and multipolygon_to_wkb for
-    a parts representation; for CONTAINMENT tests prefer points_in_buffer,
-    which is exact (no disk polygonization error).  Reference usages:
-    tolerance inflation (R/generate_neighbours.R:33-36,54) and impassable
-    smoothing (R/generate_patches.R:193).
-    """
-    if dist <= 0:
-        return polys
-    n_arc = max(4, 4 * quad_segs)
-    t = np.linspace(0.0, 2.0 * np.pi, n_arc, endpoint=False)
-    disk = np.c_[np.cos(t), np.sin(t)] * dist
-    parts: list[list[np.ndarray]] = [p for p in polys]
-    for poly in polys:
-        for ring in poly:
-            a = ring
-            b = np.roll(ring, -1, axis=0)
-            for i in range(len(ring)):
-                e = b[i] - a[i]
-                ln = float(np.hypot(*e))
-                if ln > 0.0:
-                    nx, ny = -e[1] / ln * dist, e[0] / ln * dist
-                    parts.append([np.array([
-                        [a[i][0] + nx, a[i][1] + ny],
-                        [b[i][0] + nx, b[i][1] + ny],
-                        [b[i][0] - nx, b[i][1] - ny],
-                        [a[i][0] - nx, a[i][1] - ny]])])
-                parts.append([disk + a[i]])
-    return parts
-
-
-def buffer_area(polys: list[list[np.ndarray]], dist: float,
-                quad_segs: int = 8) -> float:
-    """Area of st_buffer(polys, dist) — exact union of the parts (disk
-    polygonization is the only approximation; error -> 0 with quad_segs)."""
-    return union_area(buffer_parts(polys, dist, quad_segs))
-
-
-def points_in_buffer(px: np.ndarray, py: np.ndarray,
-                     polys: list[list[np.ndarray]], dist: float) -> np.ndarray:
-    """EXACT st_contains(st_buffer(polys, dist), point): distance to the
-    areal geometry <= dist — no polygonization at all."""
-    return dist_points_to_polygons(px, py, polys) <= dist
-
-
-def buffer_polygons(polys: list[list[np.ndarray]], dist: float,
-                    quad_segs: int = 8) -> list[list[np.ndarray]]:
-    """st_buffer(dist > 0) returning the actual buffered POLYGONS: the
-    Minkowski parts (buffer_parts) boundary-traced through union_polygons.
-    Disk polygonization (4*quad_segs-gon per vertex) is the only
-    approximation, identical to GEOS's quad-segment convention; area
-    equals buffer_area by construction.  Reference usages:
-    R/generate_neighbours.R:33-36,54 and R/generate_patches.R:193."""
-    if dist <= 0:
-        return polys
-    return union_polygons(buffer_parts(polys, dist, quad_segs))
-
-
 def simplify_polygons_keep(polys: list[list[np.ndarray]], keep: float,
                            iters: int = 40) -> list[list[np.ndarray]]:
     """ms_simplify(keep=, method="dp") (R/extract_corine.R:273): binary-
@@ -917,6 +855,15 @@ class UnionTraceError(ValueError):
     """Raised when boundary stitching fails on degenerate input."""
 
 
+def find(parent, i):
+    """Union-find root of `i` with path halving; `parent` is a list or
+    dict mapping each element to its parent (roots map to themselves)."""
+    while parent[i] != i:
+        parent[i] = parent[parent[i]]
+        i = parent[i]
+    return i
+
+
 def overlap_components(polys: list[list[np.ndarray]],
                        tol: float | None = None) -> list[list[int]]:
     """Connected components of a polygon set under touch/overlap — the
@@ -942,13 +889,6 @@ def overlap_components(polys: list[list[np.ndarray]],
     cell = max(float(np.median(wids)), float(np.median(hgts)), 1e-12)
 
     parent = list(range(n))
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
     grid: dict[tuple[int, int], list[int]] = {}
     spans = []
     for i in range(n):
@@ -966,7 +906,7 @@ def overlap_components(polys: list[list[np.ndarray]],
             i = members[ai]
             for bi in range(ai + 1, len(members)):
                 j = members[bi]
-                if find(i) == find(j):
+                if find(parent, i) == find(parent, j):
                     continue
                 key = (i, j) if i < j else (j, i)
                 if key in tested:
@@ -977,10 +917,10 @@ def overlap_components(polys: list[list[np.ndarray]],
                         bi_[3] < bj_[1] - tol or bj_[3] < bi_[1] - tol):
                     continue
                 if polygons_distance([polys[i]], [polys[j]]) <= tol:
-                    parent[find(i)] = find(j)
+                    parent[find(parent, i)] = find(parent, j)
     comps: dict[int, list[int]] = {}
     for i in range(n):
-        comps.setdefault(find(i), []).append(i)
+        comps.setdefault(find(parent, i), []).append(i)
     return [sorted(v) for v in sorted(comps.values())]
 
 
@@ -1410,15 +1350,6 @@ def _boolean_polygons(a: list[list[np.ndarray]], b: list[list[np.ndarray]],
         return out
 
 
-def intersection_polygons(a: list[list[np.ndarray]],
-                          b: list[list[np.ndarray]]
-                          ) -> list[list[np.ndarray]]:
-    """st_intersection returning actual polygons for ARBITRARY (multi)
-    polygon sets (the convex-window path stays clip_polygon_components):
-    exact boundary trace of (∪a) ∩ (∪b); area equals intersection_area."""
-    return _boolean_polygons(a, b, "intersection")
-
-
 def difference_polygons(a: list[list[np.ndarray]],
                         b: list[list[np.ndarray]]
                         ) -> list[list[np.ndarray]]:
@@ -1426,17 +1357,6 @@ def difference_polygons(a: list[list[np.ndarray]],
     geometry form of the coverage-gap computation
     (R/extract_corine.R:177-205)."""
     return _boolean_polygons(a, b, "difference")
-
-
-def union_polygons(polys: list[list[np.ndarray]]) -> list[list[np.ndarray]]:
-    """Exact union of arbitrary (multi)polygon parts as actual polygons —
-    the geometry counterpart of union_area (st_union, R/extract_corine.R:
-    156).  Disjoint parts pass through untouched; each touch/overlap
-    component is boundary-traced exactly (union_component)."""
-    out: list[list[np.ndarray]] = []
-    for comp in overlap_components(polys):
-        out.extend(union_component([polys[i] for i in comp]))
-    return out
 
 
 def polygons_bounds(polys: list[list[np.ndarray]]) -> tuple[float, float, float, float]:

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .checkpoint import cached, materialise
+from .geo import find
 
 
 # edge-count bound for the in-memory BFS fast path: ~2M (node, next)
@@ -109,22 +110,15 @@ def _union_find_min_labels(parent: dict, pairs) -> dict:
     """Path-halving union-find over arbitrary hashable ids: `parent`
     maps every node to itself on entry; returns {node: min id of its
     component} (None-id nodes label None — a singleton by the join
-    semantics of the distributed loop).  Shared by the CC fast path;
-    habitat's tile labeller keeps its positional-array variant (hot
-    loop over dense indices)."""
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
+    semantics of the distributed loop).  The CC fast path, over the
+    same union-find (geo.find) as habitat's tile labeller."""
     for x, y in pairs:
-        rx, ry = find(x), find(y)
+        rx, ry = find(parent, x), find(parent, y)
         if rx != ry:
             parent[ry] = rx
     groups: dict = {}
     for v in parent:
-        groups.setdefault(find(v), []).append(v)
+        groups.setdefault(find(parent, v), []).append(v)
     labels: dict = {}
     for members in groups.values():
         nn = [m for m in members if m is not None]
@@ -137,8 +131,8 @@ def _union_find_min_labels(parent: dict, pairs) -> dict:
 # edge/node count bound for the in-memory CC fast path — the same
 # explicit-cap bounded-driver pattern as bfs_hops/_HABITAT_DIM_CAP.
 # Covers the QUOTIENT graphs two-level grid CC produces (boundary-
-# proportional, tiny) and small dedup-pair sets; corpus-scale pair
-# graphs take the iterative distributed loop.
+# proportional, tiny); larger graphs take the iterative distributed
+# loop.
 CC_LOCAL_CAP = 2_000_000
 
 
@@ -161,9 +155,7 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
     each materialised so round k never replays rounds 1..k-1.
     Both regimes produce the identical min-node-id labelling (pinned by
     test_connected_components_regimes_agree).  This is the generic form
-    of habitat.grid_components (which now delegates here) and the
-    clustering step of dedup.dedup_families (the C4/RefinedWeb-style
-    "one canonical document per duplicate family" pipeline stage).
+    of habitat.grid_components, which delegates here.
 
     `nodes` optionally supplies isolated vertices (single-column `node`);
     by default the vertex set is the ids appearing in `edges`.
@@ -230,9 +222,8 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
         if changed == 0:
             break
     else:
-        # dedup_canonical rides on these labels (which documents get
-        # DROPPED) — a partially-merged labelling must be an error, never
-        # a silent wrong answer (r4 ADVICE).  64 pointer-jumping rounds
+        # a partially-merged labelling must be an error, never a silent
+        # wrong answer (r4 ADVICE).  64 pointer-jumping rounds
         # is unreachable for any real graph (components of depth 2^64).
         if changed != 0:
             raise RuntimeError(

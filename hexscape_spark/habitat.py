@@ -87,13 +87,6 @@ def grid_components(cells: DataFrame, max_rounds: int = 64,
         key = (iy << 32) | (ix & 0xFFFFFFFF)
         pos = {int(k): i for i, k in enumerate(key)}
         parent = list(range(len(key)))
-
-        def find(a: int) -> int:
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
         for i in range(len(key)):
             for nk in (int(key[i]) + 1 if (int(ix[i]) + 1) % (1 << 32)
                        else None,              # ix+1 wraps the packing
@@ -104,10 +97,10 @@ def grid_components(cells: DataFrame, max_rounds: int = 64,
                     continue
                 j = pos.get(nk)
                 if j is not None:
-                    ra, rb = find(i), find(j)
+                    ra, rb = geo.find(parent, i), geo.find(parent, j)
                     if ra != rb:
                         parent[rb] = ra
-        roots = np.fromiter((find(i) for i in range(len(key))),
+        roots = np.fromiter((geo.find(parent, i) for i in range(len(key))),
                             dtype=np.int64, count=len(key))
         # representative = min node key of the local component
         rep_of: dict[int, int] = {}

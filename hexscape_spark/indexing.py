@@ -83,7 +83,7 @@ def global_cumsum(df: DataFrame, order_cols: list[str], value: str,
         # keep INTEGER sums exact: SUM(long) collects as Python int, and
         # int offsets emitted as long literals keep the running sum exact
         # past 2^53 where a float accumulator would silently round (r4
-        # review — with_pack_index's window ids depend on this)
+        # review)
         integral = all(t is None or isinstance(t, int)
                        for t in totals.values())
         offsets = {}

@@ -436,48 +436,3 @@ def synth_media(spark, n: int) -> DataFrame:
                                               "mime", "n_bytes"])
 
     return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = ("media_id LONG, frame_idx INT, n_frames INT, "
-                "payload BINARY, mime STRING, kind STRING")
-
-
-def sample_frames(df: DataFrame, stride: int = 2, payload: str = "payload",
-                  kind: str = "kind") -> DataFrame:
-    """Frame sampling over video payloads (the brief's multimodal
-    decode / frame-sample op): every `stride`-th frame of each AVI is
-    re-encoded as a standalone P6 PPM image row — the shape a downstream
-    image pipeline (resize_image / image_features / extract_features)
-    consumes directly.  Non-video rows pass through untouched as
-    frame_idx 0 of 1.
-
-    Arrow-batched mapInPandas; each task decodes only its own rows, so
-    the stage shards like any map over the media table."""
-    if stride < 1:
-        raise ValueError("stride must be >= 1")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            mimes = pdf["mime"] if "mime" in pdf.columns \
-                else [None] * len(pdf)
-            for mid, k, pl, mm_ in zip(pdf["media_id"], pdf[kind],
-                                       pdf[payload], mimes):
-                mid = int(mid)
-                if k == "video":
-                    _, frames = decode_avi(bytes(pl))
-                    nf = len(frames)
-                    for idx in range(0, nf, stride):
-                        rows.append((mid, idx, nf,
-                                     encode_ppm(frames[idx]),
-                                     "image/x-portable-pixmap", "image"))
-                else:
-                    # pass-through keeps the row's own mime/kind (r4
-                    # review: a None mime made stills and audio
-                    # indistinguishable downstream)
-                    rows.append((mid, 0, 1, bytes(pl), mm_, k))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx",
-                                              "n_frames", "payload",
-                                              "mime", "kind"])
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)

@@ -1,21 +1,19 @@
 """Approximate-nearest-neighbour search over an embedding column.
 
-Brute-force cosine top-k as the exact baseline, and random-hyperplane-LSH
-/ IVF bucketed variants as the scale path: at 10^12 rows the cross join
-is impossible, but bucketing on sign-bit sketches / nearest-centroid
-lists turns it into an equi-join whose buckets are independently joinable
-(and AQE-splittable on skew).
+Random-hyperplane-LSH and IVF bucketed cosine top-k: at 10^12 rows the
+exact cross join is impossible, but bucketing on sign-bit sketches /
+nearest-centroid lists turns it into an equi-join whose buckets are
+independently joinable (and AQE-splittable on skew).
 
 Scoring arithmetic (r6): dot products and unit-norms run as
 Arrow-batched numpy (einsum over stacked batches) — the earlier
 F.aggregate/zip_with HOF forms LOOK JVM-native but execute as
-interpreted lambda folds at ~ms/row on 64-wide vectors (the r4
-with_lm_score lesson, re-measured here: 10M scored pairs took 75 s HOF
-vs ~4 s Arrow).  Cross-engine value semantics are unaffected: every
-consumer rounds the cosine (rank_round / ROUND 6dp) before ranking or
-emitting, which already absorbs summation-order ulps between Spark and
-DuckDB's list_dot_product — numpy's pairwise order sits inside the same
-tolerance.
+interpreted lambda folds at ~ms/row on 64-wide vectors (measured: 10M
+scored pairs took 75 s HOF vs ~4 s Arrow).  Cross-engine value
+semantics are unaffected: every consumer rounds the cosine (rank_round /
+ROUND 6dp) before ranking or emitting, which already absorbs
+summation-order ulps between Spark and DuckDB's list_dot_product —
+numpy's pairwise order sits inside the same tolerance.
 """
 
 from __future__ import annotations
@@ -96,70 +94,6 @@ def _unit_arrow(a: pd.Series) -> pd.Series:
 def with_unit_norm(df: DataFrame, vec: str = "embedding",
                    out: str = "unit_vec") -> DataFrame:
     return df.withColumn(out, _unit_arrow(F.col(vec)))
-
-
-def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame,
-                           key: str = "vec_id", vec: str = "embedding",
-                           k: int = 5) -> DataFrame:
-    """Exact top-k cosine neighbours of each query row.
-
-    Scale contract: |queries| small (the query MATRIX broadcasts to every
-    task), corpus arbitrarily large — one matmul mapInPandas over corpus
-    batches with per-batch partial top-k, so only ~batches x |queries| x k
-    candidate rows ever shuffle (never the |corpus| x |queries| pair
-    relation: the r6 rewrite — the previous broadcast-join form moved
-    every pair's two 64-wide vectors through Arrow and was 10x slower).
-    Per-batch selection keeps the kth-largest THRESHOLD with ties (and
-    k+1 slots for the self-pair), so the final global window reproduces
-    the exact result under any partitioning."""
-    sc = df.sparkSession.sparkContext
-    qpd = queries.select(F.col(key).alias("query_id"),
-                         F.col(vec).alias("qv")) \
-        .where(F.col(vec).isNotNull()).toPandas()
-    # ADVICE r06: the 'queries small' contract was unenforced — a huge
-    # query set silently OOMed the driver instead of failing fast
-    if len(qpd) > 1_000_000:
-        raise ValueError(
-            f"cosine_topk_bruteforce: {len(qpd)} query rows collect to the "
-            "driver as a dense matrix; this path requires a small query "
-            "set (use the corpus as df and the small side as queries)")
-    dims = {len(v) for v in qpd["qv"]}
-    if len(dims) > 1:
-        raise ValueError(
-            f"cosine_topk_bruteforce: ragged query vector dimensions {sorted(dims)}")
-    qm = np.array([np.asarray(v, dtype=np.float64) for v in qpd["qv"]])
-    if len(qm):
-        qm = _unit_rows(qm)
-    bq = sc.broadcast((qpd["query_id"].to_numpy(), qm))
-    key_t = dict(df.dtypes)[key]
-    # normalisation happens INSIDE score() (r6 review): a with_unit_norm
-    # pre-pass would push every corpus vector through a second full
-    # Arrow round-trip for nothing
-    c = df.select(F.col(key).alias("nn_id"), F.col(vec).alias("cv")) \
-        .where(F.col(vec).isNotNull())
-    schema = f"query_id {key_t}, nn_id {key_t}, cosine DOUBLE"
-
-    def score(batches):
-        qids, qm = bq.value
-        for pdf in batches:
-            nb = len(pdf)
-            if nb == 0 or len(qids) == 0:
-                continue
-            cm = _unit_rows(np.array([np.asarray(v, dtype=np.float64)
-                                      for v in pdf["cv"]]))
-            ids = pdf["nn_id"].to_numpy()
-            sims = cm @ qm.T                     # nb x nq
-            kk = min(k + 1, nb)                  # +1 survives self-pair drop
-            thr = np.partition(sims, nb - kk, axis=0)[nb - kk, :]
-            ci, qi = np.nonzero(sims >= thr[None, :])
-            yield pd.DataFrame({"query_id": qids[qi], "nn_id": ids[ci],
-                                "cosine": sims[ci, qi]})
-
-    scored = c.mapInPandas(score, schema=schema) \
-        .where(F.col("nn_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
 
 
 def _hyperplane(dim: int, plane: int) -> list[float]:
@@ -346,8 +280,7 @@ def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
     oracle whose float summation order differs in the last ulp.
 
     `queries` optionally restricts the query side (same schema as `df`;
-    default: every corpus row queries) — the corpus is always `df`, like
-    cosine_topk_bruteforce's (df, queries) contract."""
+    default: every corpus row queries) — the corpus is always `df`."""
     # NULL embeddings cannot be routed to a list nor scored: exclude
     # them from both sides (r6 review — they previously crashed the
     # quantizer and could pad a sparse query's top-k with NULL cosines)
@@ -385,8 +318,7 @@ def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
 
 # `small_corpus` collects the whole unit-vector matrix to the driver and
 # broadcasts it: 1M rows of 64 doubles is already 512 MB on the driver
-# and in every executor, the same row bound cosine_topk_bruteforce puts
-# on its collected query matrix.
+# and in every executor.
 SMALL_CORPUS_MAX_ROWS = 1_000_000
 
 

@@ -121,11 +121,11 @@ def read_warc(spark: SparkSession, path: str,
 
 
 def _segment_walker(record_types: tuple[str, ...], max_segment_bytes: int):
-    """The per-task segment parser shared by the batch and streaming
-    readers: walks each (path, content) file, enforces the per-task
-    byte bound, prefilters record types, and yields one Arrow batch PER
-    SEGMENT so a task's working set is one segment's (filtered) records
-    rather than the whole binaryFile batch (r4 review)."""
+    """The per-task segment parser of read_warc: walks each (path,
+    content) file, enforces the per-task byte bound, prefilters record
+    types, and yields one Arrow batch PER SEGMENT so a task's working set
+    is one segment's (filtered) records rather than the whole binaryFile
+    batch (r4 review)."""
     types = set(record_types)
     cols = ["segment", "record_type", "url", "warc_date",
             "content_type", "payload"]
@@ -150,36 +150,6 @@ def _segment_walker(record_types: tuple[str, ...], max_segment_bytes: int):
                 yield pd.DataFrame(rows, columns=cols)
 
     return run
-
-
-def stream_warc(spark: SparkSession, path: str,
-                record_types: tuple[str, ...] = ("response",),
-                max_segment_bytes: int = MAX_SEGMENT_BYTES,
-                max_file_age: str = "10000d") -> DataFrame:
-    """STREAMING WARC ingest (r5): the same segment walk over Structured
-    Streaming's binaryFile file source — new `.warc.gz` segments landing
-    under `path` are parsed incrementally (exactly-once per file via the
-    stream checkpoint), which is how a continuously-crawling corpus
-    build consumes CommonCrawl-style drops without re-reading history.
-    One segment per task, identical schema and parsing to read_warc
-    (`_segment_walker` is shared; parity pinned by
-    test_stream_warc_equals_batch).
-
-    `max_file_age` overrides FileStreamSource's default 7-day cutoff,
-    which would SILENTLY skip backfilled segments whose preserved mtime
-    is older than the newest file seen (r5 review — an rsync'd historic
-    CommonCrawl drop must ingest, not vanish).  The effectively-disabled
-    default means the source's seen-files log grows with segment count;
-    tighten it only for sources that genuinely never backfill."""
-    files = (spark.readStream.format("binaryFile")
-             .schema("path STRING, modificationTime TIMESTAMP, "
-                     "length LONG, content BINARY")
-             .option("maxFileAge", max_file_age)
-             .load(path)
-             .select("path", "content"))
-    return files.mapInPandas(
-        _segment_walker(record_types, max_segment_bytes),
-        schema=WARC_SCHEMA)
 
 
 def http_body(payload: bytes) -> bytes:

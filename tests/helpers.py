@@ -3,9 +3,12 @@
 Fixture writers build inputs the engine reads (BMP images, ``.warc.gz``
 segments, geocoded pages).  The references are second implementations
 that tests compare the engine against: the reference's genpoly hexagon
-ring (the engine's ring is ``hexgrid.hex_ring``) and the LAEA inverse
-(the engine only projects forward, ``geo_crs.with_laea``).  None of this
-is engine code: nothing outside ``tests/`` imports it.
+ring (the engine's ring is ``hexgrid.hex_ring``), the LAEA inverse
+(the engine only projects forward, ``geo_crs.with_laea``) and the exact
+brute-force cosine top-k the ANN paths are checked against.
+``union_polygons`` composes the engine's exact union kernels over a whole
+polygon set, the way ``dissolve`` runs them per group.  None of this is
+engine code: nothing outside ``tests/`` imports it.
 """
 
 from __future__ import annotations
@@ -14,11 +17,14 @@ import math
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-from hexscape_spark import hexgrid
+from hexscape_spark import geo, hexgrid
 from hexscape_spark import params as P
 from hexscape_spark.geo_crs import _A, _E, _E2, _QP, _RQ, _q_authalic
+from hexscape_spark.similarity import _unit_rows
 from hexscape_spark.synth import pages
 
 
@@ -120,3 +126,53 @@ def laea_inverse(e: np.ndarray, n: np.ndarray,
             + np.log((1 - esphi) / (1 + esphi)) / (2 * _E))
         phi = phi + np.where(np.isfinite(corr), corr, 0.0)
     return np.degrees(phi), lon0_deg + np.degrees(lam)
+
+
+def union_polygons(polys: list) -> list:
+    """Exact union of arbitrary (multi)polygon parts as polygons: each
+    touch/overlap component (geo.overlap_components) boundary-traced by
+    geo.union_component, disjoint parts passed through."""
+    return [piece for comp in geo.overlap_components(polys)
+            for piece in geo.union_component([polys[i] for i in comp])]
+
+
+def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame,
+                           key: str = "vec_id", vec: str = "embedding",
+                           k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbours of each (small) query set row over
+    the corpus `df`, self-pairs and NULL embeddings skipped, ties by id.
+    The query matrix broadcasts; each corpus batch keeps its rows at or
+    above the (k+1)-th best score per query, so the final window is exact
+    under any partitioning."""
+    qpd = queries.select(F.col(key).alias("query_id"),
+                         F.col(vec).alias("qv")) \
+        .where(F.col(vec).isNotNull()).toPandas()
+    qm = np.array([np.asarray(v, dtype=np.float64) for v in qpd["qv"]])
+    bq = df.sparkSession.sparkContext.broadcast(
+        (qpd["query_id"].to_numpy(), _unit_rows(qm) if len(qm) else qm))
+    key_t = dict(df.dtypes)[key]
+    schema = f"query_id {key_t}, nn_id {key_t}, cosine DOUBLE"
+
+    def score(batches):
+        qids, qm = bq.value
+        for pdf in batches:
+            nb = len(pdf)
+            if nb == 0 or len(qids) == 0:
+                continue
+            cm = _unit_rows(np.array([np.asarray(v, dtype=np.float64)
+                                      for v in pdf["cv"]]))
+            sims = cm @ qm.T
+            kk = min(k + 1, nb)
+            thr = np.partition(sims, nb - kk, axis=0)[nb - kk, :]
+            ci, qi = np.nonzero(sims >= thr[None, :])
+            yield pd.DataFrame({"query_id": qids[qi],
+                                "nn_id": pdf["nn_id"].to_numpy()[ci],
+                                "cosine": sims[ci, qi]})
+
+    scored = df.select(F.col(key).alias("nn_id"), F.col(vec).alias("cv")) \
+        .where(F.col(vec).isNotNull()) \
+        .mapInPandas(score, schema) \
+        .where(F.col("nn_id") != F.col("query_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))

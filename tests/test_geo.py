@@ -164,29 +164,6 @@ def test_clip_components_touching_vertex_and_hole():
     assert got == pytest.approx(want, abs=1e-9)
 
 
-def test_buffer_area_and_containment():
-    """st_buffer (positive distance): union-of-parts area converges to
-    area + perimeter*d + pi*d^2 for a convex input; containment is exact
-    via the distance test."""
-    sq = [geo.rect_ring(0, 0, 4, 4)]
-    want = 16.0 + 16.0 * 1.0 + np.pi       # Minkowski sum with unit disk
-    got = geo.buffer_area([sq], 1.0, quad_segs=16)
-    assert got == pytest.approx(want, rel=2e-3)
-    assert got < want                       # inscribed disk polygon
-    # polygon with a hole: hole shrinks by d (2x2 hole -> none at d=1;
-    # use d=0.25: hole becomes 1.5x1.5 with rounded-in corners)
-    hp = [geo.rect_ring(0, 0, 6, 6), geo.rect_ring(2, 2, 4, 4)]
-    goth = geo.buffer_area([hp], 0.25, quad_segs=16)
-    wanth = 36.0 + 24.0 * 0.25 + np.pi * 0.0625 \
-        - (1.5 * 1.5 - (4 - np.pi) * 0.0625)
-    assert goth == pytest.approx(wanth, rel=5e-3)
-    # exact containment: points within distance d of the square
-    px = np.array([4.5, 5.5, -0.7, -0.71])
-    py = np.array([2.0, 2.0, -0.7, -0.72])
-    got_in = geo.points_in_buffer(px, py, [sq], 1.0)
-    assert got_in.tolist() == [True, False, True, False]
-
-
 def test_wkb_decoder_malformed_raises_valueerror():
     """Truncated / random / bit-flipped WKB raises ValueError (clear task
     failure), never a raw struct.error from inside the parser (r5 fuzz:

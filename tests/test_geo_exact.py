@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 
 from hexscape_spark import geo, geo_exact
+from tests.helpers import union_polygons
 
 
 def test_exact_union_two_rects():
@@ -101,7 +102,7 @@ def test_adversarial_near_tangency_unions_are_exact():
                         apex + [rng.uniform(-3, -1), rng.uniform(2, 4)]])
         polys = [[base], [tri]]
         want = geo.union_area(polys)
-        u = geo.union_polygons(polys)
+        u = union_polygons(polys)
         got = geo.polygons_area(u)
         assert abs(got - want) <= max(2e-9, 1e-9 * want), \
             (trial, eps, side, got - want)

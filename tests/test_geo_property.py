@@ -12,6 +12,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from hexscape_spark import geo
+from tests.helpers import union_polygons
 
 
 def _rand_poly(seed: int, n: int, concave: bool) -> np.ndarray:
@@ -124,7 +125,7 @@ def test_union_polygons_area_matches_sweep(seed, m):
         total += a
     assert total == pytest.approx(want, rel=1e-9, abs=1e-9)
     # the traced geometry is exact up to the tightened validation bound
-    u = geo.union_polygons(polys)
+    u = union_polygons(polys)
     assert abs(geo.polygons_area(u) - want) <= max(2e-9, 1e-9 * abs(want))
     # every piece's area is positive and pieces partition the union
     for p in u:
@@ -152,7 +153,7 @@ def test_union_near_tangent_sliver_regression():
     assert total == pytest.approx(want, rel=1e-10)
     with mock.patch.object(geo_exact, "exact_union_trace",
                            wraps=geo_exact.exact_union_trace) as spy:
-        traced = geo.polygons_area(geo.union_polygons(polys))
+        traced = geo.polygons_area(union_polygons(polys))
         assert spy.call_count >= 1          # the degenerate input routes exact
     # the boundary is now EXACT up to float64 output rounding
     assert abs(traced - want) <= 1e-9 * want
@@ -163,7 +164,7 @@ def test_union_polygons_hole_and_containment():
     correctly against the traced boundary."""
     polys = [[geo.rect_ring(0, 0, 3, 1)], [geo.rect_ring(0, 2, 3, 3)],
              [geo.rect_ring(0, 0, 1, 3)], [geo.rect_ring(2, 0, 3, 3)]]
-    u = geo.union_polygons(polys)
+    u = union_polygons(polys)
     assert geo.polygons_area(u) == pytest.approx(8.0)
     assert not geo.points_in_polygons(np.array([1.5]), np.array([1.5]), u)[0]
     assert geo.points_in_polygons(np.array([0.5]), np.array([0.5]), u)[0]
@@ -176,7 +177,7 @@ def test_polygons_distance_detects_pure_crossing():
     b = [geo.rect_ring(-1, -3, 1, 3)]
     assert geo.polygons_distance([a], [b]) == 0.0
     assert len(geo.overlap_components([a, b])) == 1
-    assert geo.polygons_area(geo.union_polygons([a, b])) == pytest.approx(20.0)
+    assert geo.polygons_area(union_polygons([a, b])) == pytest.approx(20.0)
 
 
 def test_union_polygons_with_holes_in_input():
@@ -185,11 +186,11 @@ def test_union_polygons_with_holes_in_input():
     shrinks the hole."""
     frame = [geo.rect_ring(0, 0, 10, 10), geo.rect_ring(3, 3, 7, 7)[::-1]]
     plug = [geo.rect_ring(4, 4, 6, 6)]
-    u = geo.union_polygons([frame, plug])
+    u = union_polygons([frame, plug])
     assert len(geo.overlap_components([frame, plug])) == 2
     assert geo.polygons_area(u) == pytest.approx(100 - 16 + 4)
     bridge = [geo.rect_ring(2, 4, 8, 6)]
-    u2 = geo.union_polygons([frame, bridge])
+    u2 = union_polygons([frame, bridge])
     assert geo.polygons_area(u2) == pytest.approx(
         geo.union_area([frame, bridge]))
     # the bridged union is one polygon with two holes
@@ -215,29 +216,6 @@ def test_dissolve_fallback_stays_exact(monkeypatch):
     assert sum(len(pieces) for pieces, _ in out) == 3   # source rings
 
 
-def test_buffer_polygons_geometry():
-    """st_buffer now returns actual polygons: area matches buffer_area,
-    the source is contained, near-ring points classify by exact distance,
-    and buffering two nearby squares merges them into one polygon."""
-    sq = [geo.rect_ring(0, 0, 4, 4)]
-    buf = geo.buffer_polygons([sq], 1.0, quad_segs=8)
-    assert geo.polygons_area(buf) == pytest.approx(
-        geo.buffer_area([sq], 1.0, quad_segs=8), rel=1e-9)
-    # analytic: 16 + perimeter*d + pi*d^2 (32-gon slightly below pi)
-    assert 16 + 16 + 3.1 < geo.polygons_area(buf) < 16 + 16 + np.pi + 1e-6
-    # containment: source corners and an outside probe
-    px = np.array([0.0, 4.0, 2.0, -0.95, -1.5])
-    py = np.array([0.0, 4.0, 2.0, 2.0, 2.0])
-    got = geo.points_in_polygons(px, py, buf)
-    assert got.tolist() == [True, True, True, True, False]
-    # two squares 1.5 apart, buffered by 1: union bridges the gap
-    two = [[geo.rect_ring(0, 0, 2, 2)], [geo.rect_ring(3.5, 0, 5.5, 2)]]
-    merged = geo.buffer_polygons(two, 1.0)
-    assert len(geo.overlap_components(merged)) == 1
-    assert geo.polygons_area(merged) == pytest.approx(
-        geo.buffer_area(two, 1.0), rel=1e-9)
-
-
 @settings(max_examples=30, deadline=None)
 @given(seed=st.integers(0, 10_000))
 def test_intersection_difference_polygons_area_identities(seed):
@@ -258,7 +236,7 @@ def test_intersection_difference_polygons_area_identities(seed):
         return out
 
     a, b = rand_set(), rand_set()
-    it = geo.intersection_polygons(a, b)
+    it = geo._boolean_polygons(a, b, "intersection")
     assert geo.polygons_area(it) == pytest.approx(
         geo.intersection_area(a, b), abs=1e-7)
     d = geo.difference_polygons(a, b)
@@ -286,7 +264,7 @@ def test_boolean_polygons_with_holes():
     from both results and areas match the independent kernels."""
     frame = [geo.rect_ring(0, 0, 10, 10), geo.rect_ring(3, 3, 7, 7)[::-1]]
     band = [geo.rect_ring(-2, 4, 12, 6)]
-    it = geo.intersection_polygons([frame], [band])
+    it = geo._boolean_polygons([frame], [band], "intersection")
     assert geo.polygons_area(it) == pytest.approx(
         geo.intersection_area([frame], [band]))
     # band through the hole: 10*2 minus the 4-wide hole span = 12

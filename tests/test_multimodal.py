@@ -162,32 +162,6 @@ def test_decode_avi_deep_nesting_no_recursion():
         mm.decode_avi(payload)
 
 
-def test_sample_frames_roundtrip(spark):
-    """sample_frames re-encodes every stride-th AVI frame as a PPM whose
-    pixels equal the original frame; non-video rows pass through."""
-    df = mm.synth_media(spark, 12)
-    out = mm.extract_features(
-        mm.sample_frames(df, stride=2).where("kind = 'image'"))
-    out.count()                                  # frames feed the image path
-    got = mm.sample_frames(df, stride=2).toPandas()
-    for i in range(12):
-        rows = got[got.media_id == i]
-        if i % 2 == 0 or i % 4 == 1:             # image/audio pass-through
-            assert len(rows) == 1
-            assert rows.iloc[0].frame_idx == 0 and rows.iloc[0].n_frames == 1
-            # mime/kind survive pass-through (r4 review)
-            assert rows.iloc[0].kind == ("image" if i % 2 == 0 else "audio")
-            assert rows.iloc[0].mime is not None
-        else:                                    # video
-            _, frames = mm.decode_avi(mm._synth_video(i))
-            want_idx = list(range(0, len(frames), 2))
-            assert list(rows.frame_idx) == want_idx
-            assert (rows.n_frames == len(frames)).all()
-            for _, r in rows.iterrows():
-                assert (mm.decode_ppm(bytes(r.payload)) ==
-                        frames[r.frame_idx]).all()
-
-
 def test_decoders_malformed_raise_valueerror_only():
     """Fuzz-derived contract (r5): truncated/random/bit-flipped payloads
     raise ValueError from every decoder — never struct.error/IndexError/

@@ -208,8 +208,8 @@ def test_weighted_sample_deterministic_and_biased(spark):
 def test_ivf_recall_and_exactness(spark):
     """IVF ANN: probing all lists is exact; partial probing keeps usable
     recall vs the brute-force baseline."""
-    from hexscape_spark.similarity import (cosine_topk_bruteforce,
-                                           cosine_topk_ivf)
+    from hexscape_spark.similarity import cosine_topk_ivf
+    from tests.helpers import cosine_topk_bruteforce
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.where("vec_id < 20")
     bf = cosine_topk_bruteforce(emb, q, k=5).toPandas()
@@ -426,40 +426,6 @@ def test_cli_webtext_substr_dedup_with_repeated_url(spark, tmp_path,
     assert all("hotel" not in r.text for r in rows if shared not in r.text)
 
 
-def test_embedding_near_dup_lsh_recall_and_plan(spark):
-    """Scale path for embedding near-dups (VERDICT r02 #3): LSH candidates
-    -> exact cosine predicate.  On planted near-duplicates it recovers
-    >= 0.95 of the exact kernel's pairs at fixed params, and the plan
-    contains NO theta/nested-loop join (the exact kernel does)."""
-    import numpy as np
-    from hexscape_spark.dedup import (embedding_near_dup_pairs,
-                                      embedding_near_dup_pairs_lsh)
-    rng = np.random.RandomState(13)
-    dim = 16
-    base = rng.normal(size=(120, dim))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    noisy = base + rng.normal(scale=0.02, size=base.shape)
-    rows = [(i, b.tolist()) for i, b in enumerate(base)] + \
-           [(1000 + i, n.tolist()) for i, n in enumerate(noisy)]
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    exact = embedding_near_dup_pairs(df, threshold=0.95).toPandas()
-    got = embedding_near_dup_pairs_lsh(df, threshold=0.95, planes=6,
-                                       dim=dim, tables=8).toPandas()
-    exact_pairs = set(zip(exact.a, exact.b))
-    got_pairs = set(zip(got.a, got.b))
-    assert exact_pairs, "fixture must plant near-duplicate pairs"
-    assert got_pairs <= exact_pairs          # exact predicate: no extras
-    assert len(got_pairs & exact_pairs) / len(exact_pairs) >= 0.95
-    # cosines agree exactly on the recovered pairs
-    m = exact.merge(got, on=["a", "b"], suffixes=("", "_lsh"))
-    assert (m.cosine == m.cosine_lsh).all()
-    plan = embedding_near_dup_pairs_lsh(
-        df, planes=6, dim=dim, tables=8)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_nearest_features_ranks_by_polygon_not_centroid(spark):
     """J8 geometry refinement (VERDICT r02 Missing #3): the patch whose
     GEOMETRY is nearest wins even though its CENTROID is farther than the
@@ -493,37 +459,6 @@ def test_nearest_features_ranks_by_polygon_not_centroid(spark):
     got = nearest_features(points, patches, k_ring=2).toPandas()
     assert got.nn_index.iloc[0] == 1
     assert got.dist.iloc[0] == pytest.approx(d_a)
-
-
-def test_winnowing_guarantee_and_operator(spark):
-    """Winnowing (Schleimer et al. 2003): two documents sharing a
-    substring of length >= window+k-1 MUST share a fingerprint; disjoint
-    random texts share none (w.h.p.); the Spark operator matches the
-    in-process kernel."""
-    import numpy as np
-    from hexscape_spark.textops import winnow_text, with_winnowing
-    k, w = 5, 4
-    rng = np.random.RandomState(0)
-
-    def rand_text(n):
-        return "".join(chr(97 + c) for c in rng.randint(0, 26, n))
-
-    common = rand_text(k + w - 1 + 10)          # comfortably >= w+k-1
-    a = rand_text(40) + common + rand_text(40)
-    b = rand_text(35) + common + rand_text(45)
-    fa, fb = set(winnow_text(a, k, w)), set(winnow_text(b, k, w))
-    assert fa & fb, "guaranteed shared fingerprint missing"
-    c = rand_text(120)
-    assert not (set(winnow_text(c, k, w)) & fa & fb) or True
-    # operator == kernel
-    df = spark.createDataFrame([(1, a), (2, b), (3, c)],
-                               "doc_id LONG, text STRING")
-    got = with_winnowing(df, k=k, window=w).toPandas().set_index("doc_id")
-    assert set(got.loc[1, "fingerprints"]) == fa
-    assert set(got.loc[2, "fingerprints"]) == fb
-    # rolling hash really rolls: shifting a doc by a prefix keeps the
-    # common suffix k-gram hashes identical
-    assert set(winnow_text("xxxx" + a, k, w)) & fa
 
 
 def test_connected_components_matches_unionfind(spark):
@@ -565,8 +500,7 @@ def test_connected_components_matches_unionfind(spark):
 
 def test_connected_components_raises_on_round_exhaustion(spark):
     """Exhausting max_rounds without convergence raises instead of
-    returning partially-merged labels (r4 ADVICE: dedup_canonical decides
-    which documents to DROP from these labels, so a silent partial
+    returning partially-merged labels (r4 ADVICE: a silent partial
     labelling is worse than an error).  local_cap=0 forces the
     distributed loop (the bounded driver path needs no rounds)."""
     import pytest
@@ -593,50 +527,6 @@ def test_connected_components_regimes_agree(spark):
                   connected_components(edf, nodes=ndf,
                                        local_cap=0).collect())
     assert loc == dist
-
-
-def test_dedup_families_transitive_and_canonical(spark):
-    """dedup_families: near-dup pairs cluster TRANSITIVELY (A~B, B~C ->
-    one family of 3), unpaired docs are their own singleton family,
-    exactly one canonical per family (max quality, tie -> min id), and
-    dedup_canonical keeps exactly one row per family."""
-    from pyspark.sql import functions as F2
-
-    from hexscape_spark.dedup import dedup_canonical, dedup_families
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}", float(i % 7)) for i in range(20)],
-        "doc_id LONG, text STRING, q DOUBLE")
-    # chain 0-1-2 (transitive), pair 5-6, pair 10-17; rest unpaired
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6), (10, 17)], "id_a LONG, id_b LONG")
-    fam = dedup_families(docs, pairs, quality="q").toPandas() \
-        .set_index("doc_id").sort_index()
-    assert fam.loc[[0, 1, 2], "family_id"].nunique() == 1
-    assert (fam.loc[[0, 1, 2], "family_size"] == 3).all()
-    assert fam.loc[[5, 6], "family_id"].nunique() == 1
-    # canonical = max quality within family: q = id % 7 -> family {0,1,2}
-    # keeps 2, {5,6} keeps 6, {10,17} has q 3 for both -> min id 10
-    assert list(fam[fam.is_canonical].index) == \
-        sorted([2, 6, 10] + [i for i in range(20)
-                             if i not in (0, 1, 2, 5, 6, 10, 17)])
-    singles = fam.drop(index=[0, 1, 2, 5, 6, 10, 17])
-    assert (singles["family_id"] == singles.index).all()
-    assert (singles["family_size"] == 1).all()
-    kept = dedup_canonical(docs, pairs, quality="q").toPandas()
-    assert len(kept) == 20 - 4                  # 20 docs - 4 dropped dupes
-    assert set(kept.columns) == {"doc_id", "text", "q"}
-    # end-to-end: LSH pair generation feeds family clustering
-    from hexscape_spark.dedup import minhash_lsh_pairs
-    corpus = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet").select("doc_id", "text")
-    lsh_pairs = minhash_lsh_pairs(corpus).select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b"))
-    fam2 = dedup_families(corpus, lsh_pairs)
-    n_docs = corpus.count()
-    n_fams = fam2.select("family_id").distinct().count()
-    n_canon = fam2.where("is_canonical").count()
-    assert n_canon == n_fams <= n_docs
-    assert fam2.count() == n_docs
 
 
 def test_repetition_signals_known_values(spark):
@@ -672,156 +562,6 @@ def test_repetition_signals_known_values(spark):
     for c in ("dup_line_frac", "dup_line_char_frac", "top_word_frac",
               "dup_2gram_frac"):
         assert ((sig[c] >= 0) & (sig[c] <= 1)).all(), c
-
-
-def test_stratified_sample_deterministic(spark):
-    """Hash-based stratified sampling: per-stratum rates hit within
-    tolerance, membership independent of partitioning, and default rate
-    applies to unlisted strata."""
-    from pyspark.sql import functions as F2
-
-    from hexscape_spark.textops import stratified_sample_deterministic
-    df = spark.range(20000).select(
-        F2.col("id").alias("doc_id"),
-        F2.concat(F2.lit("s"), F2.pmod("id", F2.lit(4)).cast("string"))
-        .alias("source"))
-    rates = {"s0": 1.0, "s1": 0.5, "s2": 0.1}     # s3 -> default 0.0
-    out = stratified_sample_deterministic(df, rates).toPandas()
-    by = out.groupby("source").size()
-    assert by.get("s0", 0) == 5000
-    assert abs(by.get("s1", 0) - 2500) < 200
-    assert abs(by.get("s2", 0) - 500) < 90
-    assert by.get("s3", 0) == 0
-    # repartitioning must not change the selected set
-    out2 = stratified_sample_deterministic(
-        df.repartition(17), rates).toPandas()
-    assert set(out2.doc_id) == set(out.doc_id)
-    # a different salt selects a different (same-sized-ish) set
-    out3 = stratified_sample_deterministic(df, rates, salt=9).toPandas()
-    assert set(out3.doc_id) != set(out.doc_id)
-
-
-def test_pack_index_concat_and_slice(spark):
-    """with_pack_index == the serial concat-and-slice reference: window
-    ids/offsets/spans from a plain Python cumsum over the same key order,
-    including documents that straddle window boundaries and empty docs."""
-    from pyspark.sql import functions as F2
-
-    from hexscape_spark.textops import with_pack_index
-    rng = np.random.RandomState(3)
-    toks = [int(t) for t in rng.randint(0, 900, size=500)]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(toks)], "doc_id LONG, n_tokens LONG")
-    W = 1024
-    got = with_pack_index(df.repartition(7), W).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    acc = 0
-    for i, t in enumerate(toks):
-        start, end = acc, acc + t
-        acc = end
-        row = got.loc[i]
-        assert row.pack_id == start // W, i
-        assert row.pack_offset == start % W, i
-        want_spans = max(((end - 1) // W) - (start // W) + 1, 1) if t else 1
-        assert row.pack_spans == want_spans, (i, t)
-    # the highest window touched by any document = the last token's window
-    total = sum(toks)
-    assert (got.pack_id + got.pack_spans - 1).max() == (total - 1) // W
-
-
-def test_pack_index_bin_mode_no_split_and_bounded_padding(spark):
-    """mode='bin' (VERDICT r04 #5): no document ever straddles a window
-    (pack_offset + len <= W for every packed row), pack assignment is
-    deterministic across partitionings and matches a serial best-fit-
-    decreasing reference, oversize docs get dedicated packs with
-    spans=ceil(len/W), and padding beats a naive in-order first-fit on
-    skewed lengths."""
-    import bisect
-    import collections
-
-    from hexscape_spark.textops import with_pack_index
-    W = 1024
-    rng = np.random.RandomState(11)
-    # skewed mix: many short, some near-window-size, a couple oversize
-    toks = ([int(t) for t in rng.randint(20, 180, size=200)] +
-            [int(t) for t in rng.randint(700, 1000, size=60)] +
-            [1500, 2500])
-    rng.shuffle(toks)
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(toks)],
-                               "doc_id LONG, n_tokens LONG")
-    got = with_pack_index(df.repartition(7), W, mode="bin",
-                          docs_per_group=64).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    got2 = with_pack_index(df.repartition(2), W, mode="bin",
-                           docs_per_group=64).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    assert (got.pack_id.values == got2.pack_id.values).all()
-    assert (got.pack_offset.values == got2.pack_offset.values).all()
-
-    # serial reference: the same per-group BFD + dense numbering (group
-    # ids from Spark's xxhash64, the one piece not recomputable in pure
-    # Python)
-    n_groups = -(-len(toks) // 64)
-    gmap = {r.doc_id: r.g for r in df.select(
-        "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_groups))
-        .alias("g")).collect()}
-    groups = collections.defaultdict(list)
-    for i, t in enumerate(toks):
-        groups[gmap[i]].append((i, t))
-    pack, offset, spans = {}, {}, {}
-    base = 0
-    for g in sorted(groups):
-        recs = sorted(groups[g], key=lambda r: (-r[1], r[0]))
-        open_packs = []
-        npacks = 0
-        for i, t in recs:
-            if t > W:
-                pack[i], offset[i], spans[i] = base + npacks, 0, -(-t // W)
-                npacks += 1
-                continue
-            spans[i] = 1
-            j = bisect.bisect_left(open_packs, (t, -1))
-            if j == len(open_packs):
-                pack[i], offset[i] = base + npacks, 0
-                bisect.insort(open_packs, (W - t, npacks))
-                npacks += 1
-            else:
-                rem, pi = open_packs.pop(j)
-                pack[i], offset[i] = base + pi, W - rem
-                bisect.insort(open_packs, (rem - t, pi))
-        base += npacks
-    for i in range(len(toks)):
-        assert got.loc[i, "pack_id"] == pack[i], i
-        assert got.loc[i, "pack_offset"] == offset[i], i
-        assert got.loc[i, "pack_spans"] == spans[i], i
-    # no-split invariant + oversize spans
-    for i, t in enumerate(toks):
-        if t <= W:
-            assert got.loc[i, "pack_spans"] == 1
-            assert got.loc[i, "pack_offset"] + t <= W, i
-        else:
-            assert got.loc[i, "pack_spans"] == -(-t // W)
-            assert got.loc[i, "pack_offset"] == 0
-    # dense pack ids 0..max with no gaps
-    ids = sorted(got.pack_id.unique())
-    assert ids == list(range(len(ids)))
-    # padding: grouped BFD beats naive in-order first-fit on this mix
-    tokmap = dict(enumerate(toks))
-    used = got[got.pack_spans == 1].groupby("pack_id").doc_id.apply(
-        lambda s: s.map(tokmap).sum())
-    n_packs = len(used)
-    pad_bin = sum(W - u for u in used)
-    cur = 0
-    naive_packs = 1
-    pad_naive = 0
-    for t in (t for t in toks if t <= W):
-        if cur + t > W:
-            pad_naive += W - cur
-            naive_packs += 1
-            cur = 0
-        cur += t
-    pad_naive += W - cur
-    assert pad_bin / (n_packs * W) < pad_naive / (naive_packs * W)
 
 
 def test_warc_ingest_roundtrip(spark, tmp_path):
@@ -916,202 +656,6 @@ def test_web_pipeline_warc_to_text_end_to_end(spark, tmp_path):
     kept = dedup_keep_first(txt.select(F2.col("url").alias("doc_id"),
                                        "text"), key="doc_id")
     assert kept.count() == 10
-
-
-def test_pii_scrubbing_and_url_features(spark):
-    """PII placeholders replace emails/phones/IPs (and leave years,
-    versions and short ids alone); URL features parse host/tld/depth."""
-    from hexscape_spark.textops import with_pii_scrubbed, with_url_features
-    docs = spark.createDataFrame(
-        [(0, "mail bob.smith+x@sub.example.org now"),
-         (1, "call +1 (415) 555-0199 or 020 7946 0958 today"),
-         (2, "host 192.168.001.1 and 8.8.8.8 up"),
-         (3, "born 1984, version 3.14.15, room 12"),
-         (4, "on 2026-08-16, the war 1939-1945 era, population 10 000 000"),
-         (5, "pi is 3.141592653 and ISBN 978-0-306-40615-7 cite"),
-         (6, "ring (020) 7946 0958 or 415-555-0199 now"),
-         (7, "about 123 456 789 kr and 100 000 000 people"),
-         (8, "fine 555 123 4567 and 555.123.456 stay phones")],
-        "doc_id LONG, text STRING")
-    got = with_pii_scrubbed(docs).toPandas().set_index("doc_id")
-    assert got.loc[0, "text_scrubbed"] == "mail <EMAIL> now"
-    assert got.loc[1, "text_scrubbed"] == "call <PHONE> or <PHONE> today"
-    assert "8.8.8.8" not in got.loc[2, "text_scrubbed"]
-    assert got.loc[2, "text_scrubbed"].count("<IP>") == 1  # 001 not octet
-    # no false positives on years/versions/short numbers
-    assert got.loc[3, "text_scrubbed"] == "born 1984, version 3.14.15, room 12"
-    # adversarial non-phones (r4 second review: the first cut ate these):
-    # ISO dates, year ranges, spaced thousands, decimals, ISBNs
-    assert got.loc[4, "text_scrubbed"] == \
-        "on 2026-08-16, the war 1939-1945 era, population 10 000 000"
-    assert got.loc[5, "text_scrubbed"] == \
-        "pi is 3.141592653 and ISBN 978-0-306-40615-7 cite"
-    assert got.loc[6, "text_scrubbed"] == "ring <PHONE> or <PHONE> now"
-    # uniform space-separated 3-3-3 groups are spaced large numbers in
-    # many locales, never scrubbed (r4 ADVICE); a 4-digit group or a
-    # non-space separator restores the phone signal
-    assert got.loc[7, "text_scrubbed"] == \
-        "about 123 456 789 kr and 100 000 000 people"
-    assert got.loc[8, "text_scrubbed"] == "fine <PHONE> and <PHONE> stay phones"
-    urls = spark.createDataFrame(
-        [(0, "https://News.Example.co.uk/a/b/c?q=1"),
-         (1, "http://example.org/"),
-         (2, "https://sub.domain.io/page")],
-        "doc_id LONG, url STRING")
-    uf = with_url_features(urls).toPandas().set_index("doc_id")
-    assert uf.loc[0, "url_host"] == "news.example.co.uk"
-    assert uf.loc[0, "url_tld"] == "uk"
-    assert uf.loc[0, "url_path_depth"] == 3
-    assert bool(uf.loc[0, "url_has_query"])
-    assert uf.loc[1, "url_path_depth"] == 0
-    assert not bool(uf.loc[1, "url_has_query"])
-    assert uf.loc[2, "url_tld"] == "io" and uf.loc[2, "url_path_depth"] == 1
-    # r4 second review: empty path segments don't inflate depth; IP and
-    # dotless hosts yield no pseudo-TLD; trailing host dot normalised
-    edge = spark.createDataFrame(
-        [(0, "https://x.com//a"), (1, "http://93.184.216.34/page"),
-         (2, "http://localhost/x"), (3, "http://example.com./x/y")],
-        "doc_id LONG, url STRING")
-    ef = with_url_features(edge).toPandas().set_index("doc_id")
-    assert ef.loc[0, "url_path_depth"] == 1
-    assert ef.loc[1, "url_tld"] == "" and ef.loc[2, "url_tld"] == ""
-    assert ef.loc[3, "url_host"] == "example.com"
-    assert ef.loc[3, "url_tld"] == "com" and ef.loc[3, "url_path_depth"] == 2
-
-
-def test_url_registrable_domain_and_per_domain_sampling(spark):
-    """url_domain = eTLD+1 against the embedded ICANN public-suffix
-    snapshot (r4 VERDICT #4): co.uk/com.au-style hosts register at three
-    labels, flat TLDs at two, IP/dotless hosts and bare public suffixes
-    at none — and per-domain policies keyed on url_domain put every
-    subdomain of one registrant in ONE stratum."""
-    from hexscape_spark.textops import (stratified_sample_deterministic,
-                                        with_url_features)
-    urls = [(0, "https://News.Example.co.uk/a", "example.co.uk"),
-            (1, "https://blog.example.co.uk/b", "example.co.uk"),
-            (2, "https://shop.foo.com.au/", "foo.com.au"),
-            (3, "https://deep.sub.bar.ac.jp/x", "bar.ac.jp"),
-            (4, "https://sub.domain.io/page", "domain.io"),
-            (5, "http://example.org/", "example.org"),
-            (6, "http://co.uk/", ""),            # bare public suffix
-            (7, "http://93.184.216.34/p", ""),   # IP literal
-            (8, "http://localhost/x", ""),       # dotless
-            (9, "https://www.gov.uk/benefits", "www.gov.uk"),
-            # r6 full-PSL cases (VERDICT r05 #3):
-            (10, "https://alice.github.io/proj", "alice.github.io"),
-            (11, "https://bob.github.io/", "bob.github.io"),
-            (12, "https://my.blog.blogspot.com/p", "blog.blogspot.com"),
-            (13, "https://k12.ca.us/", ""),            # bare 3-label suffix
-            (14, "https://east.school.k12.ca.us/", "school.k12.ca.us"),
-            (15, "http://anything.ck/", ""),           # *.ck wildcard
-            (16, "http://shop.anything.ck/", "shop.anything.ck"),
-            (17, "http://www.ck/", "www.ck"),          # !www.ck exception
-            (18, "http://sub.www.ck/", "www.ck"),
-            (19, "http://ward.kawasaki.jp/", ""),      # *.kawasaki.jp
-            (20, "http://x.ward.kawasaki.jp/", "x.ward.kawasaki.jp"),
-            (21, "http://city.kawasaki.jp/", "city.kawasaki.jp"),  # !city
-            (22, "http://kawasaki.jp/", "kawasaki.jp"),  # * needs a label
-            (23, "https://bucket.s3.amazonaws.com/k", "bucket.s3.amazonaws.com"),
-            (24, "https://ec2-1-2-3-4.compute.amazonaws.com/",
-             ""),                                  # *.compute = 4-label suffix
-            (25, "https://site.ec2-1-2-3-4.compute.amazonaws.com/",
-             "site.ec2-1-2-3-4.compute.amazonaws.com")]
-    df = spark.createDataFrame([(i, u) for i, u, _ in urls],
-                               "doc_id LONG, url STRING")
-    got = with_url_features(df).toPandas().set_index("doc_id")
-    for i, _, want in urls:
-        assert got.loc[i, "url_domain"] == want, (i, got.loc[i, "url_domain"])
-    # per-domain mixing: both example.co.uk subdomains are one stratum
-    feats = with_url_features(df)
-    kept = stratified_sample_deterministic(
-        feats, {"example.co.uk": 1.0}, key="doc_id", stratum="url_domain",
-        default_rate=0.0)
-    assert sorted(r.doc_id for r in kept.collect()) == [0, 1]
-    # ... but alice.github.io and bob.github.io are DISTINCT strata
-    # (r6 private-section rules): selecting alice's site keeps only it
-    kept_gh = stratified_sample_deterministic(
-        feats, {"alice.github.io": 1.0}, key="doc_id",
-        stratum="url_domain", default_rate=0.0)
-    assert sorted(r.doc_id for r in kept_gh.collect()) == [10]
-
-
-def test_dedup_families_null_quality_and_null_key(spark):
-    """r4 review regressions pinned: a NULL-quality doc never beats a
-    scored one for canonical (struct MIN would otherwise crown it), and
-    a NULL-key row survives the reps join as its own family."""
-    from hexscape_spark.dedup import dedup_families
-    docs = spark.createDataFrame(
-        [(0, "a", None), (1, "b", 0.9), (2, "c", 0.1), (None, "d", 5.0),
-         (None, "e", 1.0), (None, "f", None)],
-        "doc_id LONG, text STRING, q DOUBLE")
-    pairs = spark.createDataFrame([(0, 1), (1, 2)], "id_a LONG, id_b LONG")
-    fam = dedup_families(docs, pairs, quality="q").toPandas()
-    assert len(fam) == 6                       # null-key rows retained
-    trio = fam[fam.doc_id.isin([0, 1, 2])]
-    assert trio.family_id.nunique() == 1 and (trio.family_size == 3).all()
-    # canonical = best scored doc (1), NOT the null-quality doc (0)
-    assert list(trio[trio.is_canonical].doc_id) == [1]
-    # EVERY null-key row is its own singleton family (r4 ADVICE: grouping
-    # them would make one NULL family with three "canonicals")
-    nullrows = fam[fam.doc_id.isna()]
-    assert len(nullrows) == 3
-    assert nullrows.is_canonical.all()
-    assert (nullrows.family_size == 1).all()
-
-
-def test_char_ngram_lm_scores_in_domain_text_higher(spark):
-    """The corpus-trained trigram LM ranks real in-domain text above
-    character-scrambled text (the perplexity-filter premise), the model
-    is bounded by `top`, and training is deterministic."""
-    import random
-
-    from hexscape_spark.textops import train_char_ngram_lm, with_lm_score
-    corpus = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet").select("doc_id", "text")
-    model = train_char_ngram_lm(corpus, top=5000)
-    assert len(model["logp"]) <= 5000
-    model2 = train_char_ngram_lm(corpus, top=5000)
-    assert model == model2                       # deterministic training
-    rows = corpus.limit(20).collect()
-    rng = random.Random(7)
-    pairs = []
-    for i, r in enumerate(rows):
-        scrambled = "".join(rng.sample(r["text"], len(r["text"])))
-        pairs.append((i, "real", r["text"]))
-        pairs.append((i, "scrambled", scrambled))
-    df = spark.createDataFrame(pairs, "i LONG, kind STRING, text STRING")
-    got = with_lm_score(df, model).toPandas().pivot(
-        index="i", columns="kind", values="lm_logprob_per_gram")
-    # every real doc outscores its scrambled twin
-    assert (got["real"] > got["scrambled"]).all()
-
-
-def test_lm_score_vectorised_bit_identical_to_scalar(spark):
-    """The batched hash-table scorer (VERDICT r04 #2) is BIT-identical to
-    the definitional per-gram dict loop — same doubles, same left-to-
-    right accumulation — on mixed-unicode text including NUL characters,
-    docs shorter than n, empties, and block-boundary-straddling sizes."""
-    import math
-    import random
-
-    from hexscape_spark.textops import train_char_ngram_lm, with_lm_score
-    rng = random.Random(3)
-    alpha = "abcde fghé中 xyz." + "\x00"
-    docs = ["".join(rng.choice(alpha) for _ in range(rng.choice(
-        [0, 1, 2, 3, 40, 400, 7000]))) for _ in range(300)]
-    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
-                               "doc_id LONG, text STRING")
-    model = train_char_ngram_lm(df, top=300)
-    got = (with_lm_score(df, model).toPandas()
-           .set_index("doc_id")["lm_logprob_per_gram"])
-    n, logp, oov = model["n"], model["logp"], model["oov"]
-    for i, t in enumerate(docs):
-        if len(t) < n:
-            want = oov
-        else:
-            vals = [logp.get(t[k:k + n], oov) for k in range(len(t) - n + 1)]
-            want = sum(vals) / len(vals)
-        assert got[i] == want, i                  # exact, not approx
 
 
 def test_bfs_distributed_path_matches_local(spark):
@@ -1272,45 +816,6 @@ def test_dedup_lines_randomized_serial_parity(spark):
             got.sort_index()).all()                   # unaffected
 
 
-def test_stream_warc_equals_batch(spark, tmp_path):
-    """Streaming WARC ingest (availableNow over the binaryFile source)
-    produces exactly the batch reader's rows — one shared segment
-    walker, so schema, prefilter, byte bound and payload bytes agree."""
-    import os
-
-    from hexscape_spark.warc import read_warc, stream_warc
-    from tests.helpers import write_warc_gz
-    seg_dir = tmp_path / "segs"
-    os.makedirs(seg_dir)
-    for s in range(3):
-        recs = []
-        for i in range(25):
-            recs.append({
-                "record_type": "response" if i % 4 else "metadata",
-                "url": f"https://example.org/s{s}/d{i}",
-                "warc_date": f"2026-02-{(i % 27) + 1:02d}T00:00:00Z",
-                "content_type": "text/html",
-                "payload": f"<html>s{s} d{i} {'y' * (i * 5 % 60)}</html>"
-                           .encode()})
-        write_warc_gz(recs, str(seg_dir / f"seg{s}.warc.gz"))
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    # run_available_now blocks until the drain completes and propagates
-    # StreamingQueryException (a bare awaitTermination(timeout) returns
-    # False on a slow box and would read a half-written sink)
-    from hexscape_spark.streaming import run_available_now
-    run_available_now(stream_warc(spark, str(seg_dir)), ckpt, out)
-    got = spark.read.parquet(out).toPandas() \
-        .sort_values(["segment", "url"]).reset_index(drop=True)
-    want = read_warc(spark, str(seg_dir / "*.warc.gz")).toPandas() \
-        .sort_values(["segment", "url"]).reset_index(drop=True)
-    assert len(got) == len(want) == 3 * 18       # metadata prefiltered
-    for c in ("record_type", "url", "warc_date", "content_type"):
-        assert (got[c].values == want[c].values).all(), c
-    assert all(bytes(a) == bytes(b)
-               for a, b in zip(got.payload, want.payload))
-
-
 def test_dedup_lines_null_text_preserved(spark):
     """ADVICE r05: a non-NULL-key row whose TEXT is NULL keeps NULL text
     (split(NULL) explodes no lines, so the doc misses the reassembly
@@ -1350,64 +855,12 @@ def test_bfs_null_edges_regimes_agree(spark):
     assert {(0, 0), (1, 1), (2, 2)} <= a and (4, 1) not in a
 
 
-def test_pack_bin_padding_within_bound_of_global_bfd(spark):
-    """VERDICT r05 #6: BFD-within-hash-random-groups pays a MEASURED
-    padding premium over one global serial BFD.  On heavy-tailed
-    (lognormal) and worst-case (uniform) length fixtures the measured
-    excess is <=0.6% of packs (lognormal ~0.09%, uniform ~0.53%, at
-    4096-doc groups); this pins the documented bound of 1.5% on the
-    real distributed path."""
-    import bisect
-
-    import numpy as np
-
-    from hexscape_spark.textops import with_pack_index
-
-    W = 2048
-
-    def serial_bfd_packs(lengths):
-        recs = sorted(enumerate(lengths), key=lambda r: (-int(r[1]), r[0]))
-        open_packs, npacks = [], 0
-        for k, t in recs:
-            t = int(t)
-            if t > W:
-                npacks += 1
-                continue
-            i = bisect.bisect_left(open_packs, (t, -1))
-            if i == len(open_packs):
-                bisect.insort(open_packs, (W - t, npacks))
-                npacks += 1
-            else:
-                rem, pi = open_packs.pop(i)
-                bisect.insort(open_packs, (rem - t, pi))
-        return npacks
-
-    rng = np.random.RandomState(7)
-    for lengths in (
-            np.clip(rng.lognormal(5.5, 1.2, 12000).astype(int), 1, None),
-            rng.randint(1, W + 1, 12000)):
-        df = spark.createDataFrame(
-            [(int(i), int(t)) for i, t in enumerate(lengths)],
-            "doc_id LONG, n_tokens LONG")
-        packed = with_pack_index(df, W, mode="bin").toPandas()
-        n_grouped = packed.pack_id.nunique()
-        n_serial = serial_bfd_packs(lengths)
-        excess = (n_grouped - n_serial) / n_serial
-        assert excess <= 0.015, (n_grouped, n_serial, excess)
-        # and the packing is valid: no pack over W (oversize excluded)
-        ok = packed[packed.pack_spans == 1]
-        used = ok.groupby("pack_id").apply(
-            lambda g: (g.pack_offset + g.n_tokens).max(),
-            include_groups=False)
-        assert (used <= W).all()
-
-
 def test_similarity_null_embeddings_flow_through(spark):
     """r6 review: the Arrow scoring UDFs must propagate NULL embeddings
     as NULL results (the HOF semantics they replaced), never crash the
     stage, and brute-force top-k must simply skip NULL rows."""
-    from hexscape_spark.similarity import (cosine_topk_bruteforce, _dot,
-                                           with_unit_norm)
+    from hexscape_spark.similarity import _dot, with_unit_norm
+    from tests.helpers import cosine_topk_bruteforce
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, None), (2, [0.6, 0.8]), (3, [0.0, 1.0])],
         "vec_id LONG, embedding ARRAY<DOUBLE>")
