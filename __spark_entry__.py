@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from hexscape_spark import hexgrid, params as P
 from hexscape_spark import sqlgen
-from hexscape_spark.checkpoint import materialise
+from hexscape_spark.checkpoint import materialise, spread
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -675,7 +675,9 @@ def _q_lang_dist_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hexscape_spark.textops import with_lang_guess
     # no repartition before the marker scoring: AQE coalesces a
     # REPARTITION_BY_COL of this table back to one task at local[4], so
-    # it spreads nothing and only adds a shuffle
+    # it spreads nothing and only adds a shuffle.  checkpoint.spread keeps
+    # the partitions, but the marker scoring is cheap JVM work: warm at
+    # local[4] on sf0.1 the query took 0.48 s spread, 0.43 s without
     return (with_lang_guess(spark.table("documents"))
             .groupBy("source", "lang", "lang_guess")
             .agg(F.count(F.lit(1)).alias("n"),
@@ -702,12 +704,14 @@ def _q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.expr("transform(embedding, v -> CAST(v AS DOUBLE))").alias("vd"))
     q = e.where("vec_id < 10").select(F.col("vec_id").alias("query_id"),
                                       F.col("vd").alias("qv"))
-    # r7 (guide §2.5): the embeddings fixture is a single-row-group file,
-    # so the scan + interpreted HOF dot-fold ran as ONE task; spreading
-    # the corpus side first parallelises the fold with the arithmetic
-    # (and hence every bit of the result) unchanged.
-    c = e.select(F.col("vec_id").alias("nn_id"), F.col("vd").alias("cv")) \
-        .repartition(F.col("nn_id"))
+    # the embeddings fixture is a single-row-group file, so the scan +
+    # interpreted HOF dot-fold runs as ONE task unless the corpus side is
+    # spread first; a column repartition does not do it (AQE coalesces
+    # it back to one task).  Warm at local[4] on sf0.1 the query took
+    # 0.44 s spread, 0.54 s with the column repartition, 0.54 s with
+    # none.  The arithmetic, hence every bit of the result, is unchanged.
+    c = spread(e.select(F.col("vec_id").alias("nn_id"),
+                        F.col("vd").alias("cv")), "nn_id")
     dot = F.expr("aggregate(zip_with(qv, cv, (x, y) -> x * y), 0.0D, (a, v) -> a + v)")
     scored = (c.join(F.broadcast(q), F.col("nn_id") != F.col("query_id"))
               .withColumn("cos_r", F.round(dot, 6)))

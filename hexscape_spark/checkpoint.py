@@ -6,7 +6,9 @@ fingerprint, row/byte metrics and per-partition row counts, so a re-run
 resumes from the last valid checkpoint instead of recomputing — the
 Spark-native equivalent of the reference's qs cache with version check
 (R/load_corine.R:171-199, R/read_corine.R:39-42).  In-run
-materialisation goes only through `materialise` and `cached` below.
+materialisation goes only through `materialise` and `cached` below, and
+a shuffle that must spread a Python stage over every core through
+`spread`.
 """
 
 from __future__ import annotations
@@ -104,6 +106,18 @@ def materialise(df: DataFrame) -> DataFrame:
     survive that, or a restart, goes through `checkpoint` (parquet).
     """
     return df.localCheckpoint(eager=True)
+
+
+def spread(df: DataFrame, *cols) -> DataFrame:
+    """Hash-partition `df` on `cols` into spark.sql.shuffle.partitions
+    partitions that AQE keeps.  AQE coalesces a column repartition or a
+    groupBy shuffle by bytes, so the small inputs of a Python stage
+    behind one land in ONE task; a shuffle with a partition count is
+    never coalesced.  Use it where a shuffle already is, on the keys the
+    next groupBy or join clusters by, so it replaces that shuffle instead
+    of adding one."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)
 
 
 @contextmanager

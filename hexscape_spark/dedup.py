@@ -3,9 +3,10 @@
 Exact (hash groupBy), MinHash+LSH banding, SimHash, and n-gram Jaccard —
 the large-scale training-data-pipeline surface.  The near-dup operators
 share one hash family, the md5-folded integer (sqlgen.md5_int_expr), so
-the DuckDB oracle reproduces them value-exact.  The MinHash signature is
-one Arrow-batched pandas UDF; the rest is built-in Spark SQL expressions,
-and the shuffles are the groupBys/joins on hash/bucket keys.
+the DuckDB oracle reproduces them value-exact.  The MinHash signature and
+the shingle-hash sets the Jaccard verify reads come from one Arrow-batched
+pandas UDF; the rest is built-in Spark SQL expressions, and the shuffles
+are the groupBys/joins on hash/bucket keys.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .checkpoint import materialise
+from .checkpoint import materialise, spread
 
 
 def exact_duplicates(df: DataFrame, key: str = "doc_id",
@@ -66,26 +67,20 @@ def _bucket_pairs(buckets: DataFrame, key: str,
             .distinct())
 
 
-def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
-                      num_hashes: int = 16, bands: int = 4,
-                      shingle_k: int = 3,
-                      max_bucket: int | None = None) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash + LSH banding.
+def _signatures(df: DataFrame, key: str, text: str, num_hashes: int,
+                shingle_k: int) -> DataFrame:
+    """(key, sig, hs) per document, from ONE Python pass: `sig` is the
+    MinHash signature, `hs` the sorted distinct md5-folded shingle hashes
+    it is the minimum over.  Shingles are word `shingle_k`-grams of the
+    lower-cased text (the _shingles rule: a shorter document is one
+    shingle).  NULL text has no shingles and no row.
 
-    The signature uses the md5-folded hash (sqlgen.md5_int_expr), which
-    evaluates bit-for-bit the same in DuckDB — so the SQL oracle
-    recomputes the exact pair set.  Band key is the concatenated signature
-    slice itself (banding needs only equality, not another hash).
-    `max_bucket` is an OPT-IN cap on per-bucket membership (default None =
-    complete results); at web scale PASS one — a degenerate bucket of 10^6
-    boilerplate pages emits 10^12 pairs otherwise (see _bucket_pairs).
-    Returns distinct (a, b), a < b.
-    """
+    The hash is sqlgen.md5_int_expr, which evaluates bit-for-bit the same
+    in DuckDB, so the SQL oracle recomputes the exact signatures."""
     import hashlib
     import re
 
     from . import sqlgen
-    rows = num_hashes // bands
     mix = np.array(sqlgen.mix_params(num_hashes), dtype=np.int64)
     ma, mb, mc = mix[:, 0], mix[:, 1], mix[:, 2]
     lo, p_mod, k_ = sqlgen.MIX_LO, sqlgen.MIX_P, shingle_k
@@ -93,14 +88,14 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
     # Python's unicode-aware \s would split on NBSP etc. and break parity
     splitter = re.compile(r"\s+", re.ASCII)
 
-    @F.pandas_udf("array<long>")
-    def signature(texts: pd.Series) -> pd.Series:
+    @F.pandas_udf("sig array<long>, hs array<long>")
+    def signature(texts: pd.Series) -> pd.DataFrame:
         # Whole signature per Arrow batch: Python md5 (C-speed) + one
         # numpy mix per doc.  The pure-SQL formulation of the same math
         # spent ~3s/5k docs in interpreted HOF lambdas (shingle concat +
         # per-element folds); this is the identical arithmetic — int64
         # exact — so the DuckDB oracle still reproduces it bit-for-bit.
-        out = []
+        sigs, hss = [], []
         for t in texts:
             words = splitter.split(t.lower())
             if len(words) >= k_:
@@ -108,35 +103,55 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
                       for i in range(len(words) - k_ + 1)]
             else:
                 sh = [" ".join(words)]
-            base = np.fromiter(
+            hs = np.unique(np.fromiter(
                 (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-                 for s in sh), dtype=np.int64, count=len(sh))
-            mixed = (ma[None, :] * (base[:, None] % lo)
-                     + mb[None, :] * (base[:, None] // lo)
+                 for s in sh), dtype=np.int64, count=len(sh)))
+            mixed = (ma[None, :] * (hs[:, None] % lo)
+                     + mb[None, :] * (hs[:, None] // lo)
                      + mc[None, :]) % p_mod
-            out.append(mixed.min(axis=0).tolist())
-        return pd.Series(out)
+            sigs.append(mixed.min(axis=0).tolist())
+            hss.append(hs.tolist())
+        return pd.DataFrame({"sig": sigs, "hs": hss})
 
-    # r7 (guide §2.5/§4): repartition BEFORE the signature UDF — a
-    # single-row-group input file otherwise funnels the whole corpus
-    # through one Python worker (deterministic hash key, retry-safe)
-    sig = df.select(F.col(key), F.col(text)).repartition(F.col(key)) \
-        .select(F.col(key), signature(F.col(text)).alias("__m"))
-    sig = sig.select(
-        key, *[F.element_at("__m", i + 1).alias(f"m{i}")
-               for i in range(num_hashes)])
-    band_cols = [
-        F.concat_ws(",", *[F.col(f"m{b * rows + j}").cast("string")
-                           for j in range(rows)]).alias(f"b{b}")
+    # the input is often one row group: spread it so the signature stage
+    # runs on every core, not in one Python worker (deterministic hash
+    # key, retry-safe)
+    docs = spread(df.where(F.col(text).isNotNull()).select(key, text), key)
+    return docs.select(F.col(key), signature(F.col(text)).alias("__s")) \
+        .select(key, "__s.sig", "__s.hs")
+
+
+def _band_buckets(sig: DataFrame, key: str, num_hashes: int,
+                  bands: int) -> DataFrame:
+    """(key, band, h): one row per LSH band of each signature.  The band
+    key is the concatenated signature slice itself (banding needs only
+    equality, not another hash)."""
+    rows = num_hashes // bands
+    band_keys = [
+        F.concat_ws(",", *[F.element_at("sig", b * rows + j + 1)
+                           .cast("string") for j in range(rows)])
         for b in range(bands)]
-    banded = sig.select(F.col(key), *band_cols)
-    buckets = banded.select(
-        key, F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("h"))
-            for b in range(bands)])).alias("bh"))
-    buckets = buckets.select(key, "bh.band", "bh.h")
+    return sig.select(key, F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"), h.alias("h"))
+        for b, h in enumerate(band_keys)])).alias("bh")) \
+        .select(key, "bh.band", "bh.h")
+
+
+def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
+                      num_hashes: int = 16, bands: int = 4,
+                      shingle_k: int = 3,
+                      max_bucket: int | None = None) -> DataFrame:
+    """Candidate near-duplicate pairs via MinHash + LSH banding
+    (_signatures, _band_buckets): the DuckDB oracle recomputes the exact
+    pair set.  NULL text pairs with nothing.
+    `max_bucket` is an OPT-IN cap on per-bucket membership (default None =
+    complete results); at web scale PASS one — a degenerate bucket of 10^6
+    boilerplate pages emits 10^12 pairs otherwise (see _bucket_pairs).
+    Returns distinct (a, b), a < b.
+    """
+    sig = _signatures(df, key, text, num_hashes, shingle_k).select(key, "sig")
     # Python stage: the self-join and the size cap both read the signatures
-    buckets = materialise(buckets)
+    buckets = materialise(_band_buckets(sig, key, num_hashes, bands))
     return _bucket_pairs(buckets, key, max_bucket)
 
 
@@ -165,32 +180,29 @@ def with_simhash(df: DataFrame, key: str = "doc_id", text: str = "text",
 def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
                         shingle_k: int = 3, threshold: float = 0.5,
                         num_hashes: int = 16, bands: int = 4) -> DataFrame:
-    """Exact n-gram Jaccard over LSH-prefiltered candidates: candidate
-    generation is minhash_lsh_pairs (cheap); the exact Jaccard is verified
-    with array_intersect/array_union on distinct shingle sets, computed
-    only for candidates (R3: cheap prefilter before the expensive op).
-    The whole pipeline (banding + exact verify) is reproducible in the
-    DuckDB oracle.  Returns (a, b, jaccard) with jaccard rounded to 6 dp
-    and >= threshold."""
-    # shared subtree: the id semi-join and both verify joins read cands
-    cands = materialise(minhash_lsh_pairs(df, key, text, num_hashes, bands,
-                                          shingle_k))
-    # R3: the expensive exact shingle sets are built ONLY for docs that
-    # appear in a candidate pair (semi-join prefilter), not the corpus
-    ids = (cands.select(F.col("a").alias(key))
-           .unionByName(cands.select(F.col("b").alias(key))).distinct())
-    # r7: repartition after the semi-join (single-row-group input -> the
-    # JVM shingle transform ran on one task)
-    sh = materialise(   # shared subtree: both verify joins read the sets
-        df.join(ids, on=key, how="left_semi")
-        .repartition(F.col(key))
-        .select(F.col(key),
-                F.array_distinct(_shingles(F.col(text), shingle_k))
-                .alias("ss")))
-    j = (cands.join(sh.selectExpr(f"{key} AS a", "ss AS sa"), on="a")
-         .join(sh.selectExpr(f"{key} AS b", "ss AS sb"), on="b"))
-    jac = F.round(F.size(F.array_intersect("sa", "sb"))
-                  / F.size(F.array_union("sa", "sb")), 6)
+    """Exact n-gram Jaccard over LSH-prefiltered candidates (R3: cheap
+    prefilter before the expensive op).  One Python pass (_signatures)
+    gives each document its signature AND its distinct shingle-hash set;
+    the candidates are the minhash_lsh_pairs banding of the signatures,
+    and each is verified as |A∩B| / (|A|+|B|−|A∩B|) over the two hash
+    sets.  NULL text pairs with nothing.
+
+    Hashes stand in for shingle strings: the md5 fold keeps 60 bits, so
+    two distinct shingles of a pair collide, and its Jaccard moves, with
+    probability about |A|·|B|/2^60.  The shingles are cut in Python, so
+    case folding follows str.lower (as the signature always did), not
+    the JVM's lower().  The DuckDB oracle compares the string sets and
+    stays the judge: test_queries_oracle.py's
+    test_query_matches_oracle[ngram_jaccard] pins the parity.  Returns
+    (a, b, jaccard) with jaccard rounded to 6 dp and >= threshold."""
+    # Python stage: the bucket self-join and both verify joins read docs
+    docs = materialise(_signatures(df, key, text, num_hashes, shingle_k))
+    cands = _bucket_pairs(_band_buckets(docs, key, num_hashes, bands),
+                          key, None)
+    j = (cands.join(docs.selectExpr(f"{key} AS a", "hs AS ha"), on="a")
+         .join(docs.selectExpr(f"{key} AS b", "hs AS hb"), on="b"))
+    inter = F.size(F.array_intersect("ha", "hb"))
+    jac = F.round(inter / (F.size("ha") + F.size("hb") - inter), 6)
     return (j.withColumn("jaccard", jac)
             .where(F.col("jaccard") >= threshold)
             .select("a", "b", "jaccard"))

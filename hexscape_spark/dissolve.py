@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geo
-from .checkpoint import cached, materialise
+from .checkpoint import cached, materialise, spread
 
 # level-1 slices per key: a ~sqrt(_NUM_SALTS)² grid of bbox-centre tiles
 _NUM_SALTS = 32
@@ -190,8 +190,9 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
                       .otherwise(F.col("__salt") * _SUB_SALTS))
                   .drop("__heavy"))
         # Python stage: the level-1 union runs once, then the cache goes
-        partial = materialise(salted.groupBy(key, "__salt").applyInPandas(
-            pre_union, schema=l1_schema))
+        partial = materialise(
+            spread(salted, key, "__salt").groupBy(key, "__salt")
+            .applyInPandas(pre_union, schema=l1_schema))
 
     stage_schema = (f"{key} STRING, __comp LONG, geom_wkb BINARY, "
                     "area DOUBLE, n_parts INT")
@@ -237,11 +238,16 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
             "n_parts": [int(pdf["n_parts"].sum())],
         })
 
-    staged = partial.groupBy(key).applyInPandas(split, schema=stage_schema)
+    # each grouped-map stage reads a `spread` of its groups: the shuffle
+    # its groupBy needs anyway, in partitions AQE does not coalesce into
+    # one task
+    staged = spread(partial, key).groupBy(key) \
+        .applyInPandas(split, schema=stage_schema)
     # one group per shuffle partition, not per component: each group is
     # one grouped-map call, and on a coverage of ~1,400 small components
     # a call per component doubled the merge's time
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    unioned = staged.groupBy(key, F.col("__comp") % width) \
+    staged = staged.withColumn("__slot", F.col("__comp") % width)
+    unioned = spread(staged, key, "__slot").groupBy(key, "__slot") \
         .applyInPandas(union_each, schema=stage_schema)
     return unioned.groupBy(key).applyInPandas(concat, schema=out_schema)

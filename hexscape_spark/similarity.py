@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.window import Window
 
-from .checkpoint import materialise
+from .checkpoint import materialise, spread
 
 
 def _stack(s: pd.Series) -> np.ndarray:
@@ -166,11 +166,11 @@ def _lsh_sketch(df: DataFrame, key: str, vec: str, planes: int, dim: int,
 
     NULL vectors can neither hash nor score and are dropped.  r7 (guide
     §2.4/§2.5/§4): ONE Arrow pass computes unit vectors AND every table's
-    sketch (adjacent pandas UDFs share one ArrowEvalPython node), spread
-    across cores by a repartition first (single-row-group inputs
-    otherwise hash the whole corpus in one Python worker)."""
-    base = df.where(F.col(vec).isNotNull()) \
-        .select(key, vec).repartition(F.col(key))
+    sketch (adjacent pandas UDFs share one ArrowEvalPython node), over a
+    `spread` of the input: single-row-group inputs otherwise hash the
+    whole corpus in one Python worker, and AQE coalesces a plain column
+    repartition of a small input back into one task."""
+    base = spread(df.where(F.col(vec).isNotNull()).select(key, vec), key)
     # sketch the RAW vector, not the unit-normed one (r4 ADVICE): the sign
     # bits are scale-invariant, and hashing the same bytes the SQL oracle
     # hashes removes the one cross-engine flake source — a normalised
@@ -294,16 +294,17 @@ def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
     u = materialise(with_unit_norm(df.select(key, vec), vec))
     cents = ivf_train_centroids(u, "unit_vec", n_lists, dim, seed,
                                 pre_normalized=True)
-    corpus = with_ivf_list(u, cents, nprobe=1).select(
+    # both sides `spread` on the join key: the list join reuses that
+    # shuffle, and its Arrow dot-product stage keeps one task per shuffle
+    # partition
+    corpus = spread(with_ivf_list(u, cents, nprobe=1).select(
         F.col(key).alias("nn_id"), F.col("unit_vec").alias("cv"),
-        F.element_at("ivf_list", 1).alias("list_id")) \
-        .repartition(F.col("list_id"))     # barrier + join-key pre-shuffle
+        F.element_at("ivf_list", 1).alias("list_id")), "list_id")
     qsrc = u if queries is None else with_unit_norm(
         queries.where(F.col(vec).isNotNull()), vec)
-    queries = with_ivf_list(qsrc, cents, nprobe=nprobe).select(
+    queries = spread(with_ivf_list(qsrc, cents, nprobe=nprobe).select(
         F.col(key).alias("query_id"), F.col("unit_vec").alias("qv"),
-        F.explode("ivf_list").alias("list_id")) \
-        .repartition(F.col("list_id"))
+        F.explode("ivf_list").alias("list_id")), "list_id")
     scored = (queries.join(corpus, on="list_id")
               .where(F.col("query_id") != F.col("nn_id"))
               .withColumn("cosine", _dot(F.col("cv"), F.col("qv")))

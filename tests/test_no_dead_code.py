@@ -277,6 +277,25 @@ def test_materialisation_only_through_checkpoint_module():
     assert not bare, "bare materialisation calls:\n" + "\n".join(bare)
 
 
+# `.repartition(` whose first argument is not a partition count
+_COLUMN_REPARTITION = re.compile(r"\.repartition\((?!\s*\d)")
+
+
+def test_column_repartition_only_through_spread():
+    """A shuffle that spreads a stage over the cores has one owner:
+    outside checkpoint.py the engine calls checkpoint.spread, never a
+    column-only repartition, which AQE coalesces back into one task on a
+    small input.  A literal partition count (`repartition(1)`) stays
+    allowed."""
+    bare = [f"{path.relative_to(ROOT)}:{i} {line.strip()}"
+            for path in DEFINING if path.name != "checkpoint.py"
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if _COLUMN_REPARTITION.search(line)
+            and not line.lstrip().startswith("#")]
+    assert not bare, "column repartitions outside spread:\n" + \
+        "\n".join(bare)
+
+
 def test_materialise_calls_name_a_reason():
     """Every materialise call carries a comment, on its line or the line
     above, naming one of the reasons checkpoint.materialise documents."""

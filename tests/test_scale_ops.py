@@ -356,6 +356,24 @@ def test_dedup_variants_find_planted_near_dups(spark):
     assert all(a != 102 and b != 102 for a, b in got)
 
 
+def test_ngram_jaccard_empty_short_and_null_text(spark):
+    """Empty text and documents shorter than shingle_k are one shingle
+    each (the whole lower-cased text), a leading blank is an empty first
+    word, and NULL text pairs with nothing.  The non-NULL rows are the
+    ones the string-set verify gave; NULL text used to crash the
+    signature UDF."""
+    from hexscape_spark.dedup import ngram_jaccard_pairs
+    rows = [(1, "the quick brown fox jumps over"),
+            (2, "the quick brown fox jumps over the"),
+            (3, ""), (4, ""), (5, "hi there"), (6, "Hi  THERE"), (7, "x"),
+            (8, "  the quick brown fox jumps over"), (9, None), (10, None)]
+    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    got = sorted(tuple(r) for r in
+                 ngram_jaccard_pairs(df, threshold=0.0).collect())
+    assert got == [(1, 2, 0.8), (1, 8, 0.8), (2, 8, 0.666667),
+                   (3, 4, 1.0), (5, 6, 1.0)]
+
+
 def test_cli_dedup_job_finds_planted_pair_and_caps_cluster(spark, tmp_path):
     """The CLI dedup job (called directly: main() would stop the shared
     session) writes the planted near-dup pair, and its --max-bucket cap
