@@ -120,24 +120,6 @@ def _sql_events_hex_rollup() -> str:
         f"FROM ({sub}) AS t GROUP BY cell_id, event_type")
 
 
-def _sql_events_hex_rollup_spark() -> str:
-    """Spark-side text of the events rollup (r7): identical arithmetic to
-    _sql_events_hex_rollup (which the DuckDB oracle keeps) with ONE
-    delta — a REPARTITION(event_id) hint after the read, because the
-    events fixture is a single-row-group parquet file whose fused
-    scan+assign+partial-agg otherwise runs as one task (guide §2.5
-    "input skew: repartition immediately after the read").  Aggregates
-    are COUNT and integer-cents SUM, so the repartitioning cannot move
-    a single bit of the result."""
-    sub = sqlgen.assign_sql(
-        "(SELECT /*+ REPARTITION(event_id) */ * FROM events)", "event_id",
-        keep=["event_type", "value"])
-    return (
-        "SELECT cell_id, event_type, COUNT(*) AS n, "
-        "CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents "
-        f"FROM ({sub}) AS t GROUP BY cell_id, event_type")
-
-
 def _kring_values(k: int) -> str:
     return ", ".join(f"({dq}, {dr})" for dq, dr, _ in hexgrid.kring_offsets(k))
 
@@ -1082,13 +1064,7 @@ def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cap, so the contract query must run uncapped (r4 review — at
     # fixture scale no bucket comes near the cap, but the semantics must
     # match by construction, not by luck)
-    # small_corpus: the uncapped oracle form is only valid for corpora
-    # whose O(n²/buckets) candidate set is computable anyway, so pinning
-    # the RDD-backed bucket/vector sides as broadcasts is sound here
-    # (r7 — without it, strategy selection wobbled run to run on the
-    # statistics-free checkpointed relations)
-    out = cosine_topk_lsh(e, planes=10, tables=4, rank_round=6,
-                          max_bucket=None, small_corpus=True)
+    out = cosine_topk_lsh(e, planes=10, tables=4, max_bucket=None)
     return out.select("query_id", "nn_id", "rank",
                       F.round("cosine", 6).alias("cos_r"))
 
@@ -1138,7 +1114,7 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole IVF machinery (k-means quantizer, list routing, per-list
     equi-join, rank) must reproduce the exact brute-force top-k the
     DuckDB oracle computes independently.  Ranking rounds the cosine to
-    6 dp first (rank_round) so the two engines' last-ulp summation
+    6 dp first so the two engines' last-ulp summation
     differences can't flip near-ties; recall at nprobe < n_lists stays
     pytest-verified (test_ivf_recall_and_exactness)."""
     _views(spark, sf_dir)
@@ -1147,8 +1123,7 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr("transform(embedding, v -> CAST(v AS DOUBLE))")
         .alias("embedding"))
-    out = cosine_topk_ivf(e, n_lists=8, nprobe=8, rank_round=6,
-                          queries=e.where("vec_id < 100"))
+    out = cosine_topk_ivf(e, e.where("vec_id < 100"), n_lists=8, nprobe=8)
     return out.select("query_id", "nn_id", "rank",
                       F.round("cosine", 6).alias("cos_r"))
 
@@ -1413,7 +1388,7 @@ def _q_hex_neighbours(spark: SparkSession, sf_dir: str) -> DataFrame:
     text): pure integer arithmetic, no float involved."""
     _views(spark, sf_dir)
     cells = _assign_ckpt(spark, "documents", "doc_id",
-                         "q, r, cell_id", distinct=True, spread=False)
+                         "q, r, cell_id", distinct=True)
     a = cells.select(F.col("q").alias("aq"), F.col("r").alias("ar"),
                      F.col("cell_id"))
     b = cells.select(F.col("q").alias("bq"), F.col("r").alias("br"),
@@ -1468,11 +1443,9 @@ def _q_salted_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hexscape_spark.skew import salted_agg
     # salted_agg reads its input twice (heavy-key pass + salted agg); the
     # assign is cheap JVM arithmetic, so both passes recompute it rather
-    # than pay a materialise job.  The REPARTITION hint spreads the scan;
-    # sample_fraction=1.0 makes the heavy set exact counts.
-    sub = sqlgen.assign_sql(
-        "(SELECT /*+ REPARTITION(event_id) */ * FROM events)", "event_id",
-        keep=["value"])
+    # than pay a materialise job.  sample_fraction=1.0 makes the heavy
+    # set exact counts.
+    sub = sqlgen.assign_sql("events", "event_id", keep=["value"])
     ev = spark.sql(f"SELECT event_id, cell_id, value FROM ({sub}) AS t")
     ev = ev.withColumn("value_cents",
                        F.expr("CAST(ROUND(value * 100) AS BIGINT)"))
@@ -1857,31 +1830,24 @@ FROM ar JOIN np ON ar.clc = np.clc
 
 
 def _assign_ckpt(spark: SparkSession, table: str, key: str,
-                 select: str, distinct: bool = False,
-                 spread: bool = True) -> DataFrame:
-    """Materialised hex-assign relation (r7, guide §2.4/§2.5/§4):
+                 select: str, distinct: bool = False) -> DataFrame:
+    """Materialised hex-assign relation (r7, guide §2.4/§4).
 
-      * the fixture tables are single-row-group parquet files, so a plain
-        scan (and everything Catalyst fuses onto it) runs as ONE task —
-        a REPARTITION(key) hint right after the read spreads the assign
-        arithmetic across the session's shuffle partitions (deterministic
-        hash key, not round-robin, so retries are safe per SPARK-38388).
-        `spread=False` skips the hint for small inputs where the A/B
-        showed the extra shuffle costs more than the parallelism buys
-        (documents at 50k rows: 0.23 s unhinted vs 0.30 s hinted);
-      * materialise (a plan barrier) stores (key, lon, lat, q, r) so
-        downstream equi-joins see a plain relation.  Without it, the
-        join-key IsNotNull inference re-substitutes the WHOLE layered
-        geocode+cube-rounding alias chain into a scan-level Filter (and
-        CollapseProject re-inlines it per consumer) — the resulting
-        many-thousand-node condition blows codegen and was measured at
-        21 s for hex_nearest_cell at sf1.0 vs ~1.4 s for the assign
-        itself.  The checkpoint is INSIDE the timed query and recomputed
-        from parquet on every invocation — nothing persists across runs.
+    materialise (a plan barrier) stores (key, lon, lat, q, r) so
+    downstream equi-joins see a plain relation.  Without it, the join-key
+    IsNotNull inference re-substitutes the WHOLE layered
+    geocode+cube-rounding alias chain into a scan-level Filter (and
+    CollapseProject re-inlines it per consumer) — the resulting
+    many-thousand-node condition blows codegen and was measured at 21 s
+    for hex_nearest_cell at sf1.0 vs ~1.4 s for the assign itself.  The
+    checkpoint is INSIDE the timed query and recomputed from parquet on
+    every invocation — nothing persists across runs.
+
+    The table is read plain: a REPARTITION(key) hint after the read lost
+    at local[4] on sf0.1 (hex_nearest_cell warm median 0.92 s hinted vs
+    0.81 s plain), the assign arithmetic being cheaper than the shuffle.
     """
-    src = f"(SELECT /*+ REPARTITION({key}) */ * FROM {table})" if spread \
-        else table
-    sub = sqlgen.assign_sql(src, key)
+    sub = sqlgen.assign_sql(table, key)
     d = "DISTINCT " if distinct else ""
     # plan barrier: joins must not re-inline the assign expression tree
     return materialise(spark.sql(f"SELECT {d}{select} FROM ({sub}) AS t"))
@@ -1910,7 +1876,7 @@ def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _assign_ckpt(spark, "events", "event_id",
                       "event_id, lon, lat, q, r")
     occ = _assign_ckpt(spark, "documents", "doc_id", "q, r, cell_id",
-                       distinct=True, spread=False)
+                       distinct=True)
     return nearest_cells(ev, occ, k_ring=3, point_id="event_id") \
         .select("event_id", "nn_cell_id", F.round("dist", 6).alias("dist_r"))
 
@@ -1945,7 +1911,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hex_kring_profile": _q_hex_kring_profile,
         "raster_to_hex": _sqlq(_sql_raster_to_hex),
         "hex_lattice_square": _sqlq(_sql_hex_lattice_square_spark),
-        "events_hex_rollup": _sqlq(_sql_events_hex_rollup_spark),
+        "events_hex_rollup": _sqlq(_sql_events_hex_rollup),
         "hex_nearest_cell": _q_nearest_cell_knn,
         "salted_cell_counts": _q_salted_cell_counts,
         "bfs_hops": _q_bfs_hops,

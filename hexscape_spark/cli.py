@@ -31,7 +31,6 @@ import json
 
 import pandas as pd
 import os
-import sys
 import zipfile
 
 

@@ -11,12 +11,16 @@ are the groupBys/joins on hash/bucket keys.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import sqlgen
 from .checkpoint import materialise, spread
 
 
@@ -67,6 +71,45 @@ def _bucket_pairs(buckets: DataFrame, key: str,
             .distinct())
 
 
+# re.ASCII pins \s to the ASCII class RE2 (DuckDB) and Java use — Python's
+# unicode-aware \s would split on NBSP etc. and break parity
+_WORD_SPLIT = re.compile(r"\s+", re.ASCII)
+
+
+def _signature_batch(texts: pd.Series, shingle_k: int,
+                     mix: np.ndarray) -> pd.DataFrame:
+    """The (sig, hs) rows of one Arrow batch of texts (see _signatures).
+
+    Module level, so cloudpickle ships it by reference: a worker that
+    runs the signature UDF imports this package, and with it the zip
+    hook in hexscape_spark/__init__.py.
+
+    Whole signature per Arrow batch: Python md5 (C-speed) + one numpy mix
+    per doc.  The pure-SQL formulation of the same math spent ~3s/5k docs
+    in interpreted HOF lambdas (shingle concat + per-element folds); this
+    is the identical arithmetic — int64 exact — so the DuckDB oracle
+    still reproduces it bit-for-bit."""
+    ma, mb, mc = mix[:, 0], mix[:, 1], mix[:, 2]
+    lo, p_mod = sqlgen.MIX_LO, sqlgen.MIX_P
+    sigs, hss = [], []
+    for t in texts:
+        words = _WORD_SPLIT.split(t.lower())
+        if len(words) >= shingle_k:
+            sh = [" ".join(words[i:i + shingle_k])
+                  for i in range(len(words) - shingle_k + 1)]
+        else:
+            sh = [" ".join(words)]
+        hs = np.unique(np.fromiter(
+            (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+             for s in sh), dtype=np.int64, count=len(sh)))
+        mixed = (ma[None, :] * (hs[:, None] % lo)
+                 + mb[None, :] * (hs[:, None] // lo)
+                 + mc[None, :]) % p_mod
+        sigs.append(mixed.min(axis=0).tolist())
+        hss.append(hs.tolist())
+    return pd.DataFrame({"sig": sigs, "hs": hss})
+
+
 def _signatures(df: DataFrame, key: str, text: str, num_hashes: int,
                 shingle_k: int) -> DataFrame:
     """(key, sig, hs) per document, from ONE Python pass: `sig` is the
@@ -77,41 +120,11 @@ def _signatures(df: DataFrame, key: str, text: str, num_hashes: int,
 
     The hash is sqlgen.md5_int_expr, which evaluates bit-for-bit the same
     in DuckDB, so the SQL oracle recomputes the exact signatures."""
-    import hashlib
-    import re
-
-    from . import sqlgen
     mix = np.array(sqlgen.mix_params(num_hashes), dtype=np.int64)
-    ma, mb, mc = mix[:, 0], mix[:, 1], mix[:, 2]
-    lo, p_mod, k_ = sqlgen.MIX_LO, sqlgen.MIX_P, shingle_k
-    # re.ASCII pins \s to the ASCII class RE2 (DuckDB) and Java use —
-    # Python's unicode-aware \s would split on NBSP etc. and break parity
-    splitter = re.compile(r"\s+", re.ASCII)
 
     @F.pandas_udf("sig array<long>, hs array<long>")
     def signature(texts: pd.Series) -> pd.DataFrame:
-        # Whole signature per Arrow batch: Python md5 (C-speed) + one
-        # numpy mix per doc.  The pure-SQL formulation of the same math
-        # spent ~3s/5k docs in interpreted HOF lambdas (shingle concat +
-        # per-element folds); this is the identical arithmetic — int64
-        # exact — so the DuckDB oracle still reproduces it bit-for-bit.
-        sigs, hss = [], []
-        for t in texts:
-            words = splitter.split(t.lower())
-            if len(words) >= k_:
-                sh = [" ".join(words[i:i + k_])
-                      for i in range(len(words) - k_ + 1)]
-            else:
-                sh = [" ".join(words)]
-            hs = np.unique(np.fromiter(
-                (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-                 for s in sh), dtype=np.int64, count=len(sh)))
-            mixed = (ma[None, :] * (hs[:, None] % lo)
-                     + mb[None, :] * (hs[:, None] // lo)
-                     + mc[None, :]) % p_mod
-            sigs.append(mixed.min(axis=0).tolist())
-            hss.append(hs.tolist())
-        return pd.DataFrame({"sig": sigs, "hs": hss})
+        return _signature_batch(texts, shingle_k, mix)
 
     # the input is often one row group: spread it so the signature stage
     # runs on every core, not in one Python worker (deterministic hash
@@ -163,7 +176,6 @@ def with_simhash(df: DataFrame, key: str = "doc_id", text: str = "text",
     driver oracle can verify it.  Grouped shape is also the scale shape:
     map-side partial aggregation of the vote sums, one shuffle on `key`.
     """
-    from . import sqlgen
     tok = df.select(
         F.col(key),
         F.explode(F.split(F.lower(F.col(text)), r"\s+")).alias("w"))
@@ -263,15 +275,13 @@ def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
     merge their dedup classes — the exact default keeps the oracle-grade
     semantics.
     """
-    import re as _re
-
     # NULL keys have no reassembly identity (and a NULL key would win
     # every line: MIN(struct) sorts a NULL field first — the r4 struct-
     # MIN lesson): such rows pass through with their text unchanged and
     # never participate in the dedup
     nulls = df.where(F.col(key).isNull()).withColumn(out, F.col(text))
     df_nn = df.where(F.col(key).isNotNull())
-    sep_rx = _re.sub(r"([\\.\[\]{}()*+\-?^$|])", r"\\\1", sep)
+    sep_rx = re.sub(r"([\\.\[\]{}()*+\-?^$|])", r"\\\1", sep)
     lines = df_nn.select(
         F.col(key),
         F.posexplode(F.split(F.col(text), sep_rx)).alias("__i", "__l"))

@@ -969,44 +969,27 @@ def _merged_intervals_at(x1, y1, x2, y2, pid, xm: float,
     return merged
 
 
-def _combine_interval_lists(ia: list, ib: list, op: str) -> list:
-    """Combine two sorted merged-interval lists (lo, hi, lo_seg, hi_seg)
-    pointwise: 'intersection' or 'difference' (A minus B)."""
-    if op == "intersection":
-        out = []
-        i = j = 0
-        while i < len(ia) and j < len(ib):
-            alo, ahi, als, ahs = ia[i]
-            blo, bhi, bls, bhs = ib[j]
-            lo, lo_s = (alo, als) if alo >= blo else (blo, bls)
-            hi, hi_s = (ahi, ahs) if ahi <= bhi else (bhi, bhs)
-            if hi > lo:
-                out.append((lo, hi, lo_s, hi_s))
-            if ahi < bhi:
-                i += 1
-            else:
-                j += 1
-        return out
-    if op == "difference":
-        out = []
-        for alo, ahi, als, ahs in ia:
-            cur_lo, cur_ls = alo, als
-            done = False
-            for blo, bhi, bls, bhs in ib:
-                if bhi <= cur_lo:
-                    continue
-                if blo >= ahi:
-                    break
-                if blo > cur_lo:
-                    out.append((cur_lo, blo, cur_ls, bls))
-                cur_lo, cur_ls = bhi, bhs
-                if cur_lo >= ahi:
-                    done = True
-                    break
-            if not done and cur_lo < ahi:
-                out.append((cur_lo, ahi, cur_ls, ahs))
-        return out
-    raise ValueError(op)
+def _difference_intervals(ia: list, ib: list) -> list:
+    """Pointwise difference (A minus B) of two sorted merged-interval
+    lists (lo, hi, lo_seg, hi_seg)."""
+    out = []
+    for alo, ahi, als, ahs in ia:
+        cur_lo, cur_ls = alo, als
+        done = False
+        for blo, bhi, bls, bhs in ib:
+            if bhi <= cur_lo:
+                continue
+            if blo >= ahi:
+                break
+            if blo > cur_lo:
+                out.append((cur_lo, blo, cur_ls, bls))
+            cur_lo, cur_ls = bhi, bhs
+            if cur_lo >= ahi:
+                done = True
+                break
+        if not done and cur_lo < ahi:
+            out.append((cur_lo, ahi, cur_ls, ahs))
+    return out
 
 
 def _seam_edges(x: float, left, right, tol: float) -> list[tuple]:
@@ -1321,14 +1304,16 @@ def _trace_regions(x1, y1, x2, y2, xs, interval_fn, diag: float,
     return (out, want) if return_area else out
 
 
-def _boolean_polygons(a: list[list[np.ndarray]], b: list[list[np.ndarray]],
-                      op: str) -> list[list[np.ndarray]]:
-    """Boundary-traced boolean of two polygon SETS (each union-merged
-    internally first): op in {'intersection', 'difference'}."""
+def difference_polygons(a: list[list[np.ndarray]],
+                        b: list[list[np.ndarray]]
+                        ) -> list[list[np.ndarray]]:
+    """st_difference returning actual polygons: the boundary-traced
+    (∪a) minus (∪b) — the geometry form of the coverage-gap computation
+    (R/extract_corine.R:177-205)."""
     if not a:
         return []
     if not b:
-        return list(a) if op == "difference" else []
+        return list(a)
     x1, y1, x2, y2, pid = _poly_set_segments(list(a) + list(b))
     is_a = pid < len(a)
     xs = np.unique(np.concatenate(
@@ -1339,24 +1324,15 @@ def _boolean_polygons(a: list[list[np.ndarray]], b: list[list[np.ndarray]],
     def intervals(xm: float):
         ia = _merged_intervals_at(x1, y1, x2, y2, pid, xm, sel=is_a)
         ib = _merged_intervals_at(x1, y1, x2, y2, pid, xm, sel=~is_a)
-        return _combine_interval_lists(ia, ib, op)
+        return _difference_intervals(ia, ib)
 
     try:
         return _trace_regions(x1, y1, x2, y2, xs, intervals, diag)
     except UnionTraceError:
         # exact rational fallback, same as union_component
         from . import geo_exact
-        out, _ = geo_exact.exact_boolean_trace(a, b, op)
+        out, _ = geo_exact.exact_difference_trace(a, b)
         return out
-
-
-def difference_polygons(a: list[list[np.ndarray]],
-                        b: list[list[np.ndarray]]
-                        ) -> list[list[np.ndarray]]:
-    """st_difference returning actual polygons: (∪a) minus (∪b) — the
-    geometry form of the coverage-gap computation
-    (R/extract_corine.R:177-205)."""
-    return _boolean_polygons(a, b, "difference")
 
 
 def polygons_bounds(polys: list[list[np.ndarray]]) -> tuple[float, float, float, float]:

@@ -36,7 +36,7 @@ import numpy as np
 
 from . import geo
 
-__all__ = ["exact_union_trace", "exact_boolean_trace"]
+__all__ = ["exact_union_trace", "exact_difference_trace"]
 
 
 # --- segment soup -----------------------------------------------------------
@@ -377,21 +377,17 @@ def exact_union_trace(polys: list[list[np.ndarray]]):
     return _assemble_polygons(rings), float(want)
 
 
-def exact_boolean_trace(a: list[list[np.ndarray]],
-                        b: list[list[np.ndarray]], op: str):
-    """Exact boolean ('intersection' | 'difference') boundary of two
-    polygon sets.  Returns (polygons, area_float)."""
+def exact_difference_trace(a: list[list[np.ndarray]],
+                           b: list[list[np.ndarray]]):
+    """Exact (∪a) minus (∪b) boundary of two polygon sets.  Returns
+    (polygons, area_float)."""
     from .geo import _assemble_polygons
     segs_a = _exact_segments(a)
     segs_b = _exact_segments(b, pid_base=len(a))
     if not segs_a:
         return [], 0.0
     if not segs_b:
-        if op == "difference":
-            rings, want = _exact_trace(
-                segs_a, set(), lambda idxs, xm: _intervals_at(segs_a, idxs, xm))
-            return _assemble_polygons(rings), float(want)
-        return [], 0.0
+        return exact_union_trace(a)
     segs = segs_a + segs_b
     na = len(segs_a)
     pairs = (_candidate_pairs(segs_a) +
@@ -403,7 +399,7 @@ def exact_boolean_trace(a: list[list[np.ndarray]],
     def interval_fn(idxs, xm):
         ia = _intervals_at(segs, [i for i in idxs if i < na], xm)
         ib = _intervals_at(segs, [i for i in idxs if i >= na], xm)
-        return geo._combine_interval_lists(ia, ib, op)
+        return geo._difference_intervals(ia, ib)
 
     rings, want = _exact_trace(segs, xs_extra, interval_fn)
     return _assemble_polygons(rings), float(want)

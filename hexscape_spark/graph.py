@@ -136,8 +136,8 @@ def _union_find_min_labels(parent: dict, pairs) -> dict:
 CC_LOCAL_CAP = 2_000_000
 
 
-def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
-                         nodes: DataFrame | None = None,
+def connected_components(edges: DataFrame, nodes: DataFrame,
+                         a: str = "src", b: str = "dst",
                          max_rounds: int = 64,
                          local_cap: int = CC_LOCAL_CAP) -> DataFrame:
     """Distributed connected components over an arbitrary edge list
@@ -157,12 +157,9 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
     test_connected_components_regimes_agree).  This is the generic form
     of habitat.grid_components, which delegates here.
 
-    `nodes` optionally supplies isolated vertices (single-column `node`);
-    by default the vertex set is the ids appearing in `edges`.
+    `nodes` is the vertex set (single-column `node`), isolated vertices
+    included; an edge with an endpoint outside it connects nothing.
     """
-    if nodes is None:
-        nodes = (edges.select(F.col(a).alias("node"))
-                 .unionByName(edges.select(F.col(b).alias("node"))))
     # shared subtree: the gate count, the collect and the label seed
     nodes = materialise(nodes.select("node").distinct())
     # gate on the RAW pair count (no extra distinct shuffle just to
@@ -179,10 +176,10 @@ def connected_components(edges: DataFrame, a: str = "src", b: str = "dst",
                 parent: dict = {r["node"]: r["node"]
                                 for r in nodes.collect()}
                 pairs = [(r["na"], r["nb"]) for r in e.collect()]
-                # NULL endpoints and endpoints outside an explicit
-                # `nodes` subset mirror the distributed loop's join
-                # semantics: NULL never equi-joins and unlabelled
-                # endpoints drop, so such an edge connects nothing
+                # NULL endpoints and endpoints outside `nodes` mirror
+                # the distributed loop's join semantics: NULL never
+                # equi-joins and unlabelled endpoints drop, so such an
+                # edge connects nothing
                 labels = _union_find_min_labels(
                     parent, (p for p in pairs
                              if p[0] is not None and p[1] is not None

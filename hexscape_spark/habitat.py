@@ -399,8 +399,7 @@ def discretise_habitat(spark: SparkSession, habitat: DataFrame,
 
         def pick_target_z(df: DataFrame) -> float:
             ranked = global_cumsum(df.withColumn("__km2", F.col("area") / 1e6),
-                                   ["z"], "__km2", out="cum_km2",
-                                   ascending=False)
+                                   [F.desc("z")], "__km2", out="cum_km2")
             ranked = ranked.withColumn(
                 "delta", F.abs(F.col("cum_km2") - F.lit(total_size_km2)))
             return ranked.orderBy("delta").limit(1).collect()[0]["z"]

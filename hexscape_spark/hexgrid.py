@@ -123,8 +123,7 @@ def kring_offsets_df(spark: SparkSession, k: int) -> DataFrame:
 
 def lattice(spark: SparkSession, minx: float, miny: float, maxx: float,
             maxy: float, hex_width: float = P.HEX_WIDTH,
-            refx: float = P.REFX, refy: float = P.REFY,
-            num_partitions: int | None = None) -> DataFrame:
+            refx: float = P.REFX, refy: float = P.REFY) -> DataFrame:
     """Distributed hex lattice covering a bbox: DataFrame(q, r, hex_cx, hex_cy).
 
     The (q, r) range is axial_range's.  Generated with spark.range ->
@@ -135,14 +134,13 @@ def lattice(spark: SparkSession, minx: float, miny: float, maxx: float,
                                          refx, refy)
     nr = r_hi - r_lo + 1
     nq = q_hi - q_lo + 1
-    if num_partitions is None:
-        # ~256 cells per task (r7, guide §2.5): the old 4096-cell target
-        # put the fixture-scale lattice's entire clip stage in ONE Python
-        # task; per-task worker overhead is ~10-30 ms, far below the
-        # serial-clip cost it was avoiding.  Planet-scale lattices still
-        # fan out fully (capped at the session parallelism either way).
-        num_partitions = max(1, min(spark.sparkContext.defaultParallelism,
-                                    (nr * nq) // 256 + 1))
+    # ~256 cells per task (r7, guide §2.5): the old 4096-cell target put
+    # the fixture-scale lattice's entire clip stage in ONE Python task;
+    # per-task worker overhead is ~10-30 ms, far below the serial-clip
+    # cost it was avoiding.  Planet-scale lattices still fan out fully
+    # (capped at the session parallelism).
+    num_partitions = max(1, min(spark.sparkContext.defaultParallelism,
+                                (nr * nq) // 256 + 1))
     rng = spark.range(0, nr * nq, 1, num_partitions)
     df = rng.selectExpr(
         f"CAST(id % {nq} + {q_lo} AS BIGINT) AS q",

@@ -1,8 +1,8 @@
 """Raster <-> vector resampling onto the hex lattice (north-star op).
 
 A raster is a DataFrame of (ix, iy, value) cells with an affine georeference
-(origin + pixel size).  Both directions are pure column math + one hash
-aggregation — no UDFs, no shuffle beyond the rollup:
+(origin + pixel size).  Both nearest-centre directions are pure column
+math + one hash aggregation — no UDFs, no shuffle beyond the rollup:
 
   * raster -> hex:  pixel centre -> containing hex (the same cube-rounding
     encode as pages), then per-hex aggregation (mean/sum/count, optionally
@@ -19,12 +19,14 @@ expressions, so the driver oracle checks it bit-for-bit.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import hexgrid
+from . import geo
 from . import params as P
 from . import sqlgen
+from .cover import polygon_cell_cover
 from .hexgrid import _apply_layers
 
 
@@ -76,72 +78,31 @@ def raster_to_hex_area_weighted(raster: DataFrame, origin_x: float,
     pixel∩hex areas (the conservative/mass-preserving resampling, vs the
     nearest-centre rule of raster_to_hex).
 
-    Shape: per pixel, the candidate hexes are the <= ~6 cells whose axial
-    coordinates fall in the pixel's sheared bbox (pure arithmetic — the
-    lattice-range derivation of hexgrid.lattice applied per row), exploded
-    JVM-side; the exact clip areas come from one Arrow-batched kernel over
-    the (pixel, candidate) pairs; one hash aggregation per cell.  Σ weights
-    per pixel == pixel area (conservation is pytest-pinned).
+    Each pixel (one raster row per (ix, iy)) becomes a rectangle polygon
+    and goes through cover.polygon_cell_cover, the one exact hex∩polygon
+    cover every polygon aggregate uses; the cover areas join back to the
+    pixel values on the packed (ix, iy) key, then one hash aggregation
+    per cell.  Σ weights per pixel == pixel area (conservation is
+    pytest-pinned).
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from . import geo
-
-    w = hex_width
-    step = hexgrid.row_step(w)
-    tan30 = hexgrid.TAN30
-    # pixel corners
-    x0 = f"({sqlgen._f(origin_x)} + ix * {sqlgen._f(pixel)})"
-    y0 = f"({sqlgen._f(origin_y)} + iy * {sqlgen._f(pixel)})"
-    x1 = f"({x0} + {sqlgen._f(pixel)})"
-    y1 = f"({y0} + {sqlgen._f(pixel)})"
-    # candidate axial ranges (hexgrid.axial_range per row, +-1 pad)
-    r_lo = (f"CAST(FLOOR(({sqlgen._f(refy)} - {y1}) / {sqlgen._f(step)}) "
-            "AS BIGINT) - 1")
-    r_hi = (f"CAST(CEIL(({sqlgen._f(refy)} - {y0}) / {sqlgen._f(step)}) "
-            "AS BIGINT) + 1")
-    q_lo = (f"CAST(FLOOR(({x0} + ({y0} - {sqlgen._f(refy)}) * "
-            f"{sqlgen._f(tan30)} - {sqlgen._f(refx)}) / {sqlgen._f(w)}) "
-            "AS BIGINT) - 1")
-    q_hi = (f"CAST(CEIL(({x1} + ({y1} - {sqlgen._f(refy)}) * "
-            f"{sqlgen._f(tan30)} - {sqlgen._f(refx)}) / {sqlgen._f(w)}) "
-            "AS BIGINT) + 1")
-    cand = raster.selectExpr(
-        "*", f"{x0} AS __x0", f"{y0} AS __y0",
-        f"explode(sequence({q_lo}, {q_hi})) AS q") \
-        .selectExpr("*", f"explode(sequence({r_lo}, {r_hi})) AS r")
-    cx, cy = sqlgen.centroid_exprs("q", "r", w, refx, refy)
-    cand = cand.selectExpr("*", f"{cx} AS __cx", f"{cy} AS __cy")
-
-    schema = (f"q LONG, r LONG, {value} DOUBLE, __w DOUBLE")
     pix = float(pixel)
 
-    def clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            areas = np.zeros(len(pdf))
-            xs = pdf["__x0"].to_numpy()
-            ys = pdf["__y0"].to_numpy()
-            hx = pdf["__cx"].to_numpy()
-            hy = pdf["__cy"].to_numpy()
-            for i in range(len(pdf)):
-                ring = hexgrid.hex_ring(hx[i], hy[i], w)
-                areas[i] = geo.area_polygons_in_convex(
-                    [[geo.rect_ring(xs[i], ys[i],
-                                    xs[i] + pix, ys[i] + pix)]], ring)
-            out = pd.DataFrame({"q": pdf["q"], "r": pdf["r"],
-                                value: pdf[value], "__w": areas})
-            yield out[out["__w"] > 0.0]
+    @F.pandas_udf("binary")
+    def rect_wkb(x0: pd.Series, y0: pd.Series) -> pd.Series:
+        return pd.Series([geo.rect_wkb(a, b, a + pix, b + pix)
+                          for a, b in zip(x0, y0)])
 
-    pairs = cand.mapInPandas(clip, schema=schema)
-    cell_id = sqlgen.cell_id_expr("q", "r")
-    return (pairs.selectExpr("*", f"{cell_id} AS cell_id")
+    key = F.expr("shiftleft(CAST(iy AS BIGINT), 32) | "
+                 "(CAST(ix AS BIGINT) & 4294967295)").alias("__pid")
+    x0 = F.expr(f"{sqlgen._f(origin_x)} + ix * {sqlgen._f(pixel)}")
+    y0 = F.expr(f"{sqlgen._f(origin_y)} + iy * {sqlgen._f(pixel)}")
+    cover = polygon_cell_cover(
+        raster.select(key, rect_wkb(x0, y0).alias("geom_wkb")),
+        hex_width, refx, refy, poly_id="__pid")
+    w = F.col("cover_area")
+    return (cover.join(raster.select(key, value), "__pid")
             .groupBy("cell_id", "q", "r")
-            .agg(F.sum("__w").alias("covered_area"),
-                 F.sum(F.col("__w") * F.col(value)).alias(f"wsum_{value}"),
-                 (F.sum(F.col("__w") * F.col(value)) / F.sum("__w"))
+            .agg(F.sum(w).alias("covered_area"),
+                 F.sum(w * F.col(value)).alias(f"wsum_{value}"),
+                 (F.sum(w * F.col(value)) / F.sum(w))
                  .alias(f"wavg_{value}")))

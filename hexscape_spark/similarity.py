@@ -10,8 +10,8 @@ Arrow-batched numpy (einsum over stacked batches) — the earlier
 F.aggregate/zip_with HOF forms LOOK JVM-native but execute as
 interpreted lambda folds at ~ms/row on 64-wide vectors (measured: 10M
 scored pairs took 75 s HOF vs ~4 s Arrow).  Cross-engine value
-semantics are unaffected: every consumer rounds the cosine (rank_round /
-ROUND 6dp) before ranking or emitting, which already absorbs
+semantics are unaffected: every consumer rounds the cosine (ROUND 6dp)
+before ranking or emitting, which already absorbs
 summation-order ulps between Spark and DuckDB's list_dot_product —
 numpy's pairwise order sits inside the same tolerance.
 """
@@ -204,29 +204,18 @@ def _cap_buckets(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
     return buckets.join(ok, on=["band", "h"])
 
 
-def ivf_train_centroids(df: DataFrame, vec: str = "embedding",
+def ivf_train_centroids(df: DataFrame, vec: str = "unit_vec",
                         n_lists: int = 16, dim: int = 64, seed: int = 42,
-                        sample: int = 4096,
-                        pre_normalized: bool = False) -> list[list[float]]:
+                        sample: int = 4096) -> list[list[float]]:
     """IVF coarse quantizer: k-means centroids trained driver-side on a
-    deterministic sample (the scale-standard approach — the quantizer is
-    tiny; the corpus never leaves the executors).
-
-    `pre_normalized=True` (r7): the caller already holds unit vectors in
-    `vec` — skip the in-train normalisation pass (re-normalising a unit
-    vector would also perturb the last ulp, so skipping is both cheaper
-    and the bit-exact choice)."""
-    import numpy as np
-    src = df.where(F.col(vec).isNotNull())
-    if pre_normalized:
-        rows = src.select(F.col(vec).alias("unit_vec")) \
-            .limit(sample).collect()
-    else:
-        rows = (with_unit_norm(src, vec)
-                .select("unit_vec").limit(sample).collect())
+    deterministic sample of the unit vectors in `vec` (the scale-standard
+    approach — the quantizer is tiny; the corpus never leaves the
+    executors)."""
+    rows = df.where(F.col(vec).isNotNull()).select(vec) \
+        .limit(sample).collect()
     if not rows:
         raise ValueError("ivf_train_centroids: no non-null vectors")
-    x = np.array([r["unit_vec"] for r in rows], dtype=np.float64)
+    x = np.array([r[vec] for r in rows], dtype=np.float64)
     rng = np.random.RandomState(seed)
     centers = x[rng.choice(len(x), size=min(n_lists, len(x)), replace=False)]
     for _ in range(25):
@@ -261,47 +250,46 @@ def with_ivf_list(df: DataFrame, centroids: list[list[float]],
     return df.withColumn(out, lists)
 
 
-def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, nn_id, cosine) rows per query, ranked by
+    ROUND(cosine, 6), ties broken by id — the cross-engine determinism
+    device: rounding before ranking keeps an oracle whose float
+    summation order differs in the last ulp from flipping near-ties."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(F.round("cosine", 6)),
+                                               F.asc("nn_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
+
+
+def cosine_topk_ivf(df: DataFrame, queries: DataFrame, key: str = "vec_id",
                     vec: str = "embedding", k: int = 5, n_lists: int = 16,
                     nprobe: int = 2, dim: int = 64,
-                    seed: int = 42,
-                    rank_round: int | None = None,
-                    queries: DataFrame | None = None) -> DataFrame:
+                    seed: int = 42) -> DataFrame:
     """IVF ANN: corpus bucketed by nearest centroid (1 list), queries probe
     their nprobe nearest lists; candidate generation is an equi-join on
     list id — the classic inverted-file layout, shuffle-partitioned by
-    list.  Recall grows with nprobe; exact within probed lists.
+    list.  Recall grows with nprobe; exact within probed lists, so with
+    nprobe == n_lists the result equals the exact brute-force top-k.
 
-    `rank_round` ranks by ROUND(cosine, rank_round) (ties broken by id)
-    instead of the full-precision cosine — the cross-engine determinism
-    device the contract query needs: with nprobe == n_lists every list is
-    probed, so the result must equal the exact brute-force top-k, and
-    rounding before ranking makes that equality reproducible against an
-    oracle whose float summation order differs in the last ulp.
-
-    `queries` optionally restricts the query side (same schema as `df`;
-    default: every corpus row queries) — the corpus is always `df`."""
+    `queries` is the query side (same schema as `df`; pass `df` itself
+    for an all-pairs search) — the corpus is always `df`."""
     # NULL embeddings cannot be routed to a list nor scored: exclude
     # them from both sides (r6 review — they previously crashed the
     # quantizer and could pad a sparse query's top-k with NULL cosines)
     df = df.where(F.col(vec).isNotNull())
     # Deliberately NOT repartitioned first: the trainer's limit(sample)
     # must see the ORIGINAL scan order or the k-means seed sample (and
-    # hence the centroids) would change.  Training on the stored unit
-    # vectors (pre_normalized) collects the identical sample values the
-    # old in-train normalisation produced.
-    # Python stage: the trainer, the corpus routing and the queries read u
+    # hence the centroids) would change.
+    # Python stage: the trainer and the corpus routing read u
     u = materialise(with_unit_norm(df.select(key, vec), vec))
-    cents = ivf_train_centroids(u, "unit_vec", n_lists, dim, seed,
-                                pre_normalized=True)
+    cents = ivf_train_centroids(u, "unit_vec", n_lists, dim, seed)
     # both sides `spread` on the join key: the list join reuses that
     # shuffle, and its Arrow dot-product stage keeps one task per shuffle
     # partition
     corpus = spread(with_ivf_list(u, cents, nprobe=1).select(
         F.col(key).alias("nn_id"), F.col("unit_vec").alias("cv"),
         F.element_at("ivf_list", 1).alias("list_id")), "list_id")
-    qsrc = u if queries is None else with_unit_norm(
-        queries.where(F.col(vec).isNotNull()), vec)
+    qsrc = with_unit_norm(queries.where(F.col(vec).isNotNull()), vec)
     queries = spread(with_ivf_list(qsrc, cents, nprobe=nprobe).select(
         F.col(key).alias("query_id"), F.col("unit_vec").alias("qv"),
         F.explode("ivf_list").alias("list_id")), "list_id")
@@ -309,15 +297,10 @@ def cosine_topk_ivf(df: DataFrame, key: str = "vec_id",
               .where(F.col("query_id") != F.col("nn_id"))
               .withColumn("cosine", _dot(F.col("cv"), F.col("qv")))
               .select("query_id", "nn_id", "cosine"))
-    rank_key = F.col("cosine") if rank_round is None \
-        else F.round("cosine", rank_round)
-    w = Window.partitionBy("query_id").orderBy(F.desc(rank_key),
-                                               F.asc("nn_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return _top_k(scored, k)
 
 
-# `small_corpus` collects the whole unit-vector matrix to the driver and
+# cosine_topk_lsh collects the whole unit-vector matrix to the driver and
 # broadcasts it: 1M rows of 64 doubles is already 512 MB on the driver
 # and in every executor.
 SMALL_CORPUS_MAX_ROWS = 1_000_000
@@ -326,9 +309,7 @@ SMALL_CORPUS_MAX_ROWS = 1_000_000
 def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
                     vec: str = "embedding", k: int = 5, planes: int = 8,
                     dim: int = 64, tables: int = 4,
-                    max_bucket: int | None = 10_000,
-                    rank_round: int | None = None,
-                    small_corpus: bool = False) -> DataFrame:
+                    max_bucket: int | None = 10_000) -> DataFrame:
     """ANN top-k via multi-table hyperplane LSH (OR-construction).
 
     `tables` independent plane sets each hash every vector into a bucket;
@@ -339,83 +320,60 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
     vectors would otherwise emit 10^12 pairs regardless of AQE).  All
     joins are equi-joins on (table, bucket) / key — never a cross join.
 
-    `rank_round` ranks by ROUND(cosine, rank_round) (see cosine_topk_ivf)
-    — the cross-engine determinism device: the sketch is pure sign
-    arithmetic on LCG hyperplane literals, so a SQL oracle can reproduce
-    the ENTIRE pipeline (buckets, OR-construction candidates, rank), and
-    rounding before ranking keeps last-ulp summation differences from
-    flipping near-ties.
+    The sketch is pure sign arithmetic on LCG hyperplane literals, so a
+    SQL oracle can reproduce the ENTIRE pipeline (buckets, OR-construction
+    candidates, rank; see _top_k for the rounding).
+
+    Scoring gathers (r7, guide §2.3 "shuffle keys instead of payloads"):
+    the unit matrix, at most SMALL_CORPUS_MAX_ROWS rows with unique keys
+    (ValueError otherwise), broadcasts once and each task gathers rows by
+    key, so candidate rows stay two ids wide instead of carrying both
+    vectors through Arrow for every pair.
     """
     vecs, buckets = _lsh_sketch(df, key, vec, planes, dim, tables)
     buckets = _cap_buckets(buckets, max_bucket)
     lhs = buckets.select(F.col(key).alias("query_id"), "band", "h")
     rhs = buckets.select(F.col(key).alias("nn_id"), "band", "h")
-    # `small_corpus=True` (r7): the checkpointed relations are RDD-backed
-    # with no size statistics, so join-strategy selection is left to
-    # runtime estimates and wobbles run to run; a caller that KNOWS the
-    # corpus is bounded (the uncapped oracle-device invocation is only
-    # valid for such corpora — its candidate set is O(n²/buckets)) pins
-    # the bucket-key and unit-vector sides as broadcasts.  The default
-    # leaves the planner free: these relations are O(corpus) and MUST
-    # NOT be force-broadcast in the production path.
-    _b = F.broadcast if small_corpus else (lambda d: d)
-    cands = (lhs.join(_b(rhs), on=["band", "h"])
+    # the checkpointed relations are RDD-backed with no size statistics,
+    # so join-strategy selection would wobble run to run; the corpus is
+    # bounded, so the bucket side is pinned as a broadcast
+    cands = (lhs.join(F.broadcast(rhs), on=["band", "h"])
              .where(F.col("query_id") != F.col("nn_id"))
              .select("query_id", "nn_id").distinct())
-    if small_corpus:
-        # gather-scoring (r7, guide §2.3 "shuffle keys instead of
-        # payloads"): the per-pair join form moves BOTH 64-double unit
-        # vectors through Arrow for every candidate pair (~2 GB at 2M
-        # pairs); with a bounded corpus the whole unit matrix broadcasts
-        # once (~10 MB) and each task gathers rows by key — candidate
-        # rows stay two ids wide.  np.einsum over gathered float64 rows
-        # is the identical arithmetic _dot_arrow runs on the joined
-        # arrays, so the cosines are bit-identical.
-        sc = df.sparkSession.sparkContext
-        # the LIMIT bounds the collect itself (no extra Spark job): an
-        # oversized corpus fails after at most cap + 1 rows reach the
-        # driver instead of OOMing it
-        cap = SMALL_CORPUS_MAX_ROWS
-        vp = vecs.limit(cap + 1).toPandas()
-        if len(vp) > cap:
-            raise ValueError(
-                f"cosine_topk_lsh: small_corpus=True collects the corpus to "
-                f"the driver, but it has more than {cap} rows; run it "
-                "with small_corpus=False")
-        ids = vp[key].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        mat = np.array([np.asarray(v, dtype=np.float64)
-                        for v in vp["unit_vec"]])[order]
-        bm = sc.broadcast((ids[order], mat))
-        key_t = dict(df.dtypes)[key]
-        schema = f"query_id {key_t}, nn_id {key_t}, cosine DOUBLE"
+    # the LIMIT bounds the collect itself (no extra Spark job): an
+    # oversized corpus fails after at most cap + 1 rows reach the driver
+    # instead of OOMing it
+    cap = SMALL_CORPUS_MAX_ROWS
+    vp = vecs.limit(cap + 1).toPandas()
+    if len(vp) > cap:
+        raise ValueError(
+            f"cosine_topk_lsh collects the corpus to the driver, but it "
+            f"has more than {cap} rows")
+    ids = vp[key].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    sids = ids[order]
+    # searchsorted picks ONE row per id: a repeated key would score
+    # against whichever of its vectors sorts first
+    dup = sids[1:][sids[1:] == sids[:-1]]
+    if len(dup):
+        raise ValueError(f"cosine_topk_lsh needs unique keys, but {key} "
+                         f"{dup[0]} repeats")
+    mat = np.array([np.asarray(v, dtype=np.float64)
+                    for v in vp["unit_vec"]])[order]
+    bm = df.sparkSession.sparkContext.broadcast((sids, mat))
+    key_t = dict(df.dtypes)[key]
+    schema = f"query_id {key_t}, nn_id {key_t}, cosine DOUBLE"
 
-        def score(batches):
-            sids, smat = bm.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qi = np.searchsorted(sids, pdf["query_id"].to_numpy())
-                ni = np.searchsorted(sids, pdf["nn_id"].to_numpy())
-                yield pd.DataFrame({
-                    "query_id": pdf["query_id"],
-                    "nn_id": pdf["nn_id"],
-                    "cosine": np.einsum("ij,ij->i", smat[qi], smat[ni])})
+    def score(batches):
+        sids, smat = bm.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qi = np.searchsorted(sids, pdf["query_id"].to_numpy())
+            ni = np.searchsorted(sids, pdf["nn_id"].to_numpy())
+            yield pd.DataFrame({
+                "query_id": pdf["query_id"],
+                "nn_id": pdf["nn_id"],
+                "cosine": np.einsum("ij,ij->i", smat[qi], smat[ni])})
 
-        scored = cands.mapInPandas(score, schema=schema)
-    else:
-        scored = (cands
-                  .join(vecs.select(F.col(key).alias("query_id"),
-                                    F.col("unit_vec").alias("qv")),
-                        on="query_id")
-                  .join(vecs.select(F.col(key).alias("nn_id"),
-                                    F.col("unit_vec").alias("cv")),
-                        on="nn_id")
-                  .withColumn("cosine", _dot(F.col("cv"), F.col("qv")))
-                  .select("query_id", "nn_id", "cosine"))
-    rank_key = F.col("cosine") if rank_round is None \
-        else F.round("cosine", rank_round)
-    w = Window.partitionBy("query_id").orderBy(F.desc(rank_key),
-                                               F.asc("nn_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return _top_k(cands.mapInPandas(score, schema=schema), k)

@@ -62,7 +62,6 @@ def land_use_square(scale: float = 1.0) -> list[tuple[str, str, bytes]]:
 
     def L(x0, y0, x1, y1, x2, y2):
         # L-shape = two rectangles merged into one multipolygon (disjoint refs)
-        import numpy as np
         return geo.multipolygon_to_wkb([
             [geo.rect_ring(x0 * s, y0 * s, x1 * s, y1 * s)],
             [geo.rect_ring(x0 * s, y1 * s, x2 * s, y2 * s)],

@@ -56,7 +56,6 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
                      land_use: list[tuple[str, str, bytes]] | None = None,
                      min_prop: float = 0.01,
                      keep_geometry: bool = False,
-                     lattice_partitions: int | None = None,
                      name: str = "patch", name_index: bool = False,
                      add_removed: bool = False,
                      simplify_keep: float | None = None) -> DataFrame:
@@ -88,7 +87,7 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
     minx, miny, maxx, maxy = geo.polygons_bounds(landscape)
 
     lat = hexgrid.lattice(spark, minx, miny, maxx, maxy, hex_width,
-                          refx, refy, num_partitions=lattice_partitions)
+                          refx, refy)
 
     impassable = [(c, wkb) for c, k, wkb in (land_use or []) if k == "Impassable"]
     categories = [(c, wkb) for c, k, wkb in (land_use or []) if k != "Impassable"]

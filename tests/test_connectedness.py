@@ -1,7 +1,6 @@
 """Connectedness convergence/self-consistency tests
 (notebooks/connectedness_testing.R:25-44)."""
 
-import numpy as np
 import pytest
 
 from hexscape_spark import geo
@@ -77,7 +76,6 @@ def test_connectedness_wide_marginals_match_long(spark):
     """Dense pivot (R/generate_connectedness.R:249-260): row sums of the
     zero-filled matrix equal the long form's per-Source sums, and absent
     pairs are genuine zeros."""
-    import numpy as np
     rows = [(1, 2, 0.5), (1, 3, 0.25), (2, 1, 0.5), (3, 1, 0.2)]
     conn = spark.createDataFrame(
         rows, "Source LONG, Target LONG, Connectedness DOUBLE")

@@ -169,7 +169,6 @@ def test_wkb_decoder_malformed_raises_valueerror():
     failure), never a raw struct.error from inside the parser (r5 fuzz:
     3,596 adversarial byte strings)."""
     import numpy as np
-    import pytest
 
     from hexscape_spark import geo
     valid = geo.rect_wkb(0, 0, 3, 3)

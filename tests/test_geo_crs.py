@@ -46,7 +46,6 @@ def test_laea_roundtrip_and_equal_area():
 
 
 def test_with_laea_dataframe(spark):
-    import numpy as np
     from hexscape_spark import geo_crs as gc
     df = spark.createDataFrame([(50.0, 5.0), (52.0, 10.0)],
                                "lat_deg DOUBLE, lon_deg DOUBLE")

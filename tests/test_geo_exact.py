@@ -36,12 +36,15 @@ def test_exact_union_makes_hole():
 
 
 def test_exact_boolean_difference_and_intersection():
+    """The exact difference trace removes A∩B from A: its area is the
+    union area less the strip-sweep intersection area, and a contained
+    B leaves a hole."""
     a = [[geo.rect_ring(0, 0, 4, 4)]]
     b = [[geo.rect_ring(1, 1, 3, 3)]]
-    inter, ai = geo_exact.exact_boolean_trace(a, b, "intersection")
-    assert ai == pytest.approx(4.0, abs=0)
-    diff, ad = geo_exact.exact_boolean_trace(a, b, "difference")
+    assert geo.intersection_area(a, b) == pytest.approx(4.0, abs=0)
+    diff, ad = geo_exact.exact_difference_trace(a, b)
     assert ad == pytest.approx(12.0, abs=0)
+    assert ad == geo.union_area(a) - geo.intersection_area(a, b)
     assert len(diff) == 1 and len(diff[0]) == 2    # rect with a hole
 
 

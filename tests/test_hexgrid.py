@@ -4,7 +4,6 @@ import math
 
 import duckdb
 import numpy as np
-import pytest
 
 from hexscape_spark import geo, params as P
 from hexscape_spark import hexgrid, sqlgen

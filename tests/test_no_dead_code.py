@@ -24,9 +24,13 @@ that shares a name with live code.  Code reached only through a string
 Options: a defaulted parameter of a module-level engine function that an
 ``if``/``while``/conditional-expression test in its body names steers a
 branch, and some caller outside ``tests/`` must set it (by keyword, by
-position or through ``**kwargs``).  Test callers count only for
-``LIBRARY`` functions and ``OPTIONS`` entries.  Callers are matched by
-the called name, like the reachability scan.
+position or through ``**kwargs``), not every one of them to the same
+literal.  Test callers count only for ``LIBRARY`` functions and
+``OPTIONS`` entries.  Callers are matched by the called name, like the
+reachability scan.
+
+Imports: every name an engine or test file imports is read in the
+function (or, at module level, the file) that imports it.
 
 Twins: no two engine function bodies (nested ones included) of at least
 2 statements and 40 AST nodes may be identical once the docstring is
@@ -63,11 +67,13 @@ LIBRARY = (
     "weighted_sample_per_group",                              # rollup
     "randomise_voronoi", "sample_points",                     # voronoi
 )
-# Branch-steering parameters that only tests set, each mirroring a
-# reference argument or forcing a size gate so both sides are tested.
+# Branch-steering parameters that tests set, each mirroring a reference
+# argument (engine callers may set it too) or forcing a size gate so both
+# sides are tested (tests only).
 OPTIONS = (
     "bfs_hops.local_edge_cap",           # gate: BFS_LOCAL_EDGE_CAP
     "connected_components.local_cap",    # gate: CC_LOCAL_CAP
+    "discretise_habitat.max_size_km2",   # R/discretise_habitat.R:46
     "discretise_habitat.min_size_km2",   # R/discretise_habitat.R:46
     "extract_landcover.clc_filter",      # R/extract_corine.R:112-135
     "extract_landcover.clc_labels",      # R/load_corine.R:291-294
@@ -260,6 +266,37 @@ def test_guard_flags_bad_library_entries():
         "untested: no test calls it", "queried: reached without LIBRARY"]
 
 
+def unread_imports(sources: dict[str, str]) -> list[str]:
+    """``path:line name`` of every name an engine or test file imports
+    and never reads: in the importing function for a function-local
+    import, anywhere in the file for a module-level one."""
+    unread = []
+    for rel, text in sources.items():
+        if _role(rel) == "bench":
+            continue
+        todo = [(tree := ast.parse(text, filename=rel), tree)]
+        while todo:
+            node, scope = todo.pop()
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.Import, ast.ImportFrom)) and \
+                        getattr(child, "module", None) != "__future__":
+                    read = {n.id for n in ast.walk(scope)
+                            if isinstance(n, ast.Name)}
+                    unread += [f"{rel}:{child.lineno} {name}"
+                               for a in child.names
+                               if (name := a.asname or a.name.split(".")[0])
+                               not in read]
+                todo.append((child, child if isinstance(
+                    child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    else scope))
+    return sorted(unread)
+
+
+def test_imports_are_read():
+    unread = unread_imports(_repo_sources())
+    assert not unread, "imported names nothing reads:\n" + "\n".join(unread)
+
+
 _MATERIALISING = re.compile(r"\.(localCheckpoint|persist|cache)\(")
 _MATERIALISE_REASONS = ("shared subtree", "plan barrier", "loop boundary",
                         "Python stage")
@@ -277,16 +314,18 @@ def test_materialisation_only_through_checkpoint_module():
     assert not bare, "bare materialisation calls:\n" + "\n".join(bare)
 
 
-# `.repartition(` whose first argument is not a partition count
-_COLUMN_REPARTITION = re.compile(r"\.repartition\((?!\s*\d)")
+# `.repartition(` or a SQL `/*+ REPARTITION(` hint whose first argument
+# is not a partition count
+_COLUMN_REPARTITION = re.compile(
+    r"(\.repartition|/\*\+\s*REPARTITION)\((?!\s*\d)")
 
 
 def test_column_repartition_only_through_spread():
     """A shuffle that spreads a stage over the cores has one owner:
     outside checkpoint.py the engine calls checkpoint.spread, never a
-    column-only repartition, which AQE coalesces back into one task on a
-    small input.  A literal partition count (`repartition(1)`) stays
-    allowed."""
+    column-only repartition or ``REPARTITION(col)`` SQL hint, which AQE
+    coalesces back into one task on a small input.  A literal partition
+    count (`repartition(1)`) stays allowed."""
     bare = [f"{path.relative_to(ROOT)}:{i} {line.strip()}"
             for path in DEFINING if path.name != "checkpoint.py"
             for i, line in enumerate(path.read_text().splitlines(), 1)
@@ -331,25 +370,35 @@ def _steering(fn) -> list[tuple[str, int | None]]:
     return [(name, i) for name, i in defaulted if name in tested]
 
 
-def _passes(call: ast.Call, name: str, position: int | None) -> bool:
-    """Whether `call` may set the parameter: by keyword, through
-    ``**kwargs``, or by position (a ``*args`` counts as any position)."""
-    if any(k.arg in (name, None) for k in call.keywords):
-        return True
-    return position is not None and (
-        len(call.args) > position
-        or any(isinstance(a, ast.Starred) for a in call.args))
+def _argument(call: ast.Call, name: str, position: int | None):
+    """What `call` passes for the parameter: the expression it passes by
+    keyword or by position, ``...`` when it may pass it through
+    ``**kwargs`` or a ``*args`` (any position), None when it does not."""
+    for k in call.keywords:
+        if k.arg == name:
+            return k.value
+    starred = any(isinstance(a, ast.Starred) for a in call.args)
+    if position is not None and len(call.args) > position and not starred:
+        return call.args[position]
+    if any(k.arg is None for k in call.keywords) or (
+            position is not None and starred):
+        return ...
+    return None
 
 
-def unset_options(sources: dict[str, str], library=(), options=()
-                  ) -> list[str]:
+def unset_options(sources: dict[str, str], library=(), options=(),
+                  references=()) -> list[str]:
     """Defaulted parameters of module-level engine functions that steer a
     branch but that no caller outside ``tests/`` sets, as ``path:line
-    function.parameter``.  A test caller is enough for a function in
-    `library` or a ``function.parameter`` in `options`; an `options`
-    entry that no test sets, that a non-test caller sets, or that steers
-    no branch is flagged too.  Calls match by the called name alone."""
-    steering, setters = [], {}
+    function.parameter``, or that every caller outside ``tests/`` sets to
+    the same literal, as ``path:line function.parameter = literal``.  A
+    test caller is enough for a function in `library` or a
+    ``function.parameter`` in `options`; an `options` entry that no test
+    sets, that steers no branch, or that a non-test caller sets while it
+    is not also in `references` (an entry mirroring a reference argument,
+    which engine callers may set too) is flagged as well.  Calls match by
+    the called name alone."""
+    steering, calls = [], {}
     for rel, text in sources.items():
         tree = ast.parse(text, filename=rel)
         if _role(rel) == "engine":
@@ -360,21 +409,30 @@ def unset_options(sources: dict[str, str], library=(), options=()
             if isinstance(node, ast.Call) and \
                     isinstance(node.func, (ast.Name, ast.Attribute)):
                 callee = getattr(node.func, "id", None) or node.func.attr
-                setters.setdefault(callee, []).append((_role(rel), node))
+                calls.setdefault(callee, []).append((_role(rel), node))
     flagged, found = [], set()
     for rel, fn, name, i in steering:
         option = f"{fn.name}.{name}"
         found.add(option)
-        roles = {role for role, call in setters.get(fn.name, ())
-                 if _passes(call, name, i)}
+        passed = [(role, _argument(call, name, i))
+                  for role, call in calls.get(fn.name, ())]
+        roles = {role for role, arg in passed if arg is not None}
+        outside = [arg for role, arg in passed if role != "test"]
+        literals = {(type(a.value), a.value) for a in outside
+                    if isinstance(a, ast.Constant)}
         if option in options:
             for why, ok in (("no test sets it", "test" in roles),
-                            ("set outside tests/", roles <= {"test"})):
+                            ("set outside tests/", roles <= {"test"}
+                             or option in references)):
                 if not ok:
                     flagged.append(f"{option}: {why}")
         elif not roles - {"test"} and not (
                 fn.name in library and "test" in roles):
             flagged.append(f"{rel}:{fn.lineno} {option}")
+        elif outside and len(literals) == 1 and \
+                all(isinstance(a, ast.Constant) for a in outside):
+            flagged.append(f"{rel}:{fn.lineno} {option} = "
+                           f"{ast.unparse(outside[0])}")
     flagged += [f"{option}: steers no branch"
                 for option in options if option not in found]
     return flagged
@@ -382,17 +440,21 @@ def unset_options(sources: dict[str, str], library=(), options=()
 
 def test_engine_options_have_callers():
     """Every defaulted parameter that steers a branch of a module-level
-    engine function is set by a caller outside tests/, or is a test-set
-    LIBRARY or OPTIONS entry whose comment names its reference argument
-    (R file:line) or the size gate it forces."""
-    flagged = unset_options(_repo_sources(), LIBRARY, OPTIONS)
-    assert not flagged, "options no caller sets:\n" + "\n".join(flagged)
+    engine function is set by a caller outside tests/, and not by all of
+    them to one literal, or is a test-set LIBRARY or OPTIONS entry whose
+    comment names its reference argument (R file:line) or the size gate
+    it forces."""
     text = Path(__file__).read_text()
-    bare = [o for o in OPTIONS
-            if not re.search(rf'"{re.escape(o)}",\s*# (R/\S+:\d|gate: )',
-                             text)]
+    notes = {o: re.search(rf'"{re.escape(o)}",\s*# (R/\S+:\d|gate: )',
+                          text) for o in OPTIONS}
+    bare = [o for o, note in notes.items() if not note]
     assert not bare, "OPTIONS entries without a reference or gate:\n" + \
         "\n".join(bare)
+    references = [o for o, note in notes.items()
+                  if note.group(1).startswith("R/")]
+    flagged = unset_options(_repo_sources(), LIBRARY, OPTIONS, references)
+    assert not flagged, "options no caller sets or every caller sets " \
+        "to one literal:\n" + "\n".join(flagged)
 
 
 _KNOBS = (
@@ -421,7 +483,8 @@ def test_options_guard_passes_knob_set_by_engine_caller():
 
 def test_options_guard_flags_options_entry_without_test_caller():
     sources = {"hexscape_spark/m.py": _KNOBS,
-               "perfbench/w.py": "m.knob(0, fast=False, limit=1)\n",
+               "perfbench/w.py": ("m.knob(0, fast=False, limit=1)\n"
+                                  "m.knob(0, fast=True, limit=2)\n"),
                "tests/test_m.py": "m.knob(1, mode='x')\n"}
     assert unset_options(sources, options=("knob.mode",)) == []
     assert unset_options(sources, options=("knob.fast", "knob.mode",
@@ -432,6 +495,32 @@ def test_options_guard_flags_options_entry_without_test_caller():
                           "tests/test_m.py": "m.knob(1, limit=0)\n"},
                          options=("knob.fast", "knob.limit", "knob.mode")) \
         == ["knob.fast: no test sets it", "knob.mode: no test sets it"]
+
+
+def test_options_guard_flags_one_literal_everywhere():
+    sources = {
+        "hexscape_spark/m.py": (
+            "def one(df, mode='a', small=False, k=1, *, size=None):\n"
+            "    if mode == 'b' or small or size:\n        return df\n"
+            "    return df if k else None\n"),
+        "__spark_entry__.py": (
+            "def entry(spark, n_cells):\n"
+            "    one(spark, 'b', small=n_cells < 10, k=2, size=3.0)\n"
+            "    one(spark, mode='b', small=True, k=3, size=3.0)\n"),
+        "tests/test_m.py": "one(1, size=5.0)\n"}
+    # mode: both engine calls pass 'b', so its default runs only under
+    # pytest; small is computed once and k takes two literals
+    assert unset_options(sources) == [
+        "hexscape_spark/m.py:1 one.mode = 'b'",
+        "hexscape_spark/m.py:1 one.size = 3.0"]
+    # an OPTIONS entry may be set outside tests/ only when it mirrors a
+    # reference argument
+    assert unset_options(sources, options=("one.size",)) == [
+        "hexscape_spark/m.py:1 one.mode = 'b'",
+        "one.size: set outside tests/"]
+    assert unset_options(sources, options=("one.size",),
+                         references=("one.size",)) == [
+        "hexscape_spark/m.py:1 one.mode = 'b'"]
 
 
 def _body_shape(fn) -> tuple[int, int, str]:

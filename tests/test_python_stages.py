@@ -4,17 +4,41 @@ re-read per task) and checkpoint.spread (the Python stages behind a small
 shuffle keep one task per shuffle partition instead of AQE's single
 coalesced one)."""
 
+import os
+import subprocess
+import sys
 import zipimport
+from pathlib import Path
 
 import hexscape_spark
 from hexscape_spark import geo
 
+_UNPICKLE = ("import pickle, sys; pickle.loads(sys.stdin.buffer.read()); "
+             "print('hexscape_spark' in sys.modules)")
 
-def test_workers_keep_the_zip_archives_once_the_engine_is_loaded(spark):
+
+def _loads_engine(fn) -> bool:
+    """Whether unpickling `fn` the way a fresh Python worker unpickles a
+    UDF imports hexscape_spark (a clean interpreter: the test process has
+    it imported already)."""
+    from pyspark import cloudpickle
+    root = str(Path(__file__).resolve().parent.parent)
+    got = subprocess.run([sys.executable, "-c", _UNPICKLE],
+                         input=cloudpickle.dumps(fn), capture_output=True,
+                         check=True, env={**os.environ, "PYTHONPATH": root})
+    return got.stdout.split() == [b"True"]
+
+
+def test_workers_keep_the_zip_archives_once_the_engine_is_loaded(
+        spark, monkeypatch):
     """A worker that loads an engine UDF imports hexscape_spark through
     cloudpickle, and from then on importlib.invalidate_caches() leaves
-    the zip archives alone; the driver keeps the stock hook."""
+    the zip archives alone; the driver keeps the stock hook.  The dedup
+    signature UDF is such a UDF: its function names a package global."""
     import pandas as pd
+    from pyspark.sql import functions as F
+
+    from hexscape_spark import dedup
 
     def hook(batches):
         # `hexscape_spark` is a global of this closure, so unpickling it
@@ -30,6 +54,18 @@ def test_workers_keep_the_zip_archives_once_the_engine_is_loaded(spark):
     assert [r.keeps for r in got] == [True]
     assert zipimport.zipimporter.invalidate_caches \
         is not hexscape_spark._keep_directory
+
+    made, pandas_udf = [], F.pandas_udf
+
+    def recording(*args, **kwargs):
+        wrap = pandas_udf(*args, **kwargs)
+        return lambda fn: made.append(fn) or wrap(fn)
+
+    monkeypatch.setattr(F, "pandas_udf", recording)
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id LONG, text STRING")
+    dedup._signatures(docs, "doc_id", "text", num_hashes=4, shingle_k=2)
+    assert len(made) == 1 and _loads_engine(made[0])
+    assert not _loads_engine(lambda x: x)
 
 
 def _materialised_partitions(monkeypatch, module) -> list[int]:

@@ -4,7 +4,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hexscape_spark import params as P
 from hexscape_spark.raster import hex_to_raster, raster_to_hex
 from tests.helpers import hex_vertices
 

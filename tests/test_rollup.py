@@ -14,7 +14,7 @@ def test_global_cumsum_matches_window(spark):
         .sort_values("id").reset_index(drop=True)
     assert (abs(got.c.values - want.c.values) < 1e-6).all()
     # descending order too
-    got_d = global_cumsum(df, ["id"], "v", out="c", ascending=False) \
+    got_d = global_cumsum(df, [F2.desc("id")], "v", out="c") \
         .toPandas().sort_values("id").reset_index(drop=True)
     w_d = W2.orderBy(F2.desc("id")).rowsBetween(W2.unboundedPreceding, 0)
     want_d = df.withColumn("c", F2.sum("v").over(w_d)).toPandas() \

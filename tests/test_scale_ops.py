@@ -157,7 +157,6 @@ def test_checkpoint_recovers_from_half_deleted_data(spark, tmp_path):
 def test_pip_join_matches_bruteforce(spark):
     """Exact PIP join (cover prefilter + refine) == brute-force PIP."""
     from hexscape_spark.cover import pip_join, polygon_cell_cover
-    from hexscape_spark.synth import land_use_square
     from tests.helpers import geocoded_pages
 
     pts = geocoded_pages(spark, 3000).select("page_id", "lon", "lat",
@@ -213,11 +212,13 @@ def test_ivf_recall_and_exactness(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.where("vec_id < 20")
     bf = cosine_topk_bruteforce(emb, q, k=5).toPandas()
-    full = cosine_topk_ivf(emb, k=5, n_lists=8, nprobe=8).toPandas()
+    full = cosine_topk_ivf(emb, queries=emb, k=5, n_lists=8,
+                           nprobe=8).toPandas()
     full = full[full.query_id < 20]
     m = bf.merge(full, on=["query_id", "nn_id"], suffixes=("", "_ivf"))
     assert len(m) == len(bf), "nprobe == n_lists must equal brute force"
-    part = cosine_topk_ivf(emb, k=5, n_lists=8, nprobe=3).toPandas()
+    part = cosine_topk_ivf(emb, queries=emb, k=5, n_lists=8,
+                           nprobe=3).toPandas()
     part = part[part.query_id < 20]
     m2 = bf.merge(part, on=["query_id", "nn_id"], suffixes=("", "_ivf"))
     assert len(m2) / len(bf) >= 0.5
@@ -255,18 +256,30 @@ def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
 
 
 def test_lsh_small_corpus_row_bound(spark, monkeypatch):
-    """small_corpus collects the corpus to the driver: a corpus at the
+    """Gather scoring collects the corpus to the driver: a corpus at the
     row bound builds, one row over it fails with ValueError."""
     from hexscape_spark import similarity
     rng = np.random.default_rng(3)
     rows = [(i, rng.standard_normal(4).tolist()) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    kw = dict(k=1, planes=4, dim=4, tables=2, small_corpus=True)
+    kw = dict(k=1, planes=4, dim=4, tables=2)
     monkeypatch.setattr(similarity, "SMALL_CORPUS_MAX_ROWS", 40)
     assert similarity.cosine_topk_lsh(df, **kw).count() > 0
     monkeypatch.setattr(similarity, "SMALL_CORPUS_MAX_ROWS", 39)
     with pytest.raises(ValueError, match="more than 39 rows"):
         similarity.cosine_topk_lsh(df, **kw)
+
+
+def test_lsh_rejects_duplicate_keys(spark):
+    """Gather scoring looks each id up once in the collected matrix, so a
+    repeated key would score against one of its vectors at random: it
+    fails with ValueError instead."""
+    from hexscape_spark.similarity import cosine_topk_lsh
+    rows = [(i, [1.0, float(i), 0.5, -1.0]) for i in range(10)] + \
+        [(3, [0.0, 1.0, 0.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="vec_id 3 repeats"):
+        cosine_topk_lsh(df, k=1, planes=4, dim=4, tables=2)
 
 
 def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
@@ -339,7 +352,7 @@ def test_csv_dimension_roundtrip(spark, tmp_path):
 
 def test_dedup_variants_find_planted_near_dups(spark):
     """Plant near-duplicates; MinHash-LSH + exact Jaccard must find them."""
-    from hexscape_spark.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+    from hexscape_spark.dedup import ngram_jaccard_pairs
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "while the spark engine shuffles rows across many partitions")
     rows = []
@@ -525,8 +538,9 @@ def test_connected_components_raises_on_round_exhaustion(spark):
     from hexscape_spark.graph import connected_components
     edges = spark.createDataFrame([(i, i + 1) for i in range(30)],
                                   "src LONG, dst LONG")
+    nodes = spark.range(31).selectExpr("id AS node")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_rounds=1, local_cap=0)
+        connected_components(edges, nodes, max_rounds=1, local_cap=0)
 
 
 def test_connected_components_regimes_agree(spark):
@@ -907,7 +921,8 @@ def test_ann_paths_tolerate_null_embeddings(spark):
     assert not lsh.empty
     assert not set(lsh.query_id) & {97, 98}
     assert not set(lsh.nn_id) & {97, 98}
-    ivf = cosine_topk_ivf(df, k=3, n_lists=4, nprobe=4, dim=8).toPandas()
+    ivf = cosine_topk_ivf(df, queries=df, k=3, n_lists=4, nprobe=4,
+                          dim=8).toPandas()
     assert not ivf.empty
     assert not set(ivf.query_id) & {97, 98}
     assert not set(ivf.nn_id) & {97, 98}
