@@ -85,7 +85,12 @@ def _sql_hex_neighbours() -> str:
         "JOIN cells b ON b.q = a.q + offs.dq AND b.r = a.r + offs.dr")
 
 
-def _sql_hex_kring_profile(disk_k: int = 2, max_k: int = 3) -> str:
+# hex_kring_profile: the disk counts rings 0..2 and rings 1..3 are
+# profiled one column each
+_KRING_DISK, _KRING_MAX = 2, 3
+
+
+def _sql_hex_kring_profile() -> str:
     """kRing-disk aggregation AND ego-ring profile in ONE offsets
     equi-join (H3 grid_disk + grid_ring; the reference's ego-set
     differencing, notebooks/network_distance.R:124-130).  Merged r4 (the
@@ -94,10 +99,10 @@ def _sql_hex_kring_profile(disk_k: int = 2, max_k: int = 3) -> str:
     oracle-gated while freeing a contract slot for ivf_topk).  Shuffle
     key = shifted (q, r); never an N² theta join."""
     rows = [f"({dq}, {dr}, {ring})"
-            for dq, dr, ring in hexgrid.kring_offsets(max_k)]
+            for dq, dr, ring in hexgrid.kring_offsets(_KRING_MAX)]
     ring_cols = ", ".join(
         f"CAST(SUM(CASE WHEN shifted.ring = {k} THEN b.n ELSE 0 END) "
-        f"AS BIGINT) AS n_ring{k}" for k in range(1, max_k + 1))
+        f"AS BIGINT) AS n_ring{k}" for k in range(1, _KRING_MAX + 1))
     return (
         f"WITH cells AS (SELECT q, r, cell_id, COUNT(*) AS n FROM ({_docs_assign_sub()}) AS t "
         "GROUP BY q, r, cell_id), "
@@ -105,8 +110,8 @@ def _sql_hex_kring_profile(disk_k: int = 2, max_k: int = 3) -> str:
         "shifted AS (SELECT a.cell_id, a.q + offs.dq AS q, a.r + offs.dr AS r, offs.ring AS ring "
         " FROM cells a JOIN offs ON 1=1) "
         "SELECT shifted.cell_id AS cell_id, "
-        f"CAST(SUM(CASE WHEN shifted.ring <= {disk_k} THEN b.n ELSE 0 END) AS BIGINT) AS n_in_disk, "
-        f"CAST(SUM(CASE WHEN shifted.ring <= {disk_k} THEN 1 ELSE 0 END) AS BIGINT) AS cells_in_disk, "
+        f"CAST(SUM(CASE WHEN shifted.ring <= {_KRING_DISK} THEN b.n ELSE 0 END) AS BIGINT) AS n_in_disk, "
+        f"CAST(SUM(CASE WHEN shifted.ring <= {_KRING_DISK} THEN 1 ELSE 0 END) AS BIGINT) AS cells_in_disk, "
         f"{ring_cols} "
         "FROM shifted JOIN cells b ON b.q = shifted.q AND b.r = shifted.r "
         "GROUP BY shifted.cell_id")
@@ -120,21 +125,20 @@ def _sql_events_hex_rollup() -> str:
         f"FROM ({sub}) AS t GROUP BY cell_id, event_type")
 
 
-def _kring_values(k: int) -> str:
-    return ", ".join(f"({dq}, {dr})" for dq, dr, _ in hexgrid.kring_offsets(k))
-
-
-def _sql_hex_nearest_cell(k: int = 3) -> str:
+def _sql_hex_nearest_cell() -> str:
     """J8 nearest-feature join: each geocoded event's nearest
     document-occupied cell within its kRing-3 disk (candidate equi-join +
     rank, presentation_2022/get_jutland.R:92-94)."""
+    from hexscape_spark.knn import K_RING
+    offs = ", ".join(f"({dq}, {dr})"
+                     for dq, dr, _ in hexgrid.kring_offsets(K_RING))
     ev = sqlgen.assign_sql("events", "event_id")
     docs = _docs_assign_sub()
     cx, cy = sqlgen.centroid_exprs("cq", "cr")
     return (
         f"WITH ev AS (SELECT event_id, lon, lat, q, r FROM ({ev}) AS e), "
         f"occ AS (SELECT DISTINCT q AS cq, r AS cr, cell_id FROM ({docs}) AS d), "
-        f"offs AS (SELECT * FROM (VALUES {_kring_values(k)}) AS v(dq, dr)), "
+        f"offs AS (SELECT * FROM (VALUES {offs}) AS v(dq, dr)), "
         "cand AS (SELECT ev.event_id, ev.lon, ev.lat, occ.cell_id, "
         f" SQRT((ev.lon - ({cx})) * (ev.lon - ({cx})) + (ev.lat - ({cy})) * (ev.lat - ({cy}))) AS dist "
         " FROM ev JOIN offs ON 1=1 "
@@ -554,15 +558,17 @@ def _q_contamination_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hexscape_spark.dedup import contamination_flags
     docs = spark.table("documents").select("doc_id", "text")
     bench = docs.where("doc_id < 20")
-    return contamination_flags(docs, bench, n=13).select(
+    return contamination_flags(docs, bench).select(
         "doc_id", "contaminated_ngrams", "is_contaminated")
 
 
-_SQL_CONTAMINATION = r"""
+def _sql_contamination() -> str:
+    from hexscape_spark.dedup import CONTAMINATION_N as n
+    return rf"""
 WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
            FROM documents),
-sh AS (SELECT doc_id, CASE WHEN len(w) >= 13
-        THEN [array_to_string(w[i:i+12], ' ') FOR i IN range(1, len(w) - 11)]
+sh AS (SELECT doc_id, CASE WHEN len(w) >= {n}
+        THEN [array_to_string(w[i:i+{n - 1}], ' ') FOR i IN range(1, len(w) - {n - 2})]
         ELSE [array_to_string(w, ' ')] END AS gs FROM w),
 dg AS (SELECT DISTINCT doc_id, g
        FROM (SELECT doc_id, unnest(gs) AS g FROM sh) u),
@@ -949,14 +955,14 @@ def _q_neighbours_square(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "Direction")
 
 
-def _sql_neighbours_square_duck(min_prop: float = 0.01) -> str:
+def _sql_neighbours_square_duck() -> str:
     """Closed-form oracle for _q_neighbours_square: lattice enumeration
     (same range derivation as the engine), exact hex∩rect areas via the
     clamp-Green identity (sqlgen.hex_rect_area_layers), the engine's
     complete-cell fast path (Border = side length when both areas exceed
-    (1-min_prop)·hexarea, R/generate_neighbours.R:86-93), and Liang–Barsky
+    (1-MIN_PROP)·hexarea, R/generate_neighbours.R:86-93), and Liang–Barsky
     clipped edge lengths for boundary edges (:100-133)."""
-    from hexscape_spark.neighbours import _edge_offsets
+    from hexscape_spark.neighbours import MIN_PROP, _edge_offsets
     w = _LW
     hexarea = P.hex_area(w)
     hexlth = P.hex_side(w)
@@ -970,7 +976,7 @@ def _sql_neighbours_square_duck(min_prop: float = 0.01) -> str:
         "cx", "cy", w, 0.0, 0.0, 50.0, 50.0, out="area")
     cells = sqlgen.build_query(
         f"({base})", layers, select="q, r, cx, cy, area",
-        where=f"area >= {sqlgen._f(min_prop * hexarea)}")
+        where=f"area >= {sqlgen._f(MIN_PROP * hexarea)}")
     offs = ", ".join(f"({dq}, {dr}, '{d}')"
                      for dr, dq, d in hexgrid.NEIGHBOUR_OFFSETS)
     clip_branches = " ".join(
@@ -979,7 +985,7 @@ def _sql_neighbours_square_duck(min_prop: float = 0.01) -> str:
                 "cx", "cy", p0[0], p0[1], p1[0], p1[1],
                 0.0, 0.0, 50.0, 50.0))
         for d, (p0, p1) in _edge_offsets(w).items())
-    comp = sqlgen._f((1.0 - min_prop) * hexarea)
+    comp = sqlgen._f((1.0 - MIN_PROP) * hexarea)
     return f"""
 WITH cells AS ({cells}),
 idx AS (SELECT q, r, cx, cy, area,
@@ -995,7 +1001,7 @@ bord AS (SELECT a_ix, b_ix, dir,
          FROM edges)
 SELECT a_ix AS Index, b_ix AS Neighbour, ROUND(border, 9) AS border_r,
        dir AS Direction
-FROM bord WHERE border > {sqlgen._f(min_prop * hexlth)}
+FROM bord WHERE border > {sqlgen._f(MIN_PROP * hexlth)}
 """
 
 
@@ -1004,23 +1010,23 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates identically in DuckDB, so the oracle recomputes the exact
     pair set.  The CLI dedup job runs the same function."""
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import minhash_lsh_pairs
-    return minhash_lsh_pairs(spark.table("documents"), num_hashes=16,
-                             bands=4)
+    from hexscape_spark.dedup import BANDS, NUM_HASHES, minhash_lsh_pairs
+    return minhash_lsh_pairs(spark.table("documents"), NUM_HASHES, BANDS)
 
 
-def _sql_minhash_bands_duck(num_hashes: int, bands: int, k: int) -> str:
+def _sql_minhash_bands_duck() -> str:
     """The `w -> sh -> ex -> hs -> sig -> bnd` CTE chain shared by the
     minhash_pairs and ngram_jaccard oracles: the DuckDB mirror of
     dedup.minhash_lsh_pairs up to its band keys (same md5-folded base,
     same exact-int64 permutation mixing, same shingling and banding; list
     slices are 1-based inclusive).  Ends after `bnd` with no separator."""
+    from hexscape_spark.dedup import BANDS, NUM_HASHES, SHINGLE_K as k
     base = sqlgen.md5_int_expr("s")
-    mix = sqlgen.mix_params(num_hashes)
+    mix = sqlgen.mix_params(NUM_HASHES)
     perm_rows = ", ".join(f"({i}, {a}, {b}, {c})"
                           for i, (a, b, c) in enumerate(mix))
     h = sqlgen.mix_expr("base", "pa", "pb", "pc", intdiv="//")
-    rows = num_hashes // bands
+    rows = NUM_HASHES // BANDS
     return f"""
 WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM documents),
 sh AS (SELECT doc_id, CASE WHEN len(w) >= {k}
@@ -1032,16 +1038,18 @@ hs AS (SELECT doc_id, p, MIN({h}) AS m
        GROUP BY doc_id, p),
 sig AS (SELECT doc_id, list(m ORDER BY p) AS sig FROM hs GROUP BY doc_id),
 bnd AS (SELECT doc_id, bb, array_to_string(sig[bb*{rows}+1 : bb*{rows}+{rows}], ',') AS bk
-        FROM sig CROSS JOIN (SELECT unnest(range({bands})) AS bb) AS bs)"""
+        FROM sig CROSS JOIN (SELECT unnest(range({BANDS})) AS bb) AS bs)"""
 
 
-def _sql_minhash_pairs_duck(num_hashes: int = 16, bands: int = 4,
-                            k: int = 3) -> str:
+def _sql_minhash_pairs_duck() -> str:
     """DuckDB mirror of dedup.minhash_lsh_pairs."""
-    return _sql_minhash_bands_duck(num_hashes, bands, k) + """
+    return _sql_minhash_bands_duck() + """
 SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
 FROM bnd x JOIN bnd y ON x.bb = y.bb AND x.bk = y.bk AND x.doc_id < y.doc_id
 """
+
+
+_LSH_PLANES = 10
 
 
 def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1051,7 +1059,7 @@ def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline independently — per-table buckets from sign dots,
     OR-construction candidate pairs, exact-cosine rank (rounded to 6 dp
     on both sides so last-ulp summation order can't flip near-ties).
-    planes=10 -> 1024 buckets/table keeps candidates sparse; 4
+    _LSH_PLANES=10 -> 1024 buckets/table keeps candidates sparse; 4
     OR-construction tables restore the recall a single selective table
     would lose.  Recall-vs-bruteforce stays pytest-verified."""
     _views(spark, sf_dir)
@@ -1060,29 +1068,24 @@ def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr("transform(embedding, v -> CAST(v AS DOUBLE))")
         .alias("embedding"))
-    # max_bucket=None: the oracle does not model the production bucket
-    # cap, so the contract query must run uncapped (r4 review — at
-    # fixture scale no bucket comes near the cap, but the semantics must
-    # match by construction, not by luck)
-    out = cosine_topk_lsh(e, planes=10, tables=4, max_bucket=None)
+    out = cosine_topk_lsh(e, planes=_LSH_PLANES)
     return out.select("query_id", "nn_id", "rank",
                       F.round("cosine", 6).alias("cos_r"))
 
 
-def _sql_lsh_topk_duck(planes: int = 10, tables: int = 4, dim: int = 64,
-                       k: int = 5) -> str:
+def _sql_lsh_topk_duck() -> str:
     """DuckDB mirror of cosine_topk_lsh: the hyperplanes are deterministic
     LCG literals, so the bucket of a vector is SUM(2^p for planes whose
     dot is positive) — the same integer Spark's numpy sign-sketch packs.
     Candidates = same-bucket pairs in ANY table; rank = rounded cosine."""
-    from hexscape_spark.similarity import _hyperplane
+    from hexscape_spark.similarity import DIM, LSH_TABLES, TOP_K, _hyperplane
     buckets = []
-    for t in range(tables):
+    for t in range(LSH_TABLES):
         bits = " + ".join(
             "(CASE WHEN list_dot_product(embedding::DOUBLE[], "
-            f"[{', '.join(repr(v) for v in _hyperplane(dim, t * 997 + p))}"
+            f"[{', '.join(repr(v) for v in _hyperplane(DIM, t * 997 + p))}"
             f"]::DOUBLE[]) > 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(planes))
+            for p in range(_LSH_PLANES))
         buckets.append(
             f"SELECT vec_id, {t} AS tbl, {bits} AS h FROM embeddings")
     bsql = " UNION ALL ".join(buckets)
@@ -1104,7 +1107,7 @@ SELECT query_id, nn_id, rank, cos_r FROM (
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cos_r DESC, nn_id ASC) AS rank
   FROM scored) t
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
@@ -1128,7 +1131,9 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.round("cosine", 6).alias("cos_r"))
 
 
-_SQL_IVF_TOPK = """
+def _sql_ivf_topk() -> str:
+    from hexscape_spark.similarity import TOP_K
+    return f"""
 SELECT query_id, nn_id, rank, cos_r FROM (
   SELECT q.vec_id AS query_id, c.vec_id AS nn_id,
          ROUND(list_dot_product(q.embedding::DOUBLE[], c.embedding::DOUBLE[])
@@ -1142,7 +1147,7 @@ SELECT query_id, nn_id, rank, cos_r FROM (
                     c.vec_id ASC) AS rank
   FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < 100) t
-WHERE rank <= 5
+WHERE rank <= {TOP_K}
 """
 
 
@@ -1151,12 +1156,12 @@ def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-gated end to end (banding + verify both reproduced in SQL)."""
     _views(spark, sf_dir)
     from hexscape_spark.dedup import ngram_jaccard_pairs
-    return ngram_jaccard_pairs(spark.table("documents"), threshold=0.5)
+    return ngram_jaccard_pairs(spark.table("documents"))
 
 
-def _sql_ngram_jaccard_duck(threshold: float = 0.5, num_hashes: int = 16,
-                            bands: int = 4, k: int = 3) -> str:
-    return _sql_minhash_bands_duck(num_hashes, bands, k) + f""",
+def _sql_ngram_jaccard_duck() -> str:
+    from hexscape_spark.dedup import JACCARD_MIN
+    return _sql_minhash_bands_duck() + f""",
 pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
           FROM bnd x JOIN bnd y ON x.bb = y.bb AND x.bk = y.bk AND x.doc_id < y.doc_id),
 sets AS (SELECT doc_id, list_distinct(shingles) AS ss FROM sh)
@@ -1165,7 +1170,7 @@ SELECT a, b, jaccard FROM (
          ROUND(CAST(len(list_intersect(sa.ss, sb.ss)) AS DOUBLE) /
                len(list_distinct(list_concat(sa.ss, sb.ss))), 6) AS jaccard
   FROM pairs JOIN sets sa ON sa.doc_id = a JOIN sets sb ON sb.doc_id = b) t
-WHERE jaccard >= {sqlgen._f(threshold)}
+WHERE jaccard >= {sqlgen._f(JACCARD_MIN)}
 """
 
 
@@ -1180,10 +1185,12 @@ def _q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr("transform(embedding, v -> CAST(v AS DOUBLE))")
         .alias("embedding"))
-    return embedding_near_dup_pairs(emb, threshold=0.45)
+    return embedding_near_dup_pairs(emb)
 
 
-_SQL_EMBEDDING_NEAR_DUPS = """
+def _sql_embedding_near_dups() -> str:
+    from hexscape_spark.dedup import COSINE_MIN
+    return f"""
 WITH u AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 n AS (SELECT vec_id,
              [x / sqrt(list_dot_product(e, e)) FOR x IN e] AS un FROM u)
@@ -1191,8 +1198,11 @@ SELECT a, b, cosine FROM (
   SELECT x.vec_id AS a, y.vec_id AS b,
          ROUND(list_dot_product(x.un, y.un), 6) AS cosine
   FROM n x JOIN n y ON x.vec_id < y.vec_id) t
-WHERE cosine >= 0.45E0
+WHERE cosine >= {sqlgen._f(COSINE_MIN)}
 """
+
+
+_MEDIA_N = 200
 
 
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,11 +1214,11 @@ def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic), so the metadata verifies the whole encode->decode
     roundtrip."""
     from hexscape_spark.multimodal import extract_features, synth_media
-    return extract_features(synth_media(spark, 200)).select(
+    return extract_features(synth_media(spark, _MEDIA_N)).select(
         "media_id", "kind", "n_bytes", "width", "height")
 
 
-def _sql_media_features_duck(n: int = 200) -> str:
+def _sql_media_features_duck() -> str:
     """DuckDB mirror of synth_media's generation rules: image (even id)
     P6 PPM -> n_bytes = header + 3wh, dims from the id; audio (id%4==1)
     PCM16 WAV -> n_bytes = 44 + 2*n_samples, width = n_samples,
@@ -1216,7 +1226,7 @@ def _sql_media_features_duck(n: int = 200) -> str:
     224 + nf*(8 + h*ceil4(3w)) (fixed RIFF/hdrl/movi header sizes —
     hexscape_spark/multimodal.py encode_avi), width/height from the id."""
     return f"""
-WITH m AS (SELECT CAST(range AS BIGINT) AS media_id FROM range(0, {n})),
+WITH m AS (SELECT CAST(range AS BIGINT) AS media_id FROM range(0, {_MEDIA_N})),
 d AS (SELECT media_id,
       CASE WHEN media_id % 2 = 0 THEN 'image'
            WHEN media_id % 4 = 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -1400,8 +1410,7 @@ def _q_hex_neighbours(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("cell_id", "nbr_cell_id", "direction"))
 
 
-def _q_hex_kring_profile(spark: SparkSession, sf_dir: str,
-                         disk_k: int = 2, max_k: int = 3) -> DataFrame:
+def _q_hex_kring_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side plan for the kRing disk/ring profile (r7): same
     two-sided subtree re-execution + IsNotNull re-inlining fix as
     _q_hex_neighbours — the per-cell count relation is computed once,
@@ -1414,7 +1423,7 @@ def _q_hex_kring_profile(spark: SparkSession, sf_dir: str,
     cells = materialise(spark.sql(
         "SELECT q, r, cell_id, COUNT(*) AS n FROM (" + sub +
         ") AS t GROUP BY q, r, cell_id"))
-    offs = spark.createDataFrame(hexgrid.kring_offsets(max_k),
+    offs = spark.createDataFrame(hexgrid.kring_offsets(_KRING_MAX),
                                  "dq INT, dr INT, ring INT")
     shifted = (cells.select("cell_id", "q", "r")
                .crossJoin(F.broadcast(offs))
@@ -1424,13 +1433,14 @@ def _q_hex_kring_profile(spark: SparkSession, sf_dir: str,
                      F.col("n"))
     ring_aggs = [
         F.sum(F.when(F.col("ring") == k, F.col("n")).otherwise(F.lit(0)))
-        .cast("long").alias(f"n_ring{k}") for k in range(1, max_k + 1)]
+        .cast("long").alias(f"n_ring{k}")
+        for k in range(1, _KRING_MAX + 1)]
     return (shifted.join(F.broadcast(b), [F.col("bq") == F.col("sq"),
                                           F.col("br") == F.col("sr")])
             .groupBy("cell_id")
-            .agg(F.sum(F.when(F.col("ring") <= disk_k, F.col("n"))
+            .agg(F.sum(F.when(F.col("ring") <= _KRING_DISK, F.col("n"))
                        .otherwise(F.lit(0))).cast("long").alias("n_in_disk"),
-                 F.sum(F.when(F.col("ring") <= disk_k, F.lit(1))
+                 F.sum(F.when(F.col("ring") <= _KRING_DISK, F.lit(1))
                        .otherwise(F.lit(0))).cast("long")
                  .alias("cells_in_disk"),
                  *ring_aggs))
@@ -1441,17 +1451,16 @@ def _q_salted_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain SQL is its oracle (salting must be invisible in results)."""
     _views(spark, sf_dir)
     from hexscape_spark.skew import salted_agg
-    # salted_agg reads its input twice (heavy-key pass + salted agg); the
+    # salted_agg reads its input twice (heavy-key count + salted agg); the
     # assign is cheap JVM arithmetic, so both passes recompute it rather
-    # than pay a materialise job.  sample_fraction=1.0 makes the heavy
-    # set exact counts.
+    # than pay a materialise job.
     sub = sqlgen.assign_sql("events", "event_id", keep=["value"])
     ev = spark.sql(f"SELECT event_id, cell_id, value FROM ({sub}) AS t")
     ev = ev.withColumn("value_cents",
                        F.expr("CAST(ROUND(value * 100) AS BIGINT)"))
     out = salted_agg(ev, key="cell_id", sums=["value_cents"],
                      salt_col="event_id", buckets=8,
-                     heavy_threshold=50, sample_fraction=1.0)
+                     heavy_threshold=50)
     return out.select("cell_id", "n", F.col("sum_value_cents"))
 
 
@@ -1465,16 +1474,17 @@ _SQL_SALTED = (
 def _q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir)
     from hexscape_spark.dedup import with_simhash
-    return with_simhash(spark.table("documents"), bits=16)
+    return with_simhash(spark.table("documents"))
 
 
-def _sql_simhash_duck(bits: int = 16) -> str:
+def _sql_simhash_duck() -> str:
+    from hexscape_spark.dedup import SIMHASH_BITS
     h = sqlgen.md5_int_expr("t")
     votes = ", ".join(
         f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}"
-        for j in range(bits))
-    sim = " + ".join(
-        f"CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END" for j in range(bits))
+        for j in range(SIMHASH_BITS))
+    sim = " + ".join(f"CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END"
+                     for j in range(SIMHASH_BITS))
     return (
         f"WITH tok AS (SELECT doc_id, {h} AS h FROM ("
         "SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS t "
@@ -1877,7 +1887,7 @@ def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "event_id, lon, lat, q, r")
     occ = _assign_ckpt(spark, "documents", "doc_id", "q, r, cell_id",
                        distinct=True)
-    return nearest_cells(ev, occ, k_ring=3, point_id="event_id") \
+    return nearest_cells(ev, occ, point_id="event_id") \
         .select("event_id", "nn_cell_id", F.round("dist", 6).alias("dist_r"))
 
 
@@ -1997,7 +2007,7 @@ def oracle_sql() -> dict[str, str]:
         "customers_without_orders": _SQL_NO_ORDERS,
         "user_event_gaps": _SQL_EVENT_GAPS,
         "dedup_exact": _SQL_DEDUP_EXACT,
-        "contamination_docs": _SQL_CONTAMINATION,
+        "contamination_docs": _sql_contamination(),
         "token_stats": _sql_token_stats_duck(),
         "lang_dist_by_source": _sql_lang_dist(),
         "knn_cosine": _SQL_KNN,
@@ -2005,9 +2015,9 @@ def oracle_sql() -> dict[str, str]:
         "minhash_pairs": _sql_minhash_pairs_duck(),
         "simhash_docs": _sql_simhash_duck(),
         "ngram_jaccard": _sql_ngram_jaccard_duck(),
-        "embedding_near_dups": _SQL_EMBEDDING_NEAR_DUPS,
+        "embedding_near_dups": _sql_embedding_near_dups(),
         "streaming_cell_rollup": _sql_streaming_cell_rollup_duck(),
-        "ivf_topk": _SQL_IVF_TOPK,
+        "ivf_topk": _sql_ivf_topk(),
         "lsh_topk": _sql_lsh_topk_duck(),
         "media_features": _sql_media_features_duck(),
         "dissolve_layers": _sql_dissolve_layers_duck(),

@@ -31,6 +31,7 @@ import json
 
 import pandas as pd
 import os
+import sys
 import zipfile
 
 
@@ -222,7 +223,7 @@ def job_landcover(spark, args) -> None:
         "dissolved": spark.read.parquet(args.out + "_dissolved").count()}))
 
 
-def main(argv: list[str] | None = None) -> None:
+def main(argv: list[str]) -> None:
     ap = argparse.ArgumentParser(prog="hexscape_spark.cli")
     sub = ap.add_subparsers(dest="cmd", required=True)
     sub.add_parser("package")
@@ -266,4 +267,4 @@ def main(argv: list[str] | None = None) -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

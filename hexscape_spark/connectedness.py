@@ -76,7 +76,7 @@ def patch_grid_points(patches: DataFrame, grid_by: float,
 def generate_connectedness(patches: DataFrame,
                            connectedness_fun: Callable[[np.ndarray], np.ndarray],
                            max_distance: float,
-                           grid_resolution: int = 50,
+                           grid_resolution: int,
                            idx: str = "Index",
                            geom: str = "geom_wkb") -> DataFrame:
     """Sparse long-form connectedness table (Source, Target, Connectedness).

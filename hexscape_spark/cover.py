@@ -28,7 +28,6 @@ from . import params as P
 
 
 def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
-                       refx: float = P.REFX, refy: float = P.REFY,
                        poly_id: str = "poly_id", geom: str = "geom_wkb"
                        ) -> DataFrame:
     """Explode polygons into overlapped hex cells.
@@ -135,7 +134,7 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
                              for poly in polys_np]
                 # candidate axial range of the bbox, padded by one ring
                 q_lo, q_hi, r_lo, r_hi = hexgrid.axial_range(
-                    x0, y0, x1, y1, w, refx, refy)
+                    x0, y0, x1, y1, w, P.REFX, P.REFY)
                 q_lo, q_hi, r_lo, r_hi = q_lo - 1, q_hi + 1, r_lo - 1, r_hi + 1
                 n_edges = sum(len(r_) for r_ in all_rings)
                 # complex polygons block into SQUARE tiles so the per-tile
@@ -154,8 +153,8 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
                         rg, qg = np.meshgrid(rs, qs, indexing="ij")
                         rg = rg.ravel()
                         qg = qg.ravel()
-                        ccx = refx + rg * (w / 2.0) + qg * w
-                        ccy = refy - rg * step
+                        ccx = P.REFX + rg * (w / 2.0) + qg * w
+                        ccy = P.REFY - rg * step
                         inbb = (ccx >= x0 - w / 2) & (ccx <= x1 + w / 2) & \
                                (ccy >= y0 - h / 2) & (ccy <= y1 + h / 2)
                         if not inbb.any():

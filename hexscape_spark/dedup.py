@@ -46,7 +46,7 @@ def dedup_keep_first(df: DataFrame, key: str = "doc_id",
             .where(F.col("__rn") == 1).drop("__h", "__rn"))
 
 
-def _shingles(text_col, k: int = 3):
+def _shingles(text_col, k: int):
     """Word k-gram shingles as an array column (JVM-side)."""
     words = F.split(F.lower(text_col), r"\s+")
     n = F.size(words)
@@ -58,11 +58,20 @@ def _shingles(text_col, k: int = 3):
 
 def _bucket_pairs(buckets: DataFrame, key: str,
                   max_bucket: int | None) -> DataFrame:
-    """Self-join (band, h) buckets into distinct (a, b) pairs with a < b,
-    after dropping buckets above `max_bucket` (similarity._cap_buckets).
-    A band is a MinHash signature slice or one hyperplane-LSH table."""
-    from .similarity import _cap_buckets
-    buckets = _cap_buckets(buckets, max_bucket)
+    """Self-join (band, h) buckets, a band being a MinHash signature
+    slice, into distinct (a, b) pairs with a < b, after dropping every
+    bucket with more than `max_bucket` members (None: keep all).
+
+    A bucket of m members emits m^2/2 pairs, so one degenerate bucket
+    (e.g. 10^6 identical boilerplate pages) would be quadratic no matter
+    how AQE splits the shuffle.  Over-full buckets go entirely: their
+    members are near-certain copies of an exact-dup cluster, which
+    exact_duplicates catches more cheaply."""
+    if max_bucket is not None:
+        ok = (buckets.groupBy("band", "h")
+              .agg(F.count(F.lit(1)).alias("__m"))
+              .where(F.col("__m") <= max_bucket).select("band", "h"))
+        buckets = buckets.join(ok, on=["band", "h"])
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (a.join(b, on=["band", "h"])
@@ -74,10 +83,11 @@ def _bucket_pairs(buckets: DataFrame, key: str,
 # re.ASCII pins \s to the ASCII class RE2 (DuckDB) and Java use — Python's
 # unicode-aware \s would split on NBSP etc. and break parity
 _WORD_SPLIT = re.compile(r"\s+", re.ASCII)
+# MinHash shingles are word 3-grams
+SHINGLE_K = 3
 
 
-def _signature_batch(texts: pd.Series, shingle_k: int,
-                     mix: np.ndarray) -> pd.DataFrame:
+def _signature_batch(texts: pd.Series, mix: np.ndarray) -> pd.DataFrame:
     """The (sig, hs) rows of one Arrow batch of texts (see _signatures).
 
     Module level, so cloudpickle ships it by reference: a worker that
@@ -94,9 +104,9 @@ def _signature_batch(texts: pd.Series, shingle_k: int,
     sigs, hss = [], []
     for t in texts:
         words = _WORD_SPLIT.split(t.lower())
-        if len(words) >= shingle_k:
-            sh = [" ".join(words[i:i + shingle_k])
-                  for i in range(len(words) - shingle_k + 1)]
+        if len(words) >= SHINGLE_K:
+            sh = [" ".join(words[i:i + SHINGLE_K])
+                  for i in range(len(words) - SHINGLE_K + 1)]
         else:
             sh = [" ".join(words)]
         hs = np.unique(np.fromiter(
@@ -110,11 +120,11 @@ def _signature_batch(texts: pd.Series, shingle_k: int,
     return pd.DataFrame({"sig": sigs, "hs": hss})
 
 
-def _signatures(df: DataFrame, key: str, text: str, num_hashes: int,
-                shingle_k: int) -> DataFrame:
+def _signatures(df: DataFrame, key: str, text: str,
+                num_hashes: int) -> DataFrame:
     """(key, sig, hs) per document, from ONE Python pass: `sig` is the
     MinHash signature, `hs` the sorted distinct md5-folded shingle hashes
-    it is the minimum over.  Shingles are word `shingle_k`-grams of the
+    it is the minimum over.  Shingles are word SHINGLE_K-grams of the
     lower-cased text (the _shingles rule: a shorter document is one
     shingle).  NULL text has no shingles and no row.
 
@@ -124,7 +134,7 @@ def _signatures(df: DataFrame, key: str, text: str, num_hashes: int,
 
     @F.pandas_udf("sig array<long>, hs array<long>")
     def signature(texts: pd.Series) -> pd.DataFrame:
-        return _signature_batch(texts, shingle_k, mix)
+        return _signature_batch(texts, mix)
 
     # the input is often one row group: spread it so the signature stage
     # runs on every core, not in one Python worker (deterministic hash
@@ -150,9 +160,8 @@ def _band_buckets(sig: DataFrame, key: str, num_hashes: int,
         .select(key, "bh.band", "bh.h")
 
 
-def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
-                      num_hashes: int = 16, bands: int = 4,
-                      shingle_k: int = 3,
+def minhash_lsh_pairs(df: DataFrame, num_hashes: int, bands: int,
+                      key: str = "doc_id", text: str = "text",
                       max_bucket: int | None = None) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash + LSH banding
     (_signatures, _band_buckets): the DuckDB oracle recomputes the exact
@@ -162,15 +171,18 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
     boilerplate pages emits 10^12 pairs otherwise (see _bucket_pairs).
     Returns distinct (a, b), a < b.
     """
-    sig = _signatures(df, key, text, num_hashes, shingle_k).select(key, "sig")
+    sig = _signatures(df, key, text, num_hashes).select(key, "sig")
     # Python stage: the self-join and the size cap both read the signatures
     buckets = materialise(_band_buckets(sig, key, num_hashes, bands))
     return _bucket_pairs(buckets, key, max_bucket)
 
 
+SIMHASH_BITS = 16
+
+
 def with_simhash(df: DataFrame, key: str = "doc_id", text: str = "text",
-                 bits: int = 16, out: str = "simhash") -> DataFrame:
-    """SimHash: one md5-folded hash per token (explode +
+                 out: str = "simhash") -> DataFrame:
+    """SimHash of SIMHASH_BITS bits: one md5-folded hash per token (explode +
     groupBy — the hash is computed ONCE per token, not once per bit), then
     per-bit ±1 vote sums.  Exactly reproducible in DuckDB SQL, so the
     driver oracle can verify it.  Grouped shape is also the scale shape:
@@ -182,16 +194,20 @@ def with_simhash(df: DataFrame, key: str = "doc_id", text: str = "text",
     tok = tok.selectExpr(key, sqlgen.md5_int_expr_spark("w") + " AS h")
     votes = [
         F.expr(f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END)")
-        .alias(f"v{j}") for j in range(bits)]
+        .alias(f"v{j}") for j in range(SIMHASH_BITS)]
     g = tok.groupBy(key).agg(*votes)
-    sim = " + ".join(
-        f"CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END" for j in range(bits))
+    sim = " + ".join(f"CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END"
+                     for j in range(SIMHASH_BITS))
     return g.selectExpr(key, f"CAST({sim} AS BIGINT) AS {out}")
 
 
-def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
-                        shingle_k: int = 3, threshold: float = 0.5,
-                        num_hashes: int = 16, bands: int = 4) -> DataFrame:
+# the near-dup queries band 16-hash MinHash signatures in 4 bands;
+# ngram_jaccard_pairs keeps pairs of Jaccard >= 0.5
+NUM_HASHES, BANDS, JACCARD_MIN = 16, 4, 0.5
+
+
+def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id",
+                        text: str = "text") -> DataFrame:
     """Exact n-gram Jaccard over LSH-prefiltered candidates (R3: cheap
     prefilter before the expensive op).  One Python pass (_signatures)
     gives each document its signature AND its distinct shingle-hash set;
@@ -206,25 +222,27 @@ def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
     the JVM's lower().  The DuckDB oracle compares the string sets and
     stays the judge: test_queries_oracle.py's
     test_query_matches_oracle[ngram_jaccard] pins the parity.  Returns
-    (a, b, jaccard) with jaccard rounded to 6 dp and >= threshold."""
+    (a, b, jaccard) with jaccard rounded to 6 dp and >= JACCARD_MIN."""
     # Python stage: the bucket self-join and both verify joins read docs
-    docs = materialise(_signatures(df, key, text, num_hashes, shingle_k))
-    cands = _bucket_pairs(_band_buckets(docs, key, num_hashes, bands),
+    docs = materialise(_signatures(df, key, text, NUM_HASHES))
+    cands = _bucket_pairs(_band_buckets(docs, key, NUM_HASHES, BANDS),
                           key, None)
     j = (cands.join(docs.selectExpr(f"{key} AS a", "hs AS ha"), on="a")
          .join(docs.selectExpr(f"{key} AS b", "hs AS hb"), on="b"))
     inter = F.size(F.array_intersect("ha", "hb"))
     jac = F.round(inter / (F.size("ha") + F.size("hb") - inter), 6)
     return (j.withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
+            .where(F.col("jaccard") >= JACCARD_MIN)
             .select("a", "b", "jaccard"))
 
 
+COSINE_MIN = 0.45
+
+
 def embedding_near_dup_pairs(df: DataFrame, key: str = "vec_id",
-                             vec: str = "embedding",
-                             threshold: float = 0.45) -> DataFrame:
+                             vec: str = "embedding") -> DataFrame:
     """Embedding-cosine near-duplicate pairs, EXACT: all pairs with
-    cosine >= threshold (rounded to 6 dp): an all-pairs theta join,
+    cosine >= COSINE_MIN (rounded to 6 dp): an all-pairs theta join,
     sized for test corpora only."""
     from .similarity import _dot, with_unit_norm
     u = with_unit_norm(df, vec).select(F.col(key), F.col("unit_vec"))
@@ -233,22 +251,21 @@ def embedding_near_dup_pairs(df: DataFrame, key: str = "vec_id",
     pairs = a.join(b, F.col("a") < F.col("b"))
     cos = F.round(_dot(F.col("ua"), F.col("ub")), 6)
     return (pairs.withColumn("cosine", cos)
-            .where(F.col("cosine") >= threshold)
+            .where(F.col("cosine") >= COSINE_MIN)
             .select("a", "b", "cosine"))
 
 
 def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
-                out: str = "text_line_deduped", min_line_chars: int = 1,
-                sep: str = "\n", hash_shuffle: bool = False) -> DataFrame:
+                out: str = "text_line_deduped", sep: str = "\n",
+                hash_shuffle: bool = False) -> DataFrame:
     """Corpus-wide exact LINE deduplication — the RefinedWeb/C4-style
     stage that strips boilerplate ("cookie notice", nav menus, footers)
     repeated across pages: every line keeps exactly its FIRST occurrence
     in the corpus (min `key`, then min line index within that document)
     and is removed everywhere else, including repeats inside one
-    document.  Lines whose trimmed length is under `min_line_chars`
-    (blank separator lines by default) never participate — removing the
-    second empty line of every document would mangle formatting, not
-    deduplicate content.
+    document.  Blank lines (empty once trimmed) never participate —
+    removing the second empty line of every document would mangle
+    formatting, not deduplicate content.
 
     Scale shape: posexplode lines -> ONE groupBy on the line CONTENT
     itself (exact — no hash-collision false merges) picking the global
@@ -285,7 +302,7 @@ def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
     lines = df_nn.select(
         F.col(key),
         F.posexplode(F.split(F.col(text), sep_rx)).alias("__i", "__l"))
-    elig = F.length(F.trim(F.col("__l"))) >= min_line_chars
+    elig = F.length(F.trim(F.col("__l"))) >= 1
     lines = lines.withColumn("__e", elig)
     win_agg = F.min(F.struct(F.col(key).alias("k"),
                              F.col("__i").alias("i"))).alias("__w")
@@ -318,12 +335,15 @@ def dedup_lines(df: DataFrame, key: str = "doc_id", text: str = "text",
     return deduped.unionByName(nulls)
 
 
+CONTAMINATION_N = 13
+
+
 def contamination_flags(df: DataFrame, benchmark: DataFrame,
                         key: str = "doc_id", text: str = "text",
-                        bench_text: str = "text", n: int = 13) -> DataFrame:
+                        bench_text: str = "text") -> DataFrame:
     """Benchmark DECONTAMINATION (the GPT-3 appendix-C / Llama
     n-gram-overlap rule, public knowledge): flag training documents that
-    share any word `n`-gram (default 13) with a held-out benchmark
+    share any word CONTAMINATION_N-gram (13) with a held-out benchmark
     corpus, so evaluation data can be excluded from training.  Adds
     `contaminated_ngrams` (distinct colliding n-grams) and
     `is_contaminated`.
@@ -332,7 +352,7 @@ def contamination_flags(df: DataFrame, benchmark: DataFrame,
     suites are tiny next to a training corpus), the corpus side is
     explode -> equi-join -> one count-distinct per document — never an
     all-pairs comparison.
-    Documents shorter than `n` words shingle to their whole text (the
+    Documents shorter than 13 words shingle to their whole text (the
     _shingles short-doc rule), so an exact short-text match still flags.
     The input is read twice (gram explode + final join-back).
     """
@@ -344,9 +364,10 @@ def contamination_flags(df: DataFrame, benchmark: DataFrame,
              .withColumn("is_contaminated", F.lit(None).cast("boolean")))
     df_nn = df.where(F.col(key).isNotNull())
     gb = F.broadcast(benchmark.select(F.explode(F.array_distinct(
-        _shingles(F.col(bench_text), n))).alias("__g")).distinct())
+        _shingles(F.col(bench_text), CONTAMINATION_N))).alias("__g"))
+        .distinct())
     gd = df_nn.select(F.col(key), F.explode(F.array_distinct(
-        _shingles(F.col(text), n))).alias("__g"))
+        _shingles(F.col(text), CONTAMINATION_N))).alias("__g"))
     hits = (gd.join(gb, on="__g")
             .groupBy(key)
             .agg(F.countDistinct("__g").alias("contaminated_ngrams")))

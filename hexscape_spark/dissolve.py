@@ -69,7 +69,7 @@ def _union_or_rings(sub: list[list[np.ndarray]]
     if not sub:
         return [], 0.0
     try:
-        return geo.union_component(sub, with_area=True)
+        return geo.union_component(sub)
     except geo.UnionTraceError:
         return sub, geo.union_area(sub)
 

@@ -475,18 +475,18 @@ def points_in_polygons(px: np.ndarray, py: np.ndarray,
 
 def dist_points_to_segment_arrays(px: np.ndarray, py: np.ndarray,
                                   ax: np.ndarray, ay: np.ndarray,
-                                  bx: np.ndarray, by: np.ndarray,
-                                  seg_chunk: int = 256) -> np.ndarray:
+                                  bx: np.ndarray, by: np.ndarray) -> np.ndarray:
     """Min distance from each point to an explicit segment set, evaluated in
-    segment chunks so the (n_points x n_segments) temporary never exceeds
-    n_points x seg_chunk (the OOM guard for huge boundary rings).  Returns
-    +inf where the segment set is empty."""
+    chunks of 256 segments so the (n_points x n_segments) temporary never
+    exceeds n_points x 256 (the OOM guard for huge boundary rings).
+    Returns +inf where the segment set is empty."""
     d = np.full(len(px), np.inf)
-    for s in range(0, len(ax), seg_chunk):
-        abx = (bx[s:s + seg_chunk] - ax[s:s + seg_chunk])[None, :]
-        aby = (by[s:s + seg_chunk] - ay[s:s + seg_chunk])[None, :]
-        apx = px[:, None] - ax[s:s + seg_chunk][None, :]
-        apy = py[:, None] - ay[s:s + seg_chunk][None, :]
+    for s in range(0, len(ax), 256):
+        e = s + 256
+        abx = (bx[s:e] - ax[s:e])[None, :]
+        aby = (by[s:e] - ay[s:e])[None, :]
+        apx = px[:, None] - ax[s:e][None, :]
+        apy = py[:, None] - ay[s:e][None, :]
         denom = abx * abx + aby * aby
         denom = np.where(denom == 0.0, 1.0, denom)
         t = np.clip((apx * abx + apy * aby) / denom, 0.0, 1.0)
@@ -660,13 +660,13 @@ def douglas_peucker(ring: np.ndarray, tolerance: float) -> np.ndarray:
     return out if len(out) >= 3 else ring
 
 
-def simplify_polygons_keep(polys: list[list[np.ndarray]], keep: float,
-                           iters: int = 40) -> list[list[np.ndarray]]:
+def simplify_polygons_keep(polys: list[list[np.ndarray]],
+                           keep: float) -> list[list[np.ndarray]]:
     """ms_simplify(keep=, method="dp") (R/extract_corine.R:273): binary-
-    search ONE global DP tolerance so the kept-vertex ratio across all
-    rings lands on `keep` (vertex counts are monotone non-increasing in
-    tolerance, so bisection converges; DP granularity limits exactness to
-    the nearest achievable count)."""
+    search (40 halvings) ONE global DP tolerance so the kept-vertex ratio
+    across all rings lands on `keep` (vertex counts are monotone
+    non-increasing in tolerance, so bisection converges; DP granularity
+    limits exactness to the nearest achievable count)."""
     total = sum(len(r) for poly in polys for r in poly)
     if keep >= 1.0 or total == 0:
         return polys
@@ -677,7 +677,7 @@ def simplify_polygons_keep(polys: list[list[np.ndarray]], keep: float,
     x0, y0, x1, y1 = polygons_bounds(polys)
     lo, hi = 0.0, float(np.hypot(x1 - x0, y1 - y0))
     target = keep * total
-    for _ in range(iters):
+    for _ in range(40):
         mid = 0.5 * (lo + hi)
         if count(mid) > target:
             lo = mid
@@ -730,16 +730,17 @@ def interior_point(poly: list[np.ndarray]) -> tuple[float, float]:
 # per-group driver/UDF geometry (dissolve, impassable accounting), where E
 # is bounded, not for the per-row hot path.
 
-def _crossing_xs_block(x1, y1, x2, y2, ia, ib, chunk: int = 512):
+def _crossing_xs_block(x1, y1, x2, y2, ia, ib):
     """Proper interior crossings between segment index sets ia x ib
-    (vectorized): yields their xs per chunk of ia that has any, so a
-    caller that only asks whether any pair crosses stops at the first."""
+    (vectorized): yields their xs per 512-index chunk of ia that has any,
+    so a caller that only asks whether any pair crosses stops at the
+    first."""
     sx = (x2[ib] - x1[ib])[None, :]
     sy = (y2[ib] - y1[ib])[None, :]
     bx1 = x1[ib][None, :]
     by1 = y1[ib][None, :]
-    for i0 in range(0, len(ia), chunk):
-        sel = ia[i0:i0 + chunk]
+    for i0 in range(0, len(ia), 512):
+        sel = ia[i0:i0 + 512]
         ax = x1[sel][:, None]
         ay = y1[sel][:, None]
         rx = (x2[sel] - x1[sel])[:, None]
@@ -757,7 +758,7 @@ def _crossing_xs_block(x1, y1, x2, y2, ia, ib, chunk: int = 512):
                 yield (ax + t * rx)[ok]
 
 
-def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
+def _pairwise_crossing_xs(x1, y1, x2, y2) -> np.ndarray:
     """x coordinates of proper interior crossings between any two segments.
 
     Above ~1k segments the all-pairs scan is binned on x (candidates must
@@ -772,7 +773,7 @@ def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
     if m <= 1024:
         idx = np.arange(m)
         return np.concatenate([np.empty(0), *_crossing_xs_block(
-            x1, y1, x2, y2, idx, idx, chunk)])
+            x1, y1, x2, y2, idx, idx)])
     lo = np.minimum(x1, x2)
     hi = np.maximum(x1, x2)
     ext_lo, ext_hi = float(lo.min()), float(hi.max())
@@ -788,7 +789,7 @@ def _pairwise_crossing_xs(x1, y1, x2, y2, chunk: int = 512) -> np.ndarray:
     for b, members in buckets.items():
         ia = np.array(members, dtype=np.int64)
         xs = np.concatenate([np.empty(0), *_crossing_xs_block(
-            x1, y1, x2, y2, ia, ia, chunk)])
+            x1, y1, x2, y2, ia, ia)])
         if len(xs):
             blo = ext_lo + b * width
             keep = (xs >= blo) & (xs < blo + width)
@@ -1171,13 +1172,12 @@ def _assemble_polygons(rings: list[np.ndarray]) -> list[list[np.ndarray]]:
 _UNION_LEAF = 48
 
 
-def union_component(polys: list[list[np.ndarray]],
-                    _depth: int = 0,
-                    with_area: bool = False):
-    """Exact union boundary of one touch/overlap-connected polygon set.
-    Returns polygons (outer CCW + holes CW); validates its own area against
-    the independent strip-sweep union_area and raises UnionTraceError on
-    any disagreement, so callers can fall back safely.
+def union_component(polys: list[list[np.ndarray]], _depth: int = 0
+                    ) -> tuple[list[list[np.ndarray]], float]:
+    """Exact union boundary of one touch/overlap-connected polygon set, and
+    its area.  Returns (polygons (outer CCW + holes CW), area); validates
+    its own area against the independent strip-sweep union_area and raises
+    UnionTraceError on any disagreement, so callers can fall back safely.
 
     PRECISION CONTRACT (r6, closes the r5 near-tangency sliver): the
     float sweep validates its traced boundary against the trapezoid-sum
@@ -1187,9 +1187,8 @@ def union_component(polys: list[list[np.ndarray]],
     sliver far larger than the true micro-notch) re-traces through
     geo_exact's rational-arithmetic sweep, whose boundary is EXACT (the
     only output error is the final ≤1-ulp float64 rounding per vertex).
-    The trapezoid-sum area is exact to ~1e-13 relative either way;
-    `with_area=True` returns (pieces, area) with that area, which is
-    what dissolve reports.
+    The trapezoid-sum area is exact to ~1e-13 relative either way; it is
+    the area returned, and what dissolve reports.
 
     Sets larger than _UNION_LEAF union hierarchically: spatially-sorted
     batches -> partial unions -> union of the partials.  The sweep is
@@ -1197,8 +1196,7 @@ def union_component(polys: list[list[np.ndarray]],
     10^4-feature blob near-linear instead of quadratic (the divide-and-
     conquer every GEOS cascaded union uses)."""
     if len(polys) == 1:
-        return ([polys[0]], polygon_area(polys[0])) if with_area \
-            else [polys[0]]
+        return [polys[0]], polygon_area(polys[0])
     if len(polys) > _UNION_LEAF and _depth < 16:
         cents = np.array([polygons_bounds([p]) for p in polys])
         cx = 0.5 * (cents[:, 0] + cents[:, 2])
@@ -1213,23 +1211,20 @@ def union_component(polys: list[list[np.ndarray]],
             chunk = [polys[j] for j in order[i:i + _UNION_LEAF]]
             for comp in overlap_components(chunk):
                 partial.extend(union_component([chunk[j] for j in comp],
-                                               _depth + 1))
+                                               _depth + 1)[0])
         if len(partial) < len(polys):
             out: list[list[np.ndarray]] = []
             area = 0.0
             for comp in overlap_components(partial):
-                r = union_component([partial[j] for j in comp],
-                                    _depth + 1, with_area=with_area)
-                if with_area:
-                    out.extend(r[0])
-                    area += r[1]
-                else:
-                    out.extend(r)
-            return (out, area) if with_area else out
+                pieces, a = union_component([partial[j] for j in comp],
+                                            _depth + 1)
+                out.extend(pieces)
+                area += a
+            return out, area
         # nothing merged at this depth: fall through to one direct sweep
     x1, y1, x2, y2, pid = _poly_set_segments(polys)
     if len(x1) == 0:
-        return ([], 0.0) if with_area else []
+        return [], 0.0
     xs = np.unique(np.concatenate(
         [x1, x2, _pairwise_crossing_xs(x1, y1, x2, y2)]))
     bx0, by0, bx1, by1 = polygons_bounds(polys)
@@ -1239,25 +1234,22 @@ def union_component(polys: list[list[np.ndarray]],
         return _merged_intervals_at(x1, y1, x2, y2, pid, xm)
 
     try:
-        out, want = _trace_regions(x1, y1, x2, y2, xs, intervals, diag,
-                                   return_area=True)
+        return _trace_regions(x1, y1, x2, y2, xs, intervals, diag)
     except UnionTraceError:
         # near-degenerate input (e.g. a vertex within ~1e-5 of another
         # polygon's edge makes two crossing breakpoints ~1e-15 apart and
         # the float stitch mis-chords): re-trace in exact rational
         # arithmetic — same sweep, zero tolerances, boundary exact
         from . import geo_exact
-        out, want = geo_exact.exact_union_trace(polys)
-    return (out, want) if with_area else out
+        return geo_exact.exact_union_trace(polys)
 
 
-def _trace_regions(x1, y1, x2, y2, xs, interval_fn, diag: float,
-                   return_area: bool = False):
+def _trace_regions(x1, y1, x2, y2, xs, interval_fn, diag: float):
     """Generic boolean-region boundary trace over the strip decomposition:
     `interval_fn(xm)` defines the region's merged y-intervals (with
     bounding segment refs) at any sample line; the trapezoid edges + strip
     seams stitch into rings, validated against the trapezoid-sum area.
-    With return_area=True also returns that trapezoid-sum area — exact
+    Returns (rings, that trapezoid-sum area) — the area is exact
     (each strip is crossing-free, so coverage is linear and the midpoint
     trapezoid integral is the true integral), unlike the shoelace of the
     traced rings which may carry a tolerated near-tangency sliver."""
@@ -1301,7 +1293,7 @@ def _trace_regions(x1, y1, x2, y2, xs, interval_fn, diag: float,
     if abs(got - want) > max(1e-9, 1e-9 * abs(want)):
         raise UnionTraceError(
             f"traced region area {got!r} != sweep area {want!r}")
-    return (out, want) if return_area else out
+    return out, want
 
 
 def difference_polygons(a: list[list[np.ndarray]],
@@ -1312,8 +1304,6 @@ def difference_polygons(a: list[list[np.ndarray]],
     (R/extract_corine.R:177-205)."""
     if not a:
         return []
-    if not b:
-        return list(a)
     x1, y1, x2, y2, pid = _poly_set_segments(list(a) + list(b))
     is_a = pid < len(a)
     xs = np.unique(np.concatenate(
@@ -1327,7 +1317,7 @@ def difference_polygons(a: list[list[np.ndarray]],
         return _difference_intervals(ia, ib)
 
     try:
-        return _trace_regions(x1, y1, x2, y2, xs, intervals, diag)
+        return _trace_regions(x1, y1, x2, y2, xs, intervals, diag)[0]
     except UnionTraceError:
         # exact rational fallback, same as union_component
         from . import geo_exact

@@ -44,17 +44,18 @@ def _q_authalic(sphi: np.ndarray) -> np.ndarray:
 
 _QP = float(_q_authalic(np.array([1.0]))[0])
 _RQ = _A * math.sqrt(_QP / 2.0)
+# EPSG:3035 (ETRS89-extended / LAEA Europe): natural origin 52°N 10°E,
+# false easting and northing
+_LAT0, _LON0 = 52.0, 10.0
+_FE, _FN = 4321000.0, 3210000.0
 
 
-def laea_forward(lat_deg: np.ndarray, lon_deg: np.ndarray,
-                 lat0_deg: float = 52.0, lon0_deg: float = 10.0,
-                 fe: float = 4321000.0, fn: float = 3210000.0
+def laea_forward(lat_deg: np.ndarray, lon_deg: np.ndarray
                  ) -> tuple[np.ndarray, np.ndarray]:
-    """Geographic (degrees) -> LAEA easting/northing (m).  Defaults are
-    EPSG:3035 (ETRS89-extended / LAEA Europe)."""
+    """Geographic (degrees) -> EPSG:3035 LAEA easting/northing (m)."""
     phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    lam = np.radians(np.asarray(lon_deg, dtype=np.float64) - lon0_deg)
-    phi1 = math.radians(lat0_deg)
+    lam = np.radians(np.asarray(lon_deg, dtype=np.float64) - _LON0)
+    phi1 = math.radians(_LAT0)
     q = _q_authalic(np.sin(phi))
     q1 = float(_q_authalic(np.array([math.sin(phi1)]))[0])
     beta = np.arcsin(np.clip(q / _QP, -1.0, 1.0))
@@ -64,25 +65,22 @@ def laea_forward(lat_deg: np.ndarray, lon_deg: np.ndarray,
     cosb, sinb = np.cos(beta), np.sin(beta)
     b = _RQ * np.sqrt(2.0 / (1.0 + math.sin(beta1) * sinb
                              + math.cos(beta1) * cosb * np.cos(lam)))
-    e = fe + b * d * cosb * np.sin(lam)
-    n = fn + (b / d) * (math.cos(beta1) * sinb
+    e = _FE + b * d * cosb * np.sin(lam)
+    n = _FN + (b / d) * (math.cos(beta1) * sinb
                         - math.sin(beta1) * cosb * np.cos(lam))
     return e, n
 
 
 def with_laea(df: DataFrame, lat: str = "lat_deg", lon: str = "lon_deg",
-              lat0: float = 52.0, lon0: float = 10.0,
-              fe: float = 4321000.0, fn: float = 3210000.0,
               out_e: str = "easting", out_n: str = "northing") -> DataFrame:
-    """st_transform to EPSG:3035-style LAEA, Arrow-batched."""
+    """st_transform to EPSG:3035 LAEA, Arrow-batched."""
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in df.schema.fields)
     schema += f", {out_e} DOUBLE, {out_n} DOUBLE"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            e, n = laea_forward(pdf[lat].to_numpy(), pdf[lon].to_numpy(),
-                                lat0, lon0, fe, fn)
+            e, n = laea_forward(pdf[lat].to_numpy(), pdf[lon].to_numpy())
             pdf[out_e] = e
             pdf[out_n] = n
             yield pdf

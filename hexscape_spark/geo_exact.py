@@ -60,10 +60,11 @@ def _exact_segments(polys: list[list[np.ndarray]], pid_base: int = 0):
     return segs
 
 
-def _candidate_pairs(segs_a, segs_b=None, chunk: int = 512):
+def _candidate_pairs(segs_a, segs_b=None):
     """Indices of segment pairs whose bboxes overlap — float prefilter
-    (conservative by one ulp of slack) before the exact crossing math.
-    With segs_b=None, pairs within segs_a (i < j); else cross pairs."""
+    (conservative by one ulp of slack) before the exact crossing math,
+    in 512 x 512 blocks.  With segs_b=None, pairs within segs_a (i < j);
+    else cross pairs."""
     def arr(segs):
         a = np.array([[float(s[0]), float(s[1]), float(s[2]), float(s[3])]
                       for s in segs])
@@ -82,10 +83,10 @@ def _candidate_pairs(segs_a, segs_b=None, chunk: int = 512):
         lb, hb, lyb, hyb = arr(segs_b)
         nb = len(segs_b)
     out = []
-    for i0 in range(0, len(segs_a), chunk):
-        i1 = min(i0 + chunk, len(segs_a))
-        for j0 in range(0, nb, chunk):
-            j1 = min(j0 + chunk, nb)
+    for i0 in range(0, len(segs_a), 512):
+        i1 = min(i0 + 512, len(segs_a))
+        for j0 in range(0, nb, 512):
+            j1 = min(j0 + 512, nb)
             m = ((la[i0:i1, None] <= hb[None, j0:j1]) &
                  (ha[i0:i1, None] >= lb[None, j0:j1]) &
                  (lya[i0:i1, None] <= hyb[None, j0:j1]) &

@@ -2,11 +2,11 @@
 
 Pipeline (squares rasterisation):
   1. total capacity = Σ area×Density; target total patch area =
-     capacity / patch_density                    (:64-74)
+     capacity / patch_density, 1 per km²         (:64-74)
   2. synthetic points at Density-proportional grid spacing inside each
      habitat class                               (:76-94) — map-only UDF
   3. bivariate-normal KDE over the points, bandwidth = MASS::bandwidth.nrd
-     × h_adj, evaluated on the raster grid       (:140-143) — the kernel
+     × h_adj 0.5, evaluated on the raster grid   (:140-143) — the kernel
      evaluation is distributed: raster cells × broadcast points
   4. raster cells clipped to the habitat union, area per cell (:182-189)
   5. inclusion threshold on z chosen so the cumulative included area hits
@@ -59,8 +59,7 @@ _KDE_CELL_BATCH = 1024
 _HABITAT_DIM_CAP = 100_000
 
 
-def grid_components(cells: DataFrame, max_rounds: int = 64,
-                    block: int = 256) -> DataFrame:
+def grid_components(cells: DataFrame, block: int = 256) -> DataFrame:
     """Distributed connected components of raster cells under 4-adjacency
     — TWO-LEVEL (r5, the habitat latency item): each (block x block)
     tile labels itself with an in-memory union-find in one grouped-map
@@ -135,8 +134,7 @@ def grid_components(cells: DataFrame, max_rounds: int = 64,
                               F.col("rep").alias("rep_b")), on="nbr_node")
              .select("rep_a", "rep_b"))
     reps = lab.select(F.col("rep").alias("node")).distinct()
-    quot = connected_components(cross, a="rep_a", b="rep_b", nodes=reps,
-                                max_rounds=max_rounds)
+    quot = connected_components(cross, a="rep_a", b="rep_b", nodes=reps)
     return (lab.join(quot.withColumnRenamed("node", "rep"), on="rep")
             .select("ix", "iy", "comp"))
 
@@ -173,8 +171,7 @@ def habitat_points(habitat: DataFrame, point_density_per_km2: float,
 
 def discretise_habitat(spark: SparkSession, habitat: DataFrame,
                        max_size_km2: float = 5.0, min_size_km2: float = 0.5,
-                       patch_density_per_km2: float = 1.0,
-                       raster_size_km2: float = 0.05, h_adj: float = 0.5,
+                       raster_size_km2: float = 0.05,
                        point_density_per_km2: float = 100.0,
                        seed: int = 42,
                        geom: str = "geom_wkb") -> DataFrame:
@@ -202,7 +199,7 @@ def discretise_habitat(spark: SparkSession, habitat: DataFrame,
     total_capacity = sum(
         geo.polygons_area(geo.wkb_to_polygons(w)) / 1e6 * float(r[0])
         for r, w in zip(hab_rows, hab_wkbs))
-    total_size_km2 = total_capacity / patch_density_per_km2
+    total_size_km2 = total_capacity
 
     # 2. synthetic points (distributed).  Bandwidth moments are computed by
     # ONE distributed aggregation (exact percentiles + sample sd — Spark's
@@ -228,8 +225,8 @@ def discretise_habitat(spark: SparkSession, habitat: DataFrame,
             return 4 * 1.06 * min(float(sd), (q[1] - q[0]) / 1.34) \
                 * n_pts ** (-0.2)
 
-        bwx = _nrd(srow["sx"], srow["qx"]) * h_adj
-        bwy = _nrd(srow["sy"], srow["qy"]) * h_adj
+        bwx = _nrd(srow["sx"], srow["qx"]) * 0.5
+        bwy = _nrd(srow["sy"], srow["qy"]) * 0.5
 
         # raster grid (squares): edge from raster_size, bbox snapped (:112-118)
         d = int(np.floor(np.sqrt(raster_size_km2 * 1e6)))
@@ -481,6 +478,6 @@ def discretise_habitat(spark: SparkSession, habitat: DataFrame,
         F.concat_ws("_", F.col("main_patch").cast("string"),
                     F.col("sub_patch").cast("string")).alias("PatchID"),
         "main_patch", "sub_patch", "area",
-        (F.col("area") / 1e6 * patch_density_per_km2).alias("Capacity"))
+        (F.col("area") / 1e6).alias("Capacity"))
     # Python stage: the k-means split must not re-run per caller action
     return materialise(out)

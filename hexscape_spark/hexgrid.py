@@ -77,11 +77,11 @@ def with_geocode(df: DataFrame, key: str) -> DataFrame:
     return _apply_layers(df, sqlgen.geocode_layers(key))
 
 
-def with_hex_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
-                  hex_width: float = P.HEX_WIDTH,
-                  refx: float = P.REFX, refy: float = P.REFY) -> DataFrame:
-    """Assign each point to its containing hexagon: adds q, r, cell_id."""
-    out = _apply_layers(df, sqlgen.hex_layers(lon, lat, hex_width, refx, refy))
+def with_hex_cell(df: DataFrame, lon: str = "lon",
+                  lat: str = "lat") -> DataFrame:
+    """Assign each point to its containing hexagon of the engine's grid
+    (params.HEX_WIDTH, REFX, REFY): adds q, r, cell_id."""
+    out = _apply_layers(df, sqlgen.hex_layers(lon, lat))
     return out.drop("rf", "qf", "sf", "qg", "rg", "sg", "dq", "dr", "ds")
 
 

@@ -19,12 +19,13 @@ from .checkpoint import cached, materialise
 
 
 def dense_index(df: DataFrame, order_cols: list[str], out: str = "Index",
-                start: int = 1, small: bool = False) -> DataFrame:
-    """Add a dense global index following the total order of `order_cols`.
+                small: bool = False) -> DataFrame:
+    """Add a dense global index 1..n following the total order of
+    `order_cols`.
 
     Equivalent to row_number() over a global window, but scalable: the
     index is global_cumsum of a constant 1 (a ROWS-frame running count is
-    row_number), shifted to begin at `start`.
+    row_number).
 
     `small=True` (r7, guide §1.2): callers that KNOW the row count is
     bounded (e.g. a lattice whose dimensions are computed driver-side)
@@ -37,9 +38,9 @@ def dense_index(df: DataFrame, order_cols: list[str], out: str = "Index",
         w = Window.orderBy(*order_cols)
         # Python stage: callers reuse the rows; their clip UDF must not re-run
         return materialise(df.withColumn(
-            out, (F.row_number().over(w) + (start - 1)).cast("long")))
+            out, F.row_number().over(w).cast("long")))
     return global_cumsum(df, order_cols, F.lit(1), out) \
-        .withColumn(out, (F.col(out) + (start - 1)).cast("long"))
+        .withColumn(out, F.col(out).cast("long"))
 
 
 def global_cumsum(df: DataFrame, order_cols: list[Column | str],

@@ -30,18 +30,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geo
-from . import params as P
 from . import sqlgen
 from .hexgrid import kring_offsets_df
 
 
-def nearest_cells(points: DataFrame, cells: DataFrame, k_ring: int = 3,
-                  hex_width: float = P.HEX_WIDTH,
-                  refx: float = P.REFX, refy: float = P.REFY,
+# the candidate disk of nearest_cells
+K_RING = 3
+
+
+def nearest_cells(points: DataFrame, cells: DataFrame,
                   point_id: str = "point_id", px: str = "lon",
                   py: str = "lat") -> DataFrame:
     """For each point, the nearest occupied cell centroid within its
-    k_ring disk (ties: lower cell_id).
+    K_RING disk (ties: lower cell_id).
 
     points: (point_id, px, py, q, r) — already hex-assigned.
     cells:  (q, r, cell_id) — the occupied-cell set (a duplicate row only
@@ -55,12 +56,12 @@ def nearest_cells(points: DataFrame, cells: DataFrame, k_ring: int = 3,
     row per point and the candidate fan-out is never sorted.
 
     The candidate disk must be wide enough that the true nearest is
-    inside it; k_ring >= 1 guarantees correctness whenever the point's own
+    inside it; K_RING >= 1 guarantees correctness whenever the point's own
     cell or a ring-1 cell is occupied (the common case for dense corpora).
     A point with no occupied cell in its disk gets no row.
     """
-    cx, cy = sqlgen.centroid_exprs("q", "r", hex_width, refx, refy)
-    expd = (cells.crossJoin(kring_offsets_df(points.sparkSession, k_ring))
+    cx, cy = sqlgen.centroid_exprs("q", "r")
+    expd = (cells.crossJoin(kring_offsets_df(points.sparkSession, K_RING))
             .selectExpr("q - dq AS kq", "r - dr AS kr", "cell_id",
                         f"{cx} AS cx", f"{cy} AS cy"))
     dist = F.sqrt(

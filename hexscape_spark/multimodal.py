@@ -166,8 +166,9 @@ def resize_image(rgb: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 
 # --- audio codec ---------------------------------------------------------------
 
-def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
-    """RIFF/WAVE PCM16 mono (or (n, ch)) from int16 samples."""
+def encode_wav(samples: np.ndarray) -> bytes:
+    """RIFF/WAVE PCM16 mono (or (n, ch)) from int16 samples at 8 kHz."""
+    rate = 8000
     s = np.asarray(samples, dtype=np.int16)
     ch = 1 if s.ndim == 1 else s.shape[1]
     body = s.tobytes()
@@ -212,10 +213,11 @@ def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
 #   + LIST movi(12 + nf*(8 + framesize)),  framesize = h * ceil4(3w)
 #   => total = 224 + nf * (8 + h * ceil4(3w))
 
-def encode_avi(frames: np.ndarray, fps: int = 10) -> bytes:
-    """RIFF AVI (uncompressed BI_RGB 24-bit 'DIB ' frames) from an
+def encode_avi(frames: np.ndarray) -> bytes:
+    """RIFF AVI (uncompressed BI_RGB 24-bit 'DIB ' frames, 10 fps) from an
     (nf, h, w, 3) uint8 RGB array.  Frames are stored DIB-style:
     bottom-up rows, BGR byte order, rows padded to 4 bytes."""
+    fps = 10
     nf, h, w, c = frames.shape
     assert c == 3
     rowbytes = (3 * w + 3) // 4 * 4
@@ -394,7 +396,7 @@ def _synth_audio(i: int) -> bytes:
     freq = 100.0 + (i * 37) % 500
     t = np.arange(n) / 8000.0
     s = (np.sin(2 * np.pi * freq * t) * 12000).astype(np.int16)
-    return encode_wav(s, rate=8000)
+    return encode_wav(s)
 
 
 def _synth_video(i: int) -> bytes:
@@ -408,7 +410,7 @@ def _synth_video(i: int) -> bytes:
     g = (yy * 17 + f * 31) % 256
     b = (xx * 7 + yy * 13 + f * 37 + i) % 256
     frames = np.stack(np.broadcast_arrays(r, g, b), axis=-1).astype(np.uint8)
-    return encode_avi(frames, fps=10)
+    return encode_avi(frames)
 
 
 def synth_media(spark, n: int) -> DataFrame:

@@ -6,7 +6,7 @@ Spark-first reimplementation of generate_neighbours
   * candidate enumeration = the 6 axial offsets cross-joined and
     equi-joined back on (q, r) — never an N² spatial join
     (R/generate_neighbours.R:57-72; optimisation R5 in SURVEY.md §4);
-  * fast path: both patches "complete" (area > (1-min_prop)*hexarea) ->
+  * fast path: both patches "complete" (area > (1-MIN_PROP)*hexarea) ->
     Border = hex side length exactly, zero geometry work
     (R/generate_neighbours.R:86-93; optimisation R4);
   * slow path: Border = length of the shared hex edge inside the landscape,
@@ -14,7 +14,7 @@ Spark-first reimplementation of generate_neighbours
     area(buffer∩buffer)/(2*buffer) estimate (R/generate_neighbours.R:100-133);
   * Direction from the (dq, dr) offset — exact, since hex centroids are a
     pure function of (q, r) (R/generate_neighbours.R:146-157);
-  * final filter Border > min_prop * hexlth (R/generate_neighbours.R:132).
+  * final filter Border > MIN_PROP * hexlth (R/generate_neighbours.R:132).
 
 Output: Index, Neighbour, Border, Direction, nb_area  — the reference's
 "neighbours" table (R/generate_neighbours.R:146-159,174).
@@ -42,9 +42,13 @@ def _edge_offsets(w: float) -> dict[str, tuple[tuple[float, float], tuple[float,
         ("NW", 1, 0), ("SE", 4, 3), ("SW", 3, 2))}
 
 
+# the patches' min_prop, which the reference reads back from the patches
+# table (R/generate_neighbours.R:12-25): generate_patches' default
+MIN_PROP = 0.01
+
+
 def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
-                        hex_width: float = P.HEX_WIDTH,
-                        min_prop: float = 0.01) -> DataFrame:
+                        hex_width: float = P.HEX_WIDTH) -> DataFrame:
     """patches: needs Index, q, r, area, hex_cx, hex_cy."""
     spark = patches.sparkSession
     hexarea = P.hex_area(hex_width)
@@ -77,8 +81,8 @@ def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
     # wise instead — identical values, one join execution, no union.
     # Geometry payloads are nulled for complete edges first, so the
     # fast-path majority still ships no polygon bytes through Arrow.
-    complete = (F.col("area") > (1.0 - min_prop) * hexarea) & \
-               (F.col("nb_area") > (1.0 - min_prop) * hexarea)
+    complete = (F.col("area") > (1.0 - MIN_PROP) * hexarea) & \
+               (F.col("nb_area") > (1.0 - MIN_PROP) * hexarea)
     edges = edges.withColumn("__complete", complete)
     if has_geom:
         edges = (edges
@@ -147,4 +151,4 @@ def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
 
     bordered = edges.mapInPandas(border_lengths, schema=schema)
     cols = ["Index", "Neighbour", "Border", "Direction", "nb_area"]
-    return bordered.select(*cols).where(F.col("Border") > min_prop * hexlth)
+    return bordered.select(*cols).where(F.col("Border") > MIN_PROP * hexlth)

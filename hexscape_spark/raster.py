@@ -32,14 +32,12 @@ from .hexgrid import _apply_layers
 
 def raster_to_hex(raster: DataFrame, origin_x: float, origin_y: float,
                   pixel: float, value: str = "value",
-                  hex_width: float = P.HEX_WIDTH,
-                  refx: float = P.REFX, refy: float = P.REFY) -> DataFrame:
+                  hex_width: float = P.HEX_WIDTH) -> DataFrame:
     """Aggregate raster pixels onto hex cells: mean/sum/count per cell."""
     px = f"{sqlgen._f(origin_x)} + (ix + {sqlgen._f(0.5)}) * {sqlgen._f(pixel)}"
     py = f"{sqlgen._f(origin_y)} + (iy + {sqlgen._f(0.5)}) * {sqlgen._f(pixel)}"
     df = raster.selectExpr("*", f"{px} AS __px", f"{py} AS __py")
-    df = _apply_layers(df, sqlgen.hex_layers("__px", "__py", hex_width,
-                                             refx, refy))
+    df = _apply_layers(df, sqlgen.hex_layers("__px", "__py", hex_width))
     return (df.groupBy("cell_id", "q", "r")
             .agg(F.count(F.lit(1)).alias("n_pixels"),
                  F.sum(value).alias(f"sum_{value}"),
@@ -49,8 +47,7 @@ def raster_to_hex(raster: DataFrame, origin_x: float, origin_y: float,
 def hex_to_raster(cells: DataFrame, spark: SparkSession,
                   minx: float, miny: float, maxx: float, maxy: float,
                   pixel: float, value: str = "value",
-                  hex_width: float = P.HEX_WIDTH,
-                  refx: float = P.REFX, refy: float = P.REFY) -> DataFrame:
+                  hex_width: float = P.HEX_WIDTH) -> DataFrame:
     """Rasterise a per-cell attribute: pixel grid -> hex assign -> join."""
     import math
     nx = int(math.ceil((maxx - minx) / pixel))
@@ -61,19 +58,16 @@ def hex_to_raster(cells: DataFrame, spark: SparkSession,
     px = f"{sqlgen._f(minx)} + (ix + {sqlgen._f(0.5)}) * {sqlgen._f(pixel)}"
     py = f"{sqlgen._f(miny)} + (iy + {sqlgen._f(0.5)}) * {sqlgen._f(pixel)}"
     grid = grid.selectExpr("ix", "iy", f"{px} AS __px", f"{py} AS __py")
-    grid = _apply_layers(grid, sqlgen.hex_layers("__px", "__py", hex_width,
-                                                 refx, refy)) \
+    grid = _apply_layers(grid, sqlgen.hex_layers("__px", "__py", hex_width)) \
         .select("ix", "iy", "cell_id")
     return grid.join(cells.select("cell_id", value), "cell_id", "left")
 
 
 def raster_to_hex_area_weighted(raster: DataFrame, origin_x: float,
                                 origin_y: float, pixel: float,
-                                value: str = "value",
-                                hex_width: float = P.HEX_WIDTH,
-                                refx: float = P.REFX,
-                                refy: float = P.REFY) -> DataFrame:
-    """EXACT area-weighted raster -> hex resampling: every pixel's value is
+                                value: str = "value") -> DataFrame:
+    """EXACT area-weighted raster -> hex resampling onto the engine's
+    grid: every pixel's value is
     split across the hexes it overlaps in proportion to the exact
     pixel∩hex areas (the conservative/mass-preserving resampling, vs the
     nearest-centre rule of raster_to_hex).
@@ -98,7 +92,7 @@ def raster_to_hex_area_weighted(raster: DataFrame, origin_x: float,
     y0 = F.expr(f"{sqlgen._f(origin_y)} + iy * {sqlgen._f(pixel)}")
     cover = polygon_cell_cover(
         raster.select(key, rect_wkb(x0, y0).alias("geom_wkb")),
-        hex_width, refx, refy, poly_id="__pid")
+        poly_id="__pid")
     w = F.col("cover_area")
     return (cover.join(raster.select(key, value), "__pid")
             .groupBy("cell_id", "q", "r")

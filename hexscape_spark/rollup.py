@@ -13,8 +13,8 @@ from pyspark.sql.window import Window
 
 
 def weighted_sample_per_group(df: DataFrame, group: str, weight: str,
-                              seed_col: str, n: int = 1) -> DataFrame:
-    """W7: seeded Gumbel-max weighted sampling without replacement.
+                              seed_col: str) -> DataFrame:
+    """W7: seeded Gumbel-max weighted sampling: one row per group.
 
     key = -log(-log(u)) / w with u = deterministic hash of seed_col — unlike
     rand(), stable under task retries and speculation (SURVEY.md §7.3 item 7).
@@ -26,4 +26,4 @@ def weighted_sample_per_group(df: DataFrame, group: str, weight: str,
     w = Window.partitionBy(group).orderBy(F.desc(gumbel))
     return (df.withColumn("__g", gumbel)
             .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= n).drop("__g", "__rn"))
+            .where(F.col("__rn") == 1).drop("__g", "__rn"))

@@ -27,6 +27,12 @@ from pyspark.sql.window import Window
 
 from .checkpoint import materialise, spread
 
+# the embeddings are 64-dim; every ANN query ranks the 5 nearest
+DIM = 64
+TOP_K = 5
+# hyperplane-LSH OR-construction tables
+LSH_TABLES = 4
+
 
 def _stack(s: pd.Series) -> np.ndarray:
     return np.array([np.asarray(v, dtype=np.float64) for v in s],
@@ -107,22 +113,20 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return vals
 
 
-def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
-                     planes: int = 12, dim: int = 64,
-                     tables: int = 1) -> DataFrame:
-    """All `tables` sign-sketch buckets in ONE Arrow-vectorized pass.
+def with_lsh_buckets(df: DataFrame, vec: str, planes: int) -> DataFrame:
+    """All LSH_TABLES sign-sketch buckets in ONE Arrow-vectorized pass.
 
     planes x tables dot products per row are ONE numpy matmul per batch —
     measured ~1000x over the expression-tree alternatives (per-element
     Add-chains stall codegen; higher-order-function lambdas evaluate
     interpreted and boxed at ~8 ms/row for a 40x64 plane matrix).  The
     sign sketch is scale-invariant, so callers may pass raw or unit
-    vectors.  Adds one LONG bucket column per table, `__b0`..`__b{tables-1}`
+    vectors.  Adds one LONG bucket column per table, `__b0`..`__b3`
     (table t hashes with planes seeded t*997 + p)."""
-    mat = np.array([_hyperplane(dim, t * 997 + p)
-                    for t in range(tables) for p in range(planes)]).T
+    mat = np.array([_hyperplane(DIM, t * 997 + p)
+                    for t in range(LSH_TABLES) for p in range(planes)]).T
     pw = (2 ** np.arange(planes)).astype(np.int64)
-    n_t, n_p = tables, planes
+    n_t, n_p = LSH_TABLES, planes
 
     @F.pandas_udf("array<long>")
     def buckets_udf(v: pd.Series) -> pd.Series:
@@ -154,14 +158,14 @@ def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
         return pd.Series(np.column_stack(cols).tolist())
 
     df = df.withColumn("__bk", buckets_udf(F.col(vec)))
-    for t in range(tables):
+    for t in range(LSH_TABLES):
         df = df.withColumn(f"__b{t}", F.element_at("__bk", t + 1))
     return df.drop("__bk")
 
 
-def _lsh_sketch(df: DataFrame, key: str, vec: str, planes: int, dim: int,
-                tables: int) -> tuple[DataFrame, DataFrame]:
-    """The sketch stage both LSH operators share.  Returns (vecs, buckets):
+def _lsh_sketch(df: DataFrame, key: str, vec: str,
+                planes: int) -> tuple[DataFrame, DataFrame]:
+    """The sketch stage of cosine_topk_lsh.  Returns (vecs, buckets):
     vecs is (key, unit_vec); buckets is (key, band, h), one row per table.
 
     NULL vectors can neither hash nor score and are dropped.  r7 (guide
@@ -175,48 +179,29 @@ def _lsh_sketch(df: DataFrame, key: str, vec: str, planes: int, dim: int,
     # bits are scale-invariant, and hashing the same bytes the SQL oracle
     # hashes removes the one cross-engine flake source — a normalised
     # component differing in the last ulp flipping a near-zero plane dot
-    b = with_lsh_buckets(with_unit_norm(base, vec), vec, planes, dim, tables)
+    b = with_lsh_buckets(with_unit_norm(base, vec), vec, planes)
     # Python stage: the bucket self-join and both vector joins read b
     b = materialise(b.select(key, "unit_vec",
-                             *[f"__b{t}" for t in range(tables)]))
+                             *[f"__b{t}" for t in range(LSH_TABLES)]))
     buckets = b.select(
         key, F.explode(F.array(*[
             F.struct(F.lit(t).alias("band"), F.col(f"__b{t}").alias("h"))
-            for t in range(tables)])).alias("s")) \
+            for t in range(LSH_TABLES)])).alias("s")) \
         .select(key, "s.band", "s.h")
     return b.select(key, "unit_vec"), buckets
 
 
-def _cap_buckets(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop every (band, h) bucket with more than `max_bucket` members
-    (None: keep all) before a bucket self-join.
-
-    A bucket of m members emits m^2/2 pairs, so one degenerate bucket
-    (e.g. 10^6 identical boilerplate pages or vectors) would be quadratic
-    no matter how AQE splits the shuffle.  Over-full buckets go entirely:
-    for dedup their members are near-certain copies of an exact-dup
-    cluster, which exact_duplicates catches more cheaply."""
-    if max_bucket is None:
-        return buckets
-    ok = (buckets.groupBy("band", "h")
-          .agg(F.count(F.lit(1)).alias("__m"))
-          .where(F.col("__m") <= max_bucket).select("band", "h"))
-    return buckets.join(ok, on=["band", "h"])
-
-
-def ivf_train_centroids(df: DataFrame, vec: str = "unit_vec",
-                        n_lists: int = 16, dim: int = 64, seed: int = 42,
-                        sample: int = 4096) -> list[list[float]]:
-    """IVF coarse quantizer: k-means centroids trained driver-side on a
-    deterministic sample of the unit vectors in `vec` (the scale-standard
-    approach — the quantizer is tiny; the corpus never leaves the
-    executors)."""
+def ivf_train_centroids(df: DataFrame, n_lists: int,
+                        vec: str = "unit_vec") -> list[list[float]]:
+    """IVF coarse quantizer: k-means centroids trained driver-side on the
+    first 4096 unit vectors in `vec` (the scale-standard approach — the
+    quantizer is tiny; the corpus never leaves the executors)."""
     rows = df.where(F.col(vec).isNotNull()).select(vec) \
-        .limit(sample).collect()
+        .limit(4096).collect()
     if not rows:
         raise ValueError("ivf_train_centroids: no non-null vectors")
     x = np.array([r[vec] for r in rows], dtype=np.float64)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     centers = x[rng.choice(len(x), size=min(n_lists, len(x)), replace=False)]
     for _ in range(25):
         sims = x @ centers.T
@@ -250,21 +235,20 @@ def with_ivf_list(df: DataFrame, centroids: list[list[float]],
     return df.withColumn(out, lists)
 
 
-def _top_k(scored: DataFrame, k: int) -> DataFrame:
-    """The k best (query_id, nn_id, cosine) rows per query, ranked by
+def _top_k(scored: DataFrame) -> DataFrame:
+    """The TOP_K best (query_id, nn_id, cosine) rows per query, ranked by
     ROUND(cosine, 6), ties broken by id — the cross-engine determinism
     device: rounding before ranking keeps an oracle whose float
     summation order differs in the last ulp from flipping near-ties."""
     w = Window.partitionBy("query_id").orderBy(F.desc(F.round("cosine", 6)),
                                                F.asc("nn_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+            .where(F.col("rank") <= TOP_K))
 
 
-def cosine_topk_ivf(df: DataFrame, queries: DataFrame, key: str = "vec_id",
-                    vec: str = "embedding", k: int = 5, n_lists: int = 16,
-                    nprobe: int = 2, dim: int = 64,
-                    seed: int = 42) -> DataFrame:
+def cosine_topk_ivf(df: DataFrame, queries: DataFrame, n_lists: int,
+                    nprobe: int, key: str = "vec_id",
+                    vec: str = "embedding") -> DataFrame:
     """IVF ANN: corpus bucketed by nearest centroid (1 list), queries probe
     their nprobe nearest lists; candidate generation is an equi-join on
     list id — the classic inverted-file layout, shuffle-partitioned by
@@ -277,12 +261,12 @@ def cosine_topk_ivf(df: DataFrame, queries: DataFrame, key: str = "vec_id",
     # them from both sides (r6 review — they previously crashed the
     # quantizer and could pad a sparse query's top-k with NULL cosines)
     df = df.where(F.col(vec).isNotNull())
-    # Deliberately NOT repartitioned first: the trainer's limit(sample)
+    # Deliberately NOT repartitioned first: the trainer's limit(4096)
     # must see the ORIGINAL scan order or the k-means seed sample (and
     # hence the centroids) would change.
     # Python stage: the trainer and the corpus routing read u
     u = materialise(with_unit_norm(df.select(key, vec), vec))
-    cents = ivf_train_centroids(u, "unit_vec", n_lists, dim, seed)
+    cents = ivf_train_centroids(u, n_lists)
     # both sides `spread` on the join key: the list join reuses that
     # shuffle, and its Arrow dot-product stage keeps one task per shuffle
     # partition
@@ -297,7 +281,7 @@ def cosine_topk_ivf(df: DataFrame, queries: DataFrame, key: str = "vec_id",
               .where(F.col("query_id") != F.col("nn_id"))
               .withColumn("cosine", _dot(F.col("cv"), F.col("qv")))
               .select("query_id", "nn_id", "cosine"))
-    return _top_k(scored, k)
+    return _top_k(scored)
 
 
 # cosine_topk_lsh collects the whole unit-vector matrix to the driver and
@@ -306,19 +290,16 @@ def cosine_topk_ivf(df: DataFrame, queries: DataFrame, key: str = "vec_id",
 SMALL_CORPUS_MAX_ROWS = 1_000_000
 
 
-def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
-                    vec: str = "embedding", k: int = 5, planes: int = 8,
-                    dim: int = 64, tables: int = 4,
-                    max_bucket: int | None = 10_000) -> DataFrame:
+def cosine_topk_lsh(df: DataFrame, planes: int, key: str = "vec_id",
+                    vec: str = "embedding") -> DataFrame:
     """ANN top-k via multi-table hyperplane LSH (OR-construction).
 
-    `tables` independent plane sets each hash every vector into a bucket;
-    a pair is a candidate if it collides in ANY table — recall ~
+    LSH_TABLES independent plane sets each hash every vector into a
+    bucket; a pair is a candidate if it collides in ANY table — recall ~
     1 - (1 - p^planes)^tables instead of the single-table p^planes that
-    collapses as planes grow.  Per-table buckets above `max_bucket` are
-    dropped before the self-join (one 10^6-member bucket of identical
-    vectors would otherwise emit 10^12 pairs regardless of AQE).  All
-    joins are equi-joins on (table, bucket) / key — never a cross join.
+    collapses as planes grow.  Buckets are not capped: the corpus is
+    bounded by SMALL_CORPUS_MAX_ROWS.  All joins are equi-joins on
+    (table, bucket) / key — never a cross join.
 
     The sketch is pure sign arithmetic on LCG hyperplane literals, so a
     SQL oracle can reproduce the ENTIRE pipeline (buckets, OR-construction
@@ -330,8 +311,7 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
     key, so candidate rows stay two ids wide instead of carrying both
     vectors through Arrow for every pair.
     """
-    vecs, buckets = _lsh_sketch(df, key, vec, planes, dim, tables)
-    buckets = _cap_buckets(buckets, max_bucket)
+    vecs, buckets = _lsh_sketch(df, key, vec, planes)
     lhs = buckets.select(F.col(key).alias("query_id"), "band", "h")
     rhs = buckets.select(F.col(key).alias("nn_id"), "band", "h")
     # the checkpointed relations are RDD-backed with no size statistics,
@@ -376,4 +356,4 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
                 "nn_id": pdf["nn_id"],
                 "cosine": np.einsum("ij,ij->i", smat[qi], smat[ni])})
 
-    return _top_k(cands.mapInPandas(score, schema=schema), k)
+    return _top_k(cands.mapInPandas(score, schema=schema))

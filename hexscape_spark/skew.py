@@ -3,8 +3,8 @@
 The north rule names dense urban/coastal cells as the skew hazard: a
 groupBy(cell_id) over 10^12 pages puts 10^9 rows on one reducer for a hot
 city cell.  The fix mirrors the reference's count-first planning
-(R/extract_corine.R:63-78 plans chunks from per-code counts): a cheap
-sampled count finds heavy keys, heavy rows get a salt from a hash of a
+(R/extract_corine.R:63-78 plans chunks from per-code counts): an exact
+per-key count finds heavy keys, heavy rows get a salt from a hash of a
 payload column, and the aggregation runs in two phases
 (partial on (key, salt) -> final on key).  AQE's skew-join splitting covers
 joins; this covers aggregations, which AQE does not re-salt.
@@ -19,29 +19,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def detect_heavy_keys(df: DataFrame, key: str, threshold_rows: int,
-                      sample_fraction: float = 0.01,
-                      seed: int = 42) -> DataFrame:
-    """Sampled heavy-hitter detection: keys whose estimated row count
-    exceeds threshold_rows.  One cheap pass over a sample."""
-    frac = min(1.0, max(sample_fraction, 1e-6))
-    est = (df.sample(frac, seed=seed).groupBy(key)
-           .agg((F.count(F.lit(1)) / F.lit(frac)).alias("est_rows")))
-    return est.where(F.col("est_rows") >= threshold_rows).select(key, "est_rows")
-
-
 def salted_agg(df: DataFrame, key: str, sums: list[str],
-               salt_col: str, buckets: int = 32,
-               heavy_threshold: int = 1_000_000,
-               sample_fraction: float = 0.01) -> DataFrame:
+               salt_col: str, buckets: int,
+               heavy_threshold: int) -> DataFrame:
     """groupBy(key).agg(count, sum(c) for c in sums) with heavy keys salted.
 
-    salt = xxhash64(salt_col) % buckets for heavy keys, 0 otherwise —
-    derived from row content, so deterministic under retries.  Phase 1
-    reduces each (key, salt) bucket; phase 2 merges the <=buckets partials
-    per key.  Light keys pay one extra no-op merge row.
+    A key is heavy when it has at least `heavy_threshold` rows (one
+    counting pass over the input).  salt = xxhash64(salt_col) % buckets
+    for heavy keys, 0 otherwise — derived from row content, so
+    deterministic under retries.  Phase 1 reduces each (key, salt)
+    bucket; phase 2 merges the <=buckets partials per key.  Light keys
+    pay one extra no-op merge row.
     """
-    heavy = detect_heavy_keys(df, key, heavy_threshold, sample_fraction)
+    heavy = (df.groupBy(key).agg(F.count(F.lit(1)).alias("__n"))
+             .where(F.col("__n") >= heavy_threshold))
     marked = df.join(F.broadcast(heavy.select(key).withColumn("__heavy", F.lit(True))),
                      on=key, how="left")
     salted = marked.withColumn(

@@ -156,22 +156,23 @@ def dist_point_to_rect_expr(x: str, y: str, minx: float, miny: float,
 # ---------------------------------------------------------------------------
 
 _HEX = "0123456789abcdef"
+_DIGITS = 15
 
 
-def md5_int_expr_spark(expr: str, digits: int = 15) -> str:
+def md5_int_expr_spark(expr: str) -> str:
     """Same value as md5_int_expr but via Spark's conv() — one function
     call instead of a 15-digit instr/substring fold (~10x fewer string
     ops on the hot path).  DuckDB has no conv(), so the oracle keeps the
     shared fold; both parse the same hex prefix to the same BIGINT."""
-    return (f"CAST(conv(substring(md5({expr}), 1, {digits}), 16, 10) "
+    return (f"CAST(conv(substring(md5({expr}), 1, {_DIGITS}), 16, 10) "
             "AS BIGINT)")
 
 
-def md5_int_expr(expr: str, digits: int = 15) -> str:
+def md5_int_expr(expr: str) -> str:
     """BIGINT hash of a string SQL expression, identical in both engines."""
     terms = []
-    for i in range(digits):
-        mul = 16 ** (digits - 1 - i)
+    for i in range(_DIGITS):
+        mul = 16 ** (_DIGITS - 1 - i)
         # CAST: Spark instr returns INT, and INT * INT overflows under ANSI
         # for multipliers that still fit INT (16^7 and below).
         d = (f"CAST(instr('{_HEX}', substring(md5({expr}), {i + 1}, 1)) - 1"
@@ -189,9 +190,9 @@ MIX_LO = 1 << 30
 MIX_P = 4503599627370449          # prime < 2^52
 
 
-def mix_params(num: int, seed: int = 1234567) -> list[tuple[int, int, int]]:
+def mix_params(num: int) -> list[tuple[int, int, int]]:
     """Deterministic (A_i, B_i, C_i) mixing constants (LCG, driver-side)."""
-    state = seed
+    state = 1234567
     out = []
     for _ in range(num):
         trip = []
@@ -321,10 +322,9 @@ def segment_rect_clip_len_expr(px: str, py: str, ax_off: float, ay_off: float,
 # Whole geocode+assign query over a table with an integer key
 # ---------------------------------------------------------------------------
 
-def assign_sql(table: str, key: str, keep: list[str] | None = None,
-               hex_width: float = P.HEX_WIDTH) -> str:
+def assign_sql(table: str, key: str, keep: list[str] | None = None) -> str:
     """Full query: geocode `key` -> lon/lat -> (q, r, cell_id)."""
     keep = keep or []
     cols = ", ".join([key, *keep, "lon", "lat", "q", "r", "cell_id"])
-    layers = geocode_layers(key) + hex_layers("lon", "lat", hex_width)
+    layers = geocode_layers(key) + hex_layers("lon", "lat", P.HEX_WIDTH)
     return build_query(table, layers, select=cols)

@@ -22,11 +22,10 @@ _WORDS = ("the data spark shuffle join hex cell page crawl web text token "
           "stream table scan merge filter group query row").split()
 
 
-def pages(spark: SparkSession, n: int, num_partitions: int | None = None) -> DataFrame:
+def pages(spark: SparkSession, n: int, num_partitions: int) -> DataFrame:
     """Deterministic pages table; text derives from the row id only, so it is
     reproducible and byte-identical per url across any number of runs."""
-    df = spark.range(0, n, 1, num_partitions or spark.sparkContext.defaultParallelism)
-    word = F.lit(" ") if False else None
+    df = spark.range(0, n, 1, num_partitions)
     words = [F.lit(w) for w in _WORDS]
     # 12 deterministic words per doc, chosen by mixing the id
     parts = []

@@ -137,17 +137,16 @@ def with_repetition_signals(df: DataFrame, text: str = "text") -> DataFrame:
     return df.drop("__lines", "__words", "__grams")
 
 
-def with_quality_filter(df: DataFrame, text: str = "text",
-                        max_dup_line_frac: float = 0.30,
-                        max_top_word_frac: float = 0.20,
-                        max_dup_2gram_frac: float = 0.20) -> DataFrame:
-    """The standard Gopher repetition cut: keep documents under all three
-    repetition thresholds.  Signal columns are retained for auditing."""
+def with_quality_filter(df: DataFrame, text: str = "text") -> DataFrame:
+    """The standard Gopher repetition cut: keep documents whose duplicate
+    line fraction is at most 0.30 and whose top-word and duplicate-2gram
+    fractions are at most 0.20.  Signal columns are retained for
+    auditing."""
     df = with_repetition_signals(df, text)
     return df.where(
-        (F.col("dup_line_frac") <= max_dup_line_frac) &
-        (F.col("top_word_frac") <= max_top_word_frac) &
-        (F.col("dup_2gram_frac") <= max_dup_2gram_frac))
+        (F.col("dup_line_frac") <= 0.30) &
+        (F.col("top_word_frac") <= 0.20) &
+        (F.col("dup_2gram_frac") <= 0.20))
 
 
 _HTML_SKIP = {"script", "style", "noscript", "template"}

@@ -100,15 +100,15 @@ MAX_SEGMENT_BYTES = 2_000_000_000
 
 
 def read_warc(spark: SparkSession, path: str,
-              record_types: tuple[str, ...] = ("response",),
               max_segment_bytes: int = MAX_SEGMENT_BYTES) -> DataFrame:
-    """DataFrame over `.warc.gz` segments under `path`.
+    """DataFrame over the `response` records of the `.warc.gz` segments
+    under `path`.
 
     One segment file per task (`binaryFile` keeps whole files together,
     which is what WARC's member-per-record gzip framing wants); the
-    record walk is a streaming parse, Arrow-batched out.  `record_types`
-    prefilters (CC segments are ~1/3 'response', the rest request/
-    metadata records a corpus pipeline drops immediately).  Segments
+    record walk is a streaming parse, Arrow-batched out.  Only
+    `response` records are kept (CC segments are ~1/3 'response', the
+    rest request/metadata records a corpus pipeline drops).  Segments
     beyond `max_segment_bytes` raise ValueError naming the file — split
     oversized archives upstream rather than streaming them through one
     task.
@@ -116,17 +116,15 @@ def read_warc(spark: SparkSession, path: str,
     files = spark.read.format("binaryFile").load(path) \
         .select("path", "content")
     return files.mapInPandas(
-        _segment_walker(record_types, max_segment_bytes),
-        schema=WARC_SCHEMA)
+        _segment_walker(max_segment_bytes), schema=WARC_SCHEMA)
 
 
-def _segment_walker(record_types: tuple[str, ...], max_segment_bytes: int):
+def _segment_walker(max_segment_bytes: int):
     """The per-task segment parser of read_warc: walks each (path,
-    content) file, enforces the per-task byte bound, prefilters record
-    types, and yields one Arrow batch PER SEGMENT so a task's working set
-    is one segment's (filtered) records rather than the whole binaryFile
-    batch (r4 review)."""
-    types = set(record_types)
+    content) file, enforces the per-task byte bound, keeps `response`
+    records, and yields one Arrow batch PER SEGMENT so a task's working
+    set is one segment's (filtered) records rather than the whole
+    binaryFile batch (r4 review)."""
     cols = ["segment", "record_type", "url", "warc_date",
             "content_type", "payload"]
 
@@ -142,7 +140,7 @@ def _segment_walker(record_types: tuple[str, ...], max_segment_bytes: int):
                 gz = str(seg_path).endswith(".gz")
                 rows = []
                 for rec in parse_warc_records(bytes(blob), gz=gz):
-                    if types and rec["record_type"] not in types:
+                    if rec["record_type"] != "response":
                         continue
                     rows.append((str(seg_path), rec["record_type"],
                                  rec["url"], rec["warc_date"],

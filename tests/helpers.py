@@ -68,10 +68,9 @@ def write_warc_gz(records: list[dict], path: str) -> None:
         f.write(bytes(out))
 
 
-def geocoded_pages(spark: SparkSession, n: int,
-                   num_partitions: int | None = None) -> DataFrame:
+def geocoded_pages(spark: SparkSession, n: int) -> DataFrame:
     """pages + deterministic (lon, lat) + hex cell assignment."""
-    df = pages(spark, n, num_partitions)
+    df = pages(spark, n, spark.sparkContext.defaultParallelism)
     df = hexgrid.with_geocode(df, "page_id")
     return hexgrid.with_hex_cell(df)
 
@@ -133,7 +132,7 @@ def union_polygons(polys: list) -> list:
     touch/overlap component (geo.overlap_components) boundary-traced by
     geo.union_component, disjoint parts passed through."""
     return [piece for comp in geo.overlap_components(polys)
-            for piece in geo.union_component([polys[i] for i in comp])]
+            for piece in geo.union_component([polys[i] for i in comp])[0]]
 
 
 def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame,

@@ -59,7 +59,7 @@ def test_exact_matches_float_on_random_fixtures():
                                int(rng.randint(2, 7)))
         for comp in geo.overlap_components(polys):
             sub = [polys[i] for i in comp]
-            fl = geo.union_component(sub, with_area=True)
+            fl = geo.union_component(sub)
             ex_out, ex_area = geo_exact.exact_union_trace(sub)
             assert ex_area == pytest.approx(fl[1], rel=1e-12, abs=1e-12)
             assert geo.polygons_area(ex_out) == pytest.approx(

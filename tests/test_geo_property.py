@@ -108,7 +108,7 @@ def _union_fixture(seed, m):
 @given(seed=st.integers(0, 10_000), m=st.integers(2, 25))
 def test_union_polygons_area_matches_sweep(seed, m):
     """union_component's PRECISION CONTRACT (tightened r6), on random
-    rects AND random convex-ish polygons (crossing-heavy): the with_area
+    rects AND random convex-ish polygons (crossing-heavy): the returned
     trapezoid-sum area (what dissolve reports) reproduces the
     independent strip-sweep union_area to 1e-9, and the traced
     BOUNDARY's shoelace area is within max(2e-9, 1e-9 x area) — the
@@ -120,8 +120,7 @@ def test_union_polygons_area_matches_sweep(seed, m):
     # the reported area is sweep-exact
     total = 0.0
     for comp in geo.overlap_components(polys):
-        _, a = geo.union_component([polys[i] for i in comp],
-                                   with_area=True)
+        _, a = geo.union_component([polys[i] for i in comp])
         total += a
     assert total == pytest.approx(want, rel=1e-9, abs=1e-9)
     # the traced geometry is exact up to the tightened validation bound
@@ -147,8 +146,7 @@ def test_union_near_tangent_sliver_regression():
     want = geo.union_area(polys)
     total = 0.0
     for comp in geo.overlap_components(polys):
-        _, a = geo.union_component([polys[i] for i in comp],
-                                   with_area=True)
+        _, a = geo.union_component([polys[i] for i in comp])
         total += a
     assert total == pytest.approx(want, rel=1e-10)
     with mock.patch.object(geo_exact, "exact_union_trace",
@@ -203,7 +201,7 @@ def test_dissolve_fallback_stays_exact(monkeypatch):
     independent strip-sweep kernel."""
     from hexscape_spark import dissolve as dmod
 
-    def boom(polys, _depth=0, with_area=False):
+    def boom(polys, _depth=0):
         raise geo.UnionTraceError("forced")
 
     monkeypatch.setattr(dmod.geo, "union_component", boom)
@@ -254,6 +252,17 @@ def test_difference_polygons_makes_holes_and_splits():
                                      [[geo.rect_ring(4, -1, 6, 5)]])
     assert len(halves) == 2
     assert geo.polygons_area(halves) == pytest.approx(32.0)
+
+
+def test_difference_polygons_with_empty_b_is_union_of_a():
+    """(∪a) minus nothing is ∪a: two overlapping squares come back as
+    one polygon of the union's area, the same as with a far-away b."""
+    a = [[geo.rect_ring(0, 0, 2, 2)], [geo.rect_ring(1, 0, 3, 2)]]
+    far = [[geo.rect_ring(100, 100, 101, 101)]]
+    for b in ([], far):
+        d = geo.difference_polygons(a, b)
+        assert len(d) == 1
+        assert geo.polygons_area(d) == pytest.approx(6.0)
 
 
 def test_boolean_polygons_with_holes():

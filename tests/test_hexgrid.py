@@ -157,7 +157,7 @@ def test_text_byte_identity(spark):
     """north-rule invariant: text survives the pipeline byte-identical."""
     from pyspark.sql import functions as F
     from hexscape_spark.synth import pages
-    a = pages(spark, 500).select("url", F.md5(F.encode("text", "UTF-8")).alias("h"))
+    a = pages(spark, 500, spark.sparkContext.defaultParallelism).select("url", F.md5(F.encode("text", "UTF-8")).alias("h"))
     b = geocoded_pages(spark, 500).select(
         "url", F.md5(F.encode("text", "UTF-8")).alias("h2"))
     j = a.join(b, "url")

@@ -21,13 +21,16 @@ are matched without resolving modules, so the guard can miss dead code
 that shares a name with live code.  Code reached only through a string
 (``getattr``) is flagged: call it by name.
 
-Options: a defaulted parameter of a module-level engine function that an
-``if``/``while``/conditional-expression test in its body names steers a
-branch, and some caller outside ``tests/`` must set it (by keyword, by
-position or through ``**kwargs``), not every one of them to the same
-literal.  Test callers count only for ``LIBRARY`` functions and
-``OPTIONS`` entries.  Callers are matched by the called name, like the
-reachability scan.
+Options: a knob is a defaulted parameter of a module-level engine
+function whose default is not a string literal, or that an
+``if``/``while``/conditional-expression test in its body names (a string
+default that steers no branch names a column of the caller's schema and
+is out of scope).  Some caller outside ``tests/`` must set every knob (by
+keyword, by position or through ``**kwargs``), and not every one of them
+to the same literal: one literal everywhere, the default's own or
+another, leaves the default to pytest alone.  Test callers count only
+for ``LIBRARY`` functions and ``OPTIONS`` entries.  Callers are matched
+by the called name, like the reachability scan.
 
 Imports: every name an engine or test file imports is read in the
 function (or, at module level, the file) that imports it.
@@ -67,19 +70,26 @@ LIBRARY = (
     "weighted_sample_per_group",                              # rollup
     "randomise_voronoi", "sample_points",                     # voronoi
 )
-# Branch-steering parameters that tests set, each mirroring a reference
-# argument (engine callers may set it too) or forcing a size gate so both
-# sides are tested (tests only).
+# Knobs that tests set, each mirroring a reference argument (engine
+# callers may set it too) or forcing a size gate or bound so both sides
+# are tested (tests only).
 OPTIONS = (
     "bfs_hops.local_edge_cap",           # gate: BFS_LOCAL_EDGE_CAP
     "connected_components.local_cap",    # gate: CC_LOCAL_CAP
+    "connected_components.max_rounds",   # gate: 64-round bound
     "discretise_habitat.max_size_km2",   # R/discretise_habitat.R:46
     "discretise_habitat.min_size_km2",   # R/discretise_habitat.R:46
+    "discretise_habitat.point_density_per_km2",  # R/discretise_habitat.R:21
+    "discretise_habitat.raster_size_km2",  # R/discretise_habitat.R:21
+    "discretise_habitat.seed",           # R/discretise_habitat.R:21
+    "discretise_voronoi.max_doublings",  # gate: 16 doublings
     "extract_landcover.clc_filter",      # R/extract_corine.R:112-135
     "extract_landcover.clc_labels",      # R/load_corine.R:291-294
     "generate_patches.add_removed",      # R/generate_patches.R:169-177
     "generate_patches.name_index",       # R/generate_patches.R:381-385
     "generate_patches.simplify_keep",    # R/generate_patches.R:153,193,241
+    "grid_components.block",             # gate: 256-cell tiles
+    "read_warc.max_segment_bytes",       # gate: MAX_SEGMENT_BYTES
 )
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
@@ -355,19 +365,28 @@ def test_materialise_calls_name_a_reason():
 _BRANCHES = (ast.If, ast.IfExp, ast.While)
 
 
-def _steering(fn) -> list[tuple[str, int | None]]:
-    """(name, position) of each defaulted parameter of `fn` named in an
-    if/while/conditional-expression test inside its body; position is
-    None for keyword-only parameters."""
+def _is_string(node) -> bool:
+    return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+
+def _knobs(fn) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, position, default) of each defaulted parameter of `fn` whose
+    default is not a string literal or that an
+    if/while/conditional-expression test in its body names; position is
+    None for keyword-only parameters.  A string default names a column of
+    the caller's schema, not a knob, unless it steers a branch."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    defaulted = [(p.arg, i) for i, p in enumerate(pos)
-                 if i >= len(pos) - len(a.defaults)]
-    defaulted += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+    first = len(pos) - len(a.defaults)
+    defaulted = [(p.arg, i, d) for i, (p, d) in
+                 enumerate(zip(pos[first:], a.defaults), first)]
+    defaulted += [(p.arg, None, d)
+                  for p, d in zip(a.kwonlyargs, a.kw_defaults)
                   if d is not None]
     tested = set().union(*(_identifiers(n.test) for n in ast.walk(fn)
                            if isinstance(n, _BRANCHES)))
-    return [(name, i) for name, i in defaulted if name in tested]
+    return [(name, i, d) for name, i, d in defaulted
+            if name in tested or not _is_string(d)]
 
 
 def _argument(call: ast.Call, name: str, position: int | None):
@@ -386,40 +405,52 @@ def _argument(call: ast.Call, name: str, position: int | None):
     return None
 
 
+def _literal(node):
+    """(type, value) of a literal argument or default, else None."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return None
+    return type(value), repr(value)
+
+
 def unset_options(sources: dict[str, str], library=(), options=(),
                   references=()) -> list[str]:
-    """Defaulted parameters of module-level engine functions that steer a
-    branch but that no caller outside ``tests/`` sets, as ``path:line
-    function.parameter``, or that every caller outside ``tests/`` sets to
-    the same literal, as ``path:line function.parameter = literal``.  A
-    test caller is enough for a function in `library` or a
+    """Knobs of module-level engine functions that no caller outside
+    ``tests/`` turns.  A knob is a defaulted parameter whose default is
+    not a string literal or that steers a branch.  Flagged, as ``path:line
+    function.parameter``: (a) no caller outside ``tests/`` sets it; as
+    ``... = literal (the default)``: (b) every such caller passes the
+    default's own value; as ``... = literal``: (c) every such caller
+    passes one other literal, so the default runs only under pytest.  A
+    test caller is enough against (a) for a function in `library` or a
     ``function.parameter`` in `options`; an `options` entry that no test
-    sets, that steers no branch, or that a non-test caller sets while it
-    is not also in `references` (an entry mirroring a reference argument,
-    which engine callers may set too) is flagged as well.  Calls match by
-    the called name alone."""
-    steering, calls = [], {}
+    sets, that is no knob, or that a non-test caller sets while it is not
+    also in `references` (an entry mirroring a reference argument, which
+    engine callers may set too) is flagged as well.  Calls match by the
+    called name alone."""
+    knobs, calls = [], {}
     for rel, text in sources.items():
         tree = ast.parse(text, filename=rel)
         if _role(rel) == "engine":
-            steering += [(rel, node, name, i) for node in tree.body
-                         if isinstance(node, ast.FunctionDef)
-                         for name, i in _steering(node)]
+            knobs += [(rel, node, name, i, default) for node in tree.body
+                      if isinstance(node, ast.FunctionDef)
+                      for name, i, default in _knobs(node)]
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and \
                     isinstance(node.func, (ast.Name, ast.Attribute)):
                 callee = getattr(node.func, "id", None) or node.func.attr
                 calls.setdefault(callee, []).append((_role(rel), node))
     flagged, found = [], set()
-    for rel, fn, name, i in steering:
+    for rel, fn, name, i, default in knobs:
         option = f"{fn.name}.{name}"
         found.add(option)
         passed = [(role, _argument(call, name, i))
                   for role, call in calls.get(fn.name, ())]
         roles = {role for role, arg in passed if arg is not None}
         outside = [arg for role, arg in passed if role != "test"]
-        literals = {(type(a.value), a.value) for a in outside
-                    if isinstance(a, ast.Constant)}
+        literals = {_literal(a) if isinstance(a, ast.expr) else None
+                    for a in outside}
         if option in options:
             for why, ok in (("no test sets it", "test" in roles),
                             ("set outside tests/", roles <= {"test"}
@@ -429,21 +460,21 @@ def unset_options(sources: dict[str, str], library=(), options=(),
         elif not roles - {"test"} and not (
                 fn.name in library and "test" in roles):
             flagged.append(f"{rel}:{fn.lineno} {option}")
-        elif outside and len(literals) == 1 and \
-                all(isinstance(a, ast.Constant) for a in outside):
+        elif outside and len(literals) == 1 and None not in literals:
+            same = " (the default)" if literals == {_literal(default)} \
+                else ""
             flagged.append(f"{rel}:{fn.lineno} {option} = "
-                           f"{ast.unparse(outside[0])}")
-    flagged += [f"{option}: steers no branch"
+                           f"{ast.unparse(outside[0])}{same}")
+    flagged += [f"{option}: no knob"
                 for option in options if option not in found]
     return flagged
 
 
 def test_engine_options_have_callers():
-    """Every defaulted parameter that steers a branch of a module-level
-    engine function is set by a caller outside tests/, and not by all of
-    them to one literal, or is a test-set LIBRARY or OPTIONS entry whose
-    comment names its reference argument (R file:line) or the size gate
-    it forces."""
+    """Every knob of a module-level engine function is set by a caller
+    outside tests/, and not by all of them to one literal, or is a
+    test-set LIBRARY or OPTIONS entry whose comment names its reference
+    argument (R file:line) or the size gate or bound it forces."""
     text = Path(__file__).read_text()
     notes = {o: re.search(rf'"{re.escape(o)}",\s*# (R/\S+:\d|gate: )',
                           text) for o in OPTIONS}
@@ -469,7 +500,8 @@ def test_options_guard_flags_never_set_knob():
                "tests/test_m.py": "knob(1, fast=False)\n"}
     assert unset_options(sources) == ["hexscape_spark/m.py:1 knob.fast",
                                       "hexscape_spark/m.py:1 knob.limit",
-                                      "hexscape_spark/m.py:1 knob.mode"]
+                                      "hexscape_spark/m.py:1 knob.mode",
+                                      "hexscape_spark/m.py:5 plain.n"]
 
 
 def test_options_guard_passes_knob_set_by_engine_caller():
@@ -477,24 +509,28 @@ def test_options_guard_passes_knob_set_by_engine_caller():
                "__spark_entry__.py": ("from hexscape_spark import m\n"
                                       "def entry(spark):\n"
                                       "    m.knob(spark, False, mode='x')\n"
-                                      "    m.knob(spark, **{'limit': 2})\n")}
+                                      "    m.knob(spark, **{'limit': 2})\n"
+                                      "    m.plain(spark, spark.n)\n")}
     assert unset_options(sources) == []
 
 
 def test_options_guard_flags_options_entry_without_test_caller():
     sources = {"hexscape_spark/m.py": _KNOBS,
                "perfbench/w.py": ("m.knob(0, fast=False, limit=1)\n"
-                                  "m.knob(0, fast=True, limit=2)\n"),
+                                  "m.knob(0, fast=True, limit=2)\n"
+                                  "m.plain(0, 1)\nm.plain(0, 2)\n"),
                "tests/test_m.py": "m.knob(1, mode='x')\n"}
     assert unset_options(sources, options=("knob.mode",)) == []
+    # a parameter without a default is no knob
     assert unset_options(sources, options=("knob.fast", "knob.mode",
-                                           "plain.n")) == [
+                                           "plain.df")) == [
         "knob.fast: no test sets it", "knob.fast: set outside tests/",
-        "plain.n: steers no branch"]
+        "plain.df: no knob"]
     assert unset_options({"hexscape_spark/m.py": _KNOBS,
                           "tests/test_m.py": "m.knob(1, limit=0)\n"},
                          options=("knob.fast", "knob.limit", "knob.mode")) \
-        == ["knob.fast: no test sets it", "knob.mode: no test sets it"]
+        == ["knob.fast: no test sets it", "knob.mode: no test sets it",
+            "hexscape_spark/m.py:5 plain.n"]
 
 
 def test_options_guard_flags_one_literal_everywhere():
@@ -521,6 +557,35 @@ def test_options_guard_flags_one_literal_everywhere():
     assert unset_options(sources, options=("one.size",),
                          references=("one.size",)) == [
         "hexscape_spark/m.py:1 one.mode = 'b'"]
+
+
+def test_options_guard_flags_every_unturned_default():
+    """Every non-string default is a knob, whether or not it steers a
+    branch: (a) only tests set it, (b) every engine caller restates the
+    default, (c) every engine caller passes one other literal."""
+    sources = {
+        "hexscape_spark/m.py": (
+            "def f(df, col='x', never=2, same=0.5, other=None, two=1,\n"
+            "      computed=3, r_arg=4):\n"
+            "    return df\n"
+            "def lib(df, size=7):\n    return df\n"),
+        "__spark_entry__.py": (
+            "def entry(spark):\n"
+            "    f(spark, same=0.5, other=8, two=1, computed=len(spark),\n"
+            "      r_arg=4)\n"
+            "    f(spark, same=0.5, other=8, two=2, computed=0, r_arg=4)\n"),
+        "tests/test_m.py": "f(1, never=3, r_arg=6)\nlib(1, size=9)\n"}
+    # col is a string default (schema plumbing), two takes two literals,
+    # computed a computed value, lib.size is a test-set LIBRARY parameter
+    # and r_arg an OPTIONS entry mirroring a reference argument
+    assert unset_options(sources, library=("lib",), options=("f.r_arg",),
+                         references=("f.r_arg",)) == [
+        "hexscape_spark/m.py:1 f.never",
+        "hexscape_spark/m.py:1 f.same = 0.5 (the default)",
+        "hexscape_spark/m.py:1 f.other = 8"]
+    # without the LIBRARY line, a parameter only tests set is flagged
+    assert "hexscape_spark/m.py:4 lib.size" in unset_options(
+        sources, options=("f.r_arg",), references=("f.r_arg",))
 
 
 def _body_shape(fn) -> tuple[int, int, str]:

@@ -63,7 +63,7 @@ def test_workers_keep_the_zip_archives_once_the_engine_is_loaded(
 
     monkeypatch.setattr(F, "pandas_udf", recording)
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id LONG, text STRING")
-    dedup._signatures(docs, "doc_id", "text", num_hashes=4, shingle_k=2)
+    dedup._signatures(docs, "doc_id", "text", num_hashes=4)
     assert len(made) == 1 and _loads_engine(made[0])
     assert not _loads_engine(lambda x: x)
 

@@ -32,7 +32,7 @@ def test_raster_to_hex_assigns_nearest_centre(spark, raster):
     px = raster.selectExpr("ix", "iy",
                            "0.0E0 + (ix + 0.5E0) * 500.0E0 AS lon",
                            "0.0E0 + (iy + 0.5E0) * 500.0E0 AS lat")
-    assigned = hexgrid.with_hex_cell(px, hex_width=1000.0).toPandas()
+    assigned = hexgrid.with_hex_cell(px).toPandas()
     for _, row in assigned.sample(50, random_state=0).iterrows():
         ring = np.array(hex_vertices(int(row.q), int(row.r), 1000.0)[:-1])
         d = geo.dist_points_to_polygons(np.array([row.lon]),
