@@ -753,7 +753,7 @@ def _q_patches_landuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hexscape_spark.tiling import generate_patches
     land = geo.rect_wkb(0.0, 0.0, 50.0, 50.0)
     p = generate_patches(spark, land, hex_width=2.0, reference_point=(0.0, 0.0),
-                         min_prop=0.01, land_use=land_use_square(1.0))
+                         land_use=land_use_square(1.0))
     lu = [c for c in p.columns if c.startswith("LU_")]
     return p.select("Index", "q", "r", F.round("area", 9).alias("area_r"),
                     F.round("lu_sum", 9).alias("lu_sum_r"),
@@ -772,7 +772,7 @@ def _sql_patches_landuse_duck() -> str:
     from hexscape_spark.synth import land_use_square
     w = _LW
     hexarea = P.hex_area(w)
-    min_area = 0.01 * hexarea
+    min_area = P.MIN_PROP * hexarea
     eps = float(np.sqrt(np.finfo(float).eps))
     cx, cy = sqlgen.centroid_exprs("q", "r", w, P.REFX, P.REFY)
     ids = f"SELECT CAST(range AS BIGINT) AS i FROM range(0, {_NR * _NQ})"
@@ -899,7 +899,7 @@ def _sql_split_patches_hole_duck() -> str:
                                                  refx, refy)
     nq = q_hi - q_lo + 1
     nr = r_hi - r_lo + 1
-    min_area = 0.01 * P.hex_area(w)
+    min_area = P.MIN_PROP * P.hex_area(w)
     cx, cy = sqlgen.centroid_exprs("q", "r", w, refx, refy)
     ids = f"SELECT CAST(range AS BIGINT) AS i FROM range(0, {nr * nq})"
     base = (f"SELECT CAST(i % {nq} + {q_lo} AS BIGINT) AS q, "
@@ -962,7 +962,7 @@ def _sql_neighbours_square_duck() -> str:
     complete-cell fast path (Border = side length when both areas exceed
     (1-MIN_PROP)·hexarea, R/generate_neighbours.R:86-93), and Liang–Barsky
     clipped edge lengths for boundary edges (:100-133)."""
-    from hexscape_spark.neighbours import MIN_PROP, _edge_offsets
+    from hexscape_spark.neighbours import _edge_offsets
     w = _LW
     hexarea = P.hex_area(w)
     hexlth = P.hex_side(w)
@@ -976,7 +976,7 @@ def _sql_neighbours_square_duck() -> str:
         "cx", "cy", w, 0.0, 0.0, 50.0, 50.0, out="area")
     cells = sqlgen.build_query(
         f"({base})", layers, select="q, r, cx, cy, area",
-        where=f"area >= {sqlgen._f(MIN_PROP * hexarea)}")
+        where=f"area >= {sqlgen._f(P.MIN_PROP * hexarea)}")
     offs = ", ".join(f"({dq}, {dr}, '{d}')"
                      for dr, dq, d in hexgrid.NEIGHBOUR_OFFSETS)
     clip_branches = " ".join(
@@ -985,7 +985,7 @@ def _sql_neighbours_square_duck() -> str:
                 "cx", "cy", p0[0], p0[1], p1[0], p1[1],
                 0.0, 0.0, 50.0, 50.0))
         for d, (p0, p1) in _edge_offsets(w).items())
-    comp = sqlgen._f((1.0 - MIN_PROP) * hexarea)
+    comp = sqlgen._f((1.0 - P.MIN_PROP) * hexarea)
     return f"""
 WITH cells AS ({cells}),
 idx AS (SELECT q, r, cx, cy, area,
@@ -1001,7 +1001,7 @@ bord AS (SELECT a_ix, b_ix, dir,
          FROM edges)
 SELECT a_ix AS Index, b_ix AS Neighbour, ROUND(border, 9) AS border_r,
        dir AS Direction
-FROM bord WHERE border > {sqlgen._f(MIN_PROP * hexlth)}
+FROM bord WHERE border > {sqlgen._f(P.MIN_PROP * hexlth)}
 """
 
 
@@ -1574,7 +1574,7 @@ def _sql_connectedness_duck() -> str:
     nq = q_hi - q_lo + 1
     nr = r_hi - r_lo + 1
     thresh = h / 1.9
-    min_area = 0.01 * P.hex_area(w)
+    min_area = P.MIN_PROP * P.hex_area(w)
     grid_by = 5.0 / 10
     npx = int(round((maxx - minx) / grid_by))
 
@@ -1709,8 +1709,7 @@ def _q_voronoi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i + 1, float(x), float(y)) for i, (x, y) in enumerate(pts)],
         "Index LONG, x DOUBLE, y DOUBLE")
     land = geo.rect_wkb(0, 0, 10, 10)
-    out = discretise_voronoi(spark, land, points, block_size=2.0,
-                             keep_geometry=True) \
+    out = discretise_voronoi(spark, land, points, block_size=2.0) \
         .select("Index", "Area", "centroid_x", "centroid_y", "geom_wkb")
     chk = out.toPandas()                          # bounded: seed count
     seed_xy = {i + 1: (float(x), float(y)) for i, (x, y) in enumerate(pts)}
@@ -1783,11 +1782,8 @@ def _q_dissolve_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    pdf["x1"], pdf["y1"])]})
 
     df = rects.mapInPandas(to_wkb, "clc STRING, geom_wkb BINARY")
-    # bounds = the generator's own 0..52 window (x1 <= 39+2+9, y1 same):
-    # the known-extent fast path — dissolve() skips the extent-measuring
-    # job and runs exactly one eager planning job (VERDICT r04 #1)
-    return dissolve(df, bounds=(0.0, 0.0, 52.0, 52.0)) \
-        .select("clc", F.round("area", 9).alias("area_r"), "n_parts")
+    return dissolve(df).select("clc", F.round("area", 9).alias("area_r"),
+                               "n_parts")
 
 
 def _sql_dissolve_layers_duck() -> str:

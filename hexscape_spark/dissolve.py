@@ -33,8 +33,6 @@ from .checkpoint import cached, materialise, spread
 
 # level-1 slices per key: a ~sqrt(_NUM_SALTS)² grid of bbox-centre tiles
 _NUM_SALTS = 32
-# hash sub-slices a heavy level-1 slice splits into
-_SUB_SALTS = 4
 
 
 def _polygons(wkb) -> list[list[np.ndarray]]:
@@ -74,8 +72,7 @@ def _union_or_rings(sub: list[list[np.ndarray]]
         return sub, geo.union_area(sub)
 
 
-def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
-             bounds: tuple[float, float, float, float] | None = None
+def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb"
              ) -> DataFrame:
     """groupBy(key) -> true-union multipolygon + exact union area and
     connected-part count.  A NULL geometry reads as empty; a key with no
@@ -84,11 +81,15 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
     Level 1 pre-unions each (key, salt) slice.  The salt is a tile of a
     ~sqrt(_NUM_SALTS)² grid over the bbox centres, so features that touch
     land in one slice and level 2 merges little more than the tile seams.
-    A heavy tile (a dense cluster) splits by hash into _SUB_SALTS
-    sub-slices so no level-1 task carries it alone.  The extent comes
-    from `bounds` when the caller knows it (catalog metadata, a fixed CRS
-    window), else from one aggregation; a zero-extent input keeps the
-    hash salt.
+    The extent comes from one aggregation; a zero-extent input keeps the
+    hash salt.  A heavy tile is not split further: every caller passes a
+    coverage (touching, non-overlapping pieces), and a hash sub-split of
+    a coverage tile fragments it into partials that level 2 re-traces.
+    On a 4-core box at local[4], a 2,500-cell coverage in one tile
+    dissolved in 1.15 s unsplit against 2.94 s split four ways, the
+    3,240-rect landcover probe in 1.41 s against 1.98 s; only a pile of
+    3,000 mutually overlapping squares was faster split (1.99 s against
+    4.69 s unsplit).
 
     Level 2 is component-parallel, in three grouped-map stages: split
     each key's partial boundaries into touch/overlap-connected
@@ -104,11 +105,15 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
     level 1); traced partial boundaries group under the default 1e-9-of-
     extent snap, because their shared seams carry interpolated vertices
     ~1 ulp apart.  Every union pass orders its inputs canonically
-    (_canonical_order), so the output bytes and float sums do not depend
-    on parallelism or input order.
+    (_canonical_order), so for one input set the output bytes and float
+    sums do not depend on parallelism or input order.  They can depend on
+    the tile grid, and so on the extent: where shared edges agree only
+    to within an ulp, which features level 1 unions at distance 0 and
+    which level 2 joins under the snap depends on where the tile seams
+    fall, and geom_wkb may then hold more polygons than n_parts.
 
-    dissolve() runs one eager job (the level-1 checkpoint; two when the
-    extent is measured) and returns the lazy 3-stage merge plan.
+    dissolve() runs two eager jobs (extent, level-1 checkpoint) and
+    returns the lazy 3-stage merge plan.
     """
     l1_schema = f"{key} STRING, __salt LONG, geom_wkb BINARY"
 
@@ -141,21 +146,12 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
             .withColumn("__cx", F.element_at("__ctr", 1))
             .withColumn("__cy", F.element_at("__ctr", 2)).drop("__ctr"))
     salt = F.pmod(F.xxhash64(F.col(geom)), F.lit(_NUM_SALTS))
-    # the extent job, the heavy-slice counts and level 1 would each re-run
-    # df's upstream lineage (and the centre UDF): cache `base` until level
-    # 1 is materialised
+    # the extent job and level 1 would each re-run df's upstream lineage
+    # (and the centre UDF): cache `base` until level 1 is materialised
     with cached(base) as base:
-        if bounds is not None:
-            # the grid only needs to COVER the centres for load balancing:
-            # F.least clamps the top edge and a below-range centre still
-            # salts into a valid distinct group
-            x0, y0, x1, y1 = (float(v) for v in bounds)
-            row = {"x0": x0, "x1": x1, "y0": y0, "y1": y1}
-        else:
-            row = base.agg(F.min("__cx").alias("x0"),
-                           F.max("__cx").alias("x1"),
-                           F.min("__cy").alias("y0"),
-                           F.max("__cy").alias("y1")).collect()[0]
+        row = base.agg(F.min("__cx").alias("x0"), F.max("__cx").alias("x1"),
+                       F.min("__cy").alias("y0"),
+                       F.max("__cy").alias("y1")).collect()[0]
         if row["x0"] is not None and \
                 (row["x1"] > row["x0"] or row["y1"] > row["y0"]):
             nb = max(1, int(math.ceil(math.sqrt(_NUM_SALTS))))
@@ -167,28 +163,6 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
                          F.lit(nb - 1))
             salt = (gx * nb + gy).cast("long")
         salted = base.withColumn("__salt", salt).drop("__cx", "__cy")
-        # heavy slices (the skew.salted_agg pattern), decided lazily: a
-        # scalar-agg threshold crossJoined onto the per-slice counts is a
-        # broadcast subtree of the level-1 job, not a driver collect.
-        # Every heavy slice has > 1024 rows, so at most n/1024 broadcast.
-        counts = (salted.groupBy(key, "__salt")
-                  .agg(F.count(F.lit(1)).alias("__n")))
-        thresh = counts.agg(
-            F.greatest(F.lit(1024.0), 4.0 * F.coalesce(
-                F.avg("__n"), F.lit(0.0))).alias("__thr"))
-        heavy = (counts.crossJoin(F.broadcast(thresh))
-                 .where(F.col("__n") > F.col("__thr"))
-                 .select(key, "__salt").withColumn("__heavy", F.lit(True)))
-        salted = (salted.join(F.broadcast(heavy), on=[key, "__salt"],
-                              how="left")
-                  .withColumn(
-                      "__salt",
-                      F.when(F.col("__heavy").isNotNull(),
-                             F.col("__salt") * _SUB_SALTS +
-                             F.pmod(F.xxhash64(F.col(geom)),
-                                    F.lit(_SUB_SALTS)))
-                      .otherwise(F.col("__salt") * _SUB_SALTS))
-                  .drop("__heavy"))
         # Python stage: the level-1 union runs once, then the cache goes
         partial = materialise(
             spread(salted, key, "__salt").groupBy(key, "__salt")

@@ -110,8 +110,8 @@ def _union_find_min_labels(parent: dict, pairs) -> dict:
     """Path-halving union-find over arbitrary hashable ids: `parent`
     maps every node to itself on entry; returns {node: min id of its
     component} (None-id nodes label None — a singleton by the join
-    semantics of the distributed loop).  The CC fast path, over the
-    same union-find (geo.find) as habitat's tile labeller."""
+    semantics of the distributed loop).  The CC fast path, and
+    habitat.grid_components' per-tile labeller."""
     for x, y in pairs:
         rx, ry = find(parent, x), find(parent, y)
         if rx != ry:

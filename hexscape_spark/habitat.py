@@ -74,7 +74,7 @@ def grid_components(cells: DataFrame, block: int = 256) -> DataFrame:
     the component's minimum node key under the same collision-free
     packing (iy << 32) | lower-32-of-ix (safe for any raster up to 2^32
     columns incl. negative indices)."""
-    from .graph import connected_components
+    from .graph import _union_find_min_labels, connected_components
 
     nodes = (cells.select("ix", "iy").distinct()
              .withColumn("bx", F.floor(F.col("ix") / block).cast("int"))
@@ -83,34 +83,18 @@ def grid_components(cells: DataFrame, block: int = 256) -> DataFrame:
     def label_block(pdf: pd.DataFrame) -> pd.DataFrame:
         ix = pdf["ix"].to_numpy().astype(np.int64)
         iy = pdf["iy"].to_numpy().astype(np.int64)
-        key = (iy << 32) | (ix & 0xFFFFFFFF)
-        pos = {int(k): i for i, k in enumerate(key)}
-        parent = list(range(len(key)))
-        for i in range(len(key)):
-            for nk in (int(key[i]) + 1 if (int(ix[i]) + 1) % (1 << 32)
-                       else None,              # ix+1 wraps the packing
-                       int(key[i]) + (1 << 32)):
-                # neighbour keys: (ix+1, iy) is key+1 unless ix+1
-                # overflows the low word; (ix, iy+1) is key + 2^32
-                if nk is None:
-                    continue
-                j = pos.get(nk)
-                if j is not None:
-                    ra, rb = geo.find(parent, i), geo.find(parent, j)
-                    if ra != rb:
-                        parent[rb] = ra
-        roots = np.fromiter((geo.find(parent, i) for i in range(len(key))),
-                            dtype=np.int64, count=len(key))
+        key = ((iy << 32) | (ix & 0xFFFFFFFF)).tolist()
+        present = set(key)
+        # neighbour keys: (ix+1, iy) is key+1 unless ix+1 overflows the
+        # low word; (ix, iy+1) is key + 2^32
+        pairs = [(k, nk) for k, x in zip(key, ix.tolist())
+                 for nk in (k + 1 if (x + 1) % (1 << 32) else None,
+                            k + (1 << 32))
+                 if nk in present]
         # representative = min node key of the local component
-        rep_of: dict[int, int] = {}
-        for i, r in enumerate(roots):
-            k = int(key[i])
-            if rep_of.get(int(r), k) >= k:
-                rep_of[int(r)] = k
-        rep = np.fromiter((rep_of[int(r)] for r in roots),
-                          dtype=np.int64, count=len(key))
+        rep = _union_find_min_labels({k: k for k in key}, pairs)
         return pd.DataFrame({"ix": pdf["ix"], "iy": pdf["iy"],
-                             "node": key, "rep": rep})
+                             "node": key, "rep": [rep[k] for k in key]})
 
     # Python stage: the strips, quotient nodes and final join read labels
     lab = materialise(nodes.groupBy("bx", "by").applyInPandas(

@@ -42,11 +42,6 @@ def _edge_offsets(w: float) -> dict[str, tuple[tuple[float, float], tuple[float,
         ("NW", 1, 0), ("SE", 4, 3), ("SW", 3, 2))}
 
 
-# the patches' min_prop, which the reference reads back from the patches
-# table (R/generate_neighbours.R:12-25): generate_patches' default
-MIN_PROP = 0.01
-
-
 def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
                         hex_width: float = P.HEX_WIDTH) -> DataFrame:
     """patches: needs Index, q, r, area, hex_cx, hex_cy."""
@@ -81,8 +76,8 @@ def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
     # wise instead — identical values, one join execution, no union.
     # Geometry payloads are nulled for complete edges first, so the
     # fast-path majority still ships no polygon bytes through Arrow.
-    complete = (F.col("area") > (1.0 - MIN_PROP) * hexarea) & \
-               (F.col("nb_area") > (1.0 - MIN_PROP) * hexarea)
+    complete = (F.col("area") > (1.0 - P.MIN_PROP) * hexarea) & \
+               (F.col("nb_area") > (1.0 - P.MIN_PROP) * hexarea)
     edges = edges.withColumn("__complete", complete)
     if has_geom:
         edges = (edges
@@ -151,4 +146,4 @@ def generate_neighbours(patches: DataFrame, landscape_wkb: bytes,
 
     bordered = edges.mapInPandas(border_lengths, schema=schema)
     cols = ["Index", "Neighbour", "Border", "Direction", "nb_area"]
-    return bordered.select(*cols).where(F.col("Border") > MIN_PROP * hexlth)
+    return bordered.select(*cols).where(F.col("Border") > P.MIN_PROP * hexlth)

@@ -41,6 +41,12 @@ def hex_area(w: float = HEX_WIDTH) -> float:
     return SQRT3 * w * w / 2.0
 
 
+# --- patch fragment filter --------------------------------------------------
+# a hex fragment under MIN_PROP of the hex area is dropped
+# (R/generate_patches.R:141,197), and generate_neighbours reads the same
+# min_prop back from the patches table (R/generate_neighbours.R:12-25)
+MIN_PROP = 0.01
+
 # --- landscape bbox ---------------------------------------------------------
 MINX, MINY = 0.0, 0.0
 MAXX, MAXY = 50000.0, 50000.0

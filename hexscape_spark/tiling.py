@@ -54,7 +54,6 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
                      hex_width: float = P.HEX_WIDTH,
                      reference_point: tuple[float, float] = (P.REFX, P.REFY),
                      land_use: list[tuple[str, str, bytes]] | None = None,
-                     min_prop: float = 0.01,
                      keep_geometry: bool = False,
                      name: str = "patch", name_index: bool = False,
                      add_removed: bool = False,
@@ -99,7 +98,7 @@ def generate_patches(spark: SparkSession, landscape_wkb: bytes,
     cat_bytes = [wkb for _, wkb in categories]
     w_ = hex_width
     thresh = hexhgt / 1.9                     # R/generate_patches.R:105-107
-    min_area = min_prop * hexarea
+    min_area = P.MIN_PROP * hexarea
 
     out_fields = ("q LONG, r LONG, cell_id LONG, `__part` INT, "
                   "hex_cx DOUBLE, hex_cy DOUBLE, "

@@ -63,13 +63,12 @@ def voronoi_cell(p: np.ndarray, cands: np.ndarray,
 def discretise_voronoi(spark: SparkSession, map_wkb: bytes,
                        points: DataFrame, block_size: float,
                        idx: str = "Index", x: str = "x", y: str = "y",
-                       keep_geometry: bool = True,
                        max_doublings: int = 16) -> DataFrame:
     """Voronoi cells of `points` clipped to the map (R/discretise_voronoi.R;
     SURVEY §7.3.3: seeds never funnel through the driver).
 
-    Output: Index, x, y, Area (map units²), centroid_x, centroid_y
-    [, geom_wkb].  Every input point is inside its own cell by construction
+    Output: Index, x, y, Area (map units²), centroid_x, centroid_y,
+    geom_wkb.  Every input point is inside its own cell by construction
     (the reference asserts this via st_intersects, :28-31).  Seeds must be
     distinct points: two seeds at one point raise ValueError naming both.
 
@@ -177,8 +176,7 @@ def discretise_voronoi(spark: SparkSession, map_wkb: bytes,
     if todo is not None:
         raise RuntimeError(f"discretise_voronoi: unresolved seeds after "
                            f"{max_doublings} rounds (last k={tried})")
-    done = materialise(done)   # plan barrier: cut the per-round unions
-    return done if keep_geometry else done.drop("geom_wkb")
+    return materialise(done)   # plan barrier: cut the per-round unions
 
 
 # ---------------------------------------------------------------------------

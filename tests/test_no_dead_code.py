@@ -423,12 +423,13 @@ def unset_options(sources: dict[str, str], library=(), options=(),
     ``... = literal (the default)``: (b) every such caller passes the
     default's own value; as ``... = literal``: (c) every such caller
     passes one other literal, so the default runs only under pytest.  A
-    test caller is enough against (a) for a function in `library` or a
-    ``function.parameter`` in `options`; an `options` entry that no test
-    sets, that is no knob, or that a non-test caller sets while it is not
-    also in `references` (an entry mirroring a reference argument, which
-    engine callers may set too) is flagged as well.  Calls match by the
-    called name alone."""
+    call that omits the knob passes its default.  A test caller is enough
+    against (a) for a function in `library` or a ``function.parameter``
+    in `options`; an `options` entry that no test sets, that is no knob,
+    or that a non-test caller sets while it is not also in `references`
+    (an entry mirroring a reference argument, which engine callers may
+    set too) is flagged as well.  Calls match by the called name
+    alone."""
     knobs, calls = [], {}
     for rel, text in sources.items():
         tree = ast.parse(text, filename=rel)
@@ -448,7 +449,8 @@ def unset_options(sources: dict[str, str], library=(), options=(),
         passed = [(role, _argument(call, name, i))
                   for role, call in calls.get(fn.name, ())]
         roles = {role for role, arg in passed if arg is not None}
-        outside = [arg for role, arg in passed if role != "test"]
+        outside = [default if arg is None else arg
+                   for role, arg in passed if role != "test"]
         literals = {_literal(a) if isinstance(a, ast.expr) else None
                     for a in outside}
         if option in options:
@@ -586,6 +588,27 @@ def test_options_guard_flags_every_unturned_default():
     # without the LIBRARY line, a parameter only tests set is flagged
     assert "hexscape_spark/m.py:4 lib.size" in unset_options(
         sources, options=("f.r_arg",), references=("f.r_arg",))
+
+
+def test_options_guard_reads_omitted_argument_as_default():
+    """A call that omits a knob runs its default: engine callers that
+    either restate the default or omit it leave one value in use, (b);
+    one caller passing another literal next to one omitting it leaves
+    two, as does a computed value."""
+    sources = {
+        "hexscape_spark/m.py": (
+            "def g(df, keep=True, prop=0.01, n=2, w=1.0):\n"
+            "    return df\n"
+            "def h(df):\n"
+            "    return g(df, n=3)\n"),
+        "__spark_entry__.py": (
+            "def entry(spark):\n"
+            "    g(spark, keep=True, prop=0.01, w=len(spark))\n"
+            "    g(spark, prop=0.01)\n"),
+        "tests/test_m.py": "g(1, keep=False, prop=0.5, n=4, w=2.0)\n"}
+    assert unset_options(sources) == [
+        "hexscape_spark/m.py:1 g.keep = True (the default)",
+        "hexscape_spark/m.py:1 g.prop = 0.01 (the default)"]
 
 
 def _body_shape(fn) -> tuple[int, int, str]:

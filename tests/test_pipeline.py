@@ -231,10 +231,10 @@ def _assert_dissolve_matches_reference(spark, inputs: dict):
 
 def test_dissolve_component_parallel_merge_exact_and_deterministic(spark):
     """A key mixing 200 disjoint squares with a 1,100-square sliding
-    cluster (one spatial tile over the heavy-slice threshold, so it splits
-    into hash sub-slices) goes through the component-parallel final merge
-    exactly: geom_wkb bytes, area and n_parts equal the driver reference,
-    and the bytes do not depend on input order or partitioning."""
+    cluster (all in one spatial tile, so one level-1 task pre-unions it
+    whole) goes through the component-parallel final merge exactly:
+    geom_wkb bytes, area and n_parts equal the driver reference, and the
+    bytes do not depend on input order or partitioning."""
     # dispersed field: 200 disjoint unit squares, 3 apart (fills tiles);
     # dense cluster: 1100 unit squares sliding 0.001 apart
     inputs = {"T": [_rect(3 * (i % 20), 3 * (i // 20) + 40,

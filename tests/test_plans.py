@@ -198,7 +198,7 @@ _JOB_BUDGET = {
     "token_stats": 2, "lang_dist_by_source": 3, "knn_cosine": 5,
     "minhash_pairs": 6, "ngram_jaccard": 7, "lsh_topk": 8,
     "patches_landuse": 4, "neighbours_square": 6, "cover_landuse": 6,
-    "dissolve_layers": 15,
+    "dissolve_layers": 10,
 }
 
 

@@ -18,7 +18,7 @@ REF = (0.0, 40.0)
 def split_setup(spark):
     land = geo.polygon_to_wkb([OUTER, HOLE])
     p = generate_patches(spark, land, hex_width=HEXW, reference_point=REF,
-                         min_prop=0.01, keep_geometry=True).persist()
+                         keep_geometry=True).persist()
     p.count()
     return land, p
 
@@ -70,8 +70,7 @@ def test_split_cell_category_areas_exact(spark):
     # hex the hole splits
     band = geo.rect_wkb(8.0, 8.0, 22.0, 24.0)
     p = generate_patches(
-        spark, land, hex_width=HEXW, reference_point=REF, min_prop=0.01,
-        keep_geometry=True,
+        spark, land, hex_width=HEXW, reference_point=REF, keep_geometry=True,
         land_use=[("Band", "Passable", band)]).toPandas()
     band_np = geo.wkb_to_polygons(band)
     dup = p.groupby(["q", "r"]).size()
@@ -98,7 +97,7 @@ def test_impassable_clipped_to_landscape(spark):
     imp = geo.rect_wkb(15.0, 5.0, 25.0, 10.0)
     p = generate_patches(
         spark, land, hex_width=5.0, reference_point=(0.0, 20.0),
-        min_prop=0.01, add_removed=True,
+        add_removed=True,
         land_use=[("Imp", "Impassable", imp)]).toPandas()
     removed = p[p.Index.isna()].area.sum()
     inside_area = 5.0 * 5.0           # imp ∩ landscape = [15,20]x[5,10]

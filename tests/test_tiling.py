@@ -17,14 +17,13 @@ from hexscape_spark.synth import land_use_square
 from hexscape_spark.tiling import generate_patches
 
 HEXW = 2.0
-MIN_PROP = 0.01
 
 
 @pytest.fixture(scope="module")
 def square_patches_df(spark):
     land = geo.rect_wkb(0, 0, 50, 50)
-    p = generate_patches(spark, land, hex_width=HEXW, reference_point=(0, 0),
-                         min_prop=MIN_PROP).persist()
+    p = generate_patches(spark, land, hex_width=HEXW,
+                         reference_point=(0, 0)).persist()
     p.count()
     return p
 
@@ -38,7 +37,7 @@ def square_patches(square_patches_df):
 def lu_patches(spark):
     land = geo.rect_wkb(0, 0, 50, 50)
     p = generate_patches(spark, land, hex_width=HEXW, reference_point=(0, 0),
-                         min_prop=MIN_PROP, land_use=land_use_square(1.0))
+                         land_use=land_use_square(1.0))
     return p.toPandas()
 
 
@@ -55,11 +54,12 @@ def test_index_dense_over_qr(square_patches):
 
 
 def test_fragment_filter(square_patches):
-    assert (square_patches.area >= MIN_PROP * P.hex_area(HEXW) - 1e-12).all()
+    assert (square_patches.area >= P.MIN_PROP * P.hex_area(HEXW) - 1e-12).all()
 
 
 def test_interior_patch_area_is_full_hex(square_patches):
-    full = square_patches[square_patches.area > (1 - MIN_PROP) * P.hex_area(HEXW)]
+    full = square_patches[square_patches.area >
+                          (1 - P.MIN_PROP) * P.hex_area(HEXW)]
     assert len(full) > 0
     assert np.allclose(full.area, P.hex_area(HEXW))
 
@@ -69,7 +69,7 @@ def test_neighbours_fast_path_and_symmetry(square_patches_df, square_patches):
     nb = generate_neighbours(square_patches_df, land, hex_width=HEXW).toPandas()
     side = P.hex_side(HEXW)
     full = square_patches[square_patches.area >
-                          (1 - MIN_PROP) * P.hex_area(HEXW)]
+                          (1 - P.MIN_PROP) * P.hex_area(HEXW)]
     interior = set(full.Index)
     nbi = nb[nb.Index.isin(interior) & nb.Neighbour.isin(interior)]
     assert np.allclose(nbi.Border, side)
@@ -85,7 +85,7 @@ def test_neighbours_fast_path_and_symmetry(square_patches_df, square_patches):
     pairs = set(zip(nb.Index, nb.Neighbour))
     assert all((b, a) in pairs for a, b in pairs)
     # every edge passes the reference's Border > min_prop*side filter
-    assert (nb.Border > MIN_PROP * side).all()
+    assert (nb.Border > P.MIN_PROP * side).all()
     assert set(nb.Direction) <= {"NE", "E", "SE", "SW", "W", "NW"}
 
 

@@ -129,7 +129,7 @@ def test_voronoi_matches_all_seeds_reference(spark):
         ref.append((geo.polygons_area([cell]), *geo.polygons_centroid([cell])))
     ref = np.array(ref)
     got = discretise_voronoi(spark, geo.rect_wkb(0, 0, 20, 20), points,
-                             block_size=1.0, keep_geometry=False) \
+                             block_size=1.0) \
         .toPandas().sort_values("Index").reset_index(drop=True)
     assert got.Index.tolist() == list(range(1, 151))
     for i, col in enumerate(("Area", "centroid_x", "centroid_y")):
@@ -144,8 +144,8 @@ def test_blocked_voronoi_sparse_seeds_need_doubling(spark):
     points = spark.createDataFrame(
         [(1, 1.0, 1.0), (2, 99.0, 99.0)], "Index LONG, x DOUBLE, y DOUBLE")
     land = geo.rect_wkb(0, 0, 100, 100)
-    out = discretise_voronoi(spark, land, points, block_size=2.0,
-                             keep_geometry=False).toPandas()
+    out = discretise_voronoi(spark, land, points,
+                             block_size=2.0).toPandas()
     assert len(out) == 2
     assert out.Area.sum() == pytest.approx(100.0 * 100.0, abs=1e-6)
     # symmetric seeds -> equal halves
