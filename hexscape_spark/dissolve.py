@@ -212,9 +212,9 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb"
             "n_parts": [int(pdf["n_parts"].sum())],
         })
 
-    # each grouped-map stage reads a `spread` of its groups: the shuffle
-    # its groupBy needs anyway, in partitions AQE does not coalesce into
-    # one task
+    # `split` and `union_each` read a `spread` of their groups: the
+    # shuffle their groupBy needs anyway, in partitions AQE does not
+    # coalesce into one task
     staged = spread(partial, key).groupBy(key) \
         .applyInPandas(split, schema=stage_schema)
     # one group per shuffle partition, not per component: each group is
@@ -224,4 +224,7 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb"
     staged = staged.withColumn("__slot", F.col("__comp") % width)
     unioned = spread(staged, key, "__slot").groupBy(key, "__slot") \
         .applyInPandas(union_each, schema=stage_schema)
+    # `concat` stays one coalesced task: it only joins each key's few
+    # pieces, and spread over every core it was 1-5% slower (warm A/B on
+    # `dissolve_layers`' 160 rects and the 3,240-rect landcover probe)
     return unioned.groupBy(key).applyInPandas(concat, schema=out_schema)

@@ -320,6 +320,9 @@ def cosine_topk_lsh(df: DataFrame, planes: int, key: str = "vec_id",
     cands = (lhs.join(F.broadcast(rhs), on=["band", "h"])
              .where(F.col("query_id") != F.col("nn_id"))
              .select("query_id", "nn_id").distinct())
+    # the scoring stage stays one coalesced task behind this distinct: a
+    # `spread` of the pairs put it on every core but was no faster (five
+    # warm A/Bs of `lsh_topk` at sf0.1, local[4]: medians -7% to +3%)
     # the LIMIT bounds the collect itself (no extra Spark job): an
     # oversized corpus fails after at most cap + 1 rows reach the driver
     # instead of OOMing it

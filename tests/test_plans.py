@@ -225,6 +225,22 @@ def test_query_job_budget(spark, name):
     assert len(jobs) <= _JOB_BUDGET[name], jobs
 
 
+def test_warm_bench_pass_reuses_generated_classes(spark):
+    """A second pass of the bench queries finds its generated classes in
+    the codegen cache instead of recompiling them: a pass needs ~275
+    classes, and under Spark's default cache of 100 entries every warm
+    pass recompiled ~285."""
+    import bench
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(2):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for name in bench.BENCH_QUERIES:
+            m.queries()[name](spark, SF).count()
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] <= 5, compiles
+
+
 def test_line_dedup_plan_no_cartesian_no_python(spark):
     """Corpus line dedup is pure equi-join/aggregate relational algebra:
     no cartesian product, no nested-loop join, no Python on the path —
